@@ -51,23 +51,6 @@ object AdmissionProbe {
   // envelope bug class, round 12). 2e9 clears K ≤ 1999.
   private val idShift = 2000000000L
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def fmt(v: Double): String = BigDecimal(v)
     .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -123,7 +106,7 @@ object AdmissionProbe {
     val batchMod = args.lift(11).map(_.toInt).getOrElse(7)
     val vecP = pipeline.VectorIndex.Params(dim = 64, tables = tables,
       bits = bits, buckets = vecBuckets, idBuckets = vecIdBuckets)
-    val spark = session()
+    val spark = GraftSession.local()
 
     mode match {
       case "build" =>

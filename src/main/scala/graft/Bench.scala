@@ -29,32 +29,9 @@ object Bench {
     val subset = args.headOption.map(_.split(",").toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // tz-naive testdata reads as UTC instants
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_STAGES=1: per-stage timings >1s on stderr (debug)
-    if (sys.env.contains("SPARK_GRAFT_STAGES"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val dur = for (s <- si.submissionTime; e <- si.completionTime) yield e - s
-          if (dur.exists(_ > 1000))
-            System.err.println(s"[stage] ${si.stageId} " +
-              s"'${si.name.takeWhile(_ != '\n').take(60)}' tasks=${si.numTasks} " +
-              s"${dur.get / 1000.0}s")
-        }
-      })
+    if (sys.env.contains("SPARK_GRAFT_STAGES")) GraftSession.logSlowStages(spark)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => subset.forall(_.contains(name)) }
       .map { case (name, fn) =>

@@ -35,23 +35,6 @@ import graft.sources.ManifestStore
   */
 object CompactProbe {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def fmt(v: Double): String = BigDecimal(v)
     .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -81,7 +64,7 @@ object CompactProbe {
     val perGroup = args.lift(1).map(_.toInt).getOrElse(5)
     val rows = args.lift(2).map(_.toInt).getOrElse(2000)
     val groups1x = args.lift(3).map(_.toInt).getOrElse(8)
-    val spark = session()
+    val spark = GraftSession.local()
 
     val dirs = Seq("debt1x" -> (groups1x, s"$base/t1"),
       "debt5x" -> (groups1x * 5, s"$base/t5"))

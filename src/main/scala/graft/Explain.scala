@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one query by name with timing and an optional formatted
   * plan dump. `runMain graft.Explain <query> [sfDir] [explain|time|both]`.
   */
@@ -10,32 +8,8 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode = if (args.length > 2) args(2) else "both"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // tz-naive testdata reads as UTC instants
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf overrides: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.split("=", 2))
-      .foreach(kv => builder.config(kv(0), kv(1)))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val dur = for (s <- si.submissionTime; e <- si.completionTime) yield e - s
-        if (dur.exists(_ > 1000))
-          println(s"[stage] ${si.stageId} '${si.name.takeWhile(_ != '\n').take(60)}' " +
-            s"tasks=${si.numTasks} ${dur.get / 1000.0}s")
-      }
-    })
+    val spark = GraftSession.local()
+    GraftSession.logSlowStages(spark)
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (mode != "time") df.explain("formatted")
     if (mode != "explain") {

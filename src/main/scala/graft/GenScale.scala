@@ -31,16 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object GenScale {
 
-  private def session(): SparkSession = SparkSession.builder()
-    .appName("graft-genscale").master(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    .config("spark.sql.shuffle.partitions", 32)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   // key domains and their copy offsets — far above any source-scale key
   private val Off = Map(
     "custkey" -> 1000000L, "orderkey" -> 10000000L, "partkey" -> 1000000L,
@@ -55,7 +45,7 @@ object GenScale {
     // third-decade probes (K=1000) need only documents/embeddings, and
     // replicating lineitem 1000× would cost ~25 GB for nothing
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val spark = session()
+    val spark = GraftSession.local()
     run(spark, src, dst, k, only)
     spark.stop()
   }

@@ -20,23 +20,6 @@ import org.apache.spark.sql.SparkSession
   */
 object MergeScaleProbe {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def q145(s: SparkSession): Long = {
     val tbl = java.nio.file.Files.createTempDirectory("graft-p145")
       .toString + "/orders_m"
@@ -87,7 +70,7 @@ object MergeScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = session()
+    val spark = GraftSession.local()
     spark.read.parquet(s"$sfDir/orders.parquet")
       .createOrReplaceTempView("probe_orders_src")
     def fmt(v: Double) = BigDecimal(v)

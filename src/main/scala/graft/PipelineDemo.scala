@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.time.Instant
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.StateMachine
 import graft.pipeline._
@@ -18,16 +18,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val root = if (args.nonEmpty) args(0)
       else Files.createTempDirectory("graft-demo").toString
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // tz-naive testdata reads as UTC instants
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     // source system: 60 inbound receipts, all NEW

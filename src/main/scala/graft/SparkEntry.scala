@@ -35,7 +35,6 @@ object SparkEntry {
     * above 2^53).
     */
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$dir/$name.parquet")
     val nanoCols = raw.schema.fields.collect {
       case f if f.dataType == LongType && (f.name == "ts" || f.name.endsWith("_ns")) &&

@@ -50,15 +50,6 @@ object Multimodal {
     transform(sequence(lit(0), lit(dims - 1)),
       i => pmod(xxhash64(content, i), lit(1000000L)).cast("double") / lit(1000000.0))
 
-  /** STUB resize: real implementation re-encodes pixels; the fake keeps the
-    * byte-stream contract by truncating to a target budget proportional to
-    * the pixel count, and rewrites the metadata — which is the real part.
-    */
-  def fakeResize(content: Column, meta: Column, w: Int, h: Int): Column =
-    struct(
-      substring(content, 1, 4096).as("content"),
-      meta.withField("width", lit(w)).withField("height", lit(h)).as("meta"))
-
   /** Frame sampling: every `stride`-th fixed-size chunk of the byte stream —
     * the real plumbing for video frame extraction (offsets, batch shape);
     * a real decoder swaps byte-chunking for keyframe indices.

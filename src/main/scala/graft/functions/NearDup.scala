@@ -929,39 +929,6 @@ object NearDup {
 
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs via 4-chunk banding (pigeonhole: hamming ≤ 3 ⇒
-    * at least one of 4 16-bit chunks equal), verified by exact hamming
-    * distance — avoids the O(n²) compare.
-    */
-  def simhashNearDup(df: DataFrame, textCol: String, idCol: String,
-                     maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
-    val sigs = Par.materialize(
-      Par.spread(df.select(col(idCol).as("_id"), col(textCol).as("_text")))
-        .select(col("_id"),
-          graft.plans.GraftFunctions.simhash64(df, TextAnalysis.tokens(col("_text")))
-            .as("_sim")))
-    // the prune key must BE the join key: (chunk, value) composed into one
-    // long — pruning on the value alone would sum posting lists across the
-    // 4 chunks and drop a value from every chunk whose per-chunk buckets
-    // are individually within the cap (the composite-key discipline of
-    // cosineNearDupPairsLsh's _tb)
-    val chunked = sigs.select(col("_id"), col("_sim"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("_sim"), c * 16).bitwiseAND(lit(0xFFFFL)).as("chunkval"))
-      }: _*)).as("_ck"))
-      .select(col("_id"), col("_sim"),
-        (col("_ck.chunk").cast("long") * (1L << 16) + col("_ck.chunkval")).as("_cc"))
-    val pruned = Par.materialize(pruneHotKeys(chunked, "_cc", maxBucket))
-    pruned.as("l").join(pruned.as("r"),
-        col("l._cc") === col("r._cc") &&
-          col("l._id") < col("r._id"))
-      .select(col("l._id").as("id_a"), col("r._id").as("id_b"),
-        hammingDistance(col("l._sim"), col("r._sim")).as("hamming"))
-      .dropDuplicates("id_a", "id_b")
-      .filter(col("hamming") <= maxHamming)
-  }
-
   /** Exact substring-level duplication stats — the window form of
     * exact-substring dedup (reference: dedup family; the Lee et al.
     * "Deduplicating Training Data" operator class): every length-`k` token

@@ -39,9 +39,4 @@ object Portable {
 
   /** The common 6-digit form used by ratio/weight outputs. */
   def r6(c: Column): Column = roundPortable(c, 6)
-
-  /** DuckDB SQL fragment for the same formula — interpolate the operand so
-    * oracles stay textually aligned with the Spark side.
-    */
-  def r6Sql(x: String): String = s"floor(($x) * 1000000.0 + 0.5) / 1000000.0"
 }

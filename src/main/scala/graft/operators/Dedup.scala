@@ -50,12 +50,4 @@ object Dedup {
       .agg(max_by(payload, ord).as("_row"))
       .select(col("_row.*"))
   }
-
-  /** Exact duplicate detection over arbitrary columns: one row per distinct
-    * key with the smallest witness id and the duplicate count. Used by the
-    * documents exact-dedup query.
-    */
-  def exactGroups(df: DataFrame, keys: Seq[String], witness: String): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(min(col(witness)).as(witness), count(lit(1)).as("dup_count"))
 }

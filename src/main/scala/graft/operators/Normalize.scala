@@ -59,13 +59,6 @@ object Normalize {
     df
   }
 
-  /** O-7 as a pure-plan variant: keep only valid rows, no driver round-trip.
-    * Preferred inside large pipelines where a poisoned row should be routed
-    * to a quarantine sink instead of failing the job.
-    */
-  def filterValid(df: DataFrame, required: Seq[String] = Seq("id", "updated_at")): DataFrame =
-    df.filter(required.map(c => col(c).isNotNull).reduce(_ && _))
-
   /** O-8 — lineage metadata projection (`normalize.py:60-62`). */
   def withMetadata(df: DataFrame, runId: String,
                    extractedAt: java.time.Instant,

@@ -49,14 +49,15 @@ class Extractor(spark: SparkSession, cfg: ExtractorConfig,
     val normalized = Normalize.normalizeRows(raw, runId, now, wmEffective)
     Landing.write(normalized, cfg.landingRoot, entity, runId, cfg.outputFormat)
     // new watermark = max(updated_at) of the batch, else the saved one
-    // (run.py:72-75) — computed AFTER the durable write.
-    val maxTs = Landing.read(spark, cfg.landingRoot, entity, runId)
-      .agg(max(col("updated_at"))).collect()(0)
+    // (run.py:72-75), and rowsIn, both from the durable landed batch: the
+    // feed is never re-run (a live feed would be pulled twice, and its
+    // second answer need not match what landed)
+    val landed = Landing.read(spark, cfg.landingRoot, entity, runId)
+      .agg(max(col("updated_at")), count(lit(1))).collect()(0)
     val wmNew =
-      if (maxTs.isNullAt(0)) wmSaved else maxTs.getTimestamp(0).toInstant
+      if (landed.isNullAt(0)) wmSaved else landed.getTimestamp(0).toInstant
     watermarks.upsert(cfg.pipelineName, entity, wmNew, runId, now)
-    val rowsIn = normalized.count()
-    ExtractResult(entity, runId, rowsIn, wmSaved, wmNew)
+    ExtractResult(entity, runId, landed.getLong(1), wmSaved, wmNew)
   }
 
   /** Serial loop over entities sharing one run_id and extraction timestamp

@@ -44,33 +44,4 @@ object Simulator {
       .withColumn("status", col("_next_status"))
       .drop("_next_status")
   }
-
-  /** IB-specific effects on top of [[tick]] (`main.py:293-302`): partial
-    * `actual_qty` fill in PROCESSING; snap to `expected_qty` + `finished_at`
-    * on FINISHED. Expects the `lines` array of structs to be present.
-    */
-  def ibEffects(df: DataFrame, tickTime: Column, tickNo: Int): DataFrame = {
-    val fillFrac = rand01(tickNo, "fill")
-    df.withColumn("lines",
-        when(col("status") === "PROCESSING",
-          transform(col("lines"), l => l.withField("actual_qty",
-            least(l.getField("expected_qty"),
-              floor(l.getField("expected_qty") * fillFrac).cast("long")))))
-        .when(col("status") === "FINISHED",
-          transform(col("lines"), l => l.withField("actual_qty", l.getField("expected_qty"))))
-        .otherwise(col("lines")))
-      .withColumn("finished_at",
-        when(col("status") === "FINISHED" && col("finished_at").isNull, tickTime)
-          .otherwise(col("finished_at")))
-  }
-
-  /** OB-specific effects (`main.py:310-312`): snap `actual_amount` and
-    * `actual_delivery_date` on PACKED.
-    */
-  def obEffects(df: DataFrame, tickTime: Column): DataFrame =
-    df.withColumn("actual_amount",
-        when(col("status") === "PACKED", col("total_amount")).otherwise(col("actual_amount")))
-      .withColumn("actual_delivery_date",
-        when(col("status") === "PACKED" && col("actual_delivery_date").isNull,
-          tickTime.cast("date")).otherwise(col("actual_delivery_date")))
 }

@@ -560,8 +560,8 @@ object GraftFunctions {
   }
 }
 
-/** Session extension: `SparkSession.builder.withExtensions(new GraftExtensions)`
-  * or `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+/** Session extension: installed by [[graft.GraftSession]], or on a cluster
+  * with `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Injects the full native-function family for SQL users (a cluster user
   * configuring only the extensions conf gets the same surface the Scala

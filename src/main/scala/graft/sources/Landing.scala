@@ -147,8 +147,4 @@ object Landing {
     if (tsCols.isEmpty) df
     else df.withColumns(tsCols.map(c => c -> col(c).cast(TimestampType)).toMap)
   }
-
-  /** Whole-entity scan across all runs (partition-discovered `run_id`). */
-  def readEntity(spark: SparkSession, root: String, entity: String): DataFrame =
-    spark.read.option("basePath", s"$root/$entity").parquet(s"$root/$entity")
 }

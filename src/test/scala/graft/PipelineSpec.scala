@@ -144,6 +144,23 @@ class PipelineSpec extends SparkSpec {
     assert(s2 == StageResult("e", "run2", 0, 0, 0))
   }
 
+  test("rowsIn is the landed row count even when the feed changes between pulls") {
+    val (cfg, ex, _) = mkPipeline()
+    // a live feed: the k-th execution of its plan returns rows 0 until 2k,
+    // so any re-execution after the landing write answers differently
+    PipelineSpec.pulls.indices.foreach(PipelineSpec.pulls(_).set(0))
+    val live = udf((i: Long) => i < 2 * PipelineSpec.pulls(i.toInt).incrementAndGet())
+      .asNondeterministic()
+    val feed: Instant => DataFrame = _ => spark.range(PipelineSpec.pulls.length)
+      .filter(live(col("id")))
+      .select(col("id"), lit(ts("2024-02-01 10:00:00")).as("updated_at"),
+        lit("NEW").as("status"))
+    val r = ex.runEntity("e", "run1", feed)
+    val landed = graft.sources.Landing.read(spark, cfg.landingRoot, "e", "run1").count()
+    assert(landed > 0 && feed(Instant.EPOCH).count() != landed)
+    assert(r.rowsIn == landed)
+  }
+
   test("failed staging run is recorded with status=failed and rethrown") {
     val (cfg, _, st) = mkPipeline()
     intercept[Exception](st.run("e", "missing-run"))
@@ -212,4 +229,10 @@ class PipelineSpec extends SparkSpec {
       })
     assert(calls == 4) // initial + 3 retries
   }
+}
+
+object PipelineSpec {
+  /** Per-row execution counters of the live-feed fixture. */
+  val pulls: Array[java.util.concurrent.atomic.AtomicInteger] =
+    Array.fill(20)(new java.util.concurrent.atomic.AtomicInteger)
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for unit suites: UTC, few shuffle partitions
-  * (tiny data), AQE on — the same knobs Verify/Bench use.
+/** Shared local SparkSession for unit suites: the [[GraftSession]] every
+  * main uses, on `local[4]` (tiny data, few shuffle partitions).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -28,22 +28,6 @@ object SparkSpec {
     * job is that the NEXT suite gets a working session.
     */
   def session: SparkSession = synchronized {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // testdata parquet carries tz-naive timestamps; read them as UTC
-      // instants (LTZ), not TIMESTAMP_NTZ — the whole engine (unix_micros
-      // arithmetic, window RANGE frames, the DuckDB oracles) treats ts as
-      // an instant in the UTC-pinned session
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    GraftSession.local(4)
   }
 }

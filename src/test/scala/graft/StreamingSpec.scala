@@ -133,7 +133,7 @@ class StreamingSpec extends SparkSpec {
         .option("checkpointLocation", s"$root/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .outputMode("append").start()
-      q.awaitTermination(120000)
+      try q.awaitTermination(120000) finally q.stop()
     }
     try {
       mem.addData(

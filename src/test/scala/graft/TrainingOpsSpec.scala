@@ -182,7 +182,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("native CosineSim/HyperplaneBuckets ≡ composable forms (bit-identical)") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val shifted = emb.withColumn("w", reverse($"v"))
@@ -209,7 +208,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("LSH ANN recall vs exact top-k on real embeddings (sf0.001)") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 5)
     val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
@@ -225,7 +223,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("IVF ANN recall vs exact top-k on real embeddings (sf0.001)") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 5)
     val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
@@ -249,7 +246,6 @@ class TrainingOpsSpec extends SparkSpec {
     // re-derives the sf0.001 point and asserts it clears each floor
     // with margin, so a drift toward the fence fails HERE before it
     // empties the driver query
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 8)
     val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
@@ -267,7 +263,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("IVF-PQ ANN recall vs exact top-k on real embeddings (sf0.001)") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 5)
     val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
@@ -451,7 +446,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("cosine near-dup on real embeddings matches a driver-collected brute force") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val got = Similarity.cosineNearDupPairsExact(emb, minCosine = 0.4)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -477,7 +471,6 @@ class TrainingOpsSpec extends SparkSpec {
     // 100% recall at the pinned (tables=48, bits=4) on every testdata scale
     // — this is what licenses q50's exact-SQL oracle; precision is exact by
     // construction (candidates are verified with the exact cosine)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
                     "/root/testdata/sf0.1")) {
       val exact = Similarity.cosineNearDupPairsExact(
@@ -494,7 +487,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("blocked exact cosine pairs equal the exact form; auto strategy routes") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val exact = Similarity.cosineNearDupPairsExact(emb, minCosine = 0.4)
       .select($"id_a", $"id_b", $"sim").as[(Long, Long, Double)].collect().toSet
@@ -527,7 +519,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("cosine near-dup delegation: LSH by default, broadcast only when provably tiny") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     // default (maxBroadcastBytes = 0): always the scale path — no corpus
     // broadcast into a nested loop, ever
@@ -603,7 +594,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("top-k typed aggregate equals the window form on real events") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select($"event_type", $"value", $"event_id")
     for (k <- Seq(1, 3, 10)) {
@@ -679,7 +669,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("PQ encode/lut clamp ragged vectors instead of reading out of bounds") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     // one 32-dim row in a corpus whose quantizer trains at 64 dims
     val ragged = emb.limit(20)
@@ -1230,7 +1219,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("quantile sketch rank error is within accuracy bound vs exact order stats") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = "/root/testdata/sf0.01"
     val events = spark.read.parquet(s"$dir/events.parquet")
     val vals = events
@@ -1275,7 +1263,6 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("approx distinct per group within rsd of exact countDistinct") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     val cmp = events.groupBy($"event_type")
       .agg(countDistinct($"user_id").as("exact"),
