@@ -94,18 +94,60 @@ object Merge {
       .select(cols.map(col): _*)
   }
 
-  /** Rows of `incoming` that would actually change `existing` under O-12
-    * semantics — the upserted-count the run log records
-    * (`rows_upserted_latest`). Anti-join form: newer-than-existing or new key.
+  /** One staging pass over `batch` (O-11 + O-12 together): the batch with
+    * two Boolean flags, so a caller can materialize it once and take the
+    * history rows, the latest-table winners and every count from it.
+    *
+    *  - `_new_hist`: the row [[historyDelta]]`(history, batch)` returns — the
+    *    last-arriving row of its `(id, updated_at, payload_hash)` group,
+    *    absent from `history`.
+    *  - `_wins`: the row [[latestUpsert]]`(existing, batch)` takes from the
+    *    batch — the newest row of its id by `(versionCol, arrival)`, whose id
+    *    is new or whose version is strictly newer than the existing one
+    *    (null versions sort lowest; a tie keeps the existing row).
+    *
+    * Both flags are computed over ONE scan of the batch and one exchange
+    * of it; `existing` is reduced to `(key, version)` and `history` to its
+    * conflict keys, each joined without a shuffle of its own when
+    * broadcastable. Rows are `batch`'s columns plus the two flags.
     */
-  def upsertDelta(existing: DataFrame, incoming: DataFrame,
-                  key: String = "id", versionCol: String = "updated_at"): DataFrame = {
-    val ex = existing.select(col(key).as("_ex_key"), col(versionCol).as("_ex_ver"))
-    Dedup.keepLast(incoming, Seq(key), ordering = Seq(col(versionCol)))
+  def withStageFlags(history: DataFrame, existing: DataFrame, batch: DataFrame,
+                     key: String = "id", versionCol: String = "updated_at",
+                     histKeys: Seq[String] = Seq("id", "updated_at", "payload_hash")): DataFrame = {
+    val cols = batch.columns.toSeq.map(col)
+    val seen = history.select(histKeys.map(col): _*).withColumn("_in_hist", lit(true))
+    val ex = existing.select(col(key).as("_ex_key"), col(versionCol).as("_ex_ver"),
+      lit(true).as("_ex"))
+    // the newest row per key by (version, arrival); struct order puts null
+    // versions lowest, as latestUpsert's does
+    val rank = struct(col(versionCol), col("_arrival"))
+    val v = col(versionCol)
+    Dedup.withArrivalOrder(batch)
+      // a key repeated in history repeats its batch row; the copies share
+      // `_arrival`, get the same flags, and all but one are dropped below
+      .join(seen, histKeys, "left_outer")
+      .withColumn("_newest", rank <=> max(rank).over(Window.partitionBy(col(key))))
+      .withColumn("_last", col("_arrival") ===
+        max(col("_arrival")).over(Window.partitionBy(histKeys.map(col): _*)))
+      .withColumn("_copy", row_number().over(
+        Window.partitionBy(col(key), col("_arrival")).orderBy(col("_arrival"))))
+      .filter(col("_copy") === 1)
       .join(ex, col(key) === col("_ex_key"), "left_outer")
-      .filter(col("_ex_ver").isNull || col(versionCol) > col("_ex_ver"))
-      .drop("_ex_key", "_ex_ver")
+      .select(cols :+
+        (col("_last") && col("_in_hist").isNull).as("_new_hist") :+
+        (col("_newest") && (col("_ex").isNull ||
+          (v.isNotNull && (col("_ex_ver").isNull || v > col("_ex_ver"))))).as("_wins"): _*)
   }
+
+  /** The latest table after an upsert whose winning rows are `winners`
+    * (the `_wins` rows of [[withStageFlags]], at most one per key):
+    * `existing` minus the winners' keys, plus the winners. The winners'
+    * keys are broadcast, so the plan is map-only over `existing` — no
+    * shuffle of the table, whatever its size.
+    */
+  def applyWinners(existing: DataFrame, winners: DataFrame, key: String = "id"): DataFrame =
+    existing.join(broadcast(winners.select(col(key))), Seq(key), "left_anti")
+      .unionByName(winners.select(existing.columns.toSeq.map(col): _*))
 
   /** Snapshot-over-snapshot diff — the crawl-delta audit: every id labeled
     * `added` / `removed` / `changed` / `unchanged` between two corpus

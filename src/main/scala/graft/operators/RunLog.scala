@@ -31,14 +31,15 @@ class RunLog(spark: SparkSession, dir: String,
     spark.createDataFrame(java.util.Arrays.asList(r), Schemas.runLog)
   }
 
-  /** INSERT ... ON CONFLICT (run_id) DO NOTHING (`pipeline_run_logs_repo.py:7-24`). */
+  /** INSERT ... ON CONFLICT (run_id) DO NOTHING (`pipeline_run_logs_repo.py:7-24`).
+    * A run_id that is already logged (the second entity of a run, or a
+    * rerun) leaves the table as it is, unwritten.
+    */
   def start(runId: String, pipeline: String, entity: String,
-            startedAt: Instant = Instant.now()): Unit = {
-    val incoming = rowDf(runId, pipeline, entity, startedAt, None, "running",
-      None, None, None, None)
-    val delta = incoming.join(table.select(col("run_id")), Seq("run_id"), "left_anti")
-    store.overwrite(table.unionByName(delta), dir)
-  }
+            startedAt: Instant = Instant.now()): Unit =
+    if (table.filter(col("run_id") === runId).isEmpty)
+      store.overwrite(table.unionByName(rowDf(runId, pipeline, entity, startedAt, None,
+        "running", None, None, None, None)), dir)
 
   private def finish(runId: String, update: Row): Unit = {
     val cols = Schemas.runLog.fieldNames

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.time.Instant
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
 import graft.sources.{StateStore, TableStore}
@@ -33,22 +33,21 @@ class Watermark(spark: SparkSession, dir: String,
       .getOrElse(defaultStart)
   }
 
-  /** O-4 — monotonic max-merge upsert of the watermark row. */
+  /** O-4 — monotonic max-merge upsert of the watermark row. The control
+    * table is tiny, so the merge runs on the driver over its collected rows
+    * and the result is written back as one local relation.
+    */
   def upsert(pipeline: String, entity: String, newWm: Instant, runId: String,
              now: Instant = Instant.now()): Unit = {
-    import spark.implicits._
-    val incoming = Seq((pipeline, entity, java.sql.Timestamp.from(newWm), runId,
-      java.sql.Timestamp.from(now)))
-      .toDF(Schemas.watermark.fieldNames.toIndexedSeq: _*)
-    val merged = table.withColumn("_is_existing", lit(1))
-      .unionByName(incoming.withColumn("_is_existing", lit(0)))
-      .groupBy(col("pipeline_name"), col("entity"))
-      .agg(
-        // greatest(): the time never regresses (watermark_repo.py:53)...
-        max(col("last_success_time")).as("last_success_time"),
-        // ...but run_id/updated_at always take the newest write (Q-4).
-        min_by(col("last_success_run_id"), col("_is_existing")).as("last_success_run_id"),
-        min_by(col("updated_at"), col("_is_existing")).as("updated_at"))
-    store.overwrite(merged, dir)
+    val (mine, others) = table.collect().toSeq.partition(r =>
+      r.getString(0) == pipeline && r.getString(1) == entity)
+    // greatest(): the time never regresses (watermark_repo.py:53); compared
+    // as Timestamps, which keep the microseconds
+    val time = (mine.flatMap(r => Option(r.getTimestamp(2))) :+ java.sql.Timestamp.from(newWm))
+      .reduce((a, b) => if (a.compareTo(b) >= 0) a else b)
+    // ...but run_id/updated_at always take the newest write (Q-4).
+    val row = Row(pipeline, entity, time, runId, java.sql.Timestamp.from(now))
+    val rows = java.util.Arrays.asList(others :+ row: _*)
+    store.overwrite(spark.createDataFrame(rows, Schemas.watermark), dir)
   }
 }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.time.{Duration, Instant}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Normalize, Watermark}
 import graft.sources.Landing
@@ -47,17 +47,19 @@ class Extractor(spark: SparkSession, cfg: ExtractorConfig,
     val wmEffective = wmSaved.minus(Duration.ofSeconds(cfg.lookbackSeconds))
     val raw = feed(wmEffective)
     val normalized = Normalize.normalizeRows(raw, runId, now, wmEffective)
-    Landing.write(normalized, cfg.landingRoot, entity, runId, cfg.outputFormat)
     // new watermark = max(updated_at) of the batch, else the saved one
-    // (run.py:72-75), and rowsIn, both from the durable landed batch: the
-    // feed is never re-run (a live feed would be pulled twice, and its
-    // second answer need not match what landed)
-    val landed = Landing.read(spark, cfg.landingRoot, entity, runId)
-      .agg(max(col("updated_at")), count(lit(1))).collect()(0)
-    val wmNew =
-      if (landed.isNullAt(0)) wmSaved else landed.getTimestamp(0).toInstant
+    // (run.py:72-75), and rowsIn, both observed on the landing write itself:
+    // they describe exactly the rows that execution wrote, and the feed is
+    // never re-run (a live feed would be pulled twice, and its second answer
+    // need not match what landed)
+    val landed = Observation("landed")
+    Landing.write(normalized.observe(landed, max(col("updated_at")).as("wm"),
+      count(lit(1)).as("n")), cfg.landingRoot, entity, runId, cfg.outputFormat)
+    val stats = landed.get
+    val wmNew = Option(stats("wm")).map(_.asInstanceOf[java.sql.Timestamp].toInstant)
+      .getOrElse(wmSaved)
     watermarks.upsert(cfg.pipelineName, entity, wmNew, runId, now)
-    ExtractResult(entity, runId, landed.getLong(1), wmSaved, wmNew)
+    ExtractResult(entity, runId, stats("n").asInstanceOf[Long], wmSaved, wmNew)
   }
 
   /** Serial loop over entities sharing one run_id and extraction timestamp

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Par
 import graft.operators.{Merge, Payload, RunLog}
 import graft.sources.{Landing, StateStore, TableStore}
 
@@ -13,11 +14,21 @@ import graft.sources.{Landing, StateStore, TableStore}
   *   dedup) → latest upsert (newer-wins) → run-log success; failure → run-log
   *   failed + rethrow.
   *
+  * Planned as one pass per entity: the landed batch, with payload and hash,
+  * is flagged against history and the latest table
+  * ([[graft.operators.Merge.withStageFlags]]) and materialized once; one
+  * aggregate over it gives `rowsIn`, the new-history count and the winner
+  * count; the history append writes the `_new_hist` rows and the latest
+  * table is rewritten as existing-minus-winners plus winners
+  * ([[graft.operators.Merge.applyWinners]], map-only over the table). Each
+  * write runs only when its count is non-zero, so a rerun that changes
+  * nothing leaves both tables untouched.
+  *
   * Deviations, both recorded in SURVEY.md §8 as reference defects we fix:
   *  - Q-1: payload values are preserved (the reference nulls every
   *    non-timestamp scalar via a missing `return`).
-  *  - Q-2: the empty-input branch genuinely early-returns instead of
-  *    re-executing the load and double-logging success.
+  *  - Q-2: the empty-input branch logs success(0, 0, 0) once and writes
+  *    nothing, instead of re-executing the load and double-logging success.
   */
 final case class StagerConfig(landingRoot: String, stateRoot: String,
                               pipelineName: String = "wms_pipeline")
@@ -41,25 +52,23 @@ class Stager(spark: SparkSession, cfg: StagerConfig,
   def run(entity: String, runId: String, now: Instant = Instant.now()): StageResult = {
     runLog.start(runId, cfg.pipelineName, entity, startedAt = now)
     try {
-      val landed = Landing.read(spark, cfg.landingRoot, entity, runId)
-      val rowsIn = landed.count()
-      if (rowsIn == 0) { // Q-2 fix: true early return
-        runLog.finishSuccess(runId, 0, 0, 0, endedAt = now)
-        return StageResult(entity, runId, 0, 0, 0)
-      }
-      val records = Payload.withPayloadAndHash(landed)
+      val records = Payload.withPayloadAndHash(
+        Landing.read(spark, cfg.landingRoot, entity, runId))
+      val cur = latest(entity, records)
+      // O-11 + O-12 in one materialized pass; counts from one aggregate over
+      // it (not an Observation: under `spark.graft.materialize=persist|off`
+      // nothing would execute the observed plan before `get`)
+      val batch = Par.materialize(Merge.withStageFlags(history(entity, records), cur, records))
+      val counts = batch.agg(count(lit(1)), count_if(col("_new_hist")), count_if(col("_wins")))
+        .head()
+      val (rowsIn, nHist, nLatest) = (counts.getLong(0), counts.getLong(1), counts.getLong(2))
+      def rows(flag: String) = batch.filter(col(flag)).drop("_new_hist", "_wins")
 
       // O-11: append only rows whose (id, updated_at, payload_hash) is new.
-      val hist = history(entity, records)
-      val delta = Merge.historyDelta(hist, records)
-      val nHist = delta.count()
-      if (nHist > 0) store.append(delta, historyDir(entity))
-
-      // O-12: newer-wins merge into the latest-state table.
-      val cur = latest(entity, records)
-      val nLatest = Merge.upsertDelta(cur, records).count()
-      val merged = Merge.latestUpsert(cur, records)
-      store.overwrite(merged, latestDir(entity))
+      if (nHist > 0) store.append(rows("_new_hist"), historyDir(entity))
+      // O-12: newer-wins upsert — only the winning rows touch the latest table.
+      if (nLatest > 0) store.overwrite(Merge.applyWinners(cur, rows("_wins")), latestDir(entity))
+      batch.unpersist() // a no-op unless spark.graft.materialize=persist
 
       runLog.finishSuccess(runId, rowsIn, nHist, nLatest, endedAt = now)
       StageResult(entity, runId, rowsIn, nHist, nLatest)

@@ -35,9 +35,12 @@ trait TableStore {
   * WRITERS or object stores — should use [[ManifestStore.asTableStore]],
   * whose manifest commit has no such gap.
   *
-  * These tables are intentionally tiny (control metadata) or append-mostly
-  * (history); reads of control tables are driver-cheap and never in a hot
-  * loop.
+  * The control tables (watermark, run log) are tiny and history is
+  * append-only. The latest-state table is the one that grows and is
+  * overwritten by every staging run that has winners: `Stager` rewrites it
+  * in full as the existing rows minus the batch's winning keys plus the
+  * winners, a map-only plan, but still O(table) bytes per run in the single
+  * task of [[overwrite]].
   */
 object StateStore extends TableStore {
 
@@ -72,7 +75,9 @@ object StateStore extends TableStore {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
     val old = new Path(dir + ".old-" + java.util.UUID.randomUUID().toString.take(8))
-    // Control tables are small by construction; one file keeps the swap cheap.
+    // One file per table keeps the swap (two renames) and later listings
+    // cheap; for the latest-state table it also means the whole rewrite
+    // runs in one task.
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     if (fs.exists(path)) {
       if (!fs.rename(path, old)) throw new java.io.IOException(s"swap-out failed: $dir")

@@ -93,17 +93,61 @@ class MergeSpec extends SparkSpec {
     assert(merged.select("note").as[String].head() == "v3")
   }
 
-  test("upsertDelta counts only rows that change state") {
+  test("withStageFlags counts only rows that change state") {
     val existing = Seq(
       ("a", ts("2024-01-02 00:00:00"), "old-a"),
-      ("b", ts("2024-01-02 00:00:00"), "old-b")).toDF("id", "updated_at", "note")
+      ("b", ts("2024-01-02 00:00:00"), "old-b"),
+      ("e", null, "old-e")).toDF("id", "updated_at", "note")
     val incoming = Seq(
       ("a", ts("2024-01-03 00:00:00"), "new-a"),  // newer → counts
       ("b", ts("2024-01-02 00:00:00"), "tie-b"),  // tie → strict '>' → not counted
-      ("d", ts("2024-01-01 00:00:00"), "new-d"))  // new key → counts
+      ("d", ts("2024-01-01 00:00:00"), "new-d"),  // new key → counts
+      ("e", null, "null-e"))                      // null vs null → existing kept
       .toDF("id", "updated_at", "note")
-    val delta = Merge.upsertDelta(existing, incoming)
-    assert(delta.select("id").as[String].collect().toSet == Set("a", "d"))
+    val flagged = Merge.withStageFlags(incoming.limit(0), existing, incoming,
+      histKeys = Seq("id", "updated_at", "note"))
+    assert(flagged.filter($"_wins").select("id").as[String].collect().toSet == Set("a", "d"))
+    // and the merge agrees: e keeps its existing row
+    assert(Merge.latestUpsert(existing, incoming).filter($"id" === "e")
+      .select("note").as[String].head() == "old-e")
+  }
+
+  test("withStageFlags + applyWinners equal historyDelta + latestUpsert on random batches") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", StringType), StructField("updated_at", TimestampType),
+      StructField("payload_hash", StringType), StructField("note", StringType)))
+    def df(rows: Seq[Row]) = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def sorted(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    // versions include null; few values, so ties and older versions are common
+    val versions = None +: (1 to 4).map(d => Some(ts(s"2024-01-0$d 00:00:00")))
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      def ver() = versions(rnd.nextInt(versions.size)).orNull
+      def hash() = s"h${rnd.nextInt(2)}"
+      // latest: one row per id k0..k7 (k8..k11 are new keys)
+      val existing = df((0 until 8).map(i => Row(s"k$i", ver(), hash(), s"ex$i")))
+      val drawn = (0 until 24).map(j => Row(s"k${rnd.nextInt(12)}", ver(), hash(), s"b$j"))
+      // exact duplicates, and same-key rows that differ only in the note
+      val batchRows = drawn ++ drawn.take(4) ++
+        drawn.slice(4, 8).map(r => Row(r(0), r(1), r(2), s"${r(3)}-again"))
+      val batch = df(rnd.shuffle(batchRows))
+      // history holds some batch keys (one of them twice) and some other rows
+      val history = df(batchRows.take(6) ++ batchRows.take(1) ++
+        (0 until 4).map(i => Row(s"k$i", ver(), hash(), s"hist$i")))
+
+      val flagged = Merge.withStageFlags(history, existing, batch)
+      val c = flagged.agg(count(lit(1)), count_if($"_new_hist"), count_if($"_wins")).head()
+      val winners = flagged.filter($"_wins").drop("_new_hist", "_wins")
+      val merged = Merge.latestUpsert(existing, batch)
+      val delta = Merge.historyDelta(history, batch)
+      assert(sorted(Merge.applyWinners(existing, winners)) == sorted(merged), s"seed $seed latest")
+      assert(sorted(flagged.filter($"_new_hist").drop("_new_hist", "_wins")) == sorted(delta),
+        s"seed $seed history")
+      assert(c.getLong(0) == batchRows.size)
+      assert(c.getLong(1) == delta.count(), s"seed $seed history count")
+      assert(c.getLong(2) == sorted(merged).diff(sorted(existing)).size, s"seed $seed winner count")
+    }
   }
 
   test("latest upsert: exact (key, version) duplicates in one batch resolve " +

@@ -109,6 +109,19 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(st.historyDir("e")).count() == 1)
   }
 
+  test("re-staging a run with no winners and no new history leaves both tables untouched") {
+    val (_, ex, st) = mkPipeline()
+    ex.runEntity("e", "run1", feedFrom(sourceDf(
+      ("a", "2024-02-01 10:00:00", "NEW"), ("b", "2024-02-01 11:00:00", "NEW"))))
+    st.run("e", "run1")
+    val latest = StateSpec.files(st.latestDir("e"))
+    val history = StateSpec.files(st.historyDir("e"))
+    val again = st.run("e", "run1")
+    assert(again.rowsIn == 2 && again.rowsInsertedHistory == 0 && again.rowsUpsertedLatest == 0)
+    assert(StateSpec.files(st.latestDir("e")) == latest, "latest table was rewritten")
+    assert(StateSpec.files(st.historyDir("e")) == history, "history table was written")
+  }
+
   test("lookback window re-reads late data; history dedup absorbs the overlap") {
     val (cfg, ex, st) = mkPipeline()
     val v1 = sourceDf(("a", "2024-02-01 10:00:00", "NEW"))

@@ -284,6 +284,64 @@ class PlanAuditSpec extends SparkSpec {
       "merge must map-side combine:\n" + p.take(800))
   }
 
+  test("staging rewrites the latest table map-only: no Exchange above its scan") {
+    import java.time.Instant
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.pipeline._
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("audit-stage").toString
+    val ex = new Extractor(spark, ExtractorConfig(s"$root/landing", s"$root/state",
+      defaultStart = Instant.parse("2024-01-01T00:00:00Z")))
+    val st = new Stager(spark, StagerConfig(s"$root/landing", s"$root/state"))
+    def feed(rows: (String, String)*) = (_: Instant) => rows
+      .map { case (i, t) => (i, java.sql.Timestamp.valueOf(t), "NEW") }.toDF("id", "updated_at", "status")
+    ex.runEntity("e", "run1", feed(("a", "2024-02-01 10:00:00"), ("b", "2024-02-01 11:00:00")))
+    st.run("e", "run1")
+    ex.runEntity("e", "run2", feed(("a", "2024-02-01 12:00:00"), ("c", "2024-02-01 12:30:00")))
+
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    // every root-to-node path ending at a scan of the latest table
+    def scanPaths(p: SparkPlan, above: List[SparkPlan]): Seq[List[SparkPlan]] = p match {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == "stg_e") =>
+        Seq(above)
+      case _ => children(p).flatMap(scanPaths(_, p :: above))
+    }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (nodes(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec]) &&
+            scanPaths(qe.executedPlan, Nil).nonEmpty) writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(st.run("e", "run2").rowsUpsertedLatest == 2)
+      // listener events are delivered asynchronously
+      val deadline = System.nanoTime() + 30000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!writes.isEmpty, "no write over the latest table was captured")
+    writes.forEach { w =>
+      val shuffles = scanPaths(w, Nil).flatten.filter(_.isInstanceOf[ShuffleExchangeLike])
+      assert(shuffles.isEmpty, "latest-table rewrite shuffles the existing table:\n" + w)
+    }
+    assert(spark.read.parquet(st.latestDir("e")).orderBy("id").select("id", "updated_at")
+      .as[(String, java.sql.Timestamp)].collect().toSeq.map(r => r._1 -> r._2.toString) ==
+      Seq("a" -> "2024-02-01 12:00:00.0", "b" -> "2024-02-01 11:00:00.0",
+        "c" -> "2024-02-01 12:30:00.0"))
+  }
+
   test("latest-state dedup map-side combines: no window, partial max_by only") {
     // the window form shuffles EVERY row; keepLastAgg's partial aggregate
     // sends ~one candidate per key per partition across the exchange

@@ -80,12 +80,16 @@ class StateSpec extends SparkSpec {
   }
 
   test("run log start is ON CONFLICT DO NOTHING (pipeline_run_logs_repo.py:7-24)") {
-    val rl = new RunLog(spark, tmpDir("rl"))
+    val dir = tmpDir("rl")
+    val rl = new RunLog(spark, dir)
     rl.start("r1", "pipe", "e", startedAt = t0)
+    val before = StateSpec.files(dir)
     rl.start("r1", "pipe", "e", startedAt = t2) // rerun keeps original started_at
     val rows = rl.table.filter($"run_id" === "r1").collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[java.sql.Timestamp]("started_at").toInstant == t0)
+    // DO NOTHING writes nothing: the table directory is not rewritten
+    assert(StateSpec.files(dir) == before)
   }
 
   test("run log failure truncates error to 4000 chars (pipeline_run_logs_repo.py:70)") {
@@ -95,5 +99,21 @@ class StateSpec extends SparkSpec {
     val row = rl.table.filter($"run_id" === "r1").head()
     assert(row.getAs[String]("status") == "failed")
     assert(row.getAs[String]("error").length == 4000)
+  }
+}
+
+object StateSpec {
+  /** Name and modification time of every file under `dir`: a rewrite
+    * (a new directory swapped in, or new part files) changes it.
+    */
+  def files(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.getLastModifiedTime(p).toMillis)
+        .toMap
+    } finally walk.close()
   }
 }
