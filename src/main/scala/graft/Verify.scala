@@ -21,7 +21,7 @@ object Verify {
       }
       // drop per-query checkpoint blocks — they accumulate across the run
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.functions.Par.unpersistAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Link-analysis operators. PageRank is the corpus-curation signal for
   * source/domain authority (the Common-Crawl-style "rank the domains,
@@ -50,18 +51,19 @@ object Graph {
     // iteration-scoped blocks, re-read `iters` times then dropped —
     // serialized storage (compact bytes, bounded GC scanning) measured
     // 36–43 s → 22–28 s on the cold first sf1 sample and eliminated the
-    // first-sample cliff entirely (BASELINE.md §Round 12); an explicit
-    // spark.graft.materialize.level still overrides
+    // first-sample cliff entirely (BASELINE.md §Round 12)
     val e = Par.materialize(
       edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")).distinct(), defaultLevel = "ser")
+        col(dstCol).cast("long").as("dst")).distinct(),
+      StorageLevel.MEMORY_AND_DISK_SER)
     // ONE pass derives the node set AND the receives-mass flag: endpoints
     // tagged with "appears as dst", grouped once — replacing the
     // union-distinct plus a SECOND full dst-distinct pass over the edges
     val flagged = Par.materializeLayout(
       e.select(col("src").as("node"), lit(false).as("_in"))
         .unionByName(e.select(col("dst").as("node"), lit(true).as("_in")))
-        .groupBy(col("node")).agg(max(col("_in")).as("_in")), defaultLevel = "ser")
+        .groupBy(col("node")).agg(max(col("_in")).as("_in")),
+      StorageLevel.MEMORY_AND_DISK_SER)
     val nodes = flagged.select(col("node"))
     // fold inverse out-degree into the edges once via a window pass: the
     // window both hash-partitions AND sorts the edges by src, and the
@@ -72,7 +74,7 @@ object Graph {
     val withDeg = Par.materializeLayout(
       e.withColumn("outdeg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
-      defaultLevel = "ser")
+      StorageLevel.MEMORY_AND_DISK_SER)
     // N is exact; teleport/init are single IEEE divisions both engines
     // reproduce from the same integers and source-decimal literals
     val n = flagged.count()
@@ -104,7 +106,7 @@ object Graph {
       // graph); long runs truncate lineage periodically like
       // connectedComponents — the plan, not the values, changes
       ranks = if (it % checkpointEvery == 0 && it < iters)
-                Par.materialize(next, defaultLevel = "ser")
+                Par.materialize(next, StorageLevel.MEMORY_AND_DISK_SER)
               else next
     }
     ranks

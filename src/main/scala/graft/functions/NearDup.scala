@@ -39,44 +39,23 @@ object NearDup {
     * call EAGER (the posting-list aggregation runs at DataFrame-build
     * time) — consistent with the rest of the near-dup family, whose
     * signature tables are eagerly materialized for multi-reference reuse.
-    *
-    * Set `spark.graft.lazyHotKeys=true` to defer instead: the prune becomes
-    * a plain anti-join against the hot-key subquery inside the plan, so
-    * building a near-dup DataFrame launches no Spark job (callers composing
-    * plans lazily — notebooks, plan audits, multi-query optimizers — get
-    * the declarative behavior they expect). The cap itself is identical;
-    * what lazy mode gives up is the up-front dropped-key WARN (the count
-    * isn't known until an action runs) and single-computation of the hot
-    * set when the pruned stream is referenced from multiple join sides.
-    * Combine with `spark.graft.materialize=persist` (also lazy) for fully
-    * job-free construction.
     */
   def pruneHotKeys(exploded: DataFrame, keyCol: String, maxBucket: Int): DataFrame =
     pruneHotKeysCounted(exploded, keyCol, maxBucket)._1
 
-  /** [[pruneHotKeys]] that also reports how many keys were dropped:
-    * `Some(n)` in eager mode, `None` in lazy mode (unknown until an action
-    * runs). Callers can specialize their plan on `Some(0)` — "nothing was
-    * pruned" means pruned-index counts are still exact.
+  /** [[pruneHotKeys]] that also reports how many keys were dropped.
+    * Callers can specialize their plan on 0 — "nothing was pruned" means
+    * pruned-index counts are still exact.
     */
   private[functions] def pruneHotKeysCounted(exploded: DataFrame, keyCol: String,
-                                             maxBucket: Int): (DataFrame, Option[Long]) = {
-    val hotAgg = exploded.groupBy(col(keyCol)).agg(count(lit(1)).as("_df"))
-      .filter(col("_df") > maxBucket).select(col(keyCol))
-    val lazyMode =
-      exploded.sparkSession.conf.get("spark.graft.lazyHotKeys", "false").toBoolean
-    if (lazyMode) {
-      log.debug(s"pruneHotKeys: lazy mode — '$keyCol' keys with posting lists > " +
-        s"$maxBucket prune inline; dropped-key count is not precomputed")
-      (exploded.join(hotAgg, Seq(keyCol), "left_anti"), None)
-    } else {
-      val hot = Par.materialize(hotAgg)
-      val nHot = hot.count()
-      if (nHot > 0)
-        log.warn(s"pruneHotKeys: dropping $nHot hot '$keyCol' key(s) with posting " +
-          s"lists > $maxBucket — candidate recall is truncated on those keys")
-      (exploded.join(hot, Seq(keyCol), "left_anti"), Some(nHot))
-    }
+                                             maxBucket: Int): (DataFrame, Long) = {
+    val hot = Par.materialize(exploded.groupBy(col(keyCol)).agg(count(lit(1)).as("_df"))
+      .filter(col("_df") > maxBucket).select(col(keyCol)))
+    val nHot = hot.count()
+    if (nHot > 0)
+      log.warn(s"pruneHotKeys: dropping $nHot hot '$keyCol' key(s) with posting " +
+        s"lists > $maxBucket — candidate recall is truncated on those keys")
+    (exploded.join(hot, Seq(keyCol), "left_anti"), nHot)
   }
 
   /** Word n-gram Jaccard similarity over all candidate pairs sharing ≥1
@@ -151,14 +130,14 @@ object NearDup {
     // common must come from the FULL shingle sets: pruning may truncate
     // candidate recall (documented, logged) but must never deflate the
     // reported value of a pair it did surface. Two plans deliver that:
-    //  - nothing pruned (the common case, known only in eager mode): the
-    //    index join's match count per pair IS the exact intersection —
-    //    count it map-side (partial agg) and join the two size columns;
-    //    no array re-attachment, no per-pair intersect.
-    //  - keys pruned (or lazy mode, where the count is unknown): generate
-    //    candidate ids from the pruned index, then exact-verify with
-    //    array_intersect over the full arrays, like the rest of the family.
-    if (nHot.contains(0L)) {
+    //  - nothing pruned (the common case): the index join's match count
+    //    per pair IS the exact intersection — count it map-side (partial
+    //    agg) and join the two size columns; no array re-attachment, no
+    //    per-pair intersect.
+    //  - keys pruned: generate candidate ids from the pruned index, then
+    //    exact-verify with array_intersect over the full arrays, like the
+    //    rest of the family.
+    if (nHot == 0) {
       val sizes = sh.select(col("_id"), size(col("_sh")).as("_size"))
       inv.as("l").join(inv.as("r"),
           col("l._shingle") === col("r._shingle") && col("l._id") < col("r._id"))

@@ -1,7 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StreamingShim
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
 
 /** Parallelism control for compute-bound operators.
   *
@@ -60,50 +64,18 @@ object Par {
     * derived table otherwise recomputes the derivation per join side — at
     * 100 TB that triples the most expensive map stage.
     *
-    * The strategy is a session switch, `spark.graft.materialize`:
-    *  - `localCheckpoint` (default): EAGER; cuts lineage and serves both
-    *    references from materialized blocks. Fastest, but the blocks do not
-    *    survive executor loss — the single-node / static-allocation choice.
-    *  - `persist`: `MEMORY_AND_DISK` cache, LAZY (first action populates it;
-    *    every reference shares the one computation). Recomputable from
-    *    lineage after executor loss — the production choice under dynamic
-    *    allocation — at the cost of retaining lineage (iterative callers
-    *    replan a growing logical tree each round, execution still reads the
-    *    cache).
-    *  - `off`: no materialization — every reference recomputes its
-    *    derivation. Never the performance choice; exists so plan audits
-    *    and EXPLAIN can see one fully DECLARATIVE tree (a checkpoint
-    *    replaces its subplan with an opaque RDD scan, hiding the joins the
-    *    audit wants to pin).
+    * An EAGER `localCheckpoint`: it cuts lineage and serves every reference
+    * from materialized blocks. The blocks do not survive executor loss —
+    * the single-node / static-allocation choice. `level` is the blocks'
+    * storage: `MEMORY_AND_DISK` (deserialized, zero read overhead) for
+    * blocks re-read many times; `MEMORY_AND_DISK_SER` (compact bytes,
+    * bounded GC scanning) for ITERATIVE plans whose checkpoints are large
+    * relative to the heap, where deserialized block churn makes stage
+    * times heap-state-dependent. [[unpersistAll]] drops the blocks.
     */
-  def materialize(df: DataFrame, defaultLevel: String = "memdisk"): DataFrame = {
-    // storage for the materialized blocks, `spark.graft.materialize.level`:
-    //  - `memdisk` (default): MEMORY_AND_DISK, deserialized — zero read
-    //    overhead, the right choice for blocks re-read many times;
-    //  - `ser`: MEMORY_AND_DISK_SER — compact blocks (columnar-ish row
-    //    bytes instead of object graphs), bounded GC scanning; the choice
-    //    for ITERATIVE plans whose checkpoints are large relative to the
-    //    heap (PageRank/connected-components intermediates), where
-    //    deserialized block churn makes stage times heap-state-dependent.
-    // An operator that KNOWS its blocks are iteration-scoped and re-read
-    // only a handful of times passes `defaultLevel = "ser"`; an explicitly
-    // set session conf still wins (the user lever outranks the operator
-    // default).
-    val level = df.sparkSession.conf.get("spark.graft.materialize.level",
-        defaultLevel) match {
-      case "memdisk" => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case "ser" => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize.level must be memdisk|ser, got '$other'")
-    }
-    df.sparkSession.conf.get("spark.graft.materialize", "localCheckpoint") match {
-      case "localCheckpoint" => df.localCheckpoint(eager = true, level)
-      case "persist" => df.persist(level)
-      case "off" => df
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize must be localCheckpoint|persist|off, got '$other'")
-    }
-  }
+  def materialize(df: DataFrame,
+                  level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+    df.localCheckpoint(eager = true, level)
 
   /** [[materialize]] that PRESERVES the input's physical layout
     * (partitioning + ordering) on the checkpointed scan node. Under AQE,
@@ -112,21 +84,24 @@ object Par {
     * capture — so a consumer that could have reused the layout
     * re-shuffles the materialized blocks; for ITERATIVE operators that
     * is one redundant exchange + sort of the big side PER ITERATION.
-    * Executing just this one eager checkpoint with AQE off makes the
-    * captured `LogicalRDD` carry the hashpartitioning/ordering, which
-    * `EnsureRequirements` then satisfies with no new exchange. Pass a
-    * frame whose plan ends in a width-bearing operator (repartition,
-    * window, aggregate): static planning uses the session shuffle
-    * width — the scale-adaptive setting, not a local constant. Lazy
-    * modes (`persist`/`off`) keep their declarative plan, whose
-    * partitioning is visible anyway — the toggle is a no-op cost there.
+    * The checkpoint therefore runs on a private clone of the caller's
+    * session with AQE off, so the captured `LogicalRDD` carries the
+    * hashpartitioning/ordering, which `EnsureRequirements` then satisfies
+    * with no new exchange; the `LogicalRDD` is then rebound to the
+    * caller's session, whose settings never change. Pass a frame whose
+    * plan ends in a width-bearing operator (repartition, window,
+    * aggregate): static planning uses the session shuffle width — the
+    * scale-adaptive setting, not a local constant.
     */
-  def materializeLayout(df: DataFrame, defaultLevel: String = "memdisk"): DataFrame = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try materialize(df, defaultLevel)
-    finally spark.conf.set("spark.sql.adaptive.enabled", prev.getOrElse("true"))
+  def materializeLayout(df: DataFrame,
+                        level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+    val caller = df.sparkSession
+    val staticPlanning = StreamingShim.cloneSession(caller)
+    staticPlanning.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, false) // the clone only
+    val ck = materialize(StreamingShim.ofRows(staticPlanning, df.queryExecution.analyzed), level)
+    val leaf = ck.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    StreamingShim.ofRows(caller, leaf.copy()(caller.asInstanceOf[classic.SparkSession],
+      Some(leaf.stats), Some(leaf.constraints)))
   }
 
   /** Collect a single-LONG-column frame to the driver ONLY when it is
@@ -149,11 +124,11 @@ object Par {
     else Some(rows.filter(!_.isNullAt(0)).map(_.getLong(0)))
   }
 
-  /** Drop every cached RDD in the session — the cleanup hook for `persist`
-    * mode, whose cache entries otherwise outlive their operator call (each
-    * near-dup/similarity invocation pins its signature tables; a long-lived
-    * session accumulates them). `Bench.dropPersisted` calls this between
-    * timed queries with `blocking = true` (the next measurement must not
+  /** Drop every cached RDD in the session — including the blocks of every
+    * [[materialize]] checkpoint, which otherwise outlive their operator call
+    * (each near-dup/similarity invocation pins its signature tables; a
+    * long-lived session accumulates them). `Bench.dropPersisted` calls this
+    * between timed queries with `blocking = true` (the next measurement must not
     * race block removal). NOTE: this clears ALL persisted RDDs in the
     * SparkContext, including the caller's own — it is a session-sweep, not
     * a per-operator release.

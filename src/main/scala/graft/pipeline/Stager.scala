@@ -55,9 +55,7 @@ class Stager(spark: SparkSession, cfg: StagerConfig,
       val records = Payload.withPayloadAndHash(
         Landing.read(spark, cfg.landingRoot, entity, runId))
       val cur = latest(entity, records)
-      // O-11 + O-12 in one materialized pass; counts from one aggregate over
-      // it (not an Observation: under `spark.graft.materialize=persist|off`
-      // nothing would execute the observed plan before `get`)
+      // O-11 + O-12 in one materialized pass; counts from one aggregate over it
       val batch = Par.materialize(Merge.withStageFlags(history(entity, records), cur, records))
       val counts = batch.agg(count(lit(1)), count_if(col("_new_hist")), count_if(col("_wins")))
         .head()
@@ -68,7 +66,6 @@ class Stager(spark: SparkSession, cfg: StagerConfig,
       if (nHist > 0) store.append(rows("_new_hist"), historyDir(entity))
       // O-12: newer-wins upsert — only the winning rows touch the latest table.
       if (nLatest > 0) store.overwrite(Merge.applyWinners(cur, rows("_wins")), latestDir(entity))
-      batch.unpersist() // a no-op unless spark.graft.materialize=persist
 
       runLog.finishSuccess(runId, rowsIn, nHist, nLatest, endedAt = now)
       StageResult(entity, runId, rowsIn, nHist, nLatest)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * `KafkaSource`) reaches it the same way — a helper inside an
   * `org.apache.spark.sql.*` subpackage, which Scala's `private[sql]`
   * qualifier admits. This object is that helper and nothing else: no
-  * behavior, one delegation.
+  * behavior, delegations only.
   */
 object StreamingShim {
 
@@ -48,4 +48,13 @@ object StreamingShim {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The fourth seam: a copy of `spark`'s session (the `private[sql]`
+    * `cloneSession`) — same conf, catalog, functions and query-execution
+    * listeners, but its own conf, so settings changed on the copy never
+    * reach the original. How `Par.materializeLayout` plans one checkpoint
+    * without AQE.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

@@ -1,86 +1,23 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.functions.NearDup
 
-/** Parallelism-control switches: materialization strategy and lazy hot-key
-  * pruning. Both must change PLAN/EXECUTION shape only — results identical
-  * either way.
+/** The hot-key cap of the near-dup index: posting lists longer than
+  * `maxBucket` generate no candidates.
   */
 class ParSpec extends SparkSpec {
   import spark.implicits._
 
-  private def docs = Seq(
-    (1L, "alpha beta gamma delta epsilon zeta"),
-    (2L, "alpha beta gamma delta epsilon eta"),
-    (3L, "one two three four five six seven"),
-    (4L, "one two three four five six eight"),
-    (5L, "totally unrelated content words here"))
-    .toDF("doc_id", "text")
-
-  test("materialize modes produce identical near-dup results") {
-    def run(): Set[(Long, Long)] =
-      NearDup.ngramJaccardPairs(docs, "text", "doc_id", n = 3, minJaccard = 0.2)
-        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    val viaCheckpoint = run() // default localCheckpoint
-    spark.conf.set("spark.graft.materialize", "persist")
-    try {
-      assert(run() == viaCheckpoint)
-    } finally spark.conf.unset("spark.graft.materialize")
-    assert(viaCheckpoint.nonEmpty) // the fixture must actually exercise the join
-    intercept[IllegalArgumentException] {
-      spark.conf.set("spark.graft.materialize", "nonsense")
-      try graft.functions.Par.materialize(docs)
-      finally spark.conf.unset("spark.graft.materialize")
-    }
-  }
-
-  test("lazy hot-key mode + persist: building a near-dup plan launches no job") {
-    @volatile var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // the contrast this test pins: construction under the EAGER defaults
-    // launches jobs (localCheckpoint + hot-key count)...
-    NearDup.ngramJaccardPairs(docs, "text", "doc_id", n = 3, minJaccard = 0.2)
-    Thread.sleep(1000)
-    val eagerJobs = jobs
-    assert(eagerJobs > 0, "eager default should materialize during construction")
-    spark.conf.set("spark.graft.lazyHotKeys", "true")
-    spark.conf.set("spark.graft.materialize", "persist")
-    try {
-      // ...and the same construction under the lazy confs launches none
-      val built = NearDup.ngramJaccardPairs(docs, "text", "doc_id",
-        n = 3, minJaccard = 0.2)
-      // job submission inside construction is synchronous (localCheckpoint /
-      // count block); the listener bus lags by at most ms
-      Thread.sleep(1000)
-      assert(jobs == eagerJobs,
-        s"plan construction launched ${jobs - eagerJobs} job(s) in lazy mode")
-      // the deferred plan still computes the same answer
-      val got = built.select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-      assert(got.nonEmpty)
-      assert(jobs > eagerJobs) // the action, not the construction, ran the jobs
-    } finally {
-      spark.conf.unset("spark.graft.lazyHotKeys")
-      spark.conf.unset("spark.graft.materialize")
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
-
-  test("lazy hot-key prune still drops hot keys (cap behavior identical)") {
-    // 30 docs sharing one stop-shingle run; cap at 10 postings → the shared
-    // shingle must not generate candidates in either mode
+  test("hot-key cap: maxBucket 1000 keeps all 435 pairs, 10 keeps none") {
+    // 30 docs sharing one stop-shingle run: uncapped, every pair (30·29/2)
+    // is a candidate; capped at 10 postings, the shared shingles generate none
     val shared = (1L to 30L).map(i => (i, s"the common stop shingle plus unique$i tail$i"))
       .toDF("doc_id", "text")
-    def pairsWith(lazyMode: Boolean): Set[(Long, Long)] = {
-      spark.conf.set("spark.graft.lazyHotKeys", lazyMode.toString)
-      try NearDup.ngramJaccardPairs(shared, "text", "doc_id", n = 3,
-          minJaccard = 0.01, maxBucket = 10)
+    def pairs(maxBucket: Int): Set[(Long, Long)] =
+      NearDup.ngramJaccardPairs(shared, "text", "doc_id", n = 3,
+          minJaccard = 0.01, maxBucket = maxBucket)
         .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-      finally spark.conf.unset("spark.graft.lazyHotKeys")
-    }
-    assert(pairsWith(lazyMode = true) == pairsWith(lazyMode = false))
+    assert(pairs(1000).size == 435)
+    assert(pairs(10).isEmpty)
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audit: the properties that decide whether these operators
@@ -16,6 +19,27 @@ class PlanAuditSpec extends SparkSpec {
     val df = SparkEntry.queries(name)(spark, sf)
     df.queryExecution.executedPlan.toString
   }
+
+  /** The plan of the frame `build` returns plus every plan building it
+    * executed (checkpointed stages, hot-key counts, bounded collects). */
+  private def executedPlans(build: => DataFrame): Seq[SparkPlan] = {
+    val (df, qes) = executions(build)
+    qes.map(_.executedPlan) :+ df.queryExecution.executedPlan
+  }
+
+  private def dropCheckpoints(): Unit = {
+    spark.catalog.clearCache()
+    graft.functions.Par.unpersistAll(spark)
+  }
+
+  /** Physical children, looking through AQE wrappers and stage reuse. */
+  private def children(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case other => other.children
+  }
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
 
   test("incremental scan pushes the nanos cursor bound into the parquet scan") {
     val p = plan("q05_incremental_scan")
@@ -156,38 +180,74 @@ class PlanAuditSpec extends SparkSpec {
       // the ladder's last rung is the empty prefix: its crowd is the
       // 1-row corpus count
       "q125_kanon_release" -> "1-row corpus-count aggregate")
-    // materialize=off: an eager checkpoint EXECUTES its subplan during
-    // query construction and replaces it with an opaque RDD scan — a BNLJ
-    // hidden inside a materialized candidate stage would run for real yet
-    // never appear in the audited plan. Off-mode keeps every subplan in
-    // one declarative tree, so this sweep sees the joins inside the
-    // signature/candidate stages too.
-    spark.conf.set("spark.graft.materialize", "off")
-    try {
-      for ((name, fn) <- SparkEntry.queries) {
-        val p = fn(spark, sf).queryExecution.executedPlan.toString
+    // an eager checkpoint EXECUTES its subplan during query construction
+    // and replaces it with an opaque RDD scan, so a BNLJ hidden inside a
+    // materialized candidate stage would run for real yet never appear in
+    // the query's own plan: audit every plan construction executed too
+    for ((name, fn) <- SparkEntry.queries) {
+      for (p <- executedPlans(fn(spark, sf)).map(_.toString)) {
         assert(!p.contains("CartesianProduct"), s"$name plans a cartesian:\n" + p.take(800))
         if (!boundedBnljBuild.contains(name))
           assert(!p.contains("BroadcastNestedLoopJoin"),
             s"$name plans a nested-loop broadcast join (all-pairs scale killer):\n" + p.take(800))
       }
-    } finally spark.conf.set("spark.graft.materialize", "localCheckpoint")
+      dropCheckpoints()
+    }
   }
 
   test("incremental semantic admission probes the bucket index, never joins the corpus to itself") {
-    // audit the fully DECLARATIVE plan: materialization checkpoints would
-    // replace the candidate subplans with opaque RDD scans and hide the
-    // joins this pin exists to see
-    spark.conf.set("spark.graft.materialize", "off")
-    try {
-      val p = plan("q120_semantic_admit")
-      // admission cost must be |batch| × bucket occupancy: candidates come
-      // from equality joins on the _tb bucket key (batch probes the corpus
-      // index), never an all-pairs corpus join — the q34/q65 scale contract
+    // audit every executed plan: materialization checkpoints replace the
+    // candidate subplans with opaque RDD scans in the query's own plan and
+    // would hide the joins this pin exists to see
+    val ps = executedPlans(SparkEntry.queries("q120_semantic_admit")(spark, sf)).map(_.toString)
+    dropCheckpoints()
+    // admission cost must be |batch| × bucket occupancy: candidates come
+    // from equality joins on the _tb bucket key (batch probes the corpus
+    // index), never an all-pairs corpus join — the q34/q65 scale contract
+    for (p <- ps)
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         "semantic admission regressed to an all-pairs join:\n" + p.take(800))
-      assert(p.contains("_tb"), "bucket-key equi-join missing from the plan:\n" + p.take(800))
-    } finally spark.conf.set("spark.graft.materialize", "localCheckpoint")
+    assert(ps.exists(_.contains("_tb")),
+      "bucket-key equi-join missing from the plans:\n" + ps.map(_.take(400)).mkString("\n"))
+  }
+
+  test("pagerank keeps its checkpointed edge layout: 3 exchanges, 3 sorts, none on the edge side") {
+    // plans/r14/q82_pagerank_after.txt: the edge checkpoint is hash-
+    // partitioned and sorted by src, so each iteration's join reads it with
+    // no exchange or sort; only the rank side's per-iteration re-shuffle
+    // and the final aggregate exchange remain
+    import org.apache.spark.sql.execution.{RDDScanExec, SortExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the caller's session must never see AQE switched off, not even while
+    // the layout checkpoints run
+    @volatile var building = true
+    @volatile var sawAqeOff = false
+    val probe = new Thread(() => while (building) {
+      if (spark.conf.get("spark.sql.adaptive.enabled") != "true") sawAqeOff = true
+      Thread.sleep(1)
+    })
+    probe.start()
+    val p = try SparkEntry.queries("q82_pagerank")(spark, sf).queryExecution.executedPlan
+      finally { building = false; probe.join() }
+    dropCheckpoints()
+    assert(!sawAqeOff, "a library call switched the caller's AQE setting")
+    val all = nodes(p)
+    assert(all.count(_.isInstanceOf[ShuffleExchangeLike]) == 3, p.toString)
+    assert(all.count(_.isInstanceOf[SortExec]) == 3, p.toString)
+    // every root-to-scan path of the checkpointed edges (the ones carrying
+    // outdeg), nearest ancestor first
+    def edgePaths(n: SparkPlan, above: List[SparkPlan]): Seq[List[SparkPlan]] = n match {
+      case s: RDDScanExec if s.output.exists(_.name == "outdeg") => Seq(above)
+      case _ => children(n).flatMap(edgePaths(_, n :: above))
+    }
+    val paths = edgePaths(p, Nil)
+    assert(paths.size == 3, s"one edge scan per iteration expected:\n$p")
+    for (path <- paths) {
+      val belowJoin = path.takeWhile(!_.isInstanceOf[BaseJoinExec])
+      assert(belowJoin.size < path.size, s"edge scan outside any join:\n$p")
+      assert(!belowJoin.exists(n => n.isInstanceOf[ShuffleExchangeLike] || n.isInstanceOf[SortExec]),
+        s"the edge side re-shuffles or re-sorts its checkpoint:\n$p")
+    }
   }
 
   test("dup-span stats aggregates partially and never windows the gram stream") {
@@ -286,12 +346,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("staging rewrites the latest table map-only: no Exchange above its scan") {
     import java.time.Instant
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
     import graft.pipeline._
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("audit-stage").toString
@@ -304,35 +360,18 @@ class PlanAuditSpec extends SparkSpec {
     st.run("e", "run1")
     ex.runEntity("e", "run2", feed(("a", "2024-02-01 12:00:00"), ("c", "2024-02-01 12:30:00")))
 
-    def children(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case other => other.children
-    }
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
     // every root-to-node path ending at a scan of the latest table
     def scanPaths(p: SparkPlan, above: List[SparkPlan]): Seq[List[SparkPlan]] = p match {
       case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == "stg_e") =>
         Seq(above)
       case _ => children(p).flatMap(scanPaths(_, p :: above))
     }
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (nodes(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec]) &&
-            scanPaths(qe.executedPlan, Nil).nonEmpty) writes.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      assert(st.run("e", "run2").rowsUpsertedLatest == 2)
-      // listener events are delivered asynchronously
-      val deadline = System.nanoTime() + 30000000000L
-      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
-    assert(!writes.isEmpty, "no write over the latest table was captured")
-    writes.forEach { w =>
+    val (result, qes) = executions(st.run("e", "run2"))
+    assert(result.rowsUpsertedLatest == 2)
+    val writes = qes.map(_.executedPlan).filter(w =>
+      nodes(w).exists(_.isInstanceOf[DataWritingCommandExec]) && scanPaths(w, Nil).nonEmpty)
+    assert(writes.nonEmpty, "no write over the latest table was captured")
+    writes.foreach { w =>
       val shuffles = scanPaths(w, Nil).flatten.filter(_.isInstanceOf[ShuffleExchangeLike])
       assert(shuffles.isEmpty, "latest-table rewrite shuffles the existing table:\n" + w)
     }

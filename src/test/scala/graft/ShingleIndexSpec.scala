@@ -50,39 +50,36 @@ class ShingleIndexSpec extends SparkSpec {
     // the ∝-corpus-per-batch term the round-12 admission probe measured:
     // hot-key pruning must aggregate the postings AFTER the leftsemi
     // restriction to the batch's probe keys, never the full corpus index.
-    // lazyHotKeys keeps the whole admission in ONE inspectable plan (eager
-    // mode checkpoints the hot set at construction, hiding the aggregate).
+    // The hot set is checkpointed at construction, so the aggregate is
+    // audited in the plans construction executed.
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val dir = Files.createTempDirectory("graft-shindex-plan").toString
     ShingleIndex.append(spark, dir, docs.filter($"doc_id" % 2 === 0), p)
-    spark.conf.set("spark.graft.lazyHotKeys", "true")
-    try {
-      // inspect the pair-generation plan directly: admit() eagerly
-      // materializes the pairs, which hides the candidate machinery
-      // behind a checkpointed leaf in admit()'s own plan
-      val df = NearDup.incrementalJaccardPairsIndexed(
-        ShingleIndex.postings(spark, dir), ShingleIndex.shingles(spark, dir),
-        docs.filter($"doc_id" % 2 === 1), "text", "doc_id", p.n, p.minJaccard,
-        p.maxBucket)
-      val plan = df.queryExecution.optimizedPlan
-      // only aggregates that READ the corpus postings TABLE (a parquet
-      // LogicalRelation leaf) — the batch-key distinct is also an Aggregate
-      // on _h, but it reads the checkpointed batch (LogicalRDD), and it
-      // legitimately has no semi
-      val hotAggs = plan.collect {
-        case a: Aggregate if a.groupingExpressions.exists(
-            _.references.exists(_.name == "_h")) &&
-          a.collectLeaves().exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]) => a
-      }
-      assert(hotAggs.nonEmpty, "expected the hot-key aggregate in the plan")
-      assert(hotAggs.forall(a =>
-        a.collect { case j: Join if j.joinType == LeftSemi => j }.nonEmpty),
-        "hot-key count must aggregate the semi-restricted postings, " +
-          s"not the full corpus index\n${plan.treeString}")
-    } finally spark.conf.unset("spark.graft.lazyHotKeys")
+    // inspect the pair-generation plans directly: admit() eagerly
+    // materializes the pairs, which hides the candidate machinery
+    // behind a checkpointed leaf in admit()'s own plan
+    val (df, qes) = executions(NearDup.incrementalJaccardPairsIndexed(
+      ShingleIndex.postings(spark, dir), ShingleIndex.shingles(spark, dir),
+      docs.filter($"doc_id" % 2 === 1), "text", "doc_id", p.n, p.minJaccard,
+      p.maxBucket))
+    val plans = qes.map(_.optimizedPlan) :+ df.queryExecution.optimizedPlan
+    // only aggregates that READ the corpus postings TABLE (a parquet
+    // LogicalRelation leaf) — the batch-key distinct is also an Aggregate
+    // on _h, but it reads the checkpointed batch (LogicalRDD), and it
+    // legitimately has no semi
+    val hotAggs = plans.flatMap(_.collect {
+      case a: Aggregate if a.groupingExpressions.exists(
+          _.references.exists(_.name == "_h")) &&
+        a.collectLeaves().exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]) => a
+    })
+    assert(hotAggs.nonEmpty, "expected the hot-key aggregate in the executed plans")
+    assert(hotAggs.forall(a =>
+      a.collect { case j: Join if j.joinType == LeftSemi => j }.nonEmpty),
+      "hot-key count must aggregate the semi-restricted postings, " +
+        s"not the full corpus index\n${hotAggs.map(_.treeString).mkString("\n")}")
   }
 
   test("admit is a pure read: admitting twice without append gives the same answer") {

@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +17,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def sqlc = spark.sqlContext
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** `block`'s value and every QueryExecution it ran, in order — including
+    * each `Par.materialize` checkpoint, which is a tracked SQL action, so a
+    * plan audit sees the subplans a checkpoint hides behind its RDD scan.
+    * Listener events arrive asynchronously but in posting order, so a
+    * marker query run after `block` is delivered after all of them.
+    */
+  def executions[T](block: => T): (T, Seq[QueryExecution]) = {
+    val marker = spark.range(1)
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit =
+        if (qe eq marker.queryExecution) markerSeen.countDown() else seen.add(qe)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = block
+      marker.collect()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "query listener events never arrived")
+      (out, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 object SparkSpec {

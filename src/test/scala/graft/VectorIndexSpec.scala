@@ -55,32 +55,29 @@ class VectorIndexSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = Files.createTempDirectory("graft-vecindex-plan").toString
     VectorIndex.append(spark, dir, emb.filter($"vec_id" % 2 === 0), p)
-    spark.conf.set("spark.graft.lazyHotKeys", "true")
-    try {
-      // inspect the pair-generation plan directly: admit() eagerly
-      // materializes the pairs, which hides the candidate machinery
-      // behind a checkpointed leaf in admit()'s own plan
-      val df = Similarity.incrementalCosinePairsIndexed(
-        VectorIndex.postings(spark, dir), VectorIndex.vectors(spark, dir),
-        emb.filter($"vec_id" % 2 === 1), tau, dim = 64,
-        tables = p.tables, bits = p.bits, seed = p.seed)
-      val plan = df.queryExecution.optimizedPlan
-      // only aggregates that READ the corpus postings TABLE (a parquet
-      // LogicalRelation leaf) — the batch-bucket distinct is also an
-      // Aggregate on _tb with the same column names, but its leaf is the
-      // checkpointed batch (LogicalRDD), and it legitimately has no semi
-      val hotAggs = plan.collect {
-        case a: Aggregate if a.groupingExpressions.exists(
-            _.references.exists(_.name == "_tb")) &&
-          a.collectLeaves().exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]) => a
-      }
-      assert(hotAggs.nonEmpty, "expected the hot-bucket aggregate in the plan")
-      assert(hotAggs.forall(a =>
-        a.collect { case j: Join if j.joinType == LeftSemi => j }.nonEmpty),
-        "hot-bucket count must aggregate the semi-restricted postings, " +
-          s"not the full corpus index\n${plan.treeString}")
-    } finally spark.conf.unset("spark.graft.lazyHotKeys")
+    // inspect the pair-generation plans directly: admit() eagerly
+    // materializes the pairs, which hides the candidate machinery
+    // behind a checkpointed leaf in admit()'s own plan
+    val (df, qes) = executions(Similarity.incrementalCosinePairsIndexed(
+      VectorIndex.postings(spark, dir), VectorIndex.vectors(spark, dir),
+      emb.filter($"vec_id" % 2 === 1), tau, dim = 64,
+      tables = p.tables, bits = p.bits, seed = p.seed))
+    val plans = qes.map(_.optimizedPlan) :+ df.queryExecution.optimizedPlan
+    // only aggregates that READ the corpus postings TABLE (a parquet
+    // LogicalRelation leaf) — the batch-bucket distinct is also an
+    // Aggregate on _tb with the same column names, but its leaf is the
+    // checkpointed batch (LogicalRDD), and it legitimately has no semi
+    val hotAggs = plans.flatMap(_.collect {
+      case a: Aggregate if a.groupingExpressions.exists(
+          _.references.exists(_.name == "_tb")) &&
+        a.collectLeaves().exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]) => a
+    })
+    assert(hotAggs.nonEmpty, "expected the hot-bucket aggregate in the executed plans")
+    assert(hotAggs.forall(a =>
+      a.collect { case j: Join if j.joinType == LeftSemi => j }.nonEmpty),
+      "hot-bucket count must aggregate the semi-restricted postings, " +
+        s"not the full corpus index\n${hotAggs.map(_.treeString).mkString("\n")}")
   }
 
   test("admit is a pure read: admitting twice without append gives the same answer") {
