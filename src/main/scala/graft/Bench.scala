@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * Each query is first executed once against the tiny sf0.001 data to warm
   * JIT/codegen for its plan shape, then timed at the target scale factor —
   * so the recorded number measures the operator, not JVM warmup. Queries run
-  * in name order for run-to-run comparability.
+  * in name order for run-to-run comparability. A query whose timed run
+  * throws gets no time: it is listed in the line's `errors` map (name →
+  * message) instead, and `tools/bench_gate.py` fails on it.
   *
   * Persisted blocks (localCheckpoints from Par.materialize, SQL cache) are
   * dropped after every query: 33 queries × 2 executions otherwise accumulate
@@ -32,7 +34,7 @@ object Bench {
     val spark = GraftSession.local()
     // SPARK_GRAFT_STAGES=1: per-stage timings >1s on stderr (debug)
     if (sys.env.contains("SPARK_GRAFT_STAGES")) GraftSession.logSlowStages(spark)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => subset.forall(_.contains(name)) }
       .map { case (name, fn) =>
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
@@ -45,7 +47,7 @@ object Bench {
       // (bands disjoint) without re-running
       val samples = (1 to 3).map { i =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val error = try { fn(spark, sfDir).count(); None } catch { case e: Throwable => Some(e) }
         val d = (System.nanoTime() - t0) / 1e9
         dropPersisted(spark)
         // debug flag: per-sample seconds IN EXECUTION ORDER (the reported
@@ -53,10 +55,13 @@ object Bench {
         // cold first or a mid-session spike)
         if (sys.env.contains("SPARK_GRAFT_STAGES"))
           System.err.println(f"[sample] $name #$i $d%.4f")
-        d
-      }.sorted
+        error.toLeft(d)
+      }
       name -> samples
     }
+    val errors = runs.flatMap { case (k, rs) => rs.collectFirst { case Left(e) => k -> e } }
+    val results = runs.collect { case (k, rs) if rs.forall(_.isRight) =>
+      k -> rs.collect { case Right(d) => d }.sorted }
     // 4-decimal seconds: 0.1 ms grain is far below shared-box noise and
     // keeps the 140-query line ~25% shorter — less likely to fall off a
     // bounded stdout capture
@@ -68,10 +73,15 @@ object Bench {
     val spread = results.map { case (k, ss) =>
       s"\"" + k + "\":[" + fmt(ss.head) + "," + fmt(ss.last) + "]" }
       .mkString("{", ",", "}")
+    // an error's first line only: Spark messages can carry a whole plan
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val errs = errors.map { case (k, e) =>
+      s"\"" + k + "\":" + json.writeValueAsString(e.toString.linesIterator.next().take(500)) }
+      .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(r => med(r._2)).sum else 0.0
     val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
-        s""""spread":$spread,"sf":"$sfDir"}"""
+        s""""spread":$spread,"errors":$errs,"sf":"$sfDir"}"""
     // the full map also goes to a file: the driver captures a bounded stdout
     // TAIL, which truncated the single giant line in rounds 3–4 (BENCH_r04
     // arrived `parsed: null` with 58 of 119 queries lost). The file is the

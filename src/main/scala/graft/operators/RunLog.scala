@@ -2,9 +2,8 @@ package graft.operators
 
 import java.time.Instant
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.model.Schemas
-import graft.sources.{StateStore, TableStore}
+import graft.sources.StateStore
 
 /** Pipeline run/audit log (reference O-15;
   * `services/staging/app/pipeline_run_logs_repo.py:7-71`, DDL
@@ -14,59 +13,52 @@ import graft.sources.{StateStore, TableStore}
   * (a rerun of the same run_id keeps the original started_at); `success`
   * updates counts and clears error; `failed` records the error truncated to
   * 4000 chars (`pipeline_run_logs_repo.py:70`).
+  *
+  * The table is tiny, so, as in [[Watermark.upsert]], each call reads it
+  * once, merges on the driver and writes the rows back as one local
+  * relation.
   */
-class RunLog(spark: SparkSession, dir: String,
-             store: TableStore = StateStore) {
+class RunLog(spark: SparkSession, dir: String) {
 
-  def table: DataFrame = store.read(spark, dir, Schemas.runLog)
+  def table: DataFrame = StateStore.read(spark, dir, Schemas.runLog)
 
-  private def rowDf(runId: String, pipeline: String, entity: String,
-                    startedAt: Instant, endedAt: Option[Instant], status: String,
-                    rowsIn: Option[Long], rowsHist: Option[Long], rowsLatest: Option[Long],
-                    error: Option[String]): DataFrame = {
-    val r = Row(runId, pipeline, entity, java.sql.Timestamp.from(startedAt),
-      endedAt.map(java.sql.Timestamp.from).orNull, status,
-      rowsIn.map(Long.box).orNull, rowsHist.map(Long.box).orNull,
-      rowsLatest.map(Long.box).orNull, error.orNull)
-    spark.createDataFrame(java.util.Arrays.asList(r), Schemas.runLog)
-  }
+  private def write(rows: Seq[Row]): Unit =
+    StateStore.overwrite(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      Schemas.runLog), dir)
 
   /** INSERT ... ON CONFLICT (run_id) DO NOTHING (`pipeline_run_logs_repo.py:7-24`).
     * A run_id that is already logged (the second entity of a run, or a
     * rerun) leaves the table as it is, unwritten.
     */
   def start(runId: String, pipeline: String, entity: String,
-            startedAt: Instant = Instant.now()): Unit =
-    if (table.filter(col("run_id") === runId).isEmpty)
-      store.overwrite(table.unionByName(rowDf(runId, pipeline, entity, startedAt, None,
-        "running", None, None, None, None)), dir)
+            startedAt: Instant = Instant.now()): Unit = {
+    val rows = table.collect().toSeq
+    if (!rows.exists(_.getString(0) == runId))
+      write(rows :+ Row(runId, pipeline, entity, java.sql.Timestamp.from(startedAt),
+        null, "running", null, null, null, null))
+  }
 
-  private def finish(runId: String, update: Row): Unit = {
-    val cols = Schemas.runLog.fieldNames
-    val updated = table.filter(col("run_id") === runId)
-    if (updated.isEmpty) throw new IllegalStateException(s"no run_log row for $runId")
-    val merged = table.filter(col("run_id") =!= runId)
-      .unionByName(updated.withColumns(Map(
-        "ended_at" -> lit(update.get(0)),
-        "status" -> lit(update.getString(1)),
-        "rows_in" -> lit(update.get(2)),
-        "rows_inserted_history" -> lit(update.get(3)),
-        "rows_upserted_latest" -> lit(update.get(4)),
-        "error" -> lit(update.get(5)))).select(cols.map(col).toIndexedSeq: _*))
-    store.overwrite(merged, dir)
+  /** Replaces the columns after `started_at` of `runId`'s row with `update`
+    * (ended_at, status, the three counts, error).
+    */
+  private def finish(runId: String, update: Seq[Any]): Unit = {
+    val rows = table.collect().toSeq
+    if (!rows.exists(_.getString(0) == runId))
+      throw new IllegalStateException(s"no run_log row for $runId")
+    write(rows.map(r => if (r.getString(0) == runId) Row.fromSeq(r.toSeq.take(4) ++ update) else r))
   }
 
   /** UPDATE ... status='success', error=NULL (`pipeline_run_logs_repo.py:26-51`). */
   def finishSuccess(runId: String, rowsIn: Long, rowsHist: Long, rowsLatest: Long,
                     endedAt: Instant = Instant.now()): Unit =
-    finish(runId, Row(java.sql.Timestamp.from(endedAt), "success",
-      Long.box(rowsIn), Long.box(rowsHist), Long.box(rowsLatest), null))
+    finish(runId, Seq(java.sql.Timestamp.from(endedAt), "success",
+      rowsIn, rowsHist, rowsLatest, null))
 
   /** UPDATE ... status='failed', error truncated to 4000 chars
     * (`pipeline_run_logs_repo.py:53-71`).
     */
   def finishFailed(runId: String, error: String,
                    endedAt: Instant = Instant.now()): Unit =
-    finish(runId, Row(java.sql.Timestamp.from(endedAt), "failed",
+    finish(runId, Seq(java.sql.Timestamp.from(endedAt), "failed",
       null, null, null, error.take(4000)))
 }

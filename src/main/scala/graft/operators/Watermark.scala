@@ -4,7 +4,7 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
-import graft.sources.{StateStore, TableStore}
+import graft.sources.StateStore
 
 /** Watermark control table (reference O-3/O-4;
   * `services/extractor/app/watermark_repo.py:18-64`, DDL `sql/init_dw.sql:2-9`).
@@ -18,10 +18,9 @@ import graft.sources.{StateStore, TableStore}
   *    (`tests/integration/extractor/test_watermark_repo.py:48-65`), i.e. it is
   *    spec, so we replicate it (SURVEY.md §8 Q-4).
   */
-class Watermark(spark: SparkSession, dir: String,
-                store: TableStore = StateStore) {
+class Watermark(spark: SparkSession, dir: String) {
 
-  def table: DataFrame = store.read(spark, dir, Schemas.watermark)
+  def table: DataFrame = StateStore.read(spark, dir, Schemas.watermark)
 
   /** O-3 — read the saved watermark, falling back to `defaultStart`. */
   def get(pipeline: String, entity: String, defaultStart: Instant): Instant = {
@@ -48,6 +47,6 @@ class Watermark(spark: SparkSession, dir: String,
     // ...but run_id/updated_at always take the newest write (Q-4).
     val row = Row(pipeline, entity, time, runId, java.sql.Timestamp.from(now))
     val rows = java.util.Arrays.asList(others :+ row: _*)
-    store.overwrite(spark.createDataFrame(rows, Schemas.watermark), dir)
+    StateStore.overwrite(spark.createDataFrame(rows, Schemas.watermark), dir)
   }
 }

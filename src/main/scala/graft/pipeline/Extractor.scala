@@ -30,10 +30,9 @@ final case class ExtractorConfig(
 final case class ExtractResult(entity: String, runId: String, rowsIn: Long,
                                watermarkSaved: Instant, watermarkNew: Instant)
 
-class Extractor(spark: SparkSession, cfg: ExtractorConfig,
-                store: graft.sources.TableStore = graft.sources.StateStore) {
+class Extractor(spark: SparkSession, cfg: ExtractorConfig) {
 
-  private val watermarks = new Watermark(spark, s"${cfg.stateRoot}/etl_watermark", store)
+  private val watermarks = new Watermark(spark, s"${cfg.stateRoot}/etl_watermark")
 
   /** One entity's incremental pull. `feed` maps an effective cursor to the
     * changed rows (strictly newer than the cursor) — a [[graft.sources.PagedFeed]]

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Par
 import graft.operators.{Merge, Payload, RunLog}
-import graft.sources.{Landing, StateStore, TableStore}
+import graft.sources.{Landing, StateStore}
 
 /** The staging run, wired as the reference's `services/staging/app/run.py:28-99`
   * (traced in SURVEY.md §3.2):
@@ -36,18 +36,17 @@ final case class StagerConfig(landingRoot: String, stateRoot: String,
 final case class StageResult(entity: String, runId: String, rowsIn: Long,
                              rowsInsertedHistory: Long, rowsUpsertedLatest: Long)
 
-class Stager(spark: SparkSession, cfg: StagerConfig,
-             store: TableStore = StateStore) {
+class Stager(spark: SparkSession, cfg: StagerConfig) {
 
-  private val runLog = new RunLog(spark, s"${cfg.stateRoot}/pipeline_run_log", store)
+  private val runLog = new RunLog(spark, s"${cfg.stateRoot}/pipeline_run_log")
 
   def historyDir(entity: String): String = s"${cfg.stateRoot}/stg_${entity}_history"
   def latestDir(entity: String): String = s"${cfg.stateRoot}/stg_$entity"
 
   def history(entity: String, like: DataFrame): DataFrame =
-    store.read(spark, historyDir(entity), like.schema)
+    StateStore.read(spark, historyDir(entity), like.schema)
   def latest(entity: String, like: DataFrame): DataFrame =
-    store.read(spark, latestDir(entity), like.schema)
+    StateStore.read(spark, latestDir(entity), like.schema)
 
   def run(entity: String, runId: String, now: Instant = Instant.now()): StageResult = {
     runLog.start(runId, cfg.pipelineName, entity, startedAt = now)
@@ -63,9 +62,9 @@ class Stager(spark: SparkSession, cfg: StagerConfig,
       def rows(flag: String) = batch.filter(col(flag)).drop("_new_hist", "_wins")
 
       // O-11: append only rows whose (id, updated_at, payload_hash) is new.
-      if (nHist > 0) store.append(rows("_new_hist"), historyDir(entity))
+      if (nHist > 0) StateStore.append(rows("_new_hist"), historyDir(entity))
       // O-12: newer-wins upsert — only the winning rows touch the latest table.
-      if (nLatest > 0) store.overwrite(Merge.applyWinners(cur, rows("_wins")), latestDir(entity))
+      if (nLatest > 0) StateStore.overwrite(Merge.applyWinners(cur, rows("_wins")), latestDir(entity))
 
       runLog.finishSuccess(runId, rowsIn, nHist, nLatest, endedAt = now)
       StageResult(entity, runId, rowsIn, nHist, nLatest)

@@ -11,15 +11,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Manifest-backed table: the object-store-safe successor to
-  * [[StateStore]]'s directory swap.
+/** Manifest-backed table format: the tables of the SQL catalog
+  * ([[GraftCatalog]]), the change feed ([[Cdc]]), the incremental views
+  * ([[graft.operators.Ivm]]) and the admission indexes.
   *
-  * [[StateStore.overwrite]] relies on directory-rename atomicity, which
-  * holds on local FS/HDFS but not on S3-class stores (rename = copy+delete,
-  * and readers can observe the gap). This store never renames data: data
-  * files are immutable and write-once under unique names, and the ONLY
-  * commit point is publishing a manifest — a JSON file listing the exact
-  * data files of one table version:
+  * Unlike [[StateStore.overwrite]], which relies on directory-rename
+  * atomicity (it holds on local FS/HDFS but not on S3-class stores, where
+  * rename = copy+delete and readers can observe the gap), this store never
+  * renames data: data files are immutable and write-once under unique
+  * names, and the ONLY commit point is publishing a manifest — a JSON file
+  * listing the exact data files of one table version:
   *
   * {{{
   * <dir>/_manifests/v00000042.json   // {"version":42,"files":[...],"op":"append"}
@@ -39,11 +40,6 @@ import org.apache.spark.sql.types.StructType
   *    the files it pins are immutable and survive later commits, so a long
   *    job reads one consistent version end to end. Old versions stay
   *    readable ([[readVersion]] — time travel) until [[vacuum]].
-  *
-  * Intended for the pipeline's control/state tables (watermark, run log,
-  * latest, history) where the reference used Postgres transactions
-  * (`services/staging/app/staging_repo.py:18-23` batches in one txn);
-  * history appends map to `append`, latest/watermark swaps to `overwrite`.
   *
   * On top of the core protocol, manifests carry per-file column stats,
   * exact row counts, and the table schema — enabling stats-skipped scans
@@ -185,20 +181,6 @@ object ManifestStore {
     */
   final case class ColStats(typ: String, min: Option[String],
                             max: Option[String], nullCount: Long)
-
-  /** [[TableStore]] view: the drop-in object-store-safe backend for every
-    * pipeline component (committed versions are discarded by the interface;
-    * use the typed methods directly when you need them).
-    */
-  object asTableStore extends TableStore {
-    override def read(spark: SparkSession, dir: String,
-                      schema: StructType): DataFrame =
-      ManifestStore.read(spark, dir, schema)
-    override def overwrite(df: DataFrame, dir: String): Unit =
-      ManifestStore.overwrite(df, dir): Unit
-    override def append(df: DataFrame, dir: String): Unit =
-      ManifestStore.append(df, dir): Unit
-  }
 
   private val manifestName: Regex = raw"v(\d{8})\.json".r
   private val mapper = new ObjectMapper()

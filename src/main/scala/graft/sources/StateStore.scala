@@ -4,20 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
 
-/** Storage contract for the pipeline's control/state tables. Two
-  * implementations: [[StateStore]] (directory swap via rename — local
-  * FS/HDFS) and [[ManifestStore.asTableStore]] (manifest-committed — object
-  * stores, snapshot isolation, time travel). Every pipeline component takes
-  * a `TableStore` so the backend is a deployment choice, not a code change.
-  */
-trait TableStore {
-  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame
-  def overwrite(df: DataFrame, dir: String): Unit
-  def append(df: DataFrame, dir: String): Unit
-}
-
-/** Small keyed parquet datasets used as control/state tables (the role
-  * Postgres plays in the reference: watermark, run log, history, latest).
+/** The pipeline's state tables: small keyed parquet datasets in the role
+  * Postgres plays in the reference (watermark, run log, history, latest).
+  * `Extractor`, `Stager`, `RunLog`, `Watermark` and
+  * `StreamingPipeline.latestStateSink` read and write them only here.
   *
   * Writes follow the reference's write-to-tmp + atomic-rename discipline
   * (`services/extractor/app/writer_landing.py:11-13,42-52`) lifted to
@@ -30,10 +20,10 @@ trait TableStore {
   * before concluding the table is genuinely empty. That NARROWS the
   * single-writer/concurrent-reader race to the instants between the final
   * existence check and Spark's own file listing (where a racing swap
-  * surfaces as a loud missing-path error, not a silent empty read); a
-  * reader that must never observe the swap at all — and any concurrent
-  * WRITERS or object stores — should use [[ManifestStore.asTableStore]],
-  * whose manifest commit has no such gap.
+  * surfaces as a loud missing-path error, not a silent empty read). The
+  * store assumes one writer per table and a filesystem with atomic
+  * directory rename; [[ManifestStore]]'s manifest commit has neither
+  * limit.
   *
   * The control tables (watermark, run log) are tiny and history is
   * append-only. The latest-state table is the one that grows and is
@@ -42,7 +32,7 @@ trait TableStore {
   * winners, a map-only plan, but still O(table) bytes per run in the single
   * task of [[overwrite]].
   */
-object StateStore extends TableStore {
+object StateStore {
 
   def read(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val path = new Path(dir)

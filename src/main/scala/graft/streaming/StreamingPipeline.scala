@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.operators.Merge
-import graft.sources.{StateStore, TableStore}
+import graft.sources.StateStore
 
 /** Structured Streaming form of the reference's watermark-loop pipeline
   * (SURVEY.md §2 "Streaming" row): the batch extractor's cursor+lookback+
@@ -27,8 +27,7 @@ object StreamingPipeline {
   /** CDC upsert stream → continuously maintained latest-state table. */
   def latestStateSink(stream: DataFrame, latestDir: String, checkpointDir: String,
                       key: String = "id", versionCol: String = "updated_at",
-                      lateness: String = "120 seconds",
-                      store: TableStore = StateStore): StreamingQuery = {
+                      lateness: String = "120 seconds"): StreamingQuery = {
     val deduped = stream
       .withWatermark(versionCol, lateness)
       .dropDuplicatesWithinWatermark(key, versionCol)
@@ -38,8 +37,8 @@ object StreamingPipeline {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         if (!batch.isEmpty) {
           val plain = batch.toDF()
-          val cur = store.read(plain.sparkSession, latestDir, plain.schema)
-          store.overwrite(Merge.latestUpsert(cur, plain, key, versionCol), latestDir)
+          val cur = StateStore.read(plain.sparkSession, latestDir, plain.schema)
+          StateStore.overwrite(Merge.latestUpsert(cur, plain, key, versionCol), latestDir)
         }
       }
       .start()

@@ -68,36 +68,6 @@ class PipelineSpec extends SparkSpec {
     assert(hist.count() == 4) // a v1, b v1, a v2, c v1
   }
 
-  test("full pipeline on the manifest backend: same results, versioned state") {
-    import graft.sources.ManifestStore
-    val root = Files.createTempDirectory("pipe-manifest").toString
-    val cfg = ExtractorConfig(s"$root/landing", s"$root/state",
-      defaultStart = Instant.parse("2024-01-01T00:00:00Z"))
-    val store = ManifestStore.asTableStore
-    val ex = new Extractor(spark, cfg, store)
-    val st = new Stager(spark, StagerConfig(s"$root/landing", s"$root/state"), store)
-    val v1 = sourceDf(("a", "2024-02-01 10:00:00", "NEW"), ("b", "2024-02-01 11:00:00", "NEW"))
-    ex.runEntity("e", "run1", feedFrom(v1))
-    st.run("e", "run1")
-    val v2 = sourceDf(
-      ("a", "2024-02-01 12:00:00", "PROCESSING"),
-      ("b", "2024-02-01 11:00:00", "NEW"),
-      ("c", "2024-02-01 12:30:00", "NEW"))
-    ex.runEntity("e", "run2", feedFrom(v2))
-    val s2 = st.run("e", "run2")
-    assert(s2.rowsInsertedHistory == 2 && s2.rowsUpsertedLatest == 2)
-    // results identical to the swap backend's (read back THROUGH the store)
-    val latest = st.latest("e", sourceDf().select($"id", $"updated_at", $"status"))
-    assert(latest.count() >= 3) // 3 ids + payload columns intact
-    assert(latest.filter($"id" === "a").select("status").as[String].head() == "PROCESSING")
-    // and the state tables are versioned: latest has one version per stage
-    // run (overwrite), history one per non-empty append
-    val latestVersions = ManifestStore.currentSnapshot(spark, st.latestDir("e")).get.version
-    assert(latestVersions == 2L, s"latest at v$latestVersions")
-    assert(ManifestStore.readVersion(spark, st.latestDir("e"), 1L,
-      latest.schema).count() == 2) // time travel to the run1 state
-  }
-
   test("staging rerun of the same run_id is idempotent (at-least-once extract, exactly-once effect)") {
     val (cfg, ex, st) = mkPipeline()
     ex.runEntity("e", "run1", feedFrom(sourceDf(("a", "2024-02-01 10:00:00", "NEW"))))

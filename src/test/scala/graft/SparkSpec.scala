@@ -16,7 +16,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sqlc = spark.sqlContext
 
-  override def afterAll(): Unit = () // session shared across suites
+  /** The session is shared across suites, so it stays up. A streaming
+    * query a suite leaves running would run on into the next suite: it is
+    * stopped here and the suite fails.
+    */
+  override def afterAll(): Unit = {
+    val leaked = spark.streams.active
+    leaked.foreach(_.stop())
+    if (leaked.nonEmpty) fail("streaming queries left running: " +
+      leaked.map(q => Option(q.name).getOrElse(q.id.toString)).mkString(", "))
+  }
 
   /** `block`'s value and every QueryExecution it ran, in order — including
     * each `Par.materialize` checkpoint, which is a tracked SQL action, so a

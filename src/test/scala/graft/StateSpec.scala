@@ -100,6 +100,30 @@ class StateSpec extends SparkSpec {
     assert(row.getAs[String]("status") == "failed")
     assert(row.getAs[String]("error").length == 4000)
   }
+
+  test("finishing one run leaves every other run's row as it was") {
+    val rl = new RunLog(spark, tmpDir("rl"))
+    rl.start("r1", "pipe", "e1", startedAt = t0)
+    rl.finishSuccess("r1", rowsIn = 10, rowsHist = 8, rowsLatest = 5, endedAt = t1)
+    val r1 = rl.table.filter($"run_id" === "r1").collect()
+    rl.start("r2", "pipe", "e2", startedAt = t1)
+    rl.finishFailed("r2", "boom", endedAt = t2)
+    assert(rl.table.filter($"run_id" === "r1").collect().toSeq == r1.toSeq)
+    assert(r1.head.getAs[String]("status") == "success")
+    assert(r1.head.getAs[Long]("rows_in") == 10 && r1.head.getAs[Long]("rows_upserted_latest") == 5)
+    assert(r1.head.getAs[java.sql.Timestamp]("started_at").toInstant == t0)
+    val r2 = rl.table.filter($"run_id" === "r2").head()
+    assert(r2.getAs[String]("status") == "failed" && r2.getAs[String]("error") == "boom")
+    assert(r2.getAs[java.sql.Timestamp]("started_at").toInstant == t1)
+  }
+
+  test("finishing a run that was never started throws") {
+    val rl = new RunLog(spark, tmpDir("rl"))
+    rl.start("r1", "pipe", "e", startedAt = t0)
+    intercept[IllegalStateException] {
+      rl.finishSuccess("never", rowsIn = 1, rowsHist = 1, rowsLatest = 1, endedAt = t1)
+    }
+  }
 }
 
 object StateSpec {

@@ -7,9 +7,10 @@ Usage: bench_gate.py <bench.json|-> [budgets.json]
 The bench file may be either the raw one-line {"metric":...} JSON printed by
 graft.Bench or a driver BENCH_r*.json wrapper whose "tail" embeds it.
 
-Exit 0 = every query within budget; exit 1 = violations (listed) or queries
+Exit 0 = every query within budget; exit 1 = violations (listed), queries
 missing from the budget table (a new query must get a frozen budget in the
-same commit that adds it).
+same commit that adds it) or queries in the line's "errors" map (a query
+whose timed run threw has no time, and must not pass as a fast one).
 
 Effective budget (round 13): max(frozen budget_sec, basis_sec + 2.5 s).
 The frozen multiplicative budget (3x median-of-3 basis, 0.6 s floor) models
@@ -50,26 +51,30 @@ def load_bench(path):
     except json.JSONDecodeError:
         d = None
     if isinstance(d, dict) and "queries" in d:
-        return d["queries"]
+        return d
     if isinstance(d, dict) and "tail" in d:
         text = d["tail"]
     # the bench line is one-per-line JSON possibly embedded in log noise:
-    # take the LAST line carrying it, sliced from its first '{"metric"' to
-    # that line's final '}' (a lazy cross-line regex truncates mid-object)
+    # take the LAST line carrying the per-query map (graft.Bench's stdout
+    # ends with a compact total line that has none), sliced from its first
+    # '{"metric"' to that line's final '}' (a lazy cross-line regex
+    # truncates mid-object)
     line = None
     for cand in text.splitlines():
-        if '{"metric"' in cand:
+        if '{"metric"' in cand and '"queries":' in cand:
             line = cand
     if line is None:
         raise SystemExit(f"no bench JSON line found in {path}")
-    return json.loads(line[line.index('{"metric"'):line.rindex("}") + 1])["queries"]
+    return json.loads(line[line.index('{"metric"'):line.rindex("}") + 1])
 
 
 def main():
     bench_path = sys.argv[1] if len(sys.argv) > 1 else "-"
     budget_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_budgets.json")
-    queries = load_bench(bench_path)
+    bench = load_bench(bench_path)
+    queries = bench["queries"]
+    errors = bench.get("errors", {})
     budgets = json.load(open(budget_path))["budgets"]
 
     # contention marker (see module docstring): the run's median sec/basis
@@ -84,6 +89,9 @@ def main():
           f"{'CONTENDED (+2.5s allowance active)' if contended else 'quiet (unwidened budgets)'}")
 
     bad = []
+    for q, msg in sorted(errors.items()):
+        print(f"ERR  {q:28} {msg}")
+        bad.append(f"ERR {q}: its timed run threw")
     for q, sec in sorted(queries.items()):
         if q not in budgets:
             bad.append(f"UNBUDGETED {q}: {sec:.2f}s — freeze a budget for it")
@@ -100,7 +108,7 @@ def main():
                        f"(basis {budgets[q]['basis_sec']}s, {budgets[q]['basis']})")
     # an incomplete bench run (query crashed mid-bench, stale file from an
     # older tree) must FAIL — missing coverage is how regressions hide
-    for q in sorted(set(budgets) - set(queries)):
+    for q in sorted(set(budgets) - set(queries) - set(errors)):
         print(f"MISS {q:28} budgeted but not in this bench run")
         bad.append(f"MISS {q}: budgeted but absent from the bench run")
 
