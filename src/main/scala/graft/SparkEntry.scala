@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every operator from SURVEY.md §2 (reference O-1…O-16, M-1…M-5) plus the
   * training-data ops is exposed here as a named query over the driver's
@@ -76,6 +76,72 @@ object SparkEntry {
        SELECT query_id, neighbor_id, rank, round(sim, 6) AS sim
        FROM ranked WHERE rank <= 5"""
 
+  /** Oracle shared by q09 and q64. */
+  private val historyDeltaSql: String =
+    """SELECT event_id, user_id, ts, event_type FROM events
+         WHERE ts > TIMESTAMP '2024-01-25 00:00:00' AND event_id % 3 <> 0"""
+
+  /** Oracle shared by q34 and q50. The threshold is compared as DOUBLE
+    * on both sides: a bare 0.4 literal is DECIMAL(1,1) in DuckDB, and
+    * decimal-space comparison drops pairs whose rounded sim is exactly
+    * 0.400000 (the nearest double to 0.4 is below it).
+    */
+  private val cosineNeardupSql: String =
+    """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings)
+         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                round(list_cosine_similarity(a.ev, b.ev), 6) AS sim
+         FROM v a JOIN v b ON a.vec_id < b.vec_id
+         WHERE round(list_cosine_similarity(a.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE)"""
+
+  /** Oracle shared by q55 and q141: a batch doc is admitted iff no
+    * jaccard>=0.2 pair with an existing doc or a smaller-id batch doc (the
+    * Spark side's corpus-side hot-key prune has no effect at gate scale:
+    * no shingle reaches 1000 corpus postings).
+    */
+  private val incrementalAdmitSql: String =
+    """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
+         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         cand AS (
+           SELECT x.doc_id AS id_x, b.doc_id AS id_b, count(*) AS common
+           FROM inv x JOIN inv b ON x.shingle = b.shingle
+            AND b.doc_id % 7 = 0
+            AND (x.doc_id % 7 <> 0 OR x.doc_id < b.doc_id)
+           GROUP BY 1, 2),
+         dropped AS (
+           SELECT DISTINCT id_b FROM cand
+           JOIN sizes sx ON sx.doc_id = id_x
+           JOIN sizes sb ON sb.doc_id = id_b
+           WHERE round(common * 1.0 / (sx.sz + sb.sz - common), 4) >= 0.2)
+         SELECT doc_id, lang FROM documents
+         WHERE doc_id % 7 = 0 AND doc_id NOT IN (SELECT id_b FROM dropped)"""
+
+  /** Oracle shared by q120 and q142: a batch vector is admitted iff no
+    * exact-cosine pair >= 0.4 against any existing vector or any
+    * smaller-id batch vector (q55's pair-local admission rule in
+    * embedding space).
+    */
+  private val semanticAdmitSql: String =
+    """WITH v AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev, label
+           FROM embeddings),
+         dropped AS (
+           SELECT DISTINCT b.vec_id AS id_b
+           FROM v b JOIN v x
+             ON b.vec_id % 7 = 0
+            AND (x.vec_id % 7 <> 0 OR x.vec_id < b.vec_id)
+            AND x.vec_id <> b.vec_id
+           WHERE round(list_cosine_similarity(x.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE))
+         SELECT vec_id, CAST(label AS BIGINT) AS label FROM v
+         WHERE vec_id % 7 = 0 AND vec_id NOT IN (SELECT id_b FROM dropped)"""
+
   /** The ANN ORACLE FENCE (q44's discipline applied to approximate
     * nearest-neighbor): run the approximate top-k AND the exact top-k in
     * one plan, measure recall = |ann ∩ exact| / |exact| over the
@@ -110,42 +176,62 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q04_latest_state")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One driver-contract query per implemented operator from SURVEY.md §2:
+    * `build` runs it over a testdata dir, `oracle` is the ANSI SQL that
+    * DuckDB runs on the same parquet tables for the compare. `specs` is
+    * the one list; `queries` and `oracleSql` are its name-keyed views.
+    */
+  final case class QuerySpec(name: String, build: (SparkSession, String) => DataFrame,
+                             oracle: String)
 
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
+
+  def oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
+
+  val specs: Seq[QuerySpec] = Seq(
     // O-3/O-4 + the run's max-cursor aggregation (run.py:72-75):
     // watermark advance = greatest(saved default, max(updated_at)).
-    "q14_watermark_advance" -> ((s, dir) => {
+    QuerySpec("q14_watermark_advance", (s, dir) => {
       t(s, dir, "events")
         .agg(max(col("ts")).as("max_ts"))
         .select(greatest(col("max_ts"),
           tsLit("2024-01-20 00:00:00")).as("last_success_time"))
-    }),
+    },
+      """SELECT greatest(max(ts), TIMESTAMP '2024-01-20 00:00:00') AS last_success_time
+         FROM events"""),
 
     // O-1/M-2 — incremental change scan: strictly-greater cursor filter,
     // pushed down to the parquet scan.
-    "q05_incremental_scan" -> ((s, dir) => {
+    QuerySpec("q05_incremental_scan", (s, dir) => {
       Feed.changedSince(t(s, dir, "events"),
           tsLit("2024-01-20 00:00:00"), "ts")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    }),
+    },
+      """SELECT event_id, ts, user_id, event_type, value FROM events
+         WHERE ts > TIMESTAMP '2024-01-20 00:00:00'"""),
 
     // M-1/M-3 — sort + limit/offset pagination over the filtered feed.
-    "q06_page" -> ((s, dir) => {
+    QuerySpec("q06_page", (s, dir) => {
       val filtered = Feed.changedSince(t(s, dir, "events"),
         tsLit("2024-01-10 00:00:00"), "ts")
       Feed.page(filtered, limit = 200, offset = 100, tsCol = "ts", idCol = "event_id")
         .select(col("event_id"), col("user_id"), col("event_type"))
-    }),
+    },
+      """SELECT event_id, user_id, event_type FROM events
+         WHERE ts > TIMESTAMP '2024-01-10 00:00:00'
+         ORDER BY ts, event_id LIMIT 200 OFFSET 100"""),
 
     // M-4 — page envelope: count = TOTAL filtered count, not page size.
-    "q07_page_envelope" -> ((s, dir) => {
+    QuerySpec("q07_page_envelope", (s, dir) => {
       val filtered = Feed.changedSince(t(s, dir, "events"),
         tsLit("2024-01-10 00:00:00"), "ts")
       Feed.envelope(filtered, limit = 200, offset = 100)
         .withColumnsRenamed(Map("limit" -> "page_limit", "offset" -> "page_offset",
           "count" -> "total_count"))
-    }),
+    },
+      """SELECT 200 AS page_limit, 100 AS page_offset, count(*) AS total_count
+         FROM events WHERE ts > TIMESTAMP '2024-01-10 00:00:00'"""),
 
     // O-9 — keyed dedup keep-last: latest (ts, event_id) row per
     // (user_id, event_type).
@@ -155,30 +241,39 @@ object SparkEntry {
     // difference for latest-state queries. Identical result under the
     // (ts, event_id) total order (property-tested in NormalizeSpec; plan
     // shape pinned in PlanAuditSpec).
-    "q08_dedup_keeplast" -> ((s, dir) => {
+    QuerySpec("q08_dedup_keeplast", (s, dir) => {
       Dedup.keepLastAgg(t(s, dir, "events"), Seq("user_id", "event_type"),
           ord = struct(col("ts"), col("event_id")))
         .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
-    }),
+    },
+      """SELECT user_id, event_type, event_id, ts FROM events
+         QUALIFY row_number() OVER (PARTITION BY user_id, event_type
+                                    ORDER BY ts DESC, event_id DESC) = 1"""),
 
     // O-12 as a derived view — latest state per key, same partial-agg form.
-    "q04_latest_state" -> ((s, dir) => {
+    QuerySpec("q04_latest_state", (s, dir) => {
       Dedup.keepLastAgg(t(s, dir, "events"), Seq("user_id"),
           ord = struct(col("ts"), col("event_id")))
         .select(col("user_id"), col("event_id").as("last_event_id"),
           col("event_type").as("last_event_type"), col("value").as("last_value"),
           col("ts").as("last_ts"))
-    }),
+    },
+      """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
+                value AS last_value, ts AS last_ts
+         FROM events
+         QUALIFY row_number() OVER (PARTITION BY user_id
+                                    ORDER BY ts DESC, event_id DESC) = 1"""),
 
     // O-11 — history append delta: incoming batch anti-joined against
     // already-loaded history (idempotent set-insert).
-    "q09_history_delta" -> ((s, dir) => {
+    QuerySpec("q09_history_delta", (s, dir) => {
       val events = t(s, dir, "events")
       val history = events.filter(col("event_id") % 3 === 0)
       val batch = events.filter(col("ts") > tsLit("2024-01-25 00:00:00"))
       Merge.historyDelta(history, batch, keys = Seq("event_id"))
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-    }),
+    },
+      historyDeltaSql),
 
     // q09's anti-join with a bloom semi-join reduction of the history side:
     // a sketch of the (small) batch's keys pre-filters the (huge) history
@@ -186,17 +281,20 @@ object SparkEntry {
     // the join, so the result is row-identical (same oracle as q09's shape).
     // At 100 TB this shuffles ~|batch| history rows instead of the full
     // history key set.
-    "q64_bloom_delta" -> ((s, dir) => {
+    QuerySpec("q64_bloom_delta", (s, dir) => {
       val events = t(s, dir, "events")
       val history = events.filter(col("event_id") % 3 === 0)
       val batch = events.filter(col("ts") > tsLit("2024-01-25 00:00:00"))
       Merge.historyDeltaBloom(history, batch, keys = Seq("event_id"))
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-    }),
+    },
+      // bloom is a pre-filter only — the exact anti-join semantics (and so
+      // the oracle) are identical to q09's
+      historyDeltaSql),
 
     // O-12 — newer-wins upsert merge of an incoming batch into an existing
     // keyed table; ties keep the existing row (strict `>` guard).
-    "q10_latest_upsert" -> ((s, dir) => {
+    QuerySpec("q10_latest_upsert", (s, dir) => {
       val events = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           col("value"), col("props"))
@@ -204,61 +302,104 @@ object SparkEntry {
         Seq("user_id"), ordering = Seq(col("ts"), col("event_id")))
       val incoming = events.filter(col("event_id") % 2 === 1)
       Merge.latestUpsert(existing, incoming, key = "user_id", versionCol = "ts")
-    }),
+    },
+      """WITH existing AS (
+           SELECT event_id, ts, user_id, event_type, value, props
+           FROM events WHERE event_id % 2 = 0
+           QUALIFY row_number() OVER (PARTITION BY user_id
+                                      ORDER BY ts DESC, event_id DESC) = 1),
+         incoming AS (
+           SELECT event_id, ts, user_id, event_type, value, props
+           FROM events WHERE event_id % 2 = 1),
+         u AS (
+           SELECT *, 1 AS is_existing FROM existing
+           UNION ALL
+           SELECT *, 0 AS is_existing FROM incoming)
+         SELECT event_id, ts, user_id, event_type, value, props FROM u
+         QUALIFY row_number() OVER (PARTITION BY user_id
+                                    ORDER BY ts DESC, is_existing DESC, event_id DESC) = 1"""),
 
     // O-10 — canonical JSON payload + sha256 content hash.
-    "q11_payload_hash" -> ((s, dir) => {
+    QuerySpec("q11_payload_hash", (s, dir) => {
       Payload.withPayloadAndHash(t(s, dir, "nation"))
         .select(col("n_nationkey"), col("payload"), col("payload_hash"))
-    }),
+    },
+      """SELECT n_nationkey,
+                CAST(to_json(struct_pack(n_name := n_name, n_nationkey := n_nationkey,
+                                         n_regionkey := n_regionkey)) AS VARCHAR) AS payload,
+                sha256(CAST(to_json(struct_pack(n_name := n_name, n_nationkey := n_nationkey,
+                                                n_regionkey := n_regionkey)) AS VARCHAR))
+                  AS payload_hash
+         FROM nation"""),
 
     // O-5 — suffix-convention time normalization (string → ts/date,
     // null-on-bad-parse).
-    "q12_normalize_time" -> ((s, dir) => {
+    QuerySpec("q12_normalize_time", (s, dir) => {
       val raw = t(s, dir, "events").select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("updated_at"),
         date_format(col("ts"), "yyyy-MM-dd").as("event_date"))
       Normalize.parseTimeCols(raw)
-    }),
+    },
+      """SELECT event_id,
+                CAST(strftime(ts, '%Y-%m-%dT%H:%M:%S') AS TIMESTAMP) AS updated_at,
+                CAST(strftime(ts, '%Y-%m-%d') AS DATE) AS event_date
+         FROM events"""),
 
     // O-6 — nested array-of-structs flattened to canonical JSON text.
-    "q13_flatten_json" -> ((s, dir) => {
+    QuerySpec("q13_flatten_json", (s, dir) => {
       val nested = t(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(sort_array(collect_list(struct(col("event_id"), col("event_type"))))
           .as("lines"))
       Normalize.flattenNested(nested, "lines")
-    }),
+    },
+      """SELECT user_id,
+                CAST(to_json(list(struct_pack(event_id := event_id, event_type := event_type)
+                             ORDER BY event_id)) AS VARCHAR) AS lines_json
+         FROM events GROUP BY user_id"""),
 
     // O-8 — lineage metadata projection: pure literal columns, fused into
     // the scan (no shuffle, no action).
-    "q51_metadata" -> ((s, dir) => {
+    QuerySpec("q51_metadata", (s, dir) => {
       Normalize.withMetadata(t(s, dir, "nation"), "run-0001",
           java.time.Instant.parse("2024-01-15T00:00:00Z"),
           java.time.Instant.parse("2024-01-10T00:00:00Z"))
         .select(col("n_nationkey"), col("_run_id"), col("_extracted_at"),
           col("_watermark_effective"))
-    }),
+    },
+      """SELECT n_nationkey, 'run-0001' AS _run_id,
+                TIMESTAMP '2024-01-15 00:00:00' AS _extracted_at,
+                TIMESTAMP '2024-01-10 00:00:00' AS _watermark_effective
+         FROM nation"""),
 
     // O-7 — required-field validation counts (plan-only form).
-    "q16_validation" -> ((s, dir) => {
+    QuerySpec("q16_validation", (s, dir) => {
       t(s, dir, "events").agg(
         count(lit(1)).as("rows_total"),
         count(when(col("event_type").isNull || col("user_id").isNull, 1)).as("rows_invalid"))
-    }),
+    },
+      """SELECT count(*) AS rows_total,
+                count(CASE WHEN event_type IS NULL OR user_id IS NULL THEN 1 END) AS rows_invalid
+         FROM events"""),
 
     // M-5 — status state machine as a chained CASE expression.
-    "q15_status_machine" -> ((s, dir) => {
+    QuerySpec("q15_status_machine", (s, dir) => {
       t(s, dir, "orders")
         .select(col("o_orderstatus").as("status"),
           StateMachine.nextStatus(col("o_orderstatus"), Seq("O" -> "P", "P" -> "F"))
             .as("next_status"))
         .groupBy(col("status"), col("next_status"))
         .agg(count(lit(1)).as("n"))
-    }),
+    },
+      """SELECT o_orderstatus AS status,
+                CASE WHEN o_orderstatus = 'O' THEN 'P'
+                     WHEN o_orderstatus = 'P' THEN 'F'
+                     ELSE o_orderstatus END AS next_status,
+                count(*) AS n
+         FROM orders GROUP BY 1, 2"""),
 
     // Core analytics: group-by aggregation (TPC-H Q1 shape) — decimal-exact.
-    "q01_agg" -> ((s, dir) => {
+    QuerySpec("q01_agg", (s, dir) => {
       t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -267,10 +408,17 @@ object SparkEntry {
           sum(col("l_extendedprice").cast(dec) * (lit(1) - col("l_discount").cast(dec)))
             .cast("double").as("sum_disc_price"),
           count(lit(1)).as("count_order"))
-    }),
+    },
+      """SELECT l_returnflag, l_linestatus,
+                CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
+                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS sum_disc_price,
+                count(*) AS count_order
+         FROM lineitem GROUP BY l_returnflag, l_linestatus"""),
 
     // Core analytics: multi-way join with broadcast dimensions.
-    "q02_join_revenue" -> ((s, dir) => {
+    QuerySpec("q02_join_revenue", (s, dir) => {
       val li = t(s, dir, "lineitem")
       val sup = t(s, dir, "supplier")
       val nat = t(s, dir, "nation")
@@ -283,10 +431,19 @@ object SparkEntry {
           sum(col("l_extendedprice").cast(dec) * (lit(1) - col("l_discount").cast(dec)))
             .cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
-    }),
+    },
+      """SELECT r_name,
+                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
+                count(*) AS n_items
+         FROM lineitem
+         JOIN supplier ON l_suppkey = s_suppkey
+         JOIN nation ON s_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         GROUP BY r_name"""),
 
     // Core analytics: top-k with total tiebreak order.
-    "q03_topk_customers" -> ((s, dir) => {
+    QuerySpec("q03_topk_customers", (s, dir) => {
       t(s, dir, "orders")
         .groupBy(col("o_custkey"))
         .agg(sum(col("o_totalprice").cast(dec)).as("total_spend"),
@@ -294,27 +451,37 @@ object SparkEntry {
         .orderBy(col("total_spend").desc, col("o_custkey").asc)
         .limit(10)
         .withColumn("total_spend", col("total_spend").cast("double"))
-    }),
+    },
+      """SELECT o_custkey,
+                CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_spend,
+                count(*) AS n_orders
+         FROM orders GROUP BY o_custkey
+         ORDER BY sum(CAST(o_totalprice AS DECIMAL(18,4))) DESC, o_custkey LIMIT 10"""),
 
     // ---- training-data pipeline ops (graft.functions) ----
-
     // Token counting over the documents corpus.
-    "q17_token_count" -> ((s, dir) => {
+    QuerySpec("q17_token_count", (s, dir) => {
       t(s, dir, "documents").select(col("doc_id"),
         graft.functions.TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-    }),
+    },
+      """SELECT doc_id, len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens
+         FROM documents"""),
 
     // Token counting under the BPE-ish pre-tokenization (word runs and
     // punctuation runs as separate tokens) next to the whitespace count —
     // the context-window budget count vs the word count.
-    "q56_token_count_bpe" -> ((s, dir) => {
+    QuerySpec("q56_token_count_bpe", (s, dir) => {
       t(s, dir, "documents").select(col("doc_id"),
         graft.functions.TextAnalysis.tokenCount(col("text")).cast("long").as("n_words"),
         graft.functions.TextAnalysis.tokenCountBpe(col("text")).cast("long").as("n_bpe"))
-    }),
+    },
+      """SELECT doc_id,
+                len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_words,
+                len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]+')) AS n_bpe
+         FROM documents"""),
 
     // Quality scoring: length/punctuation/stopword metrics.
-    "q18_text_quality" -> ((s, dir) => {
+    QuerySpec("q18_text_quality", (s, dir) => {
       val m = graft.functions.TextAnalysis.qualityMetrics(col("text"))
       t(s, dir, "documents").select(col("doc_id"),
         m("n_chars").cast("long").as("n_chars"),
@@ -322,41 +489,103 @@ object SparkEntry {
         m("n_punct").cast("long").as("n_punct"),
         m("n_stopwords").cast("long").as("n_stopwords"),
         m("stop_ratio").as("stop_ratio"))
-    }),
+    },
+      """WITH tok AS (
+           SELECT doc_id, text, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents)
+         SELECT doc_id,
+                length(text) AS n_chars,
+                len(ts) AS n_tokens,
+                length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g')) AS n_punct,
+                len(list_filter(ts, x -> x IN ('the','a','an','and','of','to','in','is',
+                                               'that','it','for','on'))) AS n_stopwords,
+                round(len(list_filter(ts, x -> x IN ('the','a','an','and','of','to','in','is',
+                                                     'that','it','for','on'))) * 1.0
+                      / len(ts), 4) AS stop_ratio
+         FROM tok"""),
 
     // Language ID: stopword-hit argmax with fixed priority order.
-    "q19_lang_id" -> ((s, dir) => {
+    QuerySpec("q19_lang_id", (s, dir) => {
       val scores = graft.functions.TextAnalysis.langScores(col("text"))
       val scoreCols = scores.map { case (lang, c) => c.cast("long").as(s"n_$lang") }
       t(s, dir, "documents").select(
         (col("doc_id") +: scoreCols :+
           graft.functions.TextAnalysis.langId(col("text")).as("pred_lang")): _*)
-    }),
+    },
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         scored AS (
+           SELECT doc_id,
+             len(list_filter(ts, x -> x IN ('the','a','and','of','to','in','is','that'))) AS n_en,
+             len(list_filter(ts, x -> x IN ('der','die','das','und','nicht','ein','zu','ist'))) AS n_de,
+             len(list_filter(ts, x -> x IN ('el','la','los','que','y','un','es','por'))) AS n_es,
+             len(list_filter(ts, x -> x IN ('le','les','et','dans','est','une','pour','sur'))) AS n_fr
+           FROM tok)
+         SELECT doc_id, n_en, n_de, n_es, n_fr,
+                CASE WHEN n_en + n_de + n_es + n_fr = 0 THEN 'other'
+                     WHEN n_en >= n_de AND n_en >= n_es AND n_en >= n_fr THEN 'en'
+                     WHEN n_de > n_en AND n_de >= n_es AND n_de >= n_fr THEN 'de'
+                     WHEN n_es > n_en AND n_es > n_de AND n_es >= n_fr THEN 'es'
+                     ELSE 'fr' END AS pred_lang
+         FROM scored"""),
 
     // Document fingerprint: canonical-text md5.
-    "q20_fingerprint" -> ((s, dir) => {
+    QuerySpec("q20_fingerprint", (s, dir) => {
       t(s, dir, "documents").select(col("doc_id"),
         graft.functions.TextAnalysis.fingerprint(col("text")).as("fingerprint"))
-    }),
+    },
+      """SELECT doc_id, md5(trim(lower(regexp_replace(text, '\s+', ' ', 'g')))) AS fingerprint
+         FROM documents"""),
 
     // Exact dedup by content hash.
-    "q21_dedup_exact" -> ((s, dir) => {
+    QuerySpec("q21_dedup_exact", (s, dir) => {
       graft.functions.NearDup.exactDedup(t(s, dir, "documents"), "text", "doc_id")
-    }),
+    },
+      """SELECT sha256(text) AS text_hash, min(doc_id) AS doc_id, count(*) AS dup_count
+         FROM documents GROUP BY sha256(text)"""),
 
     // N-gram (3-word shingle) Jaccard near-dup pairs via inverted index.
-    "q22_ngram_jaccard" -> ((s, dir) => {
+    QuerySpec("q22_ngram_jaccard", (s, dir) => {
       graft.functions.NearDup.ngramJaccardPairs(t(s, dir, "documents"),
         "text", "doc_id", n = 3, minJaccard = 0.2, maxBucket = 1000)
-    }),
+    },
+      // the pruned index only GENERATES candidates; common/jaccard come from
+      // the full shingle sets (prune truncates recall, never a pair's value)
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         inv AS (SELECT * FROM inv0 WHERE shingle IN (
+                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
+         pairs AS (
+           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         scored AS (
+           SELECT id_a, id_b,
+                  len(list_intersect(sa.shs, sb.shs)) AS common,
+                  len(sa.shs) AS size_a, len(sb.shs) AS size_b
+           FROM pairs
+           JOIN sh sa ON sa.doc_id = id_a
+           JOIN sh sb ON sb.doc_id = id_b)
+         SELECT id_a, id_b, common, size_a, size_b,
+                round(common * 1.0 / (size_a + size_b - common), 4) AS jaccard
+         FROM scored
+         WHERE round(common * 1.0 / (size_a + size_b - common), 4) >= 0.2"""),
 
     // Exact cosine top-k: 8 query vectors against the whole corpus.
-    "q23_knn_cosine" -> ((s, dir) => {
+    QuerySpec("q23_knn_cosine", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.functions.Similarity.bruteForceTopK(
           emb.filter(col("vec_id") < 8), emb, k = 5)
         .withColumn("rank", col("rank").cast("long"))
-    }),
+    },
+      knnExactTop5Sql),
 
     // MinHash+LSH banding near-dup candidates + exact-Jaccard verify.
     // Oracle-checked against the exact all-pairs form: banding recall at the
@@ -365,55 +594,141 @@ object SparkEntry {
     // equality asserted per scale factor in TrainingOpsSpec), and precision
     // is exact by construction — candidates are verified with exact
     // shingle-set Jaccard.
-    "q24_minhash_neardup" -> ((s, dir) => {
+    QuerySpec("q24_minhash_neardup", (s, dir) => {
       graft.functions.NearDup.minhashNearDup(t(s, dir, "documents"),
         "text", "doc_id", n = 3, k = 32, bands = 8, minJaccard = 0.1)
-    }),
+    },
+      // exact all-pairs Jaccard at the q24 threshold — the minhash banding
+      // path must reproduce it exactly (100% recall pinned in TrainingOpsSpec;
+      // precision exact by construction). No hot-shingle prune here: a pair
+      // with jaccard > 0 shares a shingle by definition, so the unpruned
+      // inverted index IS the exact form.
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
+         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         pairs AS (
+           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS common
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id
+           GROUP BY 1, 2)
+         SELECT id_a, id_b,
+                round(common * 1.0 / (sa.sz + sb.sz - common), 4) AS jaccard
+         FROM pairs
+         JOIN sizes sa ON sa.doc_id = id_a
+         JOIN sizes sb ON sb.doc_id = id_b
+         WHERE round(common * 1.0 / (sa.sz + sb.sz - common), 4) >= 0.1"""),
 
     // SimHash signatures via the native single-pass expression. The
     // canonical form is the PORTABLE 60-bit md5-based signature
     // (SimHashMd5): fully oracle-checked — DuckDB re-derives every bit
     // vote by nibble-parsing md5 prefixes. The xxhash64 form stays in the
     // library as the Spark-only fast path (one hash vs an md5 per token).
-    "q25_simhash" -> ((s, dir) => {
+    QuerySpec("q25_simhash", (s, dir) => {
       val docs = t(s, dir, "documents")
       docs.select(col("doc_id"),
         graft.plans.GraftFunctions.simhashMd5(docs,
           graft.functions.TextAnalysis.tokens(coalesce(col("text"), lit("")))).as("simhash"))
-    }),
+    },
+      // every bit vote re-derived relationally: 15-hex-char (60-bit) md5
+      // prefix per token occurrence, per-bit ±1 vote sums, sign → signature
+      """WITH tok AS (
+           SELECT doc_id,
+                  unnest(list_filter(string_split(coalesce(text, ''), ' '),
+                    x -> x <> '')) AS t
+           FROM documents),
+         h AS (
+           SELECT doc_id,
+                  list_reduce(list_prepend(0::BIGINT, list_transform(generate_series(1, 15),
+                    i -> (strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1)::BIGINT)),
+                    (a, x) -> a * 16 + x) AS h
+           FROM tok),
+         bits AS (
+           SELECT doc_id, b.j,
+                  sum(CASE WHEN (h // (1::BIGINT << b.j)) % 2 = 1 THEN 1 ELSE -1 END) AS v
+           FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS j) b
+           GROUP BY 1, 2),
+         sig AS (
+           SELECT doc_id, sum(CASE WHEN v > 0 THEN (1::BIGINT << j) ELSE 0 END) AS simhash
+           FROM bits GROUP BY 1)
+         SELECT d.doc_id, CAST(coalesce(s.simhash, 0) AS BIGINT) AS simhash
+         FROM documents d LEFT JOIN sig s ON d.doc_id = s.doc_id"""),
 
     // Approximate ANN via random-hyperplane LSH. Oracle-checked against the
     // exact top-k SQL (q23's): at the pinned (tables=48, bits=4) the bucket
     // candidates cover the true top-5 of every query on all testdata scales
     // (TrainingOpsSpec pins the equality), and the final ranking is the same
     // exact cosine + neighbor_id tiebreak as the brute-force path.
-    "q26_ann_lsh" -> ((s, dir) => {
+    QuerySpec("q26_ann_lsh", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.functions.Similarity.lshTopK(
           emb.filter(col("vec_id") < 8), emb, k = 5, dim = 64, tables = 48, bits = 4)
         .withColumn("rank", col("rank").cast("long"))
-    }),
+    },
+      // the true top-5 at the pinned params; same ranking expression) — the
+      // oracle is exactly q23's SQL
+      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+                    FROM embeddings WHERE vec_id < 8),
+         c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
+               FROM embeddings),
+         scored AS (
+           SELECT query_id, neighbor_id, list_cosine_similarity(qv, cv) AS sim
+           FROM q, c WHERE query_id <> neighbor_id),
+         ranked AS (
+           SELECT *, row_number() OVER (PARTITION BY query_id
+                                        ORDER BY sim DESC, neighbor_id) AS rank
+           FROM scored)
+         SELECT query_id, neighbor_id, rank, round(sim, 6) AS sim
+         FROM ranked WHERE rank <= 5"""),
 
     // Multimodal plumbing: opaque binary content + typed features.
-    "q27_multimodal" -> ((s, dir) => {
+    QuerySpec("q27_multimodal", (s, dir) => {
       val media = t(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("content"))
       media.select(col("doc_id"),
         graft.functions.Multimodal.nBytes(col("content")).cast("long").as("n_bytes"),
         graft.functions.Multimodal.contentHash(col("content")).as("content_hash"),
         graft.functions.Multimodal.headerHex(col("content")).as("header_hex"))
-    }),
+    },
+      """SELECT doc_id,
+                octet_length(encode(text)) AS n_bytes,
+                sha256(text) AS content_hash,
+                upper(hex(encode(substring(text, 1, 8)))) AS header_hex
+         FROM documents"""),
 
     // Rolling-hash document signature (order-sensitive, Rabin-Karp style).
     // Canonical form = the portable md5-based token hash, fully
     // oracle-checked; the xxhash64 fold remains the library fast path.
-    "q28_rolling_hash" -> ((s, dir) => {
+    QuerySpec("q28_rolling_hash", (s, dir) => {
       t(s, dir, "documents").select(col("doc_id"),
         graft.functions.TextAnalysis.rollingHashPortable(col("text")).as("rhash"))
-    }),
+    },
+      // the LSH ANN must reproduce the exact top-k (bucket candidates cover
+      // portable md5-prefix hashes re-derived by nibble parsing (the q52/q110
+      // discipline): 12 hex chars (48 bits) per token, Rabin-Karp fold mod
+      // 2^31-1 — byte-identical to rollingHashPortable's conv/md5 chain
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         h AS (
+           SELECT doc_id, list_transform(ts, t ->
+             list_reduce(list_prepend(0::BIGINT, list_transform(generate_series(1, 12),
+               i -> (strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1)::BIGINT)),
+               (a, x) -> a * 16 + x) % 2147483647) AS hs
+           FROM tok)
+         SELECT doc_id,
+                list_reduce(list_prepend(0::BIGINT, hs),
+                  (a, x) -> (a * 1000003 + x) % 2147483647) AS rhash
+         FROM h"""),
 
     // Window: running per-key aggregate over event time (decimal-exact).
-    "q29_running_total" -> ((s, dir) => {
+    QuerySpec("q29_running_total", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -422,15 +737,26 @@ object SparkEntry {
         .select(col("user_id"), col("event_id"),
           sum(col("value").cast(dec)).over(w).cast("double").as("running_value"),
           row_number().over(w).cast("long").as("seq"))
-    }),
+    },
+      """SELECT user_id, event_id,
+                CAST(sum(CAST(value AS DECIMAL(18,4))) OVER (
+                  PARTITION BY user_id ORDER BY ts, event_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value,
+                row_number() OVER (
+                  PARTITION BY user_id ORDER BY ts, event_id) AS seq
+         FROM events WHERE user_id < 20"""),
 
     // Rollup: hierarchical aggregation with subtotal + grand-total rows.
-    "q30_rollup_revenue" -> ((s, dir) => {
+    QuerySpec("q30_rollup_revenue", (s, dir) => {
       t(s, dir, "lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_extendedprice").cast(dec)).cast("double").as("revenue"),
           count(lit(1)).as("n"))
-    }),
+    },
+      """SELECT l_returnflag, l_linestatus,
+                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+                count(*) AS n
+         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""),
 
     // IVF approximate ANN: k-means coarse quantizer + nprobe cell search.
     // ORACLE-FENCED the q44 way (round-10 graduation from rows-only): the
@@ -448,7 +774,7 @@ object SparkEntry {
     // nlist=64 over this few-thousand-vector corpus: finer cells recall
     // measurably better at the SAME probed fraction — on a real corpus
     // nlist grows with n (√n-ish) and the probed fraction falls to ~1-2%.
-    "q32_ann_ivf" -> ((s, dir) => {
+    QuerySpec("q32_ann_ivf", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       annFenced(
         graft.functions.Similarity.ivfTopK(
@@ -456,7 +782,15 @@ object SparkEntry {
         graft.functions.Similarity.bruteForceTopK(
           emb.filter(col("vec_id") < 8), emb, k = 5),
         minRecall = 0.55)
-    }),
+    },
+      // q32/q42 (round-10 graduation from rows-only): the emitted rows are
+      // the EXACT top-k — the IVF / IVF-PQ subplan gates the output in-plan
+      // on recall against that exact set (annFenced; floors 0.55/0.45
+      // under the measured 0.55–0.75 band, broken-index recall ≈ 0.003)
+      // — so the oracle
+      // is exactly q23's SQL; an ANN regression empties the result and the
+      // driver's row-count check goes red
+      knnExactTop5Sql),
 
     // IVF-PQ ANN: coarse cells + product-quantization codes + ADC scoring +
     // exact re-rank — the ~32×-compressed billion-vector path. Same
@@ -464,7 +798,7 @@ object SparkEntry {
     // rerank=8 configuration is 0.675 / 0.675 / 0.55 across the three
     // SFs (band pinned in TrainingOpsSpec), floor 0.45 below it;
     // emitted rows are the exact top-k, so the oracle is q23's SQL.
-    "q42_ann_ivfpq" -> ((s, dir) => {
+    QuerySpec("q42_ann_ivfpq", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       annFenced(
         graft.functions.Similarity.ivfpqTopK(
@@ -473,17 +807,27 @@ object SparkEntry {
         graft.functions.Similarity.bruteForceTopK(
           emb.filter(col("vec_id") < 8), emb, k = 5),
         minRecall = 0.45)
-    }),
+    },
+      knnExactTop5Sql),
 
     // Element-wise embedding statistics: per-(label, dimension) decimal sums.
-    "q33_embed_stats" -> ((s, dir) => {
+    QuerySpec("q33_embed_stats", (s, dir) => {
       t(s, dir, "embeddings")
         .select(col("label"),
           posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "v")))
         .groupBy(col("label"), col("pos"))
         .agg(sum(col("v").cast(dec)).cast("double").as("sum_v"), count(lit(1)).as("n"))
         .withColumn("pos", col("pos").cast("long"))
-    }),
+    },
+      """WITH flat AS (
+           SELECT label,
+                  generate_subscripts(embedding, 1) - 1 AS pos,
+                  unnest(embedding) AS v
+           FROM embeddings)
+         SELECT label, pos,
+                CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(18,4))) AS DOUBLE) AS sum_v,
+                count(*) AS n
+         FROM flat GROUP BY label, pos"""),
 
     // Embedding-cosine near-dup pairs — fifth member of the dedup family
     // (exact hash / n-gram Jaccard / MinHash / SimHash / cosine). The
@@ -496,10 +840,11 @@ object SparkEntry {
     // and precision is exact by construction (candidates are verified with
     // the exact cosine). τ=0.4 sits inside the synthetic corpus's
     // similarity range (max ≈0.6).
-    "q34_cosine_neardup" -> ((s, dir) => {
+    QuerySpec("q34_cosine_neardup", (s, dir) => {
       graft.functions.Similarity.cosineNearDupPairs(
         t(s, dir, "embeddings"), minCosine = 0.4, dim = 64)
-    }),
+    },
+      cosineNeardupSql),
 
     // The hyperplane-LSH operator demonstrator: bucketed candidate
     // generation + the exact cosine-threshold verify, strategy PINNED to
@@ -510,11 +855,15 @@ object SparkEntry {
     // math in Similarity.cosineNearDupPairsLsh) — the corpus-wide scale
     // form at low τ is q65's auto-selected blocked exact join; LSH's
     // scale regime is high-τ near-dup (τ ≥ 0.8, bits ≥ 16).
-    "q50_cosine_neardup_lsh" -> ((s, dir) => {
+    QuerySpec("q50_cosine_neardup_lsh", (s, dir) => {
       graft.functions.Similarity.cosineNearDupPairsLsh(
         t(s, dir, "embeddings"), minCosine = 0.4, dim = 64,
         strategy = "lsh")
-    }),
+    },
+      // the LSH path must reproduce the exact form's result set (100% recall
+      // at the pinned parameters on gate data; precision is exact by
+      // construction — candidates are verified with the exact cosine)
+      cosineNeardupSql),
 
     // HLL-sketch distinct count per group (approx_count_distinct) next to
     // the exact count — the 100 TB form of q31's countDistinct (no shuffle
@@ -526,7 +875,7 @@ object SparkEntry {
     // EMITTED rows are the exact counts a relational oracle recomputes —
     // a regressed HLL drops every row and fails the driver's row-count
     // check instead of silently weakening to rows-only.
-    "q35_approx_distinct" -> ((s, dir) => {
+    QuerySpec("q35_approx_distinct", (s, dir) => {
       val both = t(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(approx_count_distinct(col("user_id"), rsd = 0.02).as("__approx"),
@@ -541,11 +890,17 @@ object SparkEntry {
       both.withColumn("__g", lit(1))
         .join(broadcast(gate), Seq("__g"))
         .select(col("event_type"), col("distinct_users"), col("n_events"))
-    }),
+    },
+      // q35 emits the EXACT distinct counts (the builtin HLL sketch only
+      // gates them in-plan — see the build above), so the oracle is plain
+      // relational COUNT(DISTINCT)
+      """SELECT event_type, count(DISTINCT user_id) AS distinct_users,
+                count(*) AS n_events
+         FROM events GROUP BY event_type"""),
 
     // As-of join: latest click at-or-before each purchase, per user — the
     // single-shuffle union+window form (no join fan-out; see TimeJoin).
-    "q36_asof_join" -> ((s, dir) => {
+    QuerySpec("q36_asof_join", (s, dir) => {
       val ev = t(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
@@ -555,11 +910,20 @@ object SparkEntry {
       TimeJoin.asofBackward(purchases, clicks, keys = Seq("user_id"),
         tsCol = "ts", rightTie = "prev_click_id",
         rightPayload = Seq("prev_click_id", "prev_click_ts"))
-    }),
+    },
+      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
+                    WHERE event_type = 'purchase'),
+         c AS (SELECT event_id, user_id, ts FROM events
+               WHERE event_type = 'click')
+         SELECT p.event_id, p.user_id, p.ts, p.value,
+                c.event_id AS prev_click_id, c.ts AS prev_click_ts
+         FROM p LEFT JOIN c ON p.user_id = c.user_id AND c.ts <= p.ts
+         QUALIFY row_number() OVER (PARTITION BY p.event_id
+                                    ORDER BY c.ts DESC, c.event_id DESC) = 1"""),
 
     // Range join: errors within 24h after each purchase, per user, counted —
     // bucketized equi-join instead of an inequality cross-product.
-    "q37_range_join" -> ((s, dir) => {
+    QuerySpec("q37_range_join", (s, dir) => {
       val ev = t(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"))
@@ -572,23 +936,46 @@ object SparkEntry {
           Seq("event_id"), "left")
         .select(col("event_id"), col("user_id"),
           coalesce(col("n_errors"), lit(0L)).as("n_errors"))
-    }),
+    },
+      """WITH p AS (SELECT event_id, user_id, ts FROM events
+                    WHERE event_type = 'purchase'),
+         e AS (SELECT event_id, user_id, ts FROM events
+               WHERE event_type = 'error')
+         SELECT p.event_id, p.user_id, count(e.event_id) AS n_errors
+         FROM p LEFT JOIN e ON p.user_id = e.user_id
+           AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL 24 HOURS
+         GROUP BY p.event_id, p.user_id"""),
 
     // Gap-based sessionization (4h gap) + per-session feature aggregation —
     // one window pass, no self-join; numbering is total-ordered (ts, id).
-    "q38_sessionize" -> ((s, dir) => {
+    QuerySpec("q38_sessionize", (s, dir) => {
       Sessionize.sessions(t(s, dir, "events").filter(col("user_id") < 50),
           keys = Seq("user_id"), tsCol = "ts", tieCol = "event_id",
           gapSeconds = 14400L, valueCol = Some("value"))
         .select(col("user_id"), col("session_seq"), col("session_start"),
           col("session_end"), col("n_events"), col("sum_value"))
-    }),
+    },
+      """WITH e AS (SELECT user_id, ts, event_id, value FROM events WHERE user_id < 50),
+         flagged AS (
+           SELECT user_id, ts, event_id, value,
+                  CASE WHEN lag(ts) OVER w IS NULL
+                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 14400000000
+                       THEN 1 ELSE 0 END AS is_start
+           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         tagged AS (
+           SELECT *, sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+           FROM flagged)
+         SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, min(ts) AS session_start,
+                max(ts) AS session_end, count(*) AS n_events,
+                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+         FROM tagged GROUP BY user_id, session_seq"""),
 
     // Exact discrete percentiles as order statistics (value at row
     // ceil(p·n)) — identical index arithmetic on both engines, so the
     // result is a raw data value passed through bit-exact, immune to the
     // interpolation/rounding differences of native percentile functions.
-    "q39_percentile" -> ((s, dir) => {
+    QuerySpec("q39_percentile", (s, dir) => {
       val byType = Window.partitionBy(col("event_type"))
       val w = byType.orderBy(col("value").asc, col("event_id").asc)
       t(s, dir, "events")
@@ -599,34 +986,56 @@ object SparkEntry {
           max(when(col("rn") === ceil(lit(0.5) * col("n")), col("value"))).as("p50"),
           max(when(col("rn") === ceil(lit(0.9) * col("n")), col("value"))).as("p90"),
           max(col("n")).as("n_events"))
-    }),
+    },
+      """WITH ranked AS (
+           SELECT event_type, value,
+                  row_number() OVER (PARTITION BY event_type
+                                     ORDER BY value, event_id) AS rn,
+                  count(*) OVER (PARTITION BY event_type) AS n
+           FROM events)
+         SELECT event_type,
+                max(CASE WHEN rn = ceil(CAST(0.5 AS DOUBLE) * n) THEN value END) AS p50,
+                max(CASE WHEN rn = ceil(CAST(0.9 AS DOUBLE) * n) THEN value END) AS p90,
+                max(n) AS n_events
+         FROM ranked GROUP BY event_type"""),
 
     // Pivot with EXPLICIT values — no distinct-discovery job before the
     // pivot (at 100 TB that pre-scan costs a full pass; the value set is
     // part of the contract, M-5's closed status enums).
-    "q40_pivot" -> ((s, dir) => {
+    QuerySpec("q40_pivot", (s, dir) => {
       val types = Seq("click", "error", "purchase", "signup", "view")
       val pivoted = t(s, dir, "events")
         .filter(col("user_id") < 50)
         .groupBy(col("user_id")).pivot("event_type", types).count()
       pivoted.select(col("user_id") +:
         types.map(ty => coalesce(col(ty), lit(0L)).as(s"n_$ty")): _*)
-    }),
+    },
+      """SELECT user_id,
+                count(CASE WHEN event_type = 'click' THEN 1 END) AS n_click,
+                count(CASE WHEN event_type = 'error' THEN 1 END) AS n_error,
+                count(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_purchase,
+                count(CASE WHEN event_type = 'signup' THEN 1 END) AS n_signup,
+                count(CASE WHEN event_type = 'view' THEN 1 END) AS n_view
+         FROM events WHERE user_id < 50 GROUP BY user_id"""),
 
     // Fixed-width histogram binning per group (training-data QC shape):
     // identical IEEE double bucket arithmetic on both engines.
-    "q41_histogram" -> ((s, dir) => {
+    QuerySpec("q41_histogram", (s, dir) => {
       t(s, dir, "events")
         .select(col("event_type"),
           least(floor(col("value") / 50.0), lit(19.0)).cast("long").as("bucket"))
         .groupBy(col("event_type"), col("bucket"))
         .agg(count(lit(1)).as("n"))
-    }),
+    },
+      """SELECT event_type,
+                CAST(least(floor(value / 50.0), 19.0) AS BIGINT) AS bucket,
+                count(*) AS n
+         FROM events GROUP BY 1, 2"""),
 
     // Semi-structured extraction: JSON-path pull from the props payload
     // column + typed aggregation — the schema-on-read step every
     // event-stream pipeline applies before analytics.
-    "q58_json_extract" -> ((s, dir) => {
+    QuerySpec("q58_json_extract", (s, dir) => {
       t(s, dir, "events")
         .select(col("event_type"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -635,7 +1044,18 @@ object SparkEntry {
           count(when(col("k") > 50, 1)).as("n_large"),
           count(when(col("k").isNull, 1)).as("n_null"),
           count(lit(1)).as("n"))
-    }),
+    },
+      // sum of BIGINT is HUGEINT in DuckDB (the q38 lesson) — cast to BIGINT.
+      // TRY_CAST mirrors Spark's non-ANSI cast (null on non-integral input),
+      // and n_null counts null-AFTER-cast on both engines — a plain CAST
+      // would abort the oracle on a malformed k, and a pre-cast IS NULL
+      // would disagree with Spark's accounting.
+      """SELECT event_type,
+                CAST(sum(TRY_CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
+                count(CASE WHEN TRY_CAST(props->>'k' AS BIGINT) > 50 THEN 1 END) AS n_large,
+                count(CASE WHEN TRY_CAST(props->>'k' AS BIGINT) IS NULL THEN 1 END) AS n_null,
+                count(*) AS n
+         FROM events GROUP BY event_type"""),
 
     // Benchmark decontamination: drop every corpus document with a
     // qualifying n-gram Jaccard overlap against a held-out eval set (here
@@ -645,21 +1065,48 @@ object SparkEntry {
     // self-join: per-eval-doc cost is bounded by bucket occupancy, so the
     // check is ~free next to the dedup passes even at 100 TB). Exact →
     // full DuckDB oracle.
-    "q59_decontaminate" -> ((s, dir) => {
+    QuerySpec("q59_decontaminate", (s, dir) => {
       val docs = t(s, dir, "documents")
       val evalSet = docs.filter(col("doc_id") % 13 === 0)
       val corpus = docs.filter(col("doc_id") % 13 =!= 0)
       graft.functions.NearDup.decontaminate(corpus, evalSet, "text", "doc_id",
           n = 3, minJaccard = 0.2)
         .select(col("doc_id"), col("lang"))
-    }),
+    },
+      // corpus doc survives iff no jaccard>=0.2 overlap with any eval doc
+      // (doc_id % 13 == 0 plays the held-out benchmark); eval×corpus pairs
+      // only — corpus-internal similarity is dedup's business, not
+      // decontamination's. Corpus-side hot-key prune has no effect at gate
+      // scale (no shingle reaches 1000 corpus postings).
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
+         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         cand AS (
+           SELECT e.doc_id AS id_a, c.doc_id AS id_b, count(*) AS common
+           FROM inv e JOIN inv c ON e.shingle = c.shingle
+            AND e.doc_id % 13 = 0 AND c.doc_id % 13 <> 0
+           GROUP BY 1, 2),
+         contaminated AS (
+           SELECT DISTINCT id_b FROM cand
+           JOIN sizes se ON se.doc_id = id_a
+           JOIN sizes sc ON sc.doc_id = id_b
+           WHERE round(common * 1.0 / (se.sz + sc.sz - common), 4) >= 0.2)
+         SELECT doc_id, lang FROM documents
+         WHERE doc_id % 13 <> 0 AND doc_id NOT IN (SELECT id_b FROM contaminated)"""),
 
     // Gopher-style repetition filters: duplicate-line fraction (built-ins)
     // and top-2-gram / duplicate-2-gram character shares (single-pass
     // native expression) — the metrics that dominate real corpus quality
     // filtering (generated text and scraped boilerplate repeat lines and
     // word n-grams). All map-side at scan speed; no shuffle.
-    "q60_repetition" -> ((s, dir) => {
+    QuerySpec("q60_repetition", (s, dir) => {
       val docs = t(s, dir, "documents")
       val m = graft.functions.TextAnalysis.repetitionMetrics(docs, col("text"), n = 2)
       docs.select(col("doc_id"),
@@ -667,32 +1114,88 @@ object SparkEntry {
         m("dup_line_frac").as("dup_line_frac"),
         m("top_2gram_share").as("top_2gram_share"),
         m("dup_2gram_frac").as("dup_2gram_frac"))
-    }),
+    },
+      // repetition metrics: 2-grams NOT deduplicated (repetition is the
+      // signal); top share = max over grams of count·chars / text chars —
+      // engine-neutral tie-break (max of the product, not chars of the
+      // max-count gram); dup share counts occurrences beyond each gram's
+      // first. Docs with < 2 tokens or no text → both 0.
+      """WITH tok AS (
+           SELECT doc_id, coalesce(text, '') AS text,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts,
+                  list_filter(string_split(coalesce(text, ''), chr(10)),
+                              x -> trim(x) <> '') AS ls
+           FROM documents),
+         grams AS (
+           SELECT doc_id, unnest(list_transform(
+             generate_series(1, greatest(len(ts) - 1, 0)),
+             i -> ts[i] || ' ' || ts[i+1])) AS gram
+           FROM tok),
+         gc AS (SELECT doc_id, gram, count(*) AS c FROM grams GROUP BY 1, 2),
+         ga AS (
+           SELECT doc_id, max(c * length(gram)) AS topchars,
+                  coalesce(sum(CASE WHEN c > 1 THEN (c - 1) * length(gram) END), 0)
+                    AS dupchars
+           FROM gc GROUP BY doc_id)
+         SELECT t.doc_id,
+                len(ls) AS n_lines,
+                CASE WHEN len(ls) > 0
+                     THEN round((len(ls) - len(list_distinct(ls))) * 1.0 / len(ls), 4)
+                     ELSE 0.0 END AS dup_line_frac,
+                CASE WHEN length(t.text) > 0
+                     THEN round(coalesce(ga.topchars, 0) * 1.0 / length(t.text), 4)
+                     ELSE 0.0 END AS top_2gram_share,
+                CASE WHEN length(t.text) > 0
+                     THEN round(coalesce(ga.dupchars, 0) * 1.0 / length(t.text), 4)
+                     ELSE 0.0 END AS dup_2gram_frac
+         FROM tok t LEFT JOIN ga ON t.doc_id = ga.doc_id"""),
 
     // Deterministic stratified sample: ≤5 docs per (lang, source) stratum,
     // ranked by salted md5 of the id — the hash-ordered draw any engine can
     // recompute (the split discipline of q52 applied to quota sampling).
-    "q61_stratified_sample" -> ((s, dir) => {
+    QuerySpec("q61_stratified_sample", (s, dir) => {
       graft.functions.Corpus.stratifiedSample(t(s, dir, "documents"),
           Seq("lang", "source"), "doc_id", k = 5, salt = "42")
         .select(col("doc_id"), col("lang"), col("source"))
-    }),
+    },
+      """SELECT doc_id, lang, source FROM documents
+         QUALIFY row_number() OVER (
+           PARTITION BY lang, source
+           ORDER BY md5(CAST(doc_id AS VARCHAR) || ':42'), doc_id) <= 5"""),
 
     // Mixture rebalancing weights: per-language token shares and the
     // uniform-target sampling weight — the knob that reshapes a corpus's
     // language (or source/domain) mixture before training-set assembly.
-    "q62_mixture_weights" -> ((s, dir) => {
+    QuerySpec("q62_mixture_weights", (s, dir) => {
       val docs = t(s, dir, "documents")
       graft.functions.Corpus.mixtureWeights(docs, Seq("lang"),
         graft.functions.TextAnalysis.tokenCount(col("text")))
-    }),
+    },
+      // floor-form portable rounding (see functions/Portable.scala): the
+      // same IEEE ops on both engines make the output bytes identical.
+      // The actual r4/r5 driver-hash red here was the uncast sum() —
+      // DuckDB's sum(BIGINT) returns HUGEINT (int128) which the driver
+      // hashes differently from Spark's int64 — fixed by the CAST below
+      """WITH s AS (
+           SELECT lang, count(*) AS n_docs,
+                  CAST(sum(len(list_filter(string_split(text, ' '),
+                                           x -> x <> ''))) AS BIGINT)
+                    AS n_tokens
+           FROM documents GROUP BY lang)
+         SELECT lang, n_docs, n_tokens,
+                floor((CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER ())
+                      * 1000000.0 + 0.5) / 1000000.0 AS token_share,
+                floor(((1.0 / count(*) OVER ())
+                       / (CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER ()))
+                      * 1000000.0 + 0.5) / 1000000.0 AS weight
+         FROM s"""),
 
     // Exact per-group top-k via the bounded-heap typed aggregate — the
     // shuffle-lean form of q03's sort/limit and q54's window rank: each
     // input partition sends at most k pairs per group across the exchange
     // (partial heaps, ObjectHashAggregate) instead of every row through a
     // window sort. Total (value, event_id) order → exact, full oracle.
-    "q63_topk_agg" -> ((s, dir) => {
+    QuerySpec("q63_topk_agg", (s, dir) => {
       val ev = t(s, dir, "events")
       ev.groupBy(col("event_type"))
         .agg(graft.plans.GraftFunctions.topkPairs(ev, col("value"), col("event_id"), 3)
@@ -700,13 +1203,21 @@ object SparkEntry {
         .select(col("event_type"), posexplode(col("top")).as(Seq("pos", "p")))
         .select(col("event_type"), (col("pos") + 1).cast("long").as("rank"),
           col("p.ord").as("value"), col("p.id").as("event_id"))
-    }),
+    },
+      // the aggregate skips NULL ord values by construction; the oracle
+      // filters them so the window never ranks a null row into the top-k
+      """SELECT event_type, CAST(rnk AS BIGINT) AS rank, value, event_id
+         FROM (SELECT event_type, value, event_id,
+                      row_number() OVER (PARTITION BY event_type
+                                         ORDER BY value DESC, event_id DESC) AS rnk
+               FROM events WHERE value IS NOT NULL)
+         WHERE rnk <= 3"""),
 
     // Equi-depth (decile) bucketing per group via ntile over a total order —
     // the exact form of quantile binning (training-data stratification /
     // outlier trimming); complements q41's fixed-width histogram and q39's
     // order statistics.
-    "q57_equidepth_hist" -> ((s, dir) => {
+    QuerySpec("q57_equidepth_hist", (s, dir) => {
       val w = Window.partitionBy(col("event_type"))
         .orderBy(col("value").asc, col("event_id").asc)
       t(s, dir, "events")
@@ -714,20 +1225,32 @@ object SparkEntry {
         .groupBy(col("event_type"), col("decile"))
         .agg(min(col("value")).as("lo"), max(col("value")).as("hi"),
           count(lit(1)).as("n"))
-    }),
+    },
+      """SELECT event_type, decile, min(value) AS lo, max(value) AS hi, count(*) AS n
+         FROM (
+           SELECT event_type, value,
+                  ntile(10) OVER (PARTITION BY event_type
+                                  ORDER BY value, event_id) AS decile
+           FROM events)
+         GROUP BY event_type, decile"""),
 
     // Skew-resistant salted join, oracle-checked against the PLAIN join's
     // semantics: salting must be invisible in the result. The fact side is
     // the event stream (user_id is the natural hot key at scale), the
     // compact side a per-user aggregate dimension.
-    "q43_salted_join" -> ((s, dir) => {
+    QuerySpec("q43_salted_join", (s, dir) => {
       val ev = t(s, dir, "events")
       val facts = ev.select(col("event_id"), col("user_id"), col("event_type"))
       val dim = ev.groupBy(col("user_id"))
         .agg(count(lit(1)).as("user_total"))
       graft.functions.Par.saltedJoin(facts, dim, Seq("user_id"), n = 8)
         .select(col("event_id"), col("user_id"), col("event_type"), col("user_total"))
-    }),
+    },
+      """SELECT event_id, e.user_id, event_type, d.user_total
+         FROM events e
+         JOIN (SELECT user_id, count(*) AS user_total
+               FROM events GROUP BY user_id) d
+           ON e.user_id = d.user_id"""),
 
     // Quantile sketch per group (Greenwald-Khanna via approx_percentile),
     // ORACLE-FENCED: the sketch runs in-plan (accuracy a=2000 → rank error
@@ -740,7 +1263,7 @@ object SparkEntry {
     // not only by TrainingOpsSpec. Cost: one window pass + one map-side GK
     // agg + a |groups|-row broadcast join — no extra events scan for the
     // band check, the band values come out of the same window pass.
-    "q44_quantile_sketch" -> ((s, dir) => {
+    QuerySpec("q44_quantile_sketch", (s, dir) => {
       val e = t(s, dir, "events")
         .select(col("event_type"), col("event_id"), col("value"))
       val byT = Window.partitionBy(col("event_type"))
@@ -769,23 +1292,52 @@ object SparkEntry {
           col("g")(2).between(col("lo95"), col("hi95")))
         .select(col("event_type"), col("p25"), col("p75"), col("p95"),
           col("n_events"))
-    }),
+    },
+      // exact side of the oracle-fenced GK sketch: the Spark plan emits these
+      // exact-rank quantiles only for groups whose in-plan GK estimates sit
+      // inside the (q±ε)n band, so a row-count match here certifies the
+      // sketch's error bound (DuckDB cannot run GK; it doesn't need to)
+      """WITH ranked AS (
+           SELECT event_type, value,
+                  row_number() OVER (PARTITION BY event_type
+                                     ORDER BY value, event_id) AS rn,
+                  count(*) OVER (PARTITION BY event_type) AS n
+           FROM events)
+         SELECT event_type,
+                max(CASE WHEN rn = CAST(ceil(0.25 * n) AS BIGINT)
+                    THEN value END) AS p25,
+                max(CASE WHEN rn = CAST(ceil(0.75 * n) AS BIGINT)
+                    THEN value END) AS p75,
+                max(CASE WHEN rn = CAST(ceil(0.95 * n) AS BIGINT)
+                    THEN value END) AS p95,
+                max(n) AS n_events
+         FROM ranked GROUP BY event_type"""),
 
     // Column profile — per-column null count + exact distinct count over the
     // orders fact (training-data QC: schema drift / null-rate monitoring).
     // One pass, partially aggregated; exact → oracle-checked.
-    "q45_profile" -> ((s, dir) => {
+    QuerySpec("q45_profile", (s, dir) => {
       val cols = Seq("o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
       val aggs = cols.flatMap(c => Seq(
         count(when(col(c).isNull, 1)).as(s"${c}_nulls"),
         countDistinct(col(c)).as(s"${c}_distinct")))
       t(s, dir, "orders").agg(count(lit(1)).as("n_rows"), aggs: _*)
-    }),
+    },
+      """SELECT count(*) AS n_rows,
+                count(CASE WHEN o_custkey IS NULL THEN 1 END) AS o_custkey_nulls,
+                count(DISTINCT o_custkey) AS o_custkey_distinct,
+                count(CASE WHEN o_orderstatus IS NULL THEN 1 END) AS o_orderstatus_nulls,
+                count(DISTINCT o_orderstatus) AS o_orderstatus_distinct,
+                count(CASE WHEN o_totalprice IS NULL THEN 1 END) AS o_totalprice_nulls,
+                count(DISTINCT o_totalprice) AS o_totalprice_distinct,
+                count(CASE WHEN o_orderpriority IS NULL THEN 1 END) AS o_orderpriority_nulls,
+                count(DISTINCT o_orderpriority) AS o_orderpriority_distinct
+         FROM orders"""),
 
     // Time-RANGE window: per-user trailing-24h event-value sum at each
     // event — frame bounds by event TIME, not row count (peers at equal ts
     // all included, so the result is set-determined and decimal-exact).
-    "q46_trailing_window" -> ((s, dir) => {
+    QuerySpec("q46_trailing_window", (s, dir) => {
       val day = 86400000000L // µs
       val w = Window.partitionBy(col("user_id"))
         .orderBy(unix_micros(col("ts")))
@@ -795,25 +1347,67 @@ object SparkEntry {
         .select(col("user_id"), col("event_id"), col("ts"),
           sum(col("value").cast(dec)).over(w).cast("double").as("trailing_24h"),
           count(lit(1)).over(w).as("n_24h"))
-    }),
+    },
+      """SELECT user_id, event_id, ts,
+                CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS trailing_24h,
+                count(*) OVER w AS n_24h
+         FROM events WHERE user_id < 20
+         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+                      RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)"""),
 
     // CUBE: all 2^k grouping combinations in one pass (rollup's superset).
-    "q47_cube" -> ((s, dir) => {
+    QuerySpec("q47_cube", (s, dir) => {
       t(s, dir, "events")
         .cube(col("event_type"), col("user_id") % 10)
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(dec)).cast("double").as("sum_value"))
         .withColumnRenamed("(user_id % 10)", "user_mod")
-    }),
+    },
+      """SELECT event_type, user_id % 10 AS user_mod, count(*) AS n,
+                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY CUBE (event_type, user_id % 10)"""),
 
     // Dedup clusters: near-dup pairs → connected components, each doc
     // labeled with its component's min doc id (the canonical survivor).
-    "q48_dedup_clusters" -> ((s, dir) => {
+    QuerySpec("q48_dedup_clusters", (s, dir) => {
       val pairs = graft.functions.NearDup.ngramJaccardPairs(
         t(s, dir, "documents"), "text", "doc_id", n = 3, minJaccard = 0.2)
       graft.functions.NearDup.connectedComponents(pairs, "id_a", "id_b")
         .withColumnsRenamed(Map("node" -> "doc_id", "component" -> "cluster_id"))
-    }),
+    },
+      // transitive closure via recursive CTE — exact for the gate's small
+      // components; the Spark side must produce identical min-labeling
+      """WITH RECURSIVE tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         inv AS (SELECT * FROM inv0 WHERE shingle IN (
+                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
+         cand AS (
+           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         jp AS (
+           SELECT id_a, id_b FROM (
+             SELECT id_a, id_b,
+                    len(list_intersect(sa.shs, sb.shs)) AS common,
+                    len(sa.shs) AS sza, len(sb.shs) AS szb
+             FROM cand
+             JOIN sh sa ON sa.doc_id = id_a
+             JOIN sh sb ON sb.doc_id = id_b)
+           WHERE round(common * 1.0 / (sza + szb - common), 4) >= 0.2),
+         edges AS (SELECT id_a AS a, id_b AS b FROM jp
+                   UNION SELECT id_b, id_a FROM jp),
+         reach(a, b) AS (
+           SELECT a, b FROM edges
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+         SELECT a AS doc_id, least(a, min(b)) AS cluster_id
+         FROM reach GROUP BY a"""),
 
     // Semantic dedup (SemDeDup shape): embedding-cosine near-dup pairs →
     // connected components → canonical corpus — drops every vector that
@@ -826,7 +1420,7 @@ object SparkEntry {
     // corpus — Ω(output) is the floor, and the blocked join walks it in
     // one equi-join pass). Oracle = exact all-pairs cosine pairs +
     // recursive-CTE closure (recall is 1 by construction on this path).
-    "q65_semantic_dedup" -> ((s, dir) => {
+    QuerySpec("q65_semantic_dedup", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val pairs = graft.functions.Similarity.cosineNearDupPairsLsh(
         emb, minCosine = 0.4, dim = 64)
@@ -835,7 +1429,27 @@ object SparkEntry {
           graft.functions.NearDup.connectedComponents(pairs, "id_a", "id_b"),
           "vec_id")
         .select(col("vec_id"), col("label").cast("long").as("label"))
-    }),
+    },
+      // exact all-pairs cosine edges + recursive-CTE closure; survivors are
+      // vectors that are their own component minimum (or untouched by pairs)
+      """WITH RECURSIVE v AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev, label FROM embeddings),
+         jp AS (
+           SELECT a.vec_id AS id_a, b.vec_id AS id_b
+           FROM v a JOIN v b ON a.vec_id < b.vec_id
+           WHERE round(list_cosine_similarity(a.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE)),
+         edges AS (SELECT id_a AS a, id_b AS b FROM jp
+                   UNION SELECT id_b, id_a FROM jp),
+         reach(a, b) AS (
+           SELECT a, b FROM edges
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         comp AS (
+           SELECT a AS vec_id, least(a, min(b)) AS component
+           FROM reach GROUP BY a),
+         dropped AS (SELECT vec_id FROM comp WHERE vec_id <> component)
+         SELECT vec_id, CAST(label AS BIGINT) AS label FROM v
+         WHERE vec_id NOT IN (SELECT vec_id FROM dropped)"""),
 
     // PII scrubbing: redact emails / IPv4 / phone numbers with typed
     // placeholders + per-type match counts — the redaction pass every
@@ -844,7 +1458,7 @@ object SparkEntry {
     // identically in both engines) and the oracle checks the scrub
     // byte-for-byte. Pure regexp_replace chain: map-side, codegen'd, scan
     // speed — no shuffle at any scale.
-    "q66_pii_redact" -> ((s, dir) => {
+    QuerySpec("q66_pii_redact", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pii = when(col("doc_id") % 4 === 0,
           concat(lit("user"), col("doc_id").cast("string"), lit("@mail.example.com")))
@@ -863,31 +1477,96 @@ object SparkEntry {
         counts("email").as("n_email"),
         counts("ipv4").as("n_ipv4"),
         counts("phone").as("n_phone"))
-    }),
+    },
+      // synthetic PII planted from doc_id identically on both sides; the
+      // redaction chain and its order (email → ipv4 → phone) are part of the
+      // operator contract — patterns are the RE2∩Java portable subset, so
+      // the same scrub is recomputable by either stack
+      """WITH m AS (
+           SELECT doc_id,
+                  substr(coalesce(text, ''), 1, 80) || ' contact ' ||
+                  CASE doc_id % 4
+                    WHEN 0 THEN 'user' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
+                    WHEN 1 THEN '+1-202-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+                    WHEN 2 THEN CAST(doc_id % 200 + 10 AS VARCHAR) || '.' ||
+                                CAST(doc_id % 256 AS VARCHAR) || '.' ||
+                                CAST((doc_id // 7) % 256 AS VARCHAR) || '.9'
+                    ELSE 'nothing to scrub'
+                  END || ' end' AS raw
+           FROM documents)
+         SELECT doc_id,
+                regexp_replace(regexp_replace(regexp_replace(raw,
+                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+                  '\b\d{1,3}(\.\d{1,3}){3}\b', '<IPV4>', 'g'),
+                  '(\+?\d{1,3}[-. ()]{0,2})?\d{3}[-. ()]{0,2}\d{3}[-. ]?\d{4}', '<PHONE>', 'g')
+                  AS redacted,
+                len(regexp_extract_all(raw,
+                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
+                len(regexp_extract_all(raw,
+                  '\b\d{1,3}(\.\d{1,3}){3}\b')) AS n_ipv4,
+                len(regexp_extract_all(raw,
+                  '(\+?\d{1,3}[-. ()]{0,2})?\d{3}[-. ()]{0,2}\d{3}[-. ]?\d{4}')) AS n_phone
+         FROM m"""),
 
     // The deduplicated corpus: drop every doc that lost its near-dup
     // cluster election — the shippable end product of the dedup family.
-    "q49_dedup_corpus" -> ((s, dir) => {
+    QuerySpec("q49_dedup_corpus", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = graft.functions.NearDup.ngramJaccardPairs(
         docs, "text", "doc_id", n = 3, minJaccard = 0.2)
       graft.functions.NearDup.canonicalCorpus(docs, pairs, "doc_id")
         .select(col("doc_id"), col("lang"))
-    }),
+    },
+      """WITH RECURSIVE tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         inv AS (SELECT * FROM inv0 WHERE shingle IN (
+                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
+         cand AS (
+           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         jp AS (
+           SELECT id_a, id_b FROM (
+             SELECT id_a, id_b,
+                    len(list_intersect(sa.shs, sb.shs)) AS common,
+                    len(sa.shs) AS sza, len(sb.shs) AS szb
+             FROM cand
+             JOIN sh sa ON sa.doc_id = id_a
+             JOIN sh sb ON sb.doc_id = id_b)
+           WHERE round(common * 1.0 / (sza + szb - common), 4) >= 0.2),
+         edges AS (SELECT id_a AS a, id_b AS b FROM jp
+                   UNION SELECT id_b, id_a FROM jp),
+         reach(a, b) AS (
+           SELECT a, b FROM edges
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         clusters AS (
+           SELECT a AS doc_id, least(a, min(b)) AS cluster_id
+           FROM reach GROUP BY a)
+         SELECT d.doc_id, d.lang FROM documents d
+         WHERE d.doc_id NOT IN (
+           SELECT doc_id FROM clusters WHERE doc_id <> cluster_id)"""),
 
     // Incremental near-dup admission: a new batch dedups against the
     // maintained corpus (batch work ∝ |batch| × bucket occupancy — never a
     // corpus self-join) plus its own internal pairs; a batch doc is
     // admitted iff it near-dups no existing doc and no smaller-id batch
     // doc. The production shape of daily corpus maintenance.
-    "q55_incremental_admit" -> ((s, dir) => {
+    QuerySpec("q55_incremental_admit", (s, dir) => {
       val docs = t(s, dir, "documents")
       val batch = docs.filter(col("doc_id") % 7 === 0)
       val existing = docs.filter(col("doc_id") % 7 =!= 0)
       graft.functions.NearDup.admitBatch(existing, batch, "text", "doc_id",
           n = 3, minJaccard = 0.2)
         .select(col("doc_id"), col("lang"))
-    }),
+    },
+      incrementalAdmitSql),
 
     // Incremental SEMANTIC admission — q55's embedding-space sibling and
     // q65's production maintenance shape: a batch of new vectors dedups
@@ -897,34 +1576,76 @@ object SparkEntry {
     // smaller-id batch vector. Oracle = exact all-pairs cosine (valid
     // because the LSH path's recall is 100% on the gate data at the q65
     // parameters — same tables/bits/seed/threshold).
-    "q120_semantic_admit" -> ((s, dir) => {
+    QuerySpec("q120_semantic_admit", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val batch = emb.filter(col("vec_id") % 7 === 0)
       val existing = emb.filter(col("vec_id") % 7 =!= 0)
       graft.functions.Similarity.admitVectorBatch(existing, batch,
           minCosine = 0.4, dim = 64)
         .select(col("vec_id"), col("label").cast("long").as("label"))
-    }),
+    },
+      semanticAdmitSql),
 
     // DSIR importance weights: hashed-unigram likelihood ratios of the
     // en-language slice (the target to upsample toward) vs the raw
     // corpus — the data-selection score importance resampling samples
     // proportionally to. Per-bucket log-ratios quantize once to integer
     // 1e-10 units; per-doc scores are exact long sums.
-    "q122_dsir_weights" -> ((s, dir) => {
+    QuerySpec("q122_dsir_weights", (s, dir) => {
       graft.functions.Corpus.dsirLogWeights(t(s, dir, "documents"),
         "text", "doc_id", col("lang") === "en")
-    }),
+    },
+      // per-bucket ln-ratio quantized to integer 1e-10 units via the
+      // portable floor-form (bucket = first two md5 hex chars of the
+      // token), per-doc score = exact integer sum — order-free both engines
+      """WITH tok AS (
+           SELECT doc_id, lang = 'en' AS is_t,
+                  unnest(list_filter(string_split(coalesce(text, ''), ' '),
+                    x -> x <> '')) AS token
+           FROM documents),
+         b AS (
+           SELECT doc_id, is_t,
+                  ((strpos('0123456789abcdef', substr(md5(token), 1, 1)) - 1) * 16 +
+                   (strpos('0123456789abcdef', substr(md5(token), 2, 1)) - 1))
+                    AS bk
+           FROM tok),
+         per_doc AS (SELECT doc_id, bk, count(*) AS c_db FROM b GROUP BY 1, 2),
+         per_bucket AS (
+           SELECT bk, count(*) AS c_r,
+                  sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS c_t
+           FROM b GROUP BY 1),
+         tot AS (SELECT sum(c_r) AS t_r, sum(c_t) AS t_t FROM per_bucket),
+         lr AS (
+           SELECT bk, CAST(floor(ln(
+                    ((c_t + 1) * 1.0 / (t.t_t + 256)) /
+                    ((c_r + 1) * 1.0 / (t.t_r + 256)))
+                  * 10000000000.0 + 0.5) AS BIGINT) AS lrq
+           FROM per_bucket CROSS JOIN tot t)
+         SELECT d.doc_id, CAST(sum(d.c_db) AS BIGINT) AS n_tokens,
+                floor((CAST(sum(d.c_db * l.lrq) AS DOUBLE) / 10000000000.0)
+                      * 1000000.0 + 0.5) / 1000000.0 AS log_weight
+         FROM per_doc d JOIN lr l USING (bk)
+         GROUP BY 1"""),
 
     // Chunk→document mean-pooling: 8 consecutive chunk vectors average
     // into one document vector (relational (doc, pos, mean) shape) — the
     // pooling step between chunk encoding and document-level semantic
     // ops. Engine-exact: components quantize to integer nano-units via
     // the portable floor-form, sum as exact longs, divide once.
-    "q121_chunk_meanpool" -> ((s, dir) => {
+    QuerySpec("q121_chunk_meanpool", (s, dir) => {
       graft.functions.Similarity.meanPool(
         t(s, dir, "embeddings"), expr("vec_id div 8"))
-    }),
+    },
+      // same nano-unit quantization (portable floor-form) → exact long sums
+      // → one division → portable 6-digit round; floats are exact in double
+      """SELECT vec_id // 8 AS doc, CAST(p.i - 1 AS BIGINT) AS pos,
+                floor((CAST(sum(CAST(floor(CAST(embedding[p.i] AS DOUBLE)
+                                           * 1000000000.0 + 0.5) AS BIGINT))
+                            AS DOUBLE)
+                       / (count(*) * 1000000000.0))
+                      * 1000000.0 + 0.5) / 1000000.0 AS mean
+         FROM embeddings, (SELECT unnest(range(1, 65)) AS i) p
+         GROUP BY 1, 2"""),
 
     // Token-budget corpus selection: fill 40% of the corpus's tokens with
     // the highest stopword-density documents (score = stopword hits per
@@ -932,7 +1653,7 @@ object SparkEntry {
     // id asc). Two-level prefix sum — per-score-bucket cumulative sums in
     // parallel, a window only over the |distinct scores| bucket table —
     // never a global ordered window over the corpus.
-    "q123_budget_select" -> ((s, dir) => {
+    QuerySpec("q123_budget_select", (s, dir) => {
       val m = graft.functions.TextAnalysis.qualityMetrics(coalesce(col("text"), lit("")))
       val base = t(s, dir, "documents")
         .select(col("doc_id"), m("n_tokens").cast("long").as("_nt"),
@@ -943,39 +1664,120 @@ object SparkEntry {
             .cast("long").as("_score"))
       graft.functions.Corpus.budgetSelect(base, "doc_id", col("_nt"), col("_score"),
         budgetNum = 2, budgetDen = 5)
-    }),
+    },
+      // greedy prefix under a 2/5-of-total token budget, priority
+      // (score DESC, doc_id ASC); the oracle's single global window mirrors
+      // the Spark side's two-level bucket prefix sum row-for-row
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         b AS (
+           SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
+                  CAST(floor(len(list_filter(ts, x -> x IN
+                         ('the','a','an','and','of','to','in','is',
+                          'that','it','for','on'))) * 1000.0
+                       / len(ts)) AS BIGINT) AS score
+           FROM tok WHERE len(ts) > 0),
+         c AS (
+           SELECT doc_id, score, n_tokens,
+                  sum(n_tokens) OVER (ORDER BY score DESC, doc_id ASC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens,
+                  sum(n_tokens) OVER () AS total
+           FROM b)
+         SELECT doc_id, score, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
+         FROM c WHERE cum_tokens <= total * 2 // 5"""),
 
     // Retrieval scorecard: recall@10 / MRR@10 / nDCG@10 of the BM25
     // ranking against exact all-terms-present relevance, three fixed
     // queries. DCG discounts are pre-quantized integer constants shared
     // with the oracle (no runtime ln); top-10 via the bounded-heap
     // aggregate, never a global sort.
-    "q124_retrieval_metrics" -> ((s, dir) =>
+    QuerySpec("q124_retrieval_metrics", (s, dir) =>
       graft.functions.Retrieval.rankingMetrics(t(s, dir, "documents"),
         "text", "doc_id",
         Seq("q_spark_join" -> Seq("spark", "join"),
           "q_filter_scan" -> Seq("filter", "scan"),
-          "q_query_table" -> Seq("query", "table")), k = 10)),
+          "q_query_table" -> Seq("query", "table")), k = 10),
+      retrievalMetricsOracle),
 
     // k-anonymized metadata release: (source, lang, 200-char length band)
     // quasi-identifiers, k = 20, local-recoding ladder — each row
     // generalizes the fewest trailing attributes that put it in a crowd
     // of >= 20. Prefix counts are tiny partial-agg tables broadcast back;
     // no row-level window.
-    "q125_kanon_release" -> ((s, dir) =>
+    QuerySpec("q125_kanon_release", (s, dir) =>
       graft.functions.Privacy.kAnonymize(t(s, dir, "documents"), "doc_id",
         Seq("source" -> col("source"), "lang" -> col("lang"),
           "len_band" -> floor(col("n_chars").cast("double") / lit(200.0)).cast("long")),
-        k = 20)),
+        k = 20),
+      // local-recoding k-anonymity ladder (k = 20) over
+      // (source, lang, 200-char band): level = fewest trailing '*'s whose
+      // published prefix crowd reaches k, counted over the whole corpus
+      """WITH b AS (
+           SELECT doc_id, CAST(source AS VARCHAR) AS source,
+                  CAST(lang AS VARCHAR) AS lang,
+                  CAST(n_chars // 200 AS VARCHAR) AS len_band
+           FROM documents),
+         c0 AS (SELECT source, lang, len_band, count(*) AS n0 FROM b GROUP BY 1, 2, 3),
+         c1 AS (SELECT source, lang, count(*) AS n1 FROM b GROUP BY 1, 2),
+         c2 AS (SELECT source, count(*) AS n2 FROM b GROUP BY 1),
+         c3 AS (SELECT count(*) AS n3 FROM b),
+         lv AS (
+           SELECT doc_id, b.source, b.lang, b.len_band,
+                  CASE WHEN n0 >= 20 THEN 0 WHEN n1 >= 20 THEN 1
+                       WHEN n2 >= 20 THEN 2 ELSE 3 END AS lvl
+           FROM b
+           JOIN c0 USING (source, lang, len_band)
+           JOIN c1 USING (source, lang)
+           JOIN c2 USING (source)
+           CROSS JOIN c3)
+         SELECT doc_id,
+                CASE WHEN lvl <= 2 THEN source ELSE '*' END AS source,
+                CASE WHEN lvl <= 1 THEN lang ELSE '*' END AS lang,
+                CASE WHEN lvl <= 0 THEN len_band ELSE '*' END AS len_band,
+                CAST(lvl AS INT) AS anon_level
+         FROM lv"""),
 
     // Per-language epoch plan: temperature-flattened target shares
     // (α = 0.3, the q107 rule) scheduled into a 100k-token budget with a
     // 4-epoch repetition cap — the loader-facing schedule. |strata|-row
     // aggregate; windows only over that.
-    "q126_epoch_plan" -> ((s, dir) =>
+    QuerySpec("q126_epoch_plan", (s, dir) =>
       graft.functions.Corpus.epochPlan(t(s, dir, "documents"), Seq("lang"),
         graft.functions.TextAnalysis.tokenCount(col("text")), alpha = 0.3,
-        budgetTokens = 100000L, maxEpochs = 4.0)),
+        budgetTokens = 100000L, maxEpochs = 4.0),
+      // q107's temperature CTE (α = 0.3) scheduled into a 100k-token budget
+      // with a 4-epoch cap; planned_tokens derives from the ALREADY-rounded
+      // epochs so the columns cannot disagree
+      """WITH s AS (
+           SELECT lang, count(*) AS n_docs,
+                  CAST(sum(len(list_filter(string_split(text, ' '),
+                                           x -> x <> ''))) AS BIGINT)
+                    AS n_tokens
+           FROM documents GROUP BY lang),
+         p AS (
+           SELECT lang, n_docs, n_tokens,
+                  CASE WHEN n_tokens > 0
+                       THEN pow(CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER (), 0.3)
+                       ELSE 0.0 END AS powed
+           FROM s),
+         e AS (
+           SELECT lang, n_docs, n_tokens,
+                  floor((powed / sum(powed) OVER ())
+                        * 1000000.0 + 0.5) / 1000000.0 AS target_share,
+                  CASE WHEN n_tokens > 0
+                       THEN floor(least(CAST(4.0 AS DOUBLE),
+                                        CAST(100000 AS DOUBLE)
+                                        * (powed / sum(powed) OVER ())
+                                        / CAST(n_tokens AS DOUBLE))
+                                  * 1000000.0 + 0.5) / 1000000.0
+                       END AS epochs
+           FROM p)
+         SELECT lang, n_docs, n_tokens, target_share, epochs,
+                CAST(floor(epochs * CAST(n_tokens AS DOUBLE)) AS BIGINT)
+                  AS planned_tokens
+         FROM e"""),
 
     // Multi-benchmark contamination report: ONE corpus-index pass screens
     // against every eval set at once (set label rides the eval rows; the
@@ -983,7 +1785,7 @@ object SparkEntry {
     // and worst Jaccard — the screening matrix a release review reads.
     // Production pipelines screen dozens of benchmarks; re-running q59
     // per set would pay the index join N times.
-    "q130_multiset_contamination" -> ((s, dir) => {
+    QuerySpec("q130_multiset_contamination", (s, dir) => {
       val docs = t(s, dir, "documents")
       val evalSet = docs.filter(col("doc_id") % 13 === 0)
       val labels = evalSet.select(col("doc_id").as("id_a"),
@@ -995,7 +1797,38 @@ object SparkEntry {
         .groupBy(col("id_b").as("doc_id"), col("eval_set"))
         .agg(count(lit(1)).cast("long").as("n_overlaps"),
           max(col("jaccard")).as("max_jaccard"))
-    }),
+    },
+      // q59's eval×corpus CTEs with the set label folded into the final
+      // per-(corpus doc, set) aggregate; round(…,4) on positive Jaccards
+      // matches the portable floor-form byte-for-byte
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
+         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         cand AS (
+           SELECT e.doc_id AS id_a, c.doc_id AS id_b, count(*) AS common
+           FROM inv e JOIN inv c ON e.shingle = c.shingle
+            AND e.doc_id % 13 = 0 AND c.doc_id % 13 <> 0
+           GROUP BY 1, 2),
+         pr AS (
+           SELECT id_a, id_b,
+                  round(common * 1.0 / (se.sz + sc.sz - common), 4) AS j
+           FROM cand
+           JOIN sizes se ON se.doc_id = id_a
+           JOIN sizes sc ON sc.doc_id = id_b
+           WHERE round(common * 1.0 / (se.sz + sc.sz - common), 4)
+                   >= CAST(0.03 AS DOUBLE))
+         SELECT id_b AS doc_id,
+                CASE WHEN id_a % 26 = 0 THEN 'benchA' ELSE 'benchB' END AS eval_set,
+                CAST(count(*) AS BIGINT) AS n_overlaps,
+                max(j) AS max_jaccard
+         FROM pr GROUP BY 1, 2"""),
 
     // Per-language verbosity/fertility profile: exact corpus char and word
     // totals and the chars-per-word ratio — the cross-lingual cost proxy a
@@ -1003,7 +1836,7 @@ object SparkEntry {
     // bytes-per-token varies by script; this is its exact corpus-level
     // numerator/denominator). Map-side partial agg to |langs| rows; the
     // ratio of exact long sums goes through the portable floor-round.
-    "q131_char_fertility" -> ((s, dir) => {
+    QuerySpec("q131_char_fertility", (s, dir) => {
       t(s, dir, "documents").groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(length(col("text")).cast("long")).as("n_chars"),
@@ -1012,21 +1845,72 @@ object SparkEntry {
         .withColumn("chars_per_word", when(col("n_words") > 0,
           graft.functions.Portable.r6(
             col("n_chars").cast("double") / col("n_words").cast("double"))))
-    }),
+    },
+      // exact long sums; the scalar ratio through the shared floor-round
+      """SELECT lang, count(*) AS n_docs,
+                CAST(sum(length(text)) AS BIGINT) AS n_chars,
+                CAST(sum(len(list_filter(string_split(text, ' '),
+                                         x -> x <> ''))) AS BIGINT)
+                  AS n_words,
+                CASE WHEN sum(len(list_filter(string_split(text, ' '),
+                                              x -> x <> ''))) > 0 THEN
+                  floor((CAST(sum(length(text)) AS DOUBLE)
+                         / CAST(sum(len(list_filter(string_split(text, ' '),
+                                                    x -> x <> ''))) AS DOUBLE))
+                        * 1000000.0 + 0.5) / 1000000.0
+                END AS chars_per_word
+         FROM documents GROUP BY lang"""),
 
     // Duplicate-cluster size histogram: how big do near-dup clusters get —
     // the release-review readout over q48's connected components (a fat
     // tail here means one template dominates the corpus and keep-one
     // dedup will delete in bulk). Cost: the q48 pair-gen + CC, then two
     // tiny aggregations.
-    "q132_cluster_size_hist" -> ((s, dir) => {
+    QuerySpec("q132_cluster_size_hist", (s, dir) => {
       val pairs = graft.functions.NearDup.ngramJaccardPairs(
         t(s, dir, "documents"), "text", "doc_id", n = 3, minJaccard = 0.2)
       graft.functions.NearDup.connectedComponents(pairs, "id_a", "id_b")
         .groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
         .groupBy(col("cluster_size"))
         .agg(count(lit(1)).cast("long").as("n_clusters"))
-    }),
+    },
+      // q48's clusters (shared CTE chain), histogrammed by size
+      """WITH RECURSIVE tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         inv AS (SELECT * FROM inv0 WHERE shingle IN (
+                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
+         cand AS (
+           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         jp AS (
+           SELECT id_a, id_b FROM (
+             SELECT id_a, id_b,
+                    len(list_intersect(sa.shs, sb.shs)) AS common,
+                    len(sa.shs) AS sza, len(sb.shs) AS szb
+             FROM cand
+             JOIN sh sa ON sa.doc_id = id_a
+             JOIN sh sb ON sb.doc_id = id_b)
+           WHERE round(common * 1.0 / (sza + szb - common), 4) >= 0.2),
+         edges AS (SELECT id_a AS a, id_b AS b FROM jp
+                   UNION SELECT id_b, id_a FROM jp),
+         reach(a, b) AS (
+           SELECT a, b FROM edges
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         cl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
+                FROM reach GROUP BY a)
+         SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
+                CAST(count(*) AS BIGINT) AS n_clusters
+         FROM (SELECT cluster_id, count(*) AS cluster_size
+               FROM cl GROUP BY cluster_id)
+         GROUP BY cluster_size"""),
 
     // Cross-source template matrix: for each source pair, how many
     // distinct 20-token document PREFIXES they share — the syndication/
@@ -1035,7 +1919,7 @@ object SparkEntry {
     // source) first, then an equi-join on the prefix hash: per-hash
     // groups are bounded by the source count, so the join cannot
     // quadratic-blow on a hot key.
-    "q133_template_sources" -> ((s, dir) => {
+    QuerySpec("q133_template_sources", (s, dir) => {
       val pfx = t(s, dir, "documents")
         .select(md5(array_join(
           slice(graft.functions.TextAnalysis.tokens(col("text")), 1, 20), " "))
@@ -1047,13 +1931,23 @@ object SparkEntry {
         .select(col("a.source").as("source_a"), col("b.source").as("source_b"))
         .groupBy(col("source_a"), col("source_b"))
         .agg(count(lit(1)).cast("long").as("n_shared_prefixes"))
-    }),
+    },
+      """WITH tok AS (
+           SELECT doc_id, source,
+                  list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         p AS (SELECT DISTINCT md5(array_to_string(ts[1:20], ' ')) AS pfx, source
+               FROM tok)
+         SELECT a.source AS source_a, b.source AS source_b,
+                CAST(count(*) AS BIGINT) AS n_shared_prefixes
+         FROM p a JOIN p b ON a.pfx = b.pfx AND a.source < b.source
+         GROUP BY 1, 2"""),
 
     // Shared-prefix duplicate groups: documents whose first 20 tokens
     // coincide exactly (crawl templates, mirrored headers) with the group
     // size and an exemplar id — the cheap pre-filter a near-dup pass runs
     // first, one hash + one groupBy, no pair generation at all.
-    "q134_prefix_dup" -> ((s, dir) => {
+    QuerySpec("q134_prefix_dup", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), md5(array_join(
           slice(graft.functions.TextAnalysis.tokens(col("text")), 1, 20), " "))
@@ -1062,14 +1956,21 @@ object SparkEntry {
         .agg(count(lit(1)).cast("long").as("n_docs"),
           min(col("doc_id")).as("exemplar"))
         .filter(col("n_docs") > 1)
-    }),
+    },
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents)
+         SELECT md5(array_to_string(ts[1:20], ' ')) AS prefix_hash,
+                CAST(count(*) AS BIGINT) AS n_docs,
+                min(doc_id) AS exemplar
+         FROM tok GROUP BY 1 HAVING count(*) > 1"""),
 
     // Interval-union coverage: per user, total ACTIVE time merging
     // overlapping [ts, ts+1h) activity windows — the union-of-intervals
     // algorithm (billing/abuse/engagement time), composed from the gap
     // sessionizer (gap = window length ⇔ interval overlap) so the merge
     // is one per-user window pass, no self-join. All-integer micros.
-    "q136_interval_coverage" -> ((s, dir) => {
+    QuerySpec("q136_interval_coverage", (s, dir) => {
       Sessionize.sessions(t(s, dir, "events").filter(col("user_id") < 100),
           keys = Seq("user_id"), tsCol = "ts", tieCol = "event_id",
           gapSeconds = 3600L)
@@ -1077,14 +1978,33 @@ object SparkEntry {
         .agg(count(lit(1)).cast("long").as("n_intervals"),
           sum(unix_micros(col("session_end")) - unix_micros(col("session_start"))
             + lit(3600000000L)).as("covered_micros"))
-    }),
+    },
+      // q38's window discipline at gap = the interval length; all-integer
+      // epoch-microsecond arithmetic, hash-exact by construction
+      """WITH e AS (SELECT user_id, ts, event_id FROM events WHERE user_id < 100),
+         flagged AS (
+           SELECT user_id, ts, event_id,
+                  CASE WHEN lag(ts) OVER w IS NULL
+                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 3600000000
+                       THEN 1 ELSE 0 END AS is_start
+           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         tagged AS (
+           SELECT *, sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
+           FROM flagged),
+         sess AS (SELECT user_id, seq, min(ts) AS st, max(ts) AS en
+                  FROM tagged GROUP BY 1, 2)
+         SELECT user_id, CAST(count(*) AS BIGINT) AS n_intervals,
+                CAST(sum(epoch_us(en) - epoch_us(st) + 3600000000) AS BIGINT)
+                  AS covered_micros
+         FROM sess GROUP BY user_id"""),
 
     // Lorenz curve deciles per source: cumulative token share of the
     // smallest→largest documents — q135's Gini drawn out into the curve a
     // release review actually inspects ("the top decile carries 40% of
     // source X's tokens"). Exact integer decile sums; one scalar ratio
     // through the portable floor-round.
-    "q137_lorenz_deciles" -> ((s, dir) => {
+    QuerySpec("q137_lorenz_deciles", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
         graft.functions.TextAnalysis.tokenCount(col("text")).cast("long").as("tok"))
       val w = Window.partitionBy(col("source"))
@@ -1102,13 +2022,41 @@ object SparkEntry {
           graft.functions.Portable.r6(
             col("cum_tokens").cast("double") / col("total_tokens").cast("double"))))
         .drop("total_tokens")
-    }),
+    },
+      // exact decile sums via the q57 ntile parity; one floor-rounded ratio
+      """WITH b AS (
+           SELECT doc_id, source,
+                  CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+                       AS BIGINT) AS tok
+           FROM documents),
+         d AS (
+           SELECT source, tok,
+                  CAST(ntile(10) OVER (PARTITION BY source
+                                       ORDER BY tok ASC, doc_id ASC)
+                       AS BIGINT) AS decile
+           FROM b),
+         g AS (SELECT source, decile, sum(tok) AS dec_tokens
+               FROM d GROUP BY 1, 2),
+         c AS (
+           SELECT source, decile, dec_tokens,
+                  sum(dec_tokens) OVER (PARTITION BY source ORDER BY decile
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS cum_tokens,
+                  sum(dec_tokens) OVER (PARTITION BY source) AS total_tokens
+           FROM g)
+         SELECT source, decile, CAST(dec_tokens AS BIGINT) AS dec_tokens,
+                CAST(cum_tokens AS BIGINT) AS cum_tokens,
+                CASE WHEN total_tokens > 0 THEN
+                  floor((CAST(cum_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE))
+                        * 1000000.0 + 0.5) / 1000000.0
+                END AS cum_share
+         FROM c"""),
 
     // Per-document type-token ratio: vocabulary richness (distinct words /
     // words) — the lexical-diversity quality signal that flags both
     // keyword-stuffed spam (TTR → 0) and word-salad generation (TTR → 1)
     // where length and stopword metrics pass. Map-side per row.
-    "q138_type_token_ratio" -> ((s, dir) => {
+    QuerySpec("q138_type_token_ratio", (s, dir) => {
       val toks = graft.functions.TextAnalysis.tokens(col("text"))
       t(s, dir, "documents").select(col("doc_id"),
           size(toks).cast("long").as("n_tokens"),
@@ -1116,7 +2064,21 @@ object SparkEntry {
         .withColumn("ttr", when(col("n_tokens") > 0,
           graft.functions.Portable.r6(
             col("vocab").cast("double") / col("n_tokens").cast("double"))))
-    }),
+    },
+      """WITH b AS (
+           SELECT doc_id,
+                  CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+                       AS BIGINT) AS n_tokens,
+                  CAST(len(list_distinct(list_filter(string_split(text, ' '),
+                                                     x -> x <> '')))
+                       AS BIGINT) AS vocab
+           FROM documents)
+         SELECT doc_id, n_tokens, vocab,
+                CASE WHEN n_tokens > 0 THEN
+                  floor((CAST(vocab AS DOUBLE) / CAST(n_tokens AS DOUBLE))
+                        * 1000000.0 + 0.5) / 1000000.0
+                END AS ttr
+         FROM b"""),
 
     // Daily burstiness per event type: the variance-to-mean ratio (index
     // of dispersion) of daily event counts — VMR ≈ 1 is Poisson-steady
@@ -1124,7 +2086,7 @@ object SparkEntry {
     // mean misleads capacity planning. Exact integer count sums; the one
     // scalar ratio (n·Σx² − (Σx)²)/(n·Σx) evaluates in the identical op
     // order on both engines, then the portable floor-round.
-    "q139_event_dispersion" -> ((s, dir) => {
+    QuerySpec("q139_event_dispersion", (s, dir) => {
       val daily = t(s, dir, "events")
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day_ts"))
         .agg(count(lit(1)).as("x"))
@@ -1136,14 +2098,34 @@ object SparkEntry {
             (col("n_days").cast("double") * col("sum_sq").cast("double") -
               col("n_events").cast("double") * col("n_events").cast("double")) /
               (col("n_days").cast("double") * col("n_events").cast("double")))))
-    }),
+    },
+      // exact integer daily counts; identical double op order
+      // ((n·Σx² − (Σx)²)/(n·Σx)), then the shared floor-round
+      """WITH d AS (
+           SELECT event_type, date_trunc('day', ts) AS day_ts,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM events GROUP BY 1, 2),
+         g AS (
+           SELECT event_type, count(*) AS n_days, sum(x) AS n_events,
+                  sum(x * x) AS sum_sq
+           FROM d GROUP BY event_type)
+         SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
+                CAST(n_events AS BIGINT) AS n_events,
+                CAST(sum_sq AS BIGINT) AS sum_sq,
+                CASE WHEN n_events > 0 THEN
+                  floor(((CAST(n_days AS DOUBLE) * CAST(sum_sq AS DOUBLE)
+                          - CAST(n_events AS DOUBLE) * CAST(n_events AS DOUBLE))
+                         / (CAST(n_days AS DOUBLE) * CAST(n_events AS DOUBLE)))
+                        * 1000000.0 + 0.5) / 1000000.0
+                END AS vmr
+         FROM g"""),
 
     // Exact per-user inter-event MEDIAN gap: the cadence statistic
     // (bot-vs-human detection, session-timeout calibration) where a mean
     // is destroyed by one long absence. Gaps from one lag pass, the lower
     // median as an order statistic (q39's discipline — row ⌊(n+1)/2⌋ of
     // the per-user sort, all-integer microseconds, no interpolation).
-    "q140_interevent_median" -> ((s, dir) => {
+    QuerySpec("q140_interevent_median", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts").asc, col("event_id").asc)
       val gaps = t(s, dir, "events").filter(col("user_id") < 100)
@@ -1160,7 +2142,25 @@ object SparkEntry {
         .filter(col("rk") === expr("(n + 1) div 2"))
         .select(col("user_id"), col("n").as("n_gaps"),
           col("gap").as("median_gap_micros"))
-    }),
+    },
+      // lower median as an order statistic over integer micros — `//` is
+      // DuckDB's floor division, matching Spark's `div`
+      """WITH e AS (SELECT user_id, ts, event_id FROM events WHERE user_id < 100),
+         g AS (
+           SELECT user_id, event_id,
+                  epoch_us(ts) - epoch_us(lag(ts) OVER (
+                    PARTITION BY user_id ORDER BY ts, event_id)) AS gap
+           FROM e),
+         f AS (SELECT * FROM g WHERE gap IS NOT NULL),
+         rk AS (
+           SELECT user_id, gap,
+                  row_number() OVER (PARTITION BY user_id
+                                     ORDER BY gap ASC, event_id ASC) AS rk,
+                  count(*) OVER (PARTITION BY user_id) AS n
+           FROM f)
+         SELECT user_id, CAST(n AS BIGINT) AS n_gaps,
+                CAST(gap AS BIGINT) AS median_gap_micros
+         FROM rk WHERE rk = (n + 1) // 2"""),
 
     // q55 through the PERSISTED index: build a ShingleIndex table from the
     // existing corpus (manifest commits into a fresh scratch dir — the
@@ -1169,7 +2169,7 @@ object SparkEntry {
     // (NearDup.admitBatchIndexed). ShingleIndexSpec pins index admission
     // ≡ NearDup.admitBatch at every step; this query driver-checks the
     // equivalence end-to-end — the oracle is q55's direct all-pairs form.
-    "q141_indexed_admit" -> ((s, dir) => {
+    QuerySpec("q141_indexed_admit", (s, dir) => {
       val docs = t(s, dir, "documents")
       val batch = docs.filter(col("doc_id") % 7 === 0)
       val existing = docs.filter(col("doc_id") % 7 =!= 0)
@@ -1178,14 +2178,18 @@ object SparkEntry {
       graft.pipeline.ShingleIndex.append(s, idx, existing, p)
       graft.pipeline.ShingleIndex.admit(s, idx, batch, p)
         .select(col("doc_id"), col("lang"))
-    }),
+    },
+      // q141 = q55 routed through the persisted ShingleIndex; the oracle is
+      // the same direct all-pairs admission (the equivalence ShingleIndexSpec
+      // pins, here driver-hash-checked end-to-end)
+      incrementalAdmitSql),
 
     // q120 through the PERSISTED index: VectorIndex postings + vectors
     // built from the existing corpus, batch admitted by probing the
     // persisted LSH buckets (Similarity.admitVectorBatchIndexed). Same
     // parameters as q65/q120 (48 tables × 4 bits, seed 42), where LSH
     // recall is 100% on the gate data — oracle = exact all-pairs cosine.
-    "q142_indexed_semantic_admit" -> ((s, dir) => {
+    QuerySpec("q142_indexed_semantic_admit", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val batch = emb.filter(col("vec_id") % 7 === 0)
       val existing = emb.filter(col("vec_id") % 7 =!= 0)
@@ -1194,7 +2198,11 @@ object SparkEntry {
       graft.pipeline.VectorIndex.append(s, idx, existing, p)
       graft.pipeline.VectorIndex.admit(s, idx, batch, minCosine = 0.4, p)
         .select(col("vec_id"), col("label").cast("long").as("label"))
-    }),
+    },
+      // q142 = q120 routed through the persisted VectorIndex; oracle = the
+      // exact all-pairs cosine admission (VectorIndexSpec's equivalence,
+      // driver-hash-checked)
+      semanticAdmitSql),
 
     // Relational HyperLogLog with a PORTABLE register derivation — the
     // oracle-checkable counterpart to q35's engine-private builtin. Each
@@ -1211,7 +2219,7 @@ object SparkEntry {
     // linear-counting correction (m·ln(m/V) — engine-libm ln, not
     // portable) is applied caller-side from the emitted V
     // (TrainingOpsSpec pins its accuracy against exact distinct).
-    "q143_hll_relational" -> ((s, dir) => {
+    QuerySpec("q143_hll_relational", (s, dir) => {
       val ev = t(s, dir, "events").filter(col("user_id").isNotNull)
       val hex = md5(col("user_id").cast("string"))
       val rows = ev.select(col("event_type"),
@@ -1238,7 +2246,50 @@ object SparkEntry {
             * lit(65536.0) * lit(1099511627776.0))
             / col("sketch_units").cast("double") * lit(1000000.0) + lit(0.5))
             .cast("long"))
-    }),
+    },
+      // portable md5 register derivation: identical bucket/rho/fixed-point
+      // arithmetic on both engines; every sum lands in BIGINT via exact
+      // integer units (the HUGEINT cast discipline)
+      """WITH h AS (
+           SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS hx
+           FROM events WHERE user_id IS NOT NULL),
+         rr AS (
+           SELECT event_type,
+                  CAST((strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
+                       + (strpos('0123456789abcdef', substr(hx, 2, 1)) - 1)
+                       AS BIGINT) AS bucket,
+                  substr(hx, 3, 13) AS tail
+           FROM h),
+         rho0 AS (
+           SELECT event_type, bucket,
+                  length(regexp_extract(tail, '^0*')) AS z,
+                  substr(tail, length(regexp_extract(tail, '^0*')) + 1, 1) AS d
+           FROM rr),
+         rho AS (
+           SELECT event_type, bucket,
+                  least(z * 4 +
+                        CASE WHEN d = '1' THEN 3
+                             WHEN d IN ('2', '3') THEN 2
+                             WHEN d IN ('4', '5', '6', '7') THEN 1
+                             ELSE 0 END + 1, 40) AS rho
+           FROM rho0),
+         regs AS (
+           SELECT event_type, bucket, max(rho) AS rho, count(*) AS n
+           FROM rho GROUP BY 1, 2),
+         g AS (
+           SELECT event_type,
+                  CAST(sum(n) AS BIGINT) AS n_events,
+                  CAST(count(*) AS BIGINT) AS n_buckets,
+                  CAST(sum(1::BIGINT << CAST(40 - rho AS INT)) AS BIGINT) AS u
+           FROM regs GROUP BY 1)
+         SELECT event_type, n_events,
+                256 - n_buckets AS n_zero_registers,
+                u + (256 - n_buckets) * (1::BIGINT << 40) AS sketch_units,
+                CAST(floor((0.7213 / (1.0 + 1.079 / 256.0)
+                            * 65536.0 * 1099511627776.0)
+                           / CAST(sketch_units AS DOUBLE) * 1000000.0 + 0.5)
+                     AS BIGINT) AS est_raw_e6
+         FROM g"""),
 
     // The SQL catalog lifecycle under the driver oracle: CTAS a manifest
     // table from orders, tombstone one status class (DELETE → dv
@@ -1248,7 +2299,7 @@ object SparkEntry {
     // ManifestV2Rewrite, so the final read is the codegen'd dv-aware
     // native scan). The oracle replays the same edits as relational
     // algebra over the source parquet — exact integer sums throughout.
-    "q144_sql_lifecycle" -> ((s, dir) => {
+    QuerySpec("q144_sql_lifecycle", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q144")
         .toString + "/orders_t"
       t(s, dir, "orders").createOrReplaceTempView("q144_orders_src")
@@ -1265,7 +2316,30 @@ object SparkEntry {
                        sum(o_custkey) AS sum_cust
                 FROM graft.`$tbl`
                 GROUP BY o_orderstatus""")
-    }),
+    },
+      // q144 = the SQL DELETE/UPDATE/INSERT lifecycle replayed as relational
+      // algebra over the source parquet; integer sums CAST to BIGINT (the
+      // HUGEINT discipline)
+      """WITH base AS (
+           SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
+         after_delete AS (
+           SELECT * FROM base WHERE o_orderstatus <> 'F'),
+         after_update AS (
+           SELECT o_orderkey,
+                  CASE WHEN o_orderkey % 13 = 0 THEN o_custkey + 1000000
+                       ELSE o_custkey END AS o_custkey,
+                  o_orderstatus
+           FROM after_delete),
+         after_insert AS (
+           SELECT * FROM after_update
+           UNION ALL
+           SELECT o_orderkey + 900000000, o_custkey, 'X'
+           FROM base WHERE o_orderkey % 1000 = 0)
+         SELECT o_orderstatus,
+                CAST(count(*) AS BIGINT) AS n_orders,
+                CAST(sum(o_orderkey) AS BIGINT) AS sum_keys,
+                CAST(sum(o_custkey) AS BIGINT) AS sum_cust
+         FROM after_insert GROUP BY o_orderstatus"""),
 
     // SQL MERGE + maintenance procedures under the driver oracle: CTAS a
     // manifest table from orders, MERGE a mixed update+insert batch (the
@@ -1273,7 +2347,7 @@ object SparkEntry {
     // graft.compact_small (data-neutral by contract; the oracle proves
     // it), and aggregate the final state. The oracle replays the upsert
     // as a left-join override + anti-join insert over the source parquet.
-    "q145_sql_merge" -> ((s, dir) => {
+    QuerySpec("q145_sql_merge", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q145")
         .toString + "/orders_m"
       t(s, dir, "orders").createOrReplaceTempView("q145_orders_src")
@@ -1293,7 +2367,30 @@ object SparkEntry {
                        count(*) AS n_orders,
                        sum(o_custkey) AS sum_cust
                 FROM graft.`$tbl` GROUP BY o_orderkey % 97""")
-    }),
+    },
+      // q145 = the SQL MERGE upsert replayed relationally: matched keys take
+      // the source image (left-join override), unmatched source rows insert
+      // (anti-join); compact_small is data-neutral so the oracle ignores it
+      """WITH base AS (
+           SELECT o_orderkey, o_custkey FROM orders),
+         src AS (
+           SELECT o_orderkey, o_custkey + 7 AS o_custkey
+           FROM base WHERE o_orderkey % 3 = 0
+           UNION ALL
+           SELECT o_orderkey + 700000000, 42
+           FROM base WHERE o_orderkey % 500 = 0),
+         merged AS (
+           SELECT b.o_orderkey,
+                  CASE WHEN s.o_orderkey IS NOT NULL THEN s.o_custkey
+                       ELSE b.o_custkey END AS o_custkey
+           FROM base b LEFT JOIN src s ON b.o_orderkey = s.o_orderkey
+           UNION ALL
+           SELECT o_orderkey, o_custkey FROM src
+           WHERE o_orderkey NOT IN (SELECT o_orderkey FROM base))
+         SELECT o_orderkey % 97 AS bucket,
+                CAST(count(*) AS BIGINT) AS n_orders,
+                CAST(sum(o_custkey) AS BIGINT) AS sum_cust
+         FROM merged GROUP BY o_orderkey % 97"""),
 
     // The FULL SQL MERGE clause surface under the driver oracle: CTAS a
     // manifest table from orders, then ONE MERGE exercising conditional
@@ -1303,7 +2400,7 @@ object SparkEntry {
     // atomic merge-dv commit (graft.sources.ManifestStore.mergeRows). The
     // oracle replays the clause lattice as CASE logic over a left join
     // plus the anti-join inserts; exact integer sums throughout.
-    "q147_sql_merge_clauses" -> ((s, dir) => {
+    QuerySpec("q147_sql_merge_clauses", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q147")
         .toString + "/orders_c"
       t(s, dir, "orders").createOrReplaceTempView("q147_orders_src")
@@ -1330,7 +2427,38 @@ object SparkEntry {
                        sum(o_orderkey % 997) AS sum_tail
                 FROM graft.`$tbl`
                 GROUP BY coalesce(o_orderstatus, 'NEW')""")
-    }),
+    },
+      // q147 = the full-clause MERGE replayed as CASE logic over a left
+      // join (first-match-wins: DELETE beats UPDATE on 'F' rows) plus the
+      // anti-join inserts; inserted rows carry NULL status → 'NEW'
+      """WITH base AS (
+           SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
+         src AS (
+           SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 2 = 0
+           UNION ALL
+           SELECT o_orderkey + 600000000, o_custkey FROM orders
+           WHERE o_orderkey % 400 = 0),
+         joined AS (
+           SELECT b.o_orderkey AS k, b.o_custkey AS c, b.o_orderstatus AS st,
+                  s.o_orderkey AS sk, s.o_custkey AS sc
+           FROM base b LEFT JOIN src s ON b.o_orderkey = s.o_orderkey),
+         kept AS (
+           SELECT k,
+                  CASE WHEN sk IS NOT NULL AND st <> 'F' AND sc % 5 = 0
+                       THEN c + 1000000 ELSE c END AS c,
+                  CASE WHEN sk IS NULL AND st = 'P' THEN 'PX' ELSE st END AS st
+           FROM joined
+           WHERE NOT (sk IS NOT NULL AND st = 'F')
+           UNION ALL
+           SELECT s.o_orderkey, s.o_custkey, CAST(NULL AS VARCHAR)
+           FROM src s
+           WHERE s.o_orderkey NOT IN (SELECT o_orderkey FROM base)
+             AND s.o_custkey % 3 = 0)
+         SELECT coalesce(st, 'NEW') AS o_orderstatus,
+                CAST(count(*) AS BIGINT) AS n_orders,
+                CAST(sum(c) AS BIGINT) AS sum_cust,
+                CAST(sum(k % 997) AS BIGINT) AS sum_tail
+         FROM kept GROUP BY coalesce(st, 'NEW')"""),
 
     // SQL PARTITIONED BY lifecycle under the driver oracle: CREATE TABLE
     // … PARTITIONED BY (status) — the declared columns persist in the
@@ -1338,7 +2466,7 @@ object SparkEntry {
     // (per-file partition values prune reads/deletes) — then a
     // partition-predicate DELETE and a late partitioned INSERT, and the
     // final aggregate reads the mixed dv + multi-partition state.
-    "q148_sql_partitioned" -> ((s, dir) => {
+    QuerySpec("q148_sql_partitioned", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q148")
         .toString + "/orders_p"
       t(s, dir, "orders").createOrReplaceTempView("q148_orders_src")
@@ -1360,7 +2488,25 @@ object SparkEntry {
                        sum(o_custkey) AS sum_cust,
                        sum(o_orderkey % 997) AS sum_tail
                 FROM graft.`$tbl` GROUP BY o_orderstatus""")
-    }),
+    },
+      // q148 = the partitioned lifecycle replayed relationally: the
+      // partition-predicate delete filters, the late batch unions in, and
+      // the partial partition overwrite replaces the whole Z population
+      """WITH base AS (
+           SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
+         after_delete AS (
+           SELECT * FROM base
+           WHERE NOT (o_orderstatus = 'O' AND o_orderkey % 3 = 0)),
+         final AS (
+           SELECT * FROM after_delete
+           UNION ALL
+           SELECT o_orderkey + 950000000, o_custkey, 'Z'
+           FROM base WHERE o_orderkey % 1000 = 0)
+         SELECT o_orderstatus,
+                CAST(count(*) AS BIGINT) AS n_orders,
+                CAST(sum(o_custkey) AS BIGINT) AS sum_cust,
+                CAST(sum(o_orderkey % 997) AS BIGINT) AS sum_tail
+         FROM final GROUP BY o_orderstatus"""),
 
     // SCD TYPE-2 dimension maintenance under the driver oracle — the
     // classic warehouse pattern the general MERGE makes expressible: one
@@ -1371,7 +2517,7 @@ object SparkEntry {
     // row). History rows (is_current = 0) are untouchable by the ON
     // guard. The oracle replays the three row populations (closed,
     // untouched-current, new-current) as a UNION.
-    "q149_scd2_dimension" -> ((s, dir) => {
+    QuerySpec("q149_scd2_dimension", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q149")
         .toString + "/cust_dim"
       t(s, dir, "customer").createOrReplaceTempView("q149_cust_src")
@@ -1401,14 +2547,42 @@ object SparkEntry {
                        sum(nation) AS sum_nation
                 FROM graft.`$tbl`
                 GROUP BY valid_from, coalesce(valid_to, 'CUR'), is_current""")
-    }),
+    },
+      // q149 = SCD2 replayed as the three row populations: changed keys'
+      // closed T1 rows, untouched keys' current T1 rows, changed keys' new
+      // T2 rows
+      """WITH cust AS (
+           SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nation
+           FROM customer),
+         changed AS (
+           SELECT c_custkey, CAST((nation + 5) % 25 AS BIGINT) AS nn
+           FROM cust WHERE c_custkey % 7 = 0),
+         hist AS (
+           SELECT c.c_custkey, c.nation, 'T1' AS valid_from,
+                  'T2' AS valid_to, CAST(0 AS BIGINT) AS is_current
+           FROM cust c JOIN changed g ON c.c_custkey = g.c_custkey
+           UNION ALL
+           SELECT c_custkey, nation, 'T1', CAST(NULL AS VARCHAR),
+                  CAST(1 AS BIGINT)
+           FROM cust WHERE c_custkey % 7 <> 0
+           UNION ALL
+           SELECT g.c_custkey, g.nn, 'T2', CAST(NULL AS VARCHAR),
+                  CAST(1 AS BIGINT)
+           FROM changed g)
+         SELECT valid_from,
+                coalesce(valid_to, 'CUR') AS valid_to,
+                is_current,
+                CAST(count(*) AS BIGINT) AS n_rows,
+                CAST(sum(c_custkey) AS BIGINT) AS sum_keys,
+                CAST(sum(nation) AS BIGINT) AS sum_nation
+         FROM hist GROUP BY valid_from, coalesce(valid_to, 'CUR'), is_current"""),
 
     // SQL schema evolution under the driver oracle: CTAS, ALTER TABLE ADD
     // COLUMNS (metadata-only widening commit), INSERT against the widened
     // schema, and an aggregate whose null-handling proves pre-evolution
     // rows null-fill exactly. The oracle replays the evolution as a
     // UNION of the old shape (NULL note) and the late batch.
-    "q146_sql_evolution" -> ((s, dir) => {
+    QuerySpec("q146_sql_evolution", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q146")
         .toString + "/nation_e"
       t(s, dir, "nation").createOrReplaceTempView("q146_nation_src")
@@ -1422,7 +2596,20 @@ object SparkEntry {
                        count(note) AS n_noted,
                        sum(n_nationkey) AS sum_keys
                 FROM graft.`$tbl` GROUP BY n_regionkey""")
-    }),
+    },
+      // q146 = schema evolution replayed as a UNION: original rows carry
+      // NULL for the added column, the late batch carries values
+      """WITH evolved AS (
+           SELECT n_nationkey, n_regionkey, CAST(NULL AS VARCHAR) AS note
+           FROM nation
+           UNION ALL
+           SELECT n_nationkey + 100, n_regionkey, 'x-' || n_name
+           FROM nation WHERE n_nationkey % 2 = 0)
+         SELECT n_regionkey,
+                CAST(count(*) AS BIGINT) AS n_rows,
+                CAST(count(note) AS BIGINT) AS n_noted,
+                CAST(sum(n_nationkey) AS BIGINT) AS sum_keys
+         FROM evolved GROUP BY n_regionkey"""),
 
     // Column mapping under the driver oracle: CTAS, RENAME COLUMN, DROP
     // COLUMN, re-ADD of the dropped name (fresh physical identity), one
@@ -1434,7 +2621,7 @@ object SparkEntry {
     // dropped era's bytes (or mis-addresses the renamed price column
     // across old/new files) is a driver-level row/hash mismatch. Oracle
     // re-derives the same relation straight from the raw orders table.
-    "q150_sql_column_mapping" -> ((s, dir) => {
+    QuerySpec("q150_sql_column_mapping", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q150")
         .toString + "/orders_m"
       t(s, dir, "orders").createOrReplaceTempView("q150_orders_src")
@@ -1456,7 +2643,20 @@ object SparkEntry {
                        count(o_orderpriority) AS n_with_priority
                 FROM graft.`$tbl`
                 GROUP BY o_custkey""")
-    }),
+    },
+      // q150 = the column-mapping lifecycle replayed relationally: every
+      // order contributes its price whatever schema era it landed in (the
+      // renamed column is ONE physical column across all files), but only
+      // the post-re-add era (o_orderkey % 3 = 2) may carry a priority —
+      // the dropped era's values must be dead
+      """SELECT o_custkey,
+                CAST(count(*) AS BIGINT) AS n_orders,
+                CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+                  AS sum_price,
+                CAST(count(CASE WHEN o_orderkey % 3 = 2
+                           THEN o_orderpriority END) AS BIGINT)
+                  AS n_with_priority
+         FROM orders GROUP BY o_custkey"""),
 
     // Type widening under the driver oracle: CTAS with INT32/FLOAT
     // columns, ALTER COLUMN TYPE BIGINT/DOUBLE (metadata-only — the
@@ -1465,7 +2665,7 @@ object SparkEntry {
     // the int range, one aggregate across both eras. The float values
     // are exact halves so the DECIMAL-summed double is portable; the
     // oracle replays both eras relationally from the raw nation table.
-    "q151_sql_type_widening" -> ((s, dir) => {
+    QuerySpec("q151_sql_type_widening", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q151")
         .toString + "/nation_w"
       t(s, dir, "nation").createOrReplaceTempView("q151_nation_src")
@@ -1484,7 +2684,22 @@ object SparkEntry {
                          AS sum_wf
                 FROM graft.`$tbl`
                 GROUP BY region""")
-    }),
+    },
+      // q151 = the widening lifecycle replayed relationally: the int era
+      // re-read as BIGINT, the float era as its exact double values
+      """WITH w AS (
+           SELECT n_nationkey AS k, CAST(n_regionkey AS BIGINT) AS region,
+                  CAST(CAST(n_nationkey * 1.5 AS REAL) AS DOUBLE) AS wf
+           FROM nation
+           UNION ALL
+           SELECT n_nationkey + 100, n_regionkey + 1000000000000,
+                  CAST(n_nationkey * 2.5 AS DOUBLE)
+           FROM nation WHERE n_nationkey % 2 = 0)
+         SELECT region,
+                CAST(count(*) AS BIGINT) AS n_rows,
+                CAST(sum(k) AS BIGINT) AS sum_keys,
+                CAST(sum(CAST(wf AS DECIMAL(18,4))) AS DOUBLE) AS sum_wf
+         FROM w GROUP BY region"""),
 
     // Column DEFAULTs under the driver oracle: CTAS, ADD COLUMNS with a
     // DEFAULT (metadata-only — pre-evolution rows read the ADD-time
@@ -1493,7 +2708,7 @@ object SparkEntry {
     // aggregate splits the population by tier so a wrong fill (null, or
     // history rewritten to the new default) shifts rows between groups —
     // a driver-level row/hash mismatch.
-    "q152_sql_defaults" -> ((s, dir) => {
+    QuerySpec("q152_sql_defaults", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q152")
         .toString + "/cust_d"
       t(s, dir, "customer").createOrReplaceTempView("q152_cust_src")
@@ -1513,7 +2728,24 @@ object SparkEntry {
                        sum(c_nationkey) AS sum_nation
                 FROM graft.`$tbl`
                 GROUP BY tier""")
-    }),
+    },
+      // q152 = the defaults lifecycle replayed relationally: the CTAS era
+      // reads the ADD-time EXISTS fill (1), the first insert era omits the
+      // column under DEFAULT 1, the second under DEFAULT 2
+      """WITH d AS (
+           SELECT c_custkey, c_nationkey, CAST(1 AS BIGINT) AS tier
+           FROM customer WHERE c_custkey % 2 = 0
+           UNION ALL
+           SELECT c_custkey, c_nationkey, CAST(1 AS BIGINT)
+           FROM customer WHERE c_custkey % 4 = 1
+           UNION ALL
+           SELECT c_custkey, c_nationkey, CAST(2 AS BIGINT)
+           FROM customer WHERE c_custkey % 4 = 3)
+         SELECT tier,
+                CAST(count(*) AS BIGINT) AS n_rows,
+                CAST(sum(c_custkey) AS BIGINT) AS sum_keys,
+                CAST(sum(c_nationkey) AS BIGINT) AS sum_nation
+         FROM d GROUP BY tier"""),
 
     // HIDDEN PARTITIONING under the driver oracle (PartitionSpec —
     // Iceberg's transform partitioning re-derived for the manifest):
@@ -1528,7 +2760,7 @@ object SparkEntry {
     // — the user filters on ts/user_id, never on a derived column.
     // File-count pins live in HiddenPartitioningSpec; the oracle replays
     // the surviving-day population relationally.
-    "q153_hidden_partitioning" -> ((s, dir) => {
+    QuerySpec("q153_hidden_partitioning", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q153")
         .toString + "/events_hp"
       t(s, dir, "events").createOrReplaceTempView("q153_events_src")
@@ -1553,7 +2785,22 @@ object SparkEntry {
                              AND TIMESTAMP '2024-01-19 23:59:59'
                   AND user_id IN (7, 21, 33, 64)
                 GROUP BY user_id""")
-    }),
+    },
+      // q153 = the surviving-day population replayed relationally: both
+      // INSERT halves cover every event, the DELETE removes days ≤ 01-04,
+      // the final predicate selects the day range + key set
+      """WITH live AS (
+           SELECT * FROM events
+           WHERE ts > TIMESTAMP '2024-01-04 23:59:59.999999')
+         SELECT user_id,
+                CAST(count(*) AS BIGINT) AS n_events,
+                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
+                CAST(sum(event_id % 997) AS BIGINT) AS sum_tail
+         FROM live
+         WHERE ts BETWEEN TIMESTAMP '2024-01-10 00:00:00'
+                      AND TIMESTAMP '2024-01-19 23:59:59'
+           AND user_id IN (7, 21, 33, 64)
+         GROUP BY user_id"""),
 
     // DECIMAL precision widening under the driver oracle — the money-
     // column evolution: CTAS with DECIMAL(9,2) (parquet INT32 pages),
@@ -1564,7 +2811,7 @@ object SparkEntry {
     // Aggregates render as exact decimal STRINGS (same scale on both
     // engines), so a single mis-read unscaled integer anywhere in the
     // three physical eras is a driver-level hash mismatch.
-    "q154_sql_decimal_widening" -> ((s, dir) => {
+    QuerySpec("q154_sql_decimal_widening", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q154")
         .toString + "/orders_dw"
       t(s, dir, "orders").createOrReplaceTempView("q154_orders_src")
@@ -1587,7 +2834,27 @@ object SparkEntry {
                        CAST(max(amt) AS STRING) AS max_amt
                 FROM graft.`$tbl`
                 GROUP BY grp""")
-    }),
+    },
+      // q154 = the three precision eras replayed as a UNION at the final
+      // DECIMAL(25,2); sums/extremes rendered as exact same-scale strings
+      // on both engines
+      """WITH base AS (
+           SELECT o_orderkey, o_custkey % 10 AS grp FROM orders),
+         eras AS (
+           SELECT grp, CAST(o_orderkey AS DECIMAL(25,2)) AS amt FROM base
+           UNION ALL
+           SELECT grp, CAST(o_orderkey + 100000000000 AS DECIMAL(25,2))
+           FROM base WHERE o_orderkey % 3 = 0
+           UNION ALL
+           SELECT grp, CAST(o_orderkey AS DECIMAL(25,2))
+                       + CAST('100000000000000000000.00' AS DECIMAL(25,2))
+           FROM base WHERE o_orderkey % 5 = 0)
+         SELECT grp,
+                CAST(count(*) AS BIGINT) AS n_rows,
+                CAST(sum(amt) AS VARCHAR) AS sum_amt,
+                CAST(min(amt) AS VARCHAR) AS min_amt,
+                CAST(max(amt) AS VARCHAR) AS max_amt
+         FROM eras GROUP BY grp"""),
 
     // PREFIX (truncate) hidden partitioning under the driver oracle —
     // the string-key layout q153's days/bucket pair can't express: the
@@ -1600,7 +2867,7 @@ object SparkEntry {
     // truncate('d'…)) — the user never materializes a prefix column.
     // File-count pins live in HiddenPartitioningSpec; the oracle
     // replays the surviving population relationally.
-    "q155_prefix_partitioned" -> ((s, dir) => {
+    QuerySpec("q155_prefix_partitioned", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q155")
         .toString + "/part_pp"
       t(s, dir, "part").createOrReplaceTempView("q155_part_src")
@@ -1618,7 +2885,18 @@ object SparkEntry {
                 FROM graft.`$tbl`
                 WHERE p_name >= 'a' AND p_name < 'd'
                 GROUP BY p_brand""")
-    }),
+    },
+      // q155 = the post-DELETE population with the prefix-range predicate
+      // replayed relationally (partitioning is physical layout only)
+      """SELECT p_brand,
+                CAST(count(*) AS BIGINT) AS n_parts,
+                CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
+                  AS sum_price,
+                min(p_name) AS first_name
+         FROM part
+         WHERE p_partkey % 10 <> 3
+           AND p_name >= 'a' AND p_name < 'd'
+         GROUP BY p_brand"""),
 
     // CALENDAR hidden partitioning under the driver oracle — months()/
     // years() transforms (round 12; previously a documented refusal):
@@ -1631,7 +2909,7 @@ object SparkEntry {
     // BOTH layout generations. File-level pins live in
     // HiddenPartitioningSpec; the oracle replays the population
     // relationally (partitioning is physical layout only).
-    "q156_calendar_partitioned" -> ((s, dir) => {
+    QuerySpec("q156_calendar_partitioned", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q156")
         .toString + "/orders_cal"
       t(s, dir, "orders").createOrReplaceTempView("q156_orders_src")
@@ -1660,7 +2938,25 @@ object SparkEntry {
                 WHERE o_orderdate >= TIMESTAMP '1997-03-01 00:00:00'
                   AND o_orderdate < TIMESTAMP '1998-07-01 00:00:00'
                 GROUP BY 1""")
-    }),
+    },
+      // q156 = the post-retention population plus the replay slice,
+      // replayed relationally (the calendar layout is physical only): the
+      // two INSERT halves cover every order once, the DELETE removes
+      // 1995, the evolved-spec INSERT re-adds the %5=2 slice at all dates
+      """WITH tbl AS (
+           SELECT * FROM orders
+           WHERE o_orderdate > TIMESTAMP '1995-12-31 23:59:59.999999'
+           UNION ALL
+           SELECT * FROM orders WHERE o_orderkey % 5 = 2)
+         SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
+                CAST(count(*) AS BIGINT) AS n_orders,
+                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                  AS sum_price,
+                CAST(sum(o_orderkey % 997) AS BIGINT) AS sum_tail
+         FROM tbl
+         WHERE o_orderdate >= TIMESTAMP '1997-03-01 00:00:00'
+           AND o_orderdate < TIMESTAMP '1998-07-01 00:00:00'
+         GROUP BY 1"""),
 
     // MERGE with UNCORRELATED SUBQUERIES in clause conditions and values
     // (round 13; Delta refuses these): an IN-subquery gate on a matched
@@ -1671,7 +2967,7 @@ object SparkEntry {
     // evaluate once per MERGE. Oracle replays the clause lattice
     // relationally (customer keys are non-null, so NOT IN is two-valued
     // here — the null case is spec-pinned in GraftCatalogSpec).
-    "q157_merge_subquery" -> ((s, dir) => {
+    QuerySpec("q157_merge_subquery", (s, dir) => {
       val tbl = java.nio.file.Files.createTempDirectory("graft-q157")
         .toString + "/orders_sq"
       t(s, dir, "orders").createOrReplaceTempView("q157_orders_src")
@@ -1701,7 +2997,40 @@ object SparkEntry {
                        sum(o_orderkey % 997) AS sum_tail
                 FROM graft.`$tbl`
                 GROUP BY o_orderstatus""")
-    }),
+    },
+      // q157 = the subquery-conditioned MERGE replayed relationally:
+      // first-match-wins clause lattice over a left join, with the IN /
+      // NOT IN / EXISTS / scalar subqueries evaluated inline by DuckDB
+      """WITH base AS (
+           SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
+         src AS (
+           SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 2 = 0),
+         bld AS (
+           SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
+         auto AS (
+           SELECT c_custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE'),
+         joined AS (
+           SELECT b.o_orderkey AS k, b.o_custkey AS c, b.o_orderstatus AS st,
+                  s.o_orderkey AS sk, s.o_custkey AS sc
+           FROM base b LEFT JOIN src s ON b.o_orderkey = s.o_orderkey),
+         kept AS (
+           SELECT k,
+                  CASE WHEN sk IS NOT NULL AND sc IN (SELECT * FROM bld)
+                       THEN c + (SELECT min(c_custkey) FROM customer)
+                       ELSE c END AS c,
+                  CASE WHEN sk IS NULL AND EXISTS (
+                         SELECT 1 FROM customer
+                         WHERE c_mktsegment = 'MACHINERY')
+                       THEN 'MX' ELSE st END AS st
+           FROM joined
+           WHERE NOT (sk IS NOT NULL
+                      AND NOT (sc IN (SELECT * FROM bld))
+                      AND sc NOT IN (SELECT * FROM auto)))
+         SELECT st AS o_orderstatus,
+                CAST(count(*) AS BIGINT) AS n_orders,
+                CAST(sum(c) AS BIGINT) AS sum_cust,
+                CAST(sum(k % 997) AS BIGINT) AS sum_tail
+         FROM kept GROUP BY st"""),
 
     // Per-source token-count Gini: document-length inequality within each
     // source (G = 2·Σᵢ i·xᵢ / (n·Σx) − (n+1)/n over ascending xᵢ) — the
@@ -1710,7 +3039,7 @@ object SparkEntry {
     // comparable scalar per source). Rank weights are exact integer sums;
     // only the final scalar ratio is floating point, through the portable
     // floor-round. One per-source window sort + partial agg.
-    "q135_token_gini" -> ((s, dir) => {
+    QuerySpec("q135_token_gini", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
         graft.functions.TextAnalysis.tokenCount(col("text")).cast("long").as("tok"))
       val w = Window.partitionBy(col("source"))
@@ -1726,27 +3055,101 @@ object SparkEntry {
               (col("n_docs").cast("double") * col("n_tokens").cast("double")) -
               (col("n_docs").cast("double") + lit(1.0)) /
                 col("n_docs").cast("double"))))
-    }),
+    },
+      // rank-weighted exact integer sums; identical double op order to the
+      // Spark side ((2·rw)/(n·s) − (n+1)/n), then the shared floor-round
+      """WITH b AS (
+           SELECT doc_id, source,
+                  CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+                       AS BIGINT) AS tok
+           FROM documents),
+         r AS (
+           SELECT source, tok,
+                  CAST(row_number() OVER (PARTITION BY source
+                                          ORDER BY tok ASC, doc_id ASC)
+                       AS BIGINT) AS rk
+           FROM b),
+         g AS (
+           SELECT source, count(*) AS n_docs,
+                  CAST(sum(tok) AS BIGINT) AS n_tokens,
+                  CAST(sum(rk * tok) AS BIGINT) AS rank_weighted
+           FROM r GROUP BY source)
+         SELECT source, n_docs, n_tokens, rank_weighted,
+                CASE WHEN n_tokens > 0 THEN
+                  floor(((2.0 * CAST(rank_weighted AS DOUBLE))
+                         / (CAST(n_docs AS DOUBLE) * CAST(n_tokens AS DOUBLE))
+                         - (CAST(n_docs AS DOUBLE) + 1.0)
+                           / CAST(n_docs AS DOUBLE))
+                        * 1000000.0 + 0.5) / 1000000.0
+                END AS gini
+         FROM g"""),
 
     // Per-source percentile-rank score normalization: token count ranked
     // within each source to a [0,1] percentile — the calibration that
     // makes "top 30% of every source" one global predicate. Exact integer
     // ranks (q115/q119 discipline); one stratum-keyed window.
-    "q129_rank_normalize" -> ((s, dir) => {
+    QuerySpec("q129_rank_normalize", (s, dir) => {
       graft.functions.Corpus.rankNormalize(
         t(s, dir, "documents"), Seq("source"),
         graft.functions.TextAnalysis.tokenCount(
           coalesce(col("text"), lit(""))), "doc_id")
         .select(col("doc_id"), col("source"), col("score"), col("pct"))
-    }),
+    },
+      // exact integer ranks over (score, doc_id) per source; 1-row strata
+      // pin pct to 0.0
+      """WITH b AS (
+           SELECT doc_id, source,
+                  CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
+                    x -> x <> '')) AS BIGINT) AS score
+           FROM documents),
+         r AS (
+           SELECT doc_id, source, score,
+                  row_number() OVER (PARTITION BY source
+                                     ORDER BY score ASC, doc_id ASC) AS rk,
+                  count(*) OVER (PARTITION BY source) AS n
+           FROM b)
+         SELECT doc_id, source, score,
+                CASE WHEN n > 1
+                     THEN floor((CAST(rk - 1 AS DOUBLE) / (n - 1))
+                                * 1000000.0 + 0.5) / 1000000.0
+                     ELSE 0.0 END AS pct
+         FROM r"""),
 
     // Bigram-LM surprisal (second-order q93): per-doc mean
     // −ln p(w2|w1) under the corpus's own bigram MLE — fluency scoring
     // that sees word ORDER. Per-bigram ln-ratios quantize once to integer
     // 1e-10 units; per-doc scores are exact long sums.
-    "q127_bigram_surprisal" -> ((s, dir) =>
+    QuerySpec("q127_bigram_surprisal", (s, dir) =>
       graft.functions.Corpus.bigramSurprisal(
-        t(s, dir, "documents"), "text", "doc_id")),
+        t(s, dir, "documents"), "text", "doc_id"),
+      // per-bigram ln(c_b / c_w1·) quantized to integer 1e-10 units (CAST
+      // BIGINT is load-bearing: DuckDB floor returns DOUBLE, and a double
+      // sum of quantized terms is partition-order-sensitive again)
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         bg0 AS (
+           SELECT doc_id, ts,
+                  unnest(generate_series(1, greatest(len(ts) - 1, 0))) AS i
+           FROM tok),
+         bg AS (
+           SELECT doc_id, ts[i] AS w1, ts[i] || ' ' || ts[i+1] AS bigram
+           FROM bg0),
+         cdb AS (SELECT doc_id, w1, bigram, count(*) AS c_db
+                 FROM bg GROUP BY 1, 2, 3),
+         cb AS (SELECT bigram, sum(c_db) AS c_b FROM cdb GROUP BY 1),
+         c1 AS (SELECT w1, sum(c_db) AS c_1 FROM cdb GROUP BY 1),
+         term AS (
+           SELECT d.doc_id, d.c_db,
+                  CAST(floor(ln(CAST(b.c_b AS DOUBLE) / CAST(u.c_1 AS DOUBLE))
+                             * 10000000000.0 + 0.5) AS BIGINT) AS lnq
+           FROM cdb d JOIN cb b USING (bigram) JOIN c1 u USING (w1))
+         SELECT doc_id, CAST(sum(c_db) AS BIGINT) AS n_bigrams,
+                floor((CAST(-sum(c_db * lnq) AS DOUBLE) / 10000000000.0
+                       / sum(c_db))
+                      * 1000000.0 + 0.5) / 1000000.0 AS mean_surprisal
+         FROM term GROUP BY 1"""),
 
     // Cross-lingual leakage pairs: embedding near-dups (auto-selected
     // blocked exact join at this low τ — see q65) whose documents carry
@@ -1754,7 +3157,7 @@ object SparkEntry {
     // language slices, the pairs a per-language dedup can never see.
     // Oracle is the exact all-pairs SQL (recall 1 on this path); the lang
     // join is an id equi-join on the pair list, not the corpus.
-    "q128_crosslingual_pairs" -> ((s, dir) => {
+    QuerySpec("q128_crosslingual_pairs", (s, dir) => {
       val pairs = graft.functions.Similarity.cosineNearDupPairsLsh(
         t(s, dir, "embeddings"), minCosine = 0.4, dim = 64)
       val langs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
@@ -1763,69 +3166,160 @@ object SparkEntry {
         .join(langs.withColumnsRenamed(Map("doc_id" -> "id_b", "lang" -> "lang_b")), Seq("id_b"))
         .filter(col("lang_a") =!= col("lang_b"))
         .select(col("id_a"), col("id_b"), col("sim"), col("lang_a"), col("lang_b"))
-    }),
+    },
+      // exact all-pairs oracle (q50 recall argument); lang via id equi-join
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
+         pairs AS (
+           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                  round(list_cosine_similarity(a.ev, b.ev), 6) AS sim
+           FROM v a JOIN v b ON a.vec_id < b.vec_id
+           WHERE round(list_cosine_similarity(a.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE))
+         SELECT p.id_a, p.id_b, p.sim, da.lang AS lang_a, db.lang AS lang_b
+         FROM pairs p
+         JOIN documents da ON p.id_a = da.doc_id
+         JOIN documents db ON p.id_b = db.doc_id
+         WHERE da.lang <> db.lang"""),
 
     // Deterministic salted train/val/test split (~90/5/5): assignment by
     // md5(id:salt) prefix — stable under repartitioning and re-runs, and
     // recomputable by any engine with md5 (unlike randomSplit, whose
     // assignment depends on partition layout and sampler state).
-    "q52_train_split" -> ((s, dir) => {
+    QuerySpec("q52_train_split", (s, dir) => {
       graft.functions.Corpus.splitAssign(t(s, dir, "documents"), "doc_id", "42")
         .select(col("doc_id"), col("split"))
-    }),
+    },
+      // split thresholds are cumulative 1/256 shares compared on the md5 hex
+      // prefix: train < 0xe6 (230/256), val < 0xf3 (+13/256), else test
+      """SELECT doc_id,
+                CASE WHEN substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 2) < 'e6'
+                       THEN 'train'
+                     WHEN substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 2) < 'f3'
+                       THEN 'val'
+                     ELSE 'test' END AS split
+         FROM documents"""),
 
     // Token-budget sequence packing: greedy contiguous packing of documents
     // into ~2048-token training sequences per language — one window pass,
     // exact integer arithmetic, the shard-assembly step of a training-data
     // writer.
-    "q53_seq_pack" -> ((s, dir) => {
+    QuerySpec("q53_seq_pack", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         graft.functions.TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
       graft.functions.Corpus.packSequences(docs, "n_tokens", budget = 2048L,
         partitionCols = Seq("lang"), orderCol = "doc_id")
-    }),
+    },
+      """WITH tok AS (
+           SELECT doc_id, lang,
+                  len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens
+           FROM documents)
+         SELECT doc_id, lang, n_tokens,
+                CAST(floor((sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                            - n_tokens) / 2048) AS BIGINT) AS seq_id
+         FROM tok"""),
 
     // Per-language vocabulary document frequency, top-10 tokens: distinct
     // per doc before the explode (a repeated-token document counts once),
     // total-ordered by (df desc, token).
-    "q54_vocab_df" -> ((s, dir) => {
+    QuerySpec("q54_vocab_df", (s, dir) => {
       graft.functions.Corpus.vocabTopDf(t(s, dir, "documents"), "text", "lang", k = 10)
-    }),
+    },
+      """WITH tok AS (
+           SELECT lang, unnest(list_distinct(
+             list_filter(string_split(text, ' '), x -> x <> ''))) AS token
+           FROM documents),
+         counts AS (SELECT lang, token, count(*) AS df FROM tok GROUP BY 1, 2),
+         ranked AS (
+           SELECT *, row_number() OVER (PARTITION BY lang
+                                        ORDER BY df DESC, token) AS rnk
+           FROM counts)
+         SELECT lang, token, df, rnk FROM ranked WHERE rnk <= 10"""),
 
     // Sliding-window document chunking: 50-token chunks every 40 tokens
     // (10-token overlap) — the context-window splitting step for training
     // shards and retrieval indexes. Entirely map-side per document row
     // (sequence/explode/slice built-ins): chunking rides the scan at any
     // scale; (doc_id, chunk_id) is an exact integer provenance key.
-    "q67_chunk_docs" -> ((s, dir) => {
+    QuerySpec("q67_chunk_docs", (s, dir) => {
       graft.functions.Corpus.chunkDocuments(t(s, dir, "documents"),
         "text", "doc_id", chunkTokens = 50, stride = 40)
-    }),
+    },
+      // chunk windows start every 40 tokens while start < n_tokens; slice is
+      // 1-based inclusive in both engines' list semantics; empty docs chunk
+      // to nothing (generate_series over an empty range unnests no rows)
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         st AS (
+           SELECT doc_id, ts,
+                  unnest(CASE WHEN len(ts) > 0
+                              THEN generate_series(0, len(ts) - 1, 40)
+                              ELSE [] END) AS start
+           FROM tok)
+         SELECT doc_id,
+                CAST(start // 40 AS BIGINT) AS chunk_id,
+                CAST(len(ts[start + 1 : start + 50]) AS BIGINT) AS n_tokens,
+                array_to_string(ts[start + 1 : start + 50], ' ') AS chunk_text
+         FROM st"""),
 
     // Deterministic corpus shuffle: md5-derived shard (mod 8) + hash-rank
     // position within the shard — the reproducible training-order shuffle
     // (an auditor can reconstruct exactly which documents a training step
     // saw; rand()-based shuffles cannot). One shuffle on shard — the
     // exchange the shard write needs anyway.
-    "q68_shuffle_shards" -> ((s, dir) => {
+    QuerySpec("q68_shuffle_shards", (s, dir) => {
       graft.functions.Corpus.shuffleShards(t(s, dir, "documents"),
           "doc_id", salt = "42", nShards = 8)
         .select(col("doc_id"), col("shard"), col("shard_pos"))
-    }),
+    },
+      // shard = first md5 byte mod 8 (two hex nibbles, engine-portable
+      // integer arithmetic); position = rank of the full hash within the
+      // shard, id tiebreak
+      """WITH h AS (
+           SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':42') AS hh
+           FROM documents),
+         x AS (
+           SELECT doc_id, hh,
+                  ((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096 +
+                   (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256 +
+                   (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16 +
+                   (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % 8 AS sh
+           FROM h)
+         SELECT doc_id, CAST(sh AS BIGINT) AS shard,
+                CAST(row_number() OVER (PARTITION BY sh ORDER BY hh, doc_id)
+                  AS BIGINT) AS shard_pos
+         FROM x"""),
 
     // Character-unigram entropy + counts per document (single native pass,
     // scan speed) — the cheap quality signal that catches degenerate
     // filler / padding (low entropy) and minified/binary-ish text (high
     // entropy) before any tokenizer runs. Oracle recomputes via DuckDB's
     // entropy() aggregate over exploded characters.
-    "q69_char_entropy" -> ((s, dir) => {
+    QuerySpec("q69_char_entropy", (s, dir) => {
       val docs = t(s, dir, "documents")
       val m = graft.functions.TextAnalysis.charEntropyMetrics(docs, col("text"))
       docs.select(col("doc_id"),
         m("char_entropy").as("char_entropy"),
         m("n_chars").as("n_chars"),
         m("n_distinct_chars").as("n_distinct_chars"))
-    }),
+    },
+      // char entropy via DuckDB's base-2 entropy() aggregate over exploded
+      // characters (empty/null docs re-attach as 0 through the left join);
+      // both sides round to 4 places — the sums walk distinct chars in
+      // different orders, identical to ~1e-15
+      """WITH c AS (
+           SELECT doc_id, unnest(string_split(coalesce(text, ''), '')) AS ch
+           FROM documents),
+         a AS (
+           SELECT doc_id,
+                  floor(entropy(ch) * 10000.0 + 0.5) / 10000.0 AS char_entropy,
+                  count(*) AS n_chars, count(DISTINCT ch) AS n_distinct_chars
+           FROM c GROUP BY doc_id)
+         SELECT d.doc_id,
+                coalesce(a.char_entropy, 0.0) AS char_entropy,
+                CAST(coalesce(a.n_chars, 0) AS BIGINT) AS n_chars,
+                CAST(coalesce(a.n_distinct_chars, 0) AS BIGINT) AS n_distinct_chars
+         FROM documents d LEFT JOIN a ON d.doc_id = a.doc_id"""),
 
     // Per-language TF-IDF top terms — corpus-level term salience (what
     // vocabulary distinguishes each slice), the report behind mixture and
@@ -1833,10 +3327,31 @@ object SparkEntry {
     // token tiebreak keeps the top-k order engine-exact. Aggregates are
     // partial everywhere; the window runs over |langs|·|vocab| aggregated
     // rows, never raw tokens.
-    "q71_tfidf_terms" -> ((s, dir) => {
+    QuerySpec("q71_tfidf_terms", (s, dir) => {
       graft.functions.Corpus.tfIdfTopTerms(t(s, dir, "documents"),
         "text", "doc_id", "lang", k = 10)
-    }),
+    },
+      // tf-idf: smoothed idf ln((N+1)/(df+1)) on identical integer-derived
+      // doubles; rank on the ROUNDED weight + token tiebreak so the top-k
+      // boundary can't flip on 1-ulp ln() differences between engines
+      """WITH tok AS (
+           SELECT doc_id, lang,
+                  list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         oc AS (
+           SELECT lang, unnest(ts) AS token FROM tok),
+         occ AS (SELECT lang, token, count(*) AS cnt FROM oc GROUP BY 1, 2),
+         dt AS (SELECT doc_id, unnest(list_distinct(ts)) AS token FROM tok),
+         dfq AS (SELECT token, count(*) AS df FROM dt GROUP BY 1),
+         n AS (SELECT count(*) AS n_docs FROM documents),
+         w AS (
+           SELECT lang, occ.token, cnt, df,
+                  round(cnt * ln((n_docs + 1.0) / (df + 1.0)), 6) AS tfidf
+           FROM occ JOIN dfq ON occ.token = dfq.token CROSS JOIN n)
+         SELECT lang, token, cnt, df, tfidf, CAST(rnk AS BIGINT) AS rnk
+         FROM (SELECT *, row_number() OVER (
+                 PARTITION BY lang ORDER BY tfidf DESC, token) AS rnk FROM w)
+         WHERE rnk <= 10"""),
 
     // Composite quality gate: every doc gets a verdict — the FIRST failing
     // filter names the rejection (too_short / repetitive_2gram / dup_2gram
@@ -1844,11 +3359,53 @@ object SparkEntry {
     // not just the survivor set. Thresholds sit at this corpus's p90-95
     // tails so the gate actually discriminates. Entirely map-side: a
     // row-local decision over single-pass metrics.
-    "q72_quality_gate" -> ((s, dir) => {
+    QuerySpec("q72_quality_gate", (s, dir) => {
       val docs = t(s, dir, "documents")
       docs.select(col("doc_id"), col("lang"),
         graft.functions.TextAnalysis.qualityVerdict(docs, col("text")).as("verdict"))
-    }),
+    },
+      // quality gate: first failing check names the verdict, in the
+      // operator's contract order; all compared metrics are the same rounded
+      // values the q60/q69 oracles pin, compared in DOUBLE space
+      """WITH tok AS (
+           SELECT doc_id, coalesce(text, '') AS text,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         grams AS (
+           SELECT doc_id, unnest(list_transform(
+             generate_series(1, greatest(len(ts) - 1, 0)),
+             i -> ts[i] || ' ' || ts[i+1])) AS gram
+           FROM tok),
+         gc AS (SELECT doc_id, gram, count(*) AS c FROM grams GROUP BY 1, 2),
+         ga AS (
+           SELECT doc_id, max(c * length(gram)) AS topchars,
+                  coalesce(sum(CASE WHEN c > 1 THEN (c - 1) * length(gram) END), 0)
+                    AS dupchars
+           FROM gc GROUP BY doc_id),
+         ch AS (
+           SELECT doc_id, unnest(string_split(coalesce(text, ''), '')) AS c
+           FROM documents),
+         ce AS (SELECT doc_id, floor(entropy(c) * 10000.0 + 0.5) / 10000.0 AS ent
+                FROM ch GROUP BY doc_id),
+         m AS (
+           SELECT t.doc_id, len(t.ts) AS n_tokens,
+                  CASE WHEN length(t.text) > 0
+                       THEN round(coalesce(ga.topchars, 0) * 1.0 / length(t.text), 4)
+                       ELSE 0.0 END AS top_share,
+                  CASE WHEN length(t.text) > 0
+                       THEN round(coalesce(ga.dupchars, 0) * 1.0 / length(t.text), 4)
+                       ELSE 0.0 END AS dup_share,
+                  coalesce(ce.ent, 0.0) AS ent
+           FROM tok t
+           LEFT JOIN ga ON t.doc_id = ga.doc_id
+           LEFT JOIN ce ON t.doc_id = ce.doc_id)
+         SELECT d.doc_id, d.lang,
+                CASE WHEN m.n_tokens < 12 THEN 'too_short'
+                     WHEN m.top_share > CAST(0.15 AS DOUBLE) THEN 'repetitive_2gram'
+                     WHEN m.dup_share > CAST(0.12 AS DOUBLE) THEN 'dup_2gram'
+                     WHEN m.ent < CAST(3.9 AS DOUBLE) THEN 'low_entropy'
+                     ELSE 'keep' END AS verdict
+         FROM documents d JOIN m ON d.doc_id = m.doc_id"""),
 
     // Int8 scalar-quantization audit over the embedding corpus: per-vector
     // scale, code checksum, and reconstruction MSE — the fidelity numbers
@@ -1856,7 +3413,7 @@ object SparkEntry {
     // the standard choice) or keeps fp32. Single native pass at scan
     // speed; arithmetic is an index-ordered fold with an engine-portable
     // floor(+0.5) rounding rule, so the oracle reproduces it bit-for-bit.
-    "q70_int8_quant" -> ((s, dir) => {
+    QuerySpec("q70_int8_quant", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val st = graft.plans.GraftFunctions.int8QuantStats(emb,
         col("embedding").cast("array<double>"))
@@ -1865,7 +3422,33 @@ object SparkEntry {
           col("_st.scale").as("scale"),
           col("_st.code_sum").as("code_sum"),
           round(col("_st.mse") * 1e6, 4).as("mse_e6"))
-    }),
+    },
+      // int8 quantization: floor(x·127/scale + 0.5) codes, reconstruction
+      // error folded in list order — float→double widening is exact and
+      // every op is the same IEEE sequence as the native expression, so
+      // scale/code_sum/mse match bit-for-bit (mse surfaced ×1e6: raw MSEs
+      // sit at ~1e-7, below the comparator's 6-decimal float rounding)
+      """WITH v AS (
+           SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+           FROM embeddings),
+         s AS (
+           SELECT vec_id, e,
+                  coalesce(list_max(list_transform(e, x -> abs(x))), 0.0) AS scale
+           FROM v),
+         q AS (
+           SELECT vec_id, scale,
+                  CASE WHEN scale > 0 THEN
+                    CAST(list_sum(list_transform(e,
+                      x -> CAST(floor(x * 127.0 / scale + 0.5) AS BIGINT))) AS BIGINT)
+                  ELSE 0 END AS code_sum,
+                  CASE WHEN scale > 0 AND len(e) > 0 THEN
+                    list_reduce(list_transform(e,
+                      x -> (x - floor(x * 127.0 / scale + 0.5) * scale / 127.0)
+                         * (x - floor(x * 127.0 / scale + 0.5) * scale / 127.0)),
+                      (a, b) -> a + b) / len(e)
+                  ELSE 0.0 END AS mse
+           FROM s)
+         SELECT vec_id, scale, code_sum, round(mse * 1e6, 4) AS mse_e6 FROM q"""),
 
     // Ordered conversion funnel view → click → purchase: per user, each
     // stage's first qualifying time must strictly follow the previous
@@ -1873,7 +3456,7 @@ object SparkEntry {
     // aggregated min-aggregations chained by per-user joins (AQE
     // broadcasts the shrinking stage frames); per-user sequencing
     // shuffles by user once per stage, the inherent cost.
-    "q73_funnel" -> ((s, dir) => {
+    QuerySpec("q73_funnel", (s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), col("event_type"), col("ts"))
       val v = ev.filter(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("ts")).as("t_view"))
@@ -1888,14 +3471,33 @@ object SparkEntry {
         .agg(count(col("t_view")).as("n_view"),
           count(col("t_click")).as("n_click"),
           count(col("t_purchase")).as("n_purchase"))
-    }),
+    },
+      // funnel stages chain on strictly-later first times; counts of
+      // non-null stage times = users reaching each stage
+      """WITH v AS (
+           SELECT user_id, min(ts) AS t_view FROM events
+           WHERE event_type = 'view' GROUP BY user_id),
+         c AS (
+           SELECT e.user_id, min(e.ts) AS t_click
+           FROM events e JOIN v ON e.user_id = v.user_id
+           WHERE e.event_type = 'click' AND e.ts > v.t_view
+           GROUP BY e.user_id),
+         p AS (
+           SELECT e.user_id, min(e.ts) AS t_purchase
+           FROM events e JOIN c ON e.user_id = c.user_id
+           WHERE e.event_type = 'purchase' AND e.ts > c.t_click
+           GROUP BY e.user_id)
+         SELECT count(v.t_view) AS n_view, count(c.t_click) AS n_click,
+                count(p.t_purchase) AS n_purchase
+         FROM v LEFT JOIN c ON v.user_id = c.user_id
+                LEFT JOIN p ON v.user_id = p.user_id"""),
 
     // Cohort retention: users grouped by first-activity day, counted on
     // each later activity day offset — the retention matrix. Two
     // partially-aggregated passes (first-day per user, then distinct
     // users per (cohort, offset)); the user-keyed join broadcasts the
     // compact first-day frame under AQE.
-    "q74_cohort_retention" -> ((s, dir) => {
+    QuerySpec("q74_cohort_retention", (s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), to_date(col("ts")).as("day"))
       val first = ev.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
       ev.join(first, "user_id")
@@ -1903,7 +3505,17 @@ object SparkEntry {
         .agg(countDistinct(col("user_id")).as("n_users"))
         .select(col("cohort_day").cast("string").as("cohort_day"),
           col("day_offset").cast("long").as("day_offset"), col("n_users"))
-    }),
+    },
+      // cohort day rendered as VARCHAR on both sides (date columns surface
+      // differently through the two engines' pandas paths)
+      """WITH f AS (
+           SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
+           FROM events GROUP BY user_id)
+         SELECT CAST(f.cohort_day AS VARCHAR) AS cohort_day,
+                date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
+                count(DISTINCT e.user_id) AS n_users
+         FROM events e JOIN f ON e.user_id = f.user_id
+         GROUP BY f.cohort_day, date_diff('day', f.cohort_day, CAST(e.ts AS DATE))"""),
 
     // Per-language heavy hitters via the Misra-Gries mergeable sketch —
     // frequent-items in one pass with a hard memory bound (third sketch
@@ -1914,7 +3526,7 @@ object SparkEntry {
     // Oracle = exact counts: capacity 64 covers this corpus's 31-token
     // vocabulary, so no MG decrement ever fires on gate data (the sketch
     // regime is spec-asserted on an adversarial stream).
-    "q75_heavy_hitters" -> ((s, dir) => {
+    QuerySpec("q75_heavy_hitters", (s, dir) => {
       val docs = t(s, dir, "documents")
       docs.groupBy(col("lang"))
         .agg(graft.plans.GraftFunctions.heavyHitters(docs,
@@ -1923,49 +3535,178 @@ object SparkEntry {
         .filter(col("pos") < 10)
         .select(col("lang"), (col("pos") + 1).cast("long").as("rnk"),
           col("p.token").as("token"), col("p.cnt").as("cnt"))
-    }),
+    },
+      // exact counts stand in for the MG summary: capacity ≥ vocabulary on
+      // gate data means no decrement ever fires (same graduated-oracle
+      // discipline as q24/q26/q50); total order (cnt desc, token asc)
+      """WITH tok AS (
+           SELECT lang, unnest(list_filter(string_split(text, ' '), x -> x <> ''))
+                    AS token
+           FROM documents),
+         c AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2)
+         SELECT lang, CAST(rnk AS BIGINT) AS rnk, token, cnt
+         FROM (SELECT *, row_number() OVER (
+                 PARTITION BY lang ORDER BY cnt DESC, token) AS rnk FROM c)
+         WHERE rnk <= 10"""),
 
     // Mixture rebalancing APPLIED: q62's weights as a deterministic
     // md5-threshold downsample — dominant languages shed mass toward the
     // uniform token mixture, under-represented ones keep everything; a
     // document's fate depends only on (id, salt). Weights broadcast
     // (|strata| rows); the keep decision is map-side.
-    "q78_rebalance_sample" -> ((s, dir) => {
+    QuerySpec("q78_rebalance_sample", (s, dir) => {
       graft.functions.Corpus.applyMixtureWeights(t(s, dir, "documents"),
           Seq("lang"), graft.functions.TextAnalysis.tokenCount(col("text")),
           "doc_id", salt = "42")
         .select(col("doc_id"), col("lang"))
-    }),
+    },
+      // weights exactly as q62 (rounded 6), keep rule = first md5 byte <
+      // floor(min(weight,1)·256); identical doubles → identical thresholds
+      """WITH s AS (
+           SELECT lang, sum(len(list_filter(string_split(text, ' '), x -> x <> '')))
+                    AS n_tokens
+           FROM documents GROUP BY lang),
+         w AS (
+           SELECT lang,
+                  floor(((1.0 / count(*) OVER ())
+                         / (n_tokens * 1.0 / sum(n_tokens) OVER ()))
+                        * 1000000.0 + 0.5) / 1000000.0 AS weight
+           FROM s)
+         SELECT d.doc_id, d.lang
+         FROM documents d JOIN w ON d.lang = w.lang
+         WHERE ((strpos('0123456789abcdef',
+                   substr(md5(CAST(d.doc_id AS VARCHAR) || ':42'), 1, 1)) - 1) * 4096 +
+                (strpos('0123456789abcdef',
+                   substr(md5(CAST(d.doc_id AS VARCHAR) || ':42'), 2, 1)) - 1) * 256 +
+                (strpos('0123456789abcdef',
+                   substr(md5(CAST(d.doc_id AS VARCHAR) || ':42'), 3, 1)) - 1) * 16 +
+                (strpos('0123456789abcdef',
+                   substr(md5(CAST(d.doc_id AS VARCHAR) || ':42'), 4, 1)) - 1))
+               < greatest(floor(coalesce(least(w.weight, 1.0), 1.0) * 65536), 1)"""),
 
     // Boilerplate detection: top-10 bigrams per source by DOCUMENT
     // frequency (distinct-per-doc, ties on gram text) — the domain-chrome
     // signal stripped before training. Explode map-side; (source, gram)
     // partial agg; minDf prunes the singleton tail before the rank window.
-    "q79_boilerplate" -> ((s, dir) =>
+    QuerySpec("q79_boilerplate", (s, dir) =>
       graft.functions.Corpus.boilerplateNgrams(t(s, dir, "documents"),
-        "text", "source", n = 2, k = 10, minDf = 2)),
+        "text", "source", n = 2, k = 10, minDf = 2),
+      // distinct-per-doc bigrams (list_distinct before unnest), df >= 2,
+      // ties on gram text — mirrors boilerplateNgrams' total order
+      """WITH t AS (
+           SELECT source,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         g AS (
+           SELECT source, unnest(list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 1, 0)),
+             i -> ts[i] || ' ' || ts[i+1]))) AS gram
+           FROM t),
+         c AS (SELECT source, gram, count(*) AS n_docs FROM g
+               GROUP BY 1, 2 HAVING count(*) >= 2),
+         r AS (SELECT source, gram, n_docs,
+                      row_number() OVER (PARTITION BY source
+                                         ORDER BY n_docs DESC, gram ASC) AS rnk
+               FROM c)
+         SELECT source, gram, CAST(n_docs AS BIGINT) AS n_docs,
+                CAST(rnk AS BIGINT) AS rank
+         FROM r WHERE rnk <= 10"""),
 
     // Token-distribution drift: KL(source ‖ corpus) over unigram
     // frequencies — catches scraper drift / encoding breakage / spam
     // injection per source before it trains. Decimal term-sum ⇒
     // order-independent, engine-exact at 6 places.
-    "q80_token_drift" -> ((s, dir) =>
+    QuerySpec("q80_token_drift", (s, dir) =>
       graft.functions.Corpus.tokenKlDrift(t(s, dir, "documents"),
-        "text", "source")),
+        "text", "source"),
+      // KL terms evaluated in the identical double expression shape as the
+      // Spark side ((c_gt/n_g)·ln((c_gt·n_total)/(n_g·c_t))), rounded to 10
+      // and summed as DECIMAL so addition order cannot matter
+      """WITH tok AS (
+           SELECT source, unnest(list_filter(
+             string_split(coalesce(text, ''), ' '), x -> x <> '')) AS token
+           FROM documents),
+         cgt AS (SELECT source, token, count(*) AS c_gt FROM tok GROUP BY 1, 2),
+         gt AS (SELECT source, sum(c_gt) AS n_g FROM cgt GROUP BY 1),
+         tt AS (SELECT token, sum(c_gt) AS c_t FROM cgt GROUP BY 1),
+         tot AS (SELECT sum(n_g) AS n_total FROM gt)
+         SELECT c.source, CAST(max(g.n_g) AS BIGINT) AS n_tokens,
+                floor(CAST(sum(CAST(floor(
+                  (c.c_gt * 1.0 / g.n_g) *
+                  ln((c.c_gt * 1.0 * x.n_total) / (g.n_g * 1.0 * t.c_t))
+                  * 10000000000.0 + 0.5) / 10000000000.0 AS DECIMAL(28,12)))
+                  AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS kl_div
+         FROM cgt c
+         JOIN gt g USING (source)
+         JOIN tt t USING (token)
+         CROSS JOIN tot x
+         GROUP BY c.source"""),
 
     // Source-reputation gate: per-doc quality verdict + per-source keep
     // rate; documents from sources below 0.75 keep rate are blocked
     // outright (domain blocklist) regardless of their own verdict.
-    "q81_reputation_gate" -> ((s, dir) =>
+    QuerySpec("q81_reputation_gate", (s, dir) =>
       graft.functions.Corpus.reputationGate(t(s, dir, "documents"),
-        "text", "doc_id", "source", minKeepRate = 0.75)),
+        "text", "doc_id", "source", minKeepRate = 0.75),
+      // verdict CTEs identical to q72; keep rate = avg over exact 0/1
+      // doubles rounded to 6, threshold compared on the rounded value
+      """WITH tok AS (
+           SELECT doc_id, coalesce(text, '') AS text,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         grams AS (
+           SELECT doc_id, unnest(list_transform(
+             generate_series(1, greatest(len(ts) - 1, 0)),
+             i -> ts[i] || ' ' || ts[i+1])) AS gram
+           FROM tok),
+         gc AS (SELECT doc_id, gram, count(*) AS c FROM grams GROUP BY 1, 2),
+         ga AS (
+           SELECT doc_id, max(c * length(gram)) AS topchars,
+                  coalesce(sum(CASE WHEN c > 1 THEN (c - 1) * length(gram) END), 0)
+                    AS dupchars
+           FROM gc GROUP BY doc_id),
+         ch AS (
+           SELECT doc_id, unnest(string_split(coalesce(text, ''), '')) AS c
+           FROM documents),
+         ce AS (SELECT doc_id, floor(entropy(c) * 10000.0 + 0.5) / 10000.0 AS ent
+                FROM ch GROUP BY doc_id),
+         m AS (
+           SELECT t.doc_id, len(t.ts) AS n_tokens,
+                  CASE WHEN length(t.text) > 0
+                       THEN round(coalesce(ga.topchars, 0) * 1.0 / length(t.text), 4)
+                       ELSE 0.0 END AS top_share,
+                  CASE WHEN length(t.text) > 0
+                       THEN round(coalesce(ga.dupchars, 0) * 1.0 / length(t.text), 4)
+                       ELSE 0.0 END AS dup_share,
+                  coalesce(ce.ent, 0.0) AS ent
+           FROM tok t
+           LEFT JOIN ga ON t.doc_id = ga.doc_id
+           LEFT JOIN ce ON t.doc_id = ce.doc_id),
+         v AS (
+           SELECT d.doc_id, d.source,
+                  CASE WHEN m.n_tokens < 12 THEN 'too_short'
+                       WHEN m.top_share > CAST(0.15 AS DOUBLE) THEN 'repetitive_2gram'
+                       WHEN m.dup_share > CAST(0.12 AS DOUBLE) THEN 'dup_2gram'
+                       WHEN m.ent < CAST(3.9 AS DOUBLE) THEN 'low_entropy'
+                       ELSE 'keep' END AS verdict
+           FROM documents d JOIN m ON d.doc_id = m.doc_id),
+         r AS (
+           SELECT source, floor(avg(CASE WHEN verdict = 'keep'
+                                         THEN CAST(1 AS DOUBLE)
+                                         ELSE CAST(0 AS DOUBLE) END)
+                                * 1000000.0 + 0.5) / 1000000.0 AS keep_rate
+           FROM v GROUP BY 1)
+         SELECT v.doc_id, v.source, v.verdict, r.keep_rate,
+                CASE WHEN r.keep_rate < CAST(0.75 AS DOUBLE) THEN 'blocked_source'
+                     ELSE v.verdict END AS final_verdict
+         FROM v JOIN r USING (source)"""),
 
     // PageRank over the bipartite customer↔supplier trade graph (edges
     // both ways; nodes parity-encoded cust=2k, supp=2k+1), 3 unrolled
     // iterations, d=0.85 — the link-analysis authority signal (domain
     // ranking in a web-corpus pipeline). Decimal-summed contributions ⇒
     // ranks engine-identical; output = top-20 suppliers by rank.
-    "q82_pagerank" -> ((s, dir) => {
+    QuerySpec("q82_pagerank", (s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
       val l = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
@@ -1978,40 +3719,174 @@ object SparkEntry {
         .select(((col("node") - 1) / 2).cast("long").as("s_suppkey"), col("rank"))
         .orderBy(col("rank").desc, col("s_suppkey").asc)
         .limit(20)
-    }),
+    },
+      // one CTE per unrolled iteration; contributions round(·,14) summed as
+      // DECIMAL(38,18), new rank round(·,12) — the exact Graph.pageRank
+      // rule, so ranks are bit-identical; literals written as the same
+      // source decimals both sides
+      """WITH cs AS (
+           SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+         e AS (SELECT src, dst FROM cs UNION SELECT dst, src FROM cs),
+         nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+         deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
+         nn AS (SELECT count(*) AS n FROM nodes),
+         tp AS (SELECT (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))
+                       / CAST(n AS DOUBLE) AS t FROM nn),
+         r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / CAST(nn.n AS DOUBLE) AS rank
+                FROM nodes, nn),
+         s1 AS (SELECT e.dst AS node,
+                       CAST(sum(CAST(round(r.rank / CAST(d.outdeg AS DOUBLE), 14)
+                                     AS DECIMAL(38,18))) AS DOUBLE) AS s
+                FROM e JOIN deg d USING (src) JOIN r0 r ON r.node = e.src
+                GROUP BY 1),
+         r1 AS (SELECT n2.node,
+                       CASE WHEN s1.s IS NULL THEN round(tp.t, 12)
+                            ELSE round(tp.t + CAST(0.85 AS DOUBLE) * s1.s, 12)
+                       END AS rank
+                FROM nodes n2 LEFT JOIN s1 ON s1.node = n2.node CROSS JOIN tp),
+         s2 AS (SELECT e.dst AS node,
+                       CAST(sum(CAST(round(r.rank / CAST(d.outdeg AS DOUBLE), 14)
+                                     AS DECIMAL(38,18))) AS DOUBLE) AS s
+                FROM e JOIN deg d USING (src) JOIN r1 r ON r.node = e.src
+                GROUP BY 1),
+         r2 AS (SELECT n2.node,
+                       CASE WHEN s2.s IS NULL THEN round(tp.t, 12)
+                            ELSE round(tp.t + CAST(0.85 AS DOUBLE) * s2.s, 12)
+                       END AS rank
+                FROM nodes n2 LEFT JOIN s2 ON s2.node = n2.node CROSS JOIN tp),
+         s3 AS (SELECT e.dst AS node,
+                       CAST(sum(CAST(round(r.rank / CAST(d.outdeg AS DOUBLE), 14)
+                                     AS DECIMAL(38,18))) AS DOUBLE) AS s
+                FROM e JOIN deg d USING (src) JOIN r2 r ON r.node = e.src
+                GROUP BY 1),
+         r3 AS (SELECT n2.node,
+                       CASE WHEN s3.s IS NULL THEN round(tp.t, 12)
+                            ELSE round(tp.t + CAST(0.85 AS DOUBLE) * s3.s, 12)
+                       END AS rank
+                FROM nodes n2 LEFT JOIN s3 ON s3.node = n2.node CROSS JOIN tp)
+         SELECT CAST((node - 1) / 2 AS BIGINT) AS s_suppkey, rank
+         FROM r3 WHERE node % 2 = 1
+         ORDER BY rank DESC, s_suppkey ASC LIMIT 20"""),
 
     // Exact edit-distance verification of the q22 shingle-index
     // candidates — the precision pass of two-phase near-dup. Levenshtein
     // runs on candidate pairs only; texts arrive via id equi-joins.
-    "q83_editdist_verify" -> ((s, dir) => {
+    QuerySpec("q83_editdist_verify", (s, dir) => {
       val docs = t(s, dir, "documents")
       val cand = graft.functions.NearDup.ngramJaccardPairs(docs,
         "text", "doc_id", n = 3, minJaccard = 0.2, maxBucket = 1000)
       graft.functions.NearDup.editDistanceVerify(docs, "text", "doc_id",
         cand, minSim = 0.95)
-    }),
+    },
+      // candidate CTEs identical to q22; verification on candidate pairs
+      // only, threshold compared on the rounded similarity
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         inv AS (SELECT * FROM inv0 WHERE shingle IN (
+                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
+         pairs AS (
+           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         scored AS (
+           SELECT id_a, id_b,
+                  len(list_intersect(sa.shs, sb.shs)) AS common,
+                  len(sa.shs) AS size_a, len(sb.shs) AS size_b
+           FROM pairs
+           JOIN sh sa ON sa.doc_id = id_a
+           JOIN sh sb ON sb.doc_id = id_b),
+         cand AS (
+           SELECT id_a, id_b FROM scored
+           WHERE round(common * 1.0 / (size_a + size_b - common), 4) >= 0.2),
+         v AS (
+           SELECT c.id_a, c.id_b,
+                  CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist,
+                  round(CAST(1.0 AS DOUBLE) -
+                        CAST(levenshtein(a.text, b.text) AS DOUBLE) /
+                        CAST(greatest(length(a.text), length(b.text)) AS DOUBLE),
+                        6) AS edit_sim
+           FROM cand c
+           JOIN documents a ON a.doc_id = c.id_a
+           JOIN documents b ON b.doc_id = c.id_b)
+         SELECT id_a, id_b, edit_dist, edit_sim FROM v
+         WHERE edit_sim >= CAST(0.95 AS DOUBLE)"""),
 
     // Weighted sample without replacement (A-ES, md5-derived uniforms):
     // token-count-weighted top-50 — the deterministic "sample long
     // documents preferentially" assembly step.
-    "q84_weighted_sample" -> ((s, dir) =>
+    QuerySpec("q84_weighted_sample", (s, dir) =>
       graft.functions.Corpus.weightedSample(t(s, dir, "documents"),
         "doc_id", graft.functions.TextAnalysis.tokenCount(col("text")),
-        k = 50, salt = "7")),
+        k = 50, salt = "7"),
+      // A-ES keys from the same 24-bit md5 uniform ((nibbles·16^j + 0.5) /
+      // 16^6 — exact dyadic arithmetic), ln-key rounded to 10, rank
+      // (key desc, id asc) — the selected set is engine-identical
+      """WITH d AS (
+           SELECT doc_id,
+                  len(list_filter(string_split(text, ' '), x -> x <> '')) AS weight,
+                  md5(CAST(doc_id AS VARCHAR) || ':7') AS h
+           FROM documents),
+         k AS (
+           SELECT doc_id, weight,
+                  round(ln((
+                    (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * CAST(1048576 AS DOUBLE) +
+                    (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * CAST(65536 AS DOUBLE) +
+                    (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * CAST(4096 AS DOUBLE) +
+                    (strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * CAST(256 AS DOUBLE) +
+                    (strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * CAST(16 AS DOUBLE) +
+                    (strpos('0123456789abcdef', substr(h, 6, 1)) - 1) * CAST(1 AS DOUBLE) +
+                    CAST(0.5 AS DOUBLE)) / CAST(16777216 AS DOUBLE))
+                    / CAST(weight AS DOUBLE), 10) AS sample_key
+           FROM d WHERE weight > 0)
+         SELECT doc_id, CAST(weight AS DOUBLE) AS weight, sample_key
+         FROM k ORDER BY sample_key DESC, doc_id ASC LIMIT 50"""),
 
     // Cluster-cohesion audit: per label, mean member→centroid cosine and
     // max centroid→other-centroid cosine — the "tight and well-separated?"
     // check before cluster-level dedup/curation decisions (SemDeDup shape).
-    "q85_cluster_cohesion" -> ((s, dir) =>
+    QuerySpec("q85_cluster_cohesion", (s, dir) =>
       graft.functions.Similarity.clusterCohesion(t(s, dir, "embeddings"),
-        "embedding", "label")),
+        "embedding", "label"),
+      // centroids: per-dim decimal-summed means (order-free, exact); member
+      // and centroid cosines via list_cosine_similarity (round-6 parity with
+      // the native fold — the q34/q50 contract); intra mean decimal-summed
+      """WITH flat AS (
+           SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
+                  unnest(embedding) AS v
+           FROM embeddings),
+         cent AS (
+           SELECT label, pos,
+                  CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE)
+                    / CAST(count(*) AS DOUBLE) AS c
+           FROM flat GROUP BY 1, 2),
+         carr AS (SELECT label, list(c ORDER BY pos) AS cvec FROM cent GROUP BY 1),
+         intra AS (
+           SELECT e.label, count(*) AS n,
+                  round(CAST(sum(CAST(round(list_cosine_similarity(
+                          CAST(e.embedding AS DOUBLE[]), c.cvec), 6)
+                        AS DECIMAL(18,10))) AS DOUBLE)
+                    / CAST(count(*) AS DOUBLE), 6) AS mean_intra_cos
+           FROM embeddings e JOIN carr c USING (label) GROUP BY 1),
+         inter AS (
+           SELECT a.label,
+                  max(round(list_cosine_similarity(a.cvec, b.cvec), 6)) AS max_inter_cos
+           FROM carr a JOIN carr b ON a.label <> b.label GROUP BY 1)
+         SELECT i.label, CAST(i.n AS BIGINT) AS n, i.mean_intra_cos, x.max_inter_cos
+         FROM intra i LEFT JOIN inter x USING (label)"""),
 
     // Snapshot diff: crawl-over-crawl delta audit. Old/new snapshots are
     // derived deterministically from documents (old mutates id%7==0 docs
     // and lacks id%13==0; new lacks id%10==0) so added/removed/changed/
     // unchanged all occur; the operator itself joins md5 digests, never
     // bodies.
-    "q86_snapshot_diff" -> ((s, dir) => {
+    QuerySpec("q86_snapshot_diff", (s, dir) => {
       val docs = t(s, dir, "documents")
       val oldSnap = docs.filter(col("doc_id") % 13 =!= 0)
         .select(col("doc_id"),
@@ -2020,25 +3895,87 @@ object SparkEntry {
       val newSnap = docs.filter(col("doc_id") % 10 =!= 0)
         .select(col("doc_id"), col("text"))
       graft.operators.Merge.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
-    }),
+    },
+      // same snapshot derivation; status via null-safe digest compare
+      // (IS NOT DISTINCT FROM ≡ Spark's <=>)
+      """WITH oldsnap AS (
+           SELECT doc_id,
+                  md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END) AS h
+           FROM documents WHERE doc_id % 13 <> 0),
+         newsnap AS (
+           SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % 10 <> 0)
+         SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+                CASE WHEN o.doc_id IS NULL THEN 'added'
+                     WHEN n.doc_id IS NULL THEN 'removed'
+                     WHEN o.h IS NOT DISTINCT FROM n.h THEN 'unchanged'
+                     ELSE 'changed' END AS status
+         FROM oldsnap o FULL OUTER JOIN newsnap n ON o.doc_id = n.doc_id"""),
 
     // Near-dup pressure per source: which domains are mirroring /
     // re-crawling / template-spamming — the report that directs dedup
     // budget. Pairs at the q24 parameters (oracle-equal to exact Jaccard).
-    "q87_neardup_pressure" -> ((s, dir) =>
+    QuerySpec("q87_neardup_pressure", (s, dir) =>
       graft.functions.NearDup.nearDupPressure(t(s, dir, "documents"),
-        "text", "doc_id", "source", n = 3, k = 32, bands = 8, minJaccard = 0.1)),
+        "text", "doc_id", "source", n = 3, k = 32, bands = 8, minJaccard = 0.1),
+      // pair CTEs identical to q24's exact form; rollup = distinct pair ids
+      // left-joined to documents, integer-exact rate at 6 places
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
+         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         pairs AS (
+           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS common
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id
+           GROUP BY 1, 2),
+         kept AS (
+           SELECT id_a, id_b FROM pairs
+           JOIN sizes sa ON sa.doc_id = id_a
+           JOIN sizes sb ON sb.doc_id = id_b
+           WHERE round(common * 1.0 / (sa.sz + sb.sz - common), 4) >= 0.1),
+         ids AS (SELECT id_a AS did FROM kept UNION SELECT id_b FROM kept)
+         SELECT d.source, count(*) AS n_docs,
+                CAST(sum(CASE WHEN i.did IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_neardup,
+                round(CAST(sum(CASE WHEN i.did IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6) AS dup_rate
+         FROM documents d LEFT JOIN ids i ON d.doc_id = i.did
+         GROUP BY 1"""),
 
     // N-gram novelty per document: share of its distinct 3-grams unique
     // to it corpus-wide — the inverse lens of q79's boilerplate ranking.
-    "q88_ngram_novelty" -> ((s, dir) =>
+    QuerySpec("q88_ngram_novelty", (s, dir) =>
       graft.functions.Corpus.ngramNovelty(t(s, dir, "documents"),
-        "text", "doc_id", n = 3)),
+        "text", "doc_id", n = 3),
+      // distinct-per-doc 3-grams; df over the aggregated gram stream;
+      // short docs emit n_grams 0 / null novelty via the left join
+      """WITH t AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         g AS (
+           SELECT doc_id, unnest(list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]))) AS gram
+           FROM t),
+         dfc AS (SELECT gram, count(*) AS df FROM g GROUP BY 1),
+         st AS (
+           SELECT g.doc_id, count(*) AS n_grams,
+                  sum(CASE WHEN dfc.df = 1 THEN 1 ELSE 0 END) AS n_unique
+           FROM g JOIN dfc USING (gram) GROUP BY 1)
+         SELECT d.doc_id, CAST(coalesce(st.n_grams, 0) AS BIGINT) AS n_grams,
+                round(CAST(st.n_unique AS DOUBLE) / CAST(st.n_grams AS DOUBLE), 6)
+                  AS novelty
+         FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id"""),
 
     // Deequ-style rule audit: a declarative constraint suite over events
     // evaluated in ONE partially-aggregated scan; null predicate counts
     // as violation unless the rule exempts nulls itself.
-    "q89_rule_audit" -> ((s, dir) => {
+    QuerySpec("q89_rule_audit", (s, dir) => {
       val ev = t(s, dir, "events")
       graft.operators.Audit.ruleAudit(ev, Seq(
         "value_non_negative" -> (col("value") >= 0),
@@ -2048,12 +3985,59 @@ object SparkEntry {
         "ts_after_warmup" -> (col("ts") >= lit("2024-01-05 00:00:00").cast("timestamp")),
         "props_object_shaped" ->
           (col("props").isNull || (col("props").like("{%") && col("props").like("%}")))))
-    }),
+    },
+      // one UNION ALL branch per rule, violation = NOT coalesce(pred, FALSE)
+      // exactly as Audit.ruleAudit counts it
+      """SELECT 'value_non_negative' AS rule, count(*) AS n_rows,
+                CAST(sum(CASE WHEN NOT coalesce(value >= 0, FALSE)
+                              THEN 1 ELSE 0 END) AS BIGINT) AS n_violations,
+                round(CAST(sum(CASE WHEN NOT coalesce(value >= 0, FALSE)
+                                    THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6) AS violation_rate
+         FROM events
+         UNION ALL
+         SELECT 'value_within_cap', count(*),
+                CAST(sum(CASE WHEN NOT coalesce(value <= 400.0, FALSE)
+                              THEN 1 ELSE 0 END) AS BIGINT),
+                round(CAST(sum(CASE WHEN NOT coalesce(value <= 400.0, FALSE)
+                                    THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6)
+         FROM events
+         UNION ALL
+         SELECT 'event_type_allowed', count(*),
+                CAST(sum(CASE WHEN NOT coalesce(
+                       event_type IN ('click','view','purchase','signup'), FALSE)
+                              THEN 1 ELSE 0 END) AS BIGINT),
+                round(CAST(sum(CASE WHEN NOT coalesce(
+                       event_type IN ('click','view','purchase','signup'), FALSE)
+                                    THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6)
+         FROM events
+         UNION ALL
+         SELECT 'ts_after_warmup', count(*),
+                CAST(sum(CASE WHEN NOT coalesce(
+                       ts >= TIMESTAMP '2024-01-05 00:00:00', FALSE)
+                              THEN 1 ELSE 0 END) AS BIGINT),
+                round(CAST(sum(CASE WHEN NOT coalesce(
+                       ts >= TIMESTAMP '2024-01-05 00:00:00', FALSE)
+                                    THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6)
+         FROM events
+         UNION ALL
+         SELECT 'props_object_shaped', count(*),
+                CAST(sum(CASE WHEN NOT coalesce(
+                       props IS NULL OR (props LIKE '{%' AND props LIKE '%}'), FALSE)
+                              THEN 1 ELSE 0 END) AS BIGINT),
+                round(CAST(sum(CASE WHEN NOT coalesce(
+                       props IS NULL OR (props LIKE '{%' AND props LIKE '%}'), FALSE)
+                                    THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6)
+         FROM events"""),
 
     // Referential-integrity report across the star schema + the event
     // stream: per FK edge, child rows / orphans / rate via distinct-parent
     // anti-joins.
-    "q90_ref_integrity" -> ((s, dir) => {
+    QuerySpec("q90_ref_integrity", (s, dir) => {
       // lineitem's three FK edges share one scan (refIntegrityShared)
       graft.operators.Audit.refIntegrityShared(t(s, dir, "lineitem"), Seq(
         ("lineitem_orders", "l_orderkey", t(s, dir, "orders"), "o_orderkey"),
@@ -2064,14 +4048,56 @@ object SparkEntry {
             t(s, dir, "customer"), "c_custkey"),
           ("events_user", t(s, dir, "events"), "user_id",
             t(s, dir, "customer"), "c_custkey"))))
-    }),
+    },
+      // NOT EXISTS per edge ≡ the anti-join count (null child keys orphan
+      // under both)
+      """SELECT 'orders_customer' AS edge, count(*) AS n_rows,
+                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
+                       WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_orphans,
+                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
+                       WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6) AS orphan_rate
+         FROM orders o
+         UNION ALL
+         SELECT 'lineitem_orders', count(*),
+                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM orders oo
+                       WHERE oo.o_orderkey = l.l_orderkey) THEN 1 ELSE 0 END) AS BIGINT),
+                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM orders oo
+                       WHERE oo.o_orderkey = l.l_orderkey) THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6)
+         FROM lineitem l
+         UNION ALL
+         SELECT 'lineitem_part', count(*),
+                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM part p
+                       WHERE p.p_partkey = l.l_partkey) THEN 1 ELSE 0 END) AS BIGINT),
+                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM part p
+                       WHERE p.p_partkey = l.l_partkey) THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6)
+         FROM lineitem l
+         UNION ALL
+         SELECT 'lineitem_supplier', count(*),
+                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM supplier s
+                       WHERE s.s_suppkey = l.l_suppkey) THEN 1 ELSE 0 END) AS BIGINT),
+                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM supplier s
+                       WHERE s.s_suppkey = l.l_suppkey) THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6)
+         FROM lineitem l
+         UNION ALL
+         SELECT 'events_user', count(*),
+                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
+                       WHERE c.c_custkey = e.user_id) THEN 1 ELSE 0 END) AS BIGINT),
+                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
+                       WHERE c.c_custkey = e.user_id) THEN 1 ELSE 0 END) AS DOUBLE)
+                      / CAST(count(*) AS DOUBLE), 6)
+         FROM events e"""),
 
     // Markov transition audit: per-user event bigrams (lag over the
     // (ts, event_id) total order) → transition counts + row-conditional
     // probabilities — the behavioral-sequence sanity check (and the
     // simulator's empirical transition matrix). One window shuffle on
     // user_id, then an aggregated-table groupBy.
-    "q91_event_transitions" -> ((s, dir) => {
+    QuerySpec("q91_event_transitions", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts").asc, col("event_id").asc)
       t(s, dir, "events")
@@ -2083,41 +4109,138 @@ object SparkEntry {
         .withColumn("p", graft.functions.Portable.roundPortable(col("n").cast("double") /
           sum(col("n")).over(Window.partitionBy(col("prev_type"))).cast("double"),
           6))
-    }),
+    },
+      // lag over the identical (ts, event_id) per-user total order;
+      // probabilities are exact integer divisions rounded at 6
+      """WITH s AS (
+           SELECT user_id, event_type,
+                  lag(event_type) OVER (PARTITION BY user_id
+                                        ORDER BY ts, event_id) AS prev_type
+           FROM events),
+         c AS (SELECT prev_type, event_type, count(*) AS n
+               FROM s WHERE prev_type IS NOT NULL GROUP BY 1, 2)
+         SELECT prev_type, event_type, n,
+                round(CAST(n AS DOUBLE) /
+                      CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
+         FROM c"""),
 
     // Token-concentration curve: fewest docs (longest first) covering 50%
     // and 90% of corpus tokens — exact via the length-histogram closed
     // form, no corpus-wide sort.
-    "q92_token_concentration" -> ((s, dir) =>
+    QuerySpec("q92_token_concentration", (s, dir) =>
       graft.functions.Corpus.tokenConcentration(t(s, dir, "documents"),
-        "text", pcts = Seq(50, 90))),
+        "text", pcts = Seq(50, 90)),
+      // length-histogram closed form, all-integer comparisons and ceil-div
+      // (// is BIGINT floor division), identical to tokenConcentration
+      """WITH lens AS (
+           SELECT len(list_filter(string_split(text, ' '), x -> x <> '')) AS l
+           FROM documents),
+         g AS (SELECT CAST(l AS BIGINT) AS len, count(*) AS n_docs_len
+               FROM lens WHERE l > 0 GROUP BY 1),
+         c AS (SELECT len, n_docs_len, len * n_docs_len AS class_tokens,
+                      sum(len * n_docs_len) OVER (ORDER BY len DESC) AS cum_tokens,
+                      sum(n_docs_len) OVER (ORDER BY len DESC) AS cum_docs,
+                      sum(len * n_docs_len) OVER () AS total_tokens
+               FROM g),
+         pick AS (
+           SELECT p.pct, c.*,
+                  c.cum_tokens - c.class_tokens AS before_tokens,
+                  row_number() OVER (PARTITION BY p.pct
+                                     ORDER BY c.cum_tokens ASC) AS rn
+           FROM (VALUES (50), (90)) p(pct)
+           JOIN c ON c.cum_tokens * 100 >= c.total_tokens * p.pct)
+         SELECT CAST(pct AS BIGINT) AS threshold_pct,
+                CAST(cum_docs - n_docs_len +
+                     (total_tokens * pct - before_tokens * 100 + len * 100 - 1)
+                       // (len * 100) AS BIGINT) AS n_docs,
+                CAST(before_tokens +
+                     ((total_tokens * pct - before_tokens * 100 + len * 100 - 1)
+                       // (len * 100)) * len AS BIGINT) AS covered_tokens,
+                CAST(total_tokens AS BIGINT) AS total_tokens
+         FROM pick WHERE rn = 1"""),
 
     // Unigram-LM surprisal score per document — the statistical quality
     // filter (CCNet shape, unigram standing in for KenLM): count-weighted
     // mean of -ln(c_t/T); decimal term-sums keep it engine-exact.
-    "q93_unigram_surprisal" -> ((s, dir) =>
+    QuerySpec("q93_unigram_surprisal", (s, dir) =>
       graft.functions.Corpus.unigramSurprisal(t(s, dir, "documents"),
-        "text", "doc_id")),
+        "text", "doc_id"),
+      // identical double expression per (doc, token) term, round-10 →
+      // DECIMAL sum → count-weighted mean at 6
+      """WITH tok AS (
+           SELECT doc_id, unnest(list_filter(
+             string_split(coalesce(text, ''), ' '), x -> x <> '')) AS token
+           FROM documents),
+         cdt AS (SELECT doc_id, token, count(*) AS c_dt FROM tok GROUP BY 1, 2),
+         ct AS (SELECT token, sum(c_dt) AS c_t FROM cdt GROUP BY 1),
+         tt AS (SELECT sum(c_dt) AS t_total FROM cdt)
+         SELECT c.doc_id, CAST(sum(c.c_dt) AS BIGINT) AS n_tokens,
+                floor((CAST(sum(CAST(floor(CAST(c.c_dt AS DOUBLE) *
+                         (-ln(CAST(t.c_t AS DOUBLE) / CAST(x.t_total AS DOUBLE)))
+                         * 10000000000.0 + 0.5) / 10000000000.0
+                         AS DECIMAL(28,12))) AS DOUBLE)
+                       / CAST(sum(c.c_dt) AS DOUBLE))
+                      * 1000000.0 + 0.5) / 1000000.0 AS mean_surprisal
+         FROM cdt c JOIN ct t USING (token) CROSS JOIN tt x
+         GROUP BY 1"""),
 
     // Vocabulary coverage: fewest token types (most frequent first)
     // covering 90% / 99% of token instances — the tokenizer vocab-size
     // number, exact via the frequency-histogram closed form.
-    "q94_vocab_coverage" -> ((s, dir) =>
+    QuerySpec("q94_vocab_coverage", (s, dir) =>
       graft.functions.Corpus.vocabCoverage(t(s, dir, "documents"),
-        "text", pcts = Seq(90, 99))),
+        "text", pcts = Seq(90, 99)),
+      // token-frequency histogram closed form — q92's arithmetic over
+      // frequency classes instead of length classes
+      """WITH tok AS (
+           SELECT unnest(list_filter(
+             string_split(coalesce(text, ''), ' '), x -> x <> '')) AS token
+           FROM documents),
+         tf AS (SELECT token, count(*) AS f FROM tok GROUP BY 1),
+         g AS (SELECT CAST(f AS BIGINT) AS len, count(*) AS n FROM tf GROUP BY 1),
+         c AS (SELECT len, n, len * n AS class_sz,
+                      sum(len * n) OVER (ORDER BY len DESC) AS cum_sz,
+                      sum(n) OVER (ORDER BY len DESC) AS cum_units,
+                      sum(len * n) OVER () AS total
+               FROM g),
+         pick AS (
+           SELECT p.pct, c.*, c.cum_sz - c.class_sz AS before_sz,
+                  row_number() OVER (PARTITION BY p.pct
+                                     ORDER BY c.cum_sz ASC) AS rn
+           FROM (VALUES (90), (99)) p(pct)
+           JOIN c ON c.cum_sz * 100 >= c.total * p.pct)
+         SELECT CAST(pct AS BIGINT) AS threshold_pct,
+                CAST(cum_units - n +
+                     (total * pct - before_sz * 100 + len * 100 - 1)
+                       // (len * 100) AS BIGINT) AS vocab_size,
+                CAST(before_sz +
+                     ((total * pct - before_sz * 100 + len * 100 - 1)
+                       // (len * 100)) * len AS BIGINT) AS covered_instances,
+                CAST(total AS BIGINT) AS total_instances
+         FROM pick WHERE rn = 1"""),
 
     // Deterministic k-fold assignment (5 folds): stable under corpus
     // growth and repartitioning; summarized as per-fold doc counts so the
     // oracle checks both the assignment and the balance.
-    "q95_kfold" -> ((s, dir) =>
+    QuerySpec("q95_kfold", (s, dir) =>
       graft.functions.Corpus.kFoldAssign(t(s, dir, "documents"),
         "doc_id", k = 5, salt = "cv")
-        .select(col("doc_id"), col("fold"))),
+        .select(col("doc_id"), col("fold")),
+      // same 24-bit nibble integer mod 5 (all-integer, engine-exact)
+      """SELECT doc_id,
+                ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 1048576
+               + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 65536
+               + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 4096
+               + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * 256
+               + (strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * 16
+               + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1)) % 5 AS fold
+         FROM (SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':cv') AS h
+               FROM documents)"""),
 
     // BM25 lexical retrieval (Lucene idf variant) for a fixed term query —
     // targeted corpus carving. Token stream filtered to the query terms
     // BEFORE aggregation; per-term contributions decimal-summed.
-    "q96_bm25" -> ((s, dir) => {
+    QuerySpec("q96_bm25", (s, dir) => {
       val scores = graft.functions.Retrieval.bm25Scores(t(s, dir, "documents"),
         "text", "doc_id", Seq("spark", "join", "filter"))
       // orderBy+limit compiles to TakeOrderedAndProject (per-partition
@@ -2126,12 +4249,41 @@ object SparkEntry {
       val w = Window.orderBy(col("bm25").desc, col("doc_id").asc)
       scores.orderBy(col("bm25").desc, col("doc_id").asc).limit(20)
         .withColumn("rank", row_number().over(w).cast("long"))
-    }),
+    },
+      // identical BM25 expression shape; k1 shipped as the same source
+      // decimal and combined in-engine (never pre-folded); decimal term-sum
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         d AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS dl FROM tok),
+         st AS (SELECT count(*) AS n_docs, avg(CAST(dl AS DOUBLE)) AS avgdl FROM d),
+         tf AS (SELECT doc_id, dl, term, count(*) AS tf
+                FROM (SELECT doc_id, dl, unnest(ts) AS term FROM d)
+                WHERE term IN ('spark', 'join', 'filter') GROUP BY 1, 2, 3),
+         dft AS (SELECT term, count(*) AS df_t FROM tf GROUP BY 1),
+         sc AS (
+           SELECT t.doc_id,
+                  floor(CAST(sum(CAST(floor((
+                    ln((CAST(s.n_docs AS DOUBLE) - CAST(f.df_t AS DOUBLE) + 0.5)
+                       / (CAST(f.df_t AS DOUBLE) + 0.5) + 1.0)
+                    * ((CAST(t.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1 AS DOUBLE)))
+                       / (CAST(t.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
+                          * ((CAST(1 AS DOUBLE) - CAST(0.75 AS DOUBLE))
+                             + CAST(0.75 AS DOUBLE) * CAST(t.dl AS DOUBLE) / s.avgdl))))
+                  * 10000000000.0 + 0.5) / 10000000000.0 AS DECIMAL(28,12)))
+                  AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS bm25
+           FROM tf t JOIN dft f USING (term) CROSS JOIN st s GROUP BY 1)
+         SELECT doc_id, bm25, CAST(rn AS BIGINT) AS rank
+         FROM (SELECT doc_id, bm25,
+                      row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rn
+               FROM sc)
+         WHERE rn <= 20"""),
 
     // Hybrid retrieval: reciprocal-rank fusion of the BM25 list with an
     // embedding-cosine list for the same "query" (vector = vec_id 0) —
     // the standard lexical+vector stack, exact and engine-reproducible.
-    "q97_hybrid_rrf" -> ((s, dir) => {
+    QuerySpec("q97_hybrid_rrf", (s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
       val lex = graft.functions.Retrieval.bm25Scores(docs, "text", "doc_id",
@@ -2157,21 +4309,83 @@ object SparkEntry {
       fused.orderBy(col("rrf").desc, col("id").asc).limit(10)
         .withColumn("rank", row_number().over(wf).cast("long"))
         .select(col("id").as("doc_id"), col("rrf"), col("rank"))
-    }),
+    },
+      // same BM25 CTEs for the lexical list; cosine list via
+      // list_cosine_similarity (round-6 parity); RRF in one fixed expression
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         d AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS dl FROM tok),
+         st AS (SELECT count(*) AS n_docs, avg(CAST(dl AS DOUBLE)) AS avgdl FROM d),
+         tf AS (SELECT doc_id, dl, term, count(*) AS tf
+                FROM (SELECT doc_id, dl, unnest(ts) AS term FROM d)
+                WHERE term IN ('spark', 'join', 'filter') GROUP BY 1, 2, 3),
+         dft AS (SELECT term, count(*) AS df_t FROM tf GROUP BY 1),
+         sc AS (
+           SELECT t.doc_id,
+                  floor(CAST(sum(CAST(floor((
+                    ln((CAST(s.n_docs AS DOUBLE) - CAST(f.df_t AS DOUBLE) + 0.5)
+                       / (CAST(f.df_t AS DOUBLE) + 0.5) + 1.0)
+                    * ((CAST(t.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1 AS DOUBLE)))
+                       / (CAST(t.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
+                          * ((CAST(1 AS DOUBLE) - CAST(0.75 AS DOUBLE))
+                             + CAST(0.75 AS DOUBLE) * CAST(t.dl AS DOUBLE) / s.avgdl))))
+                  * 10000000000.0 + 0.5) / 10000000000.0 AS DECIMAL(28,12)))
+                  AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS bm25
+           FROM tf t JOIN dft f USING (term) CROSS JOIN st s GROUP BY 1),
+         lex AS (SELECT doc_id AS id, rn AS ra
+                 FROM (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rn
+                       FROM sc)
+                 WHERE rn <= 50),
+         qv AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 0),
+         vc AS (SELECT e.vec_id,
+                       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.v), 6) AS cos
+                FROM embeddings e CROSS JOIN qv q),
+         vr AS (SELECT vec_id AS id, rn AS rb
+                FROM (SELECT vec_id, row_number() OVER (ORDER BY cos DESC, vec_id ASC) AS rn
+                      FROM vc)
+                WHERE rn <= 50),
+         fused AS (
+           SELECT coalesce(l.id, v.id) AS doc_id,
+                  floor((coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(l.ra AS DOUBLE)),
+                                  CAST(0 AS DOUBLE)) +
+                         coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(v.rb AS DOUBLE)),
+                                  CAST(0 AS DOUBLE)))
+                        * 1000000.0 + 0.5) / 1000000.0 AS rrf
+           FROM lex l FULL OUTER JOIN vr v ON l.id = v.id)
+         SELECT doc_id, rrf, CAST(rn AS BIGINT) AS rank
+         FROM (SELECT doc_id, rrf,
+                      row_number() OVER (ORDER BY rrf DESC, doc_id ASC) AS rn
+               FROM fused)
+         WHERE rn <= 10"""),
 
     // Per-source quota cap: each source keeps its 50 highest-token-count
     // documents (ties → smallest id) — the hard per-domain representation
     // cap (max-URLs-per-domain) that bounds a stratum's absolute count,
     // complementing q78's probabilistic rebalance. One partitioned window
     // keyed on source; never a global sort.
-    "q102_domain_quota" -> ((s, dir) => {
+    QuerySpec("q102_domain_quota", (s, dir) => {
       val docs = t(s, dir, "documents")
       graft.functions.Corpus.quotaCap(docs, Seq("source"),
           graft.functions.TextAnalysis.tokenCount(
             coalesce(col("text"), lit(""))).cast("long"),
           "doc_id", n = 50)
         .select(col("doc_id"), col("source"))
-    }),
+    },
+      // same (token count desc, doc_id asc) total order per source as the
+      // engine's partitioned window
+      """WITH t AS (
+           SELECT doc_id, source,
+                  CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
+                    x -> x <> '')) AS BIGINT) AS tc
+           FROM documents),
+         r AS (
+           SELECT doc_id, source,
+                  row_number() OVER (PARTITION BY source
+                                     ORDER BY tc DESC, doc_id ASC) AS rn
+           FROM t)
+         SELECT doc_id, source FROM r WHERE rn <= 50"""),
 
     // BPE tokenizer training, first merge iteration: the corpus collapses
     // to a distinct-word frequency table (the ONE corpus-wide scan; Heaps'
@@ -2180,9 +4394,24 @@ object SparkEntry {
     // pair asc, a total order so the top-30 is engine-reproducible. The
     // full iterative merge loop is Bpe.train (driver loop over the cached
     // vocab table, BpeSpec pins it against the Sennrich corpus).
-    "q103_bpe_pairs" -> ((s, dir) =>
+    QuerySpec("q103_bpe_pairs", (s, dir) =>
       graft.functions.Bpe.mergePairCounts(
-        t(s, dir, "documents"), col("text"), k = 30)),
+        t(s, dir, "documents"), col("text"), k = 30),
+      // same word-frequency collapse then adjacent char-pair counts; the
+      // (count desc, pair asc) total order makes LIMIT engine-reproducible
+      """WITH words AS (
+           SELECT unnest(list_filter(string_split(coalesce(text, ''), ' '),
+             x -> x <> '')) AS word
+           FROM documents),
+         wf AS (SELECT word, count(*) AS freq FROM words GROUP BY word),
+         idx AS (
+           SELECT word, freq,
+                  unnest(generate_series(1, length(word) - 1)) AS i
+           FROM wf),
+         p AS (SELECT substring(word, CAST(i AS INT), 2) AS pair, freq FROM idx)
+         SELECT pair, CAST(sum(freq) AS BIGINT) AS pair_count
+         FROM p GROUP BY pair
+         ORDER BY pair_count DESC, pair ASC LIMIT 30"""),
 
     // Exact n-gram collision decontamination (GPT-3/PaLM rule): a corpus
     // doc is contaminated if it shares ANY exact word 5-gram with the
@@ -2190,82 +4419,235 @@ object SparkEntry {
     // q59's document-level Jaccard threshold waves through. Fingerprint
     // equi-join on 8-byte keys + partial-agg distinct-gram count; Spark
     // joins xxhash64 fingerprints, the oracle the same grams as text.
-    "q104_exact_contamination" -> ((s, dir) => {
+    QuerySpec("q104_exact_contamination", (s, dir) => {
       val docs = t(s, dir, "documents")
       graft.functions.NearDup.exactContamination(
         docs.filter(col("doc_id") % 13 =!= 0),
         docs.filter(col("doc_id") % 13 === 0),
         "text", "doc_id", n = 5)
-    }),
+    },
+      // same distinct 5-grams per doc; the oracle joins gram text where the
+      // engine joins xxhash64 fingerprints — equal absent a 64-bit collision
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id,
+                  unnest(list_distinct(list_transform(
+                    range(1, greatest(len(ts) - 3, 1)),
+                    i -> array_to_string(ts[i:i+4], ' ')))) AS g
+           FROM tok),
+         ev AS (SELECT DISTINCT g FROM sh WHERE doc_id % 13 = 0)
+         SELECT s.doc_id, count(*) AS n_hits
+         FROM sh s JOIN ev USING (g)
+         WHERE s.doc_id % 13 <> 0
+         GROUP BY s.doc_id"""),
 
     // Temperature-flattened language mixture (mT5/XLM-R α-sampling,
     // α = 0.3): target share ∝ observed^α renormalized — boosts
     // low-resource languages without forcing q62's uniform target.
     // Weights table is |strata| rows; windows only over that.
-    "q107_temperature_mix" -> ((s, dir) => {
+    QuerySpec("q107_temperature_mix", (s, dir) => {
       val docs = t(s, dir, "documents")
       graft.functions.Corpus.temperatureWeights(docs, Seq("lang"),
         graft.functions.TextAnalysis.tokenCount(col("text")), alpha = 0.3)
-    }),
+    },
+      // same α = 0.3 power-flatten over double shares; floor-form portable
+      // rounding (functions/Portable.scala) replaces round(6) as rounding
+      // hardening. The r4/r5 driver-hash red here was NOT rounding: the
+      // uncast sum() made DuckDB emit HUGEINT (int128), which the driver
+      // hashes differently from Spark's int64 — hence CAST(... AS BIGINT)
+      // on n_tokens below. A libm-vs-JVM pow last-ulp difference could in
+      // principle flip the 1e-6 floor grain
+      // only within ~1e-16 of a boundary
+      """WITH s AS (
+           SELECT lang, count(*) AS n_docs,
+                  CAST(sum(len(list_filter(string_split(text, ' '),
+                                           x -> x <> ''))) AS BIGINT)
+                    AS n_tokens
+           FROM documents GROUP BY lang),
+         p AS (
+           SELECT lang, n_docs, n_tokens,
+                  CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER () AS share,
+                  CASE WHEN n_tokens > 0
+                       THEN pow(CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER (), 0.3)
+                       ELSE 0.0 END AS powed
+           FROM s)
+         SELECT lang, n_docs, n_tokens,
+                floor(share * 1000000.0 + 0.5) / 1000000.0 AS token_share,
+                floor((powed / sum(powed) OVER ())
+                      * 1000000.0 + 0.5) / 1000000.0 AS target_share,
+                CASE WHEN n_tokens > 0
+                     THEN floor(((powed / sum(powed) OVER ()) / share)
+                                * 1000000.0 + 0.5) / 1000000.0
+                     END AS weight
+         FROM p"""),
 
     // Padding-waste audit: fixed-count batches padded to their batch max
     // (the dense-tensor shape), length-sorted vs arrival-order policies
     // over the q68 shard layout — the measurement behind bucketed
     // batching. Per-shard windows only; never a global sort.
-    "q108_padding_audit" -> ((s, dir) => {
+    QuerySpec("q108_padding_audit", (s, dir) => {
       val sharded = graft.functions.Corpus.shuffleShards(
         t(s, dir, "documents"), "doc_id", salt = "42", nShards = 8)
       graft.functions.Corpus.paddingAudit(sharded, "shard", "doc_id",
         graft.functions.TextAnalysis.tokenCount(coalesce(col("text"), lit(""))),
         batchSize = 16)
-    }),
+    },
+      // same shard layout as q68; per-shard dense ranks batch the rows, a
+      // short final batch pads to its own max over its actual row count
+      """WITH h AS (
+           SELECT doc_id,
+                  md5(CAST(doc_id AS VARCHAR) || ':42') AS hh,
+                  len(list_filter(string_split(coalesce(text, ''), ' '),
+                    x -> x <> '')) AS tc
+           FROM documents),
+         x AS (
+           SELECT doc_id, hh, tc,
+                  ((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096 +
+                   (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256 +
+                   (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16 +
+                   (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % 8 AS sh
+           FROM h),
+         bl AS (
+           SELECT sh, CAST(floor((row_number() OVER (PARTITION BY sh
+                    ORDER BY tc DESC, doc_id ASC) - 1) / 16) AS BIGINT) AS b, tc
+           FROM x),
+         ba AS (
+           SELECT sh, CAST(floor((row_number() OVER (PARTITION BY sh
+                    ORDER BY doc_id ASC) - 1) / 16) AS BIGINT) AS b, tc
+           FROM x),
+         gl AS (SELECT sh, b, count(*) AS cnt, max(tc) AS mx, sum(tc) AS sm
+                FROM bl GROUP BY sh, b),
+         ga AS (SELECT sh, b, count(*) AS cnt, max(tc) AS mx, sum(tc) AS sm
+                FROM ba GROUP BY sh, b),
+         al AS (SELECT 'by_length' AS policy, count(*) AS n_batches,
+                       CAST(sum(sm) AS BIGINT) AS payload_tokens,
+                       CAST(sum(cnt * mx - sm) AS BIGINT) AS padding_tokens
+                FROM gl),
+         aa AS (SELECT 'arrival' AS policy, count(*) AS n_batches,
+                       CAST(sum(sm) AS BIGINT) AS payload_tokens,
+                       CAST(sum(cnt * mx - sm) AS BIGINT) AS padding_tokens
+                FROM ga)
+         SELECT policy, n_batches, payload_tokens, padding_tokens,
+                round(CAST(padding_tokens AS DOUBLE) /
+                      greatest(padding_tokens + payload_tokens, 1), 6)
+                  AS padding_frac
+         FROM (SELECT * FROM al UNION ALL SELECT * FROM aa)"""),
 
     // Winnow-index candidate pairs: the ~2/(w+1)-density fingerprint
     // index joins on itself — ~60% less index traffic than q22's full
     // shingle index, every ≥6-word copied span still guaranteed to
     // collide. minShared=2 keeps the single-collision noise floor out.
-    "q111_winnow_pairs" -> ((s, dir) =>
+    QuerySpec("q111_winnow_pairs", (s, dir) =>
       graft.functions.NearDup.winnowCandidatePairs(
-        t(s, dir, "documents"), "text", "doc_id", n = 3, w = 4, minShared = 2L)),
+        t(s, dir, "documents"), "text", "doc_id", n = 3, w = 4, minShared = 2L),
+      // the same selected-fingerprint inverted index, self-joined; nothing
+      // exceeds the 1000-posting prune cap on this corpus (max bucket 7),
+      // so the engine's pruned index equals this unpruned oracle
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         g AS (
+           SELECT doc_id,
+                  list_transform(range(1, greatest(len(ts) - 1, 1)),
+                    i -> md5(array_to_string(ts[i:i+2], ' '))) AS hs
+           FROM tok),
+         m AS (
+           SELECT doc_id,
+                  CASE WHEN len(hs) - 3 >= 1 THEN
+                         list_transform(range(1, len(hs) - 2),
+                           i -> list_min(hs[i:i+3]))
+                       WHEN len(hs) > 0 THEN [list_min(hs)]
+                       ELSE [] END AS mins
+           FROM g),
+         inv AS (SELECT doc_id, unnest(list_distinct(mins)) AS fp FROM m)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
+         FROM inv a JOIN inv b ON a.fp = b.fp AND a.doc_id < b.doc_id
+         GROUP BY a.doc_id, b.doc_id
+         HAVING count(*) >= 2"""),
 
     // SCD type-2 dimension build: the event stream's attribute changes
     // become [valid_from, valid_to) version intervals per user — the
     // interval companion of q10's newer-wins latest upsert. One shuffle:
     // both window passes share (user_id; ts, event_id) partitioning+order.
-    "q112_scd2_history" -> ((s, dir) =>
+    QuerySpec("q112_scd2_history", (s, dir) =>
       graft.operators.Merge.scd2Build(
-        t(s, dir, "events"), "user_id", "event_type", "ts", "event_id")),
+        t(s, dir, "events"), "user_id", "event_type", "ts", "event_id"),
+      // change rows via null-safe lag compare, intervals via lead; ties
+      // broken by event_id on both window passes
+      """WITH o AS (
+           SELECT user_id, event_type, ts, event_id,
+                  lag(event_type) OVER w AS prev,
+                  row_number() OVER w AS rn
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         chg AS (
+           SELECT user_id, event_type, ts AS valid_from, event_id
+           FROM o WHERE rn = 1 OR prev IS DISTINCT FROM event_type),
+         v AS (
+           SELECT user_id, event_type, valid_from,
+                  lead(valid_from) OVER (
+                    PARTITION BY user_id ORDER BY valid_from, event_id) AS valid_to
+           FROM chg)
+         SELECT user_id, event_type, valid_from, valid_to,
+                (valid_to IS NULL) AS is_current
+         FROM v"""),
 
     // OLAP cube: all four (event_type × day) grouping sets in one pass —
     // Spark expands the cube BELOW the partial aggregate, so each input
     // row contributes to every grouping set map-side and the shuffle
     // carries only per-set partial aggregates, never 4× the raw rows.
-    "q113_cube_daily" -> ((s, dir) =>
+    QuerySpec("q113_cube_daily", (s, dir) =>
       t(s, dir, "events")
         .cube(col("event_type"), date_trunc("day", col("ts")).as("day_ts"))
         .agg(grouping_id().as("gid"),
           count(lit(1)).as("n_events"),
           sum(col("value").cast(dec)).cast("double").as("sum_value"))
         .select(col("event_type"), col("day_ts"), col("gid"),
-          col("n_events"), col("sum_value"))),
+          col("n_events"), col("sum_value")),
+      // GROUPING() bit order matches Spark's grouping_id (leftmost column =
+      // most significant bit); double SUM via the DECIMAL(18,4) parity rule
+      """SELECT event_type, date_trunc('day', ts) AS day_ts,
+                GROUPING(event_type, date_trunc('day', ts)) AS gid,
+                count(*) AS n_events,
+                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+         FROM events
+         GROUP BY CUBE (event_type, date_trunc('day', ts))"""),
 
     // Wide pivot: one row per day, one column per event type — the
     // BI-export shape. The value list is EXPLICIT (the contract's five
     // types): Spark then skips the distinct-values pre-scan and plans a
     // single partial-aggregated pass; an open value list would add a
     // collect + a schema only known at runtime.
-    "q114_pivot_daily" -> ((s, dir) =>
+    QuerySpec("q114_pivot_daily", (s, dir) =>
       t(s, dir, "events")
         .groupBy(date_trunc("day", col("ts")).as("day_ts"))
         .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(sum(col("value").cast(dec)).cast("double"))),
+        .agg(sum(col("value").cast(dec)).cast("double")),
+      // conditional aggregation = the portable spelling of PIVOT; no ELSE,
+      // so a type absent on a day is NULL exactly like Spark's pivot
+      """SELECT date_trunc('day', ts) AS day_ts,
+                CAST(sum(CASE WHEN event_type = 'click'
+                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS click,
+                CAST(sum(CASE WHEN event_type = 'error'
+                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS error,
+                CAST(sum(CASE WHEN event_type = 'purchase'
+                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS purchase,
+                CAST(sum(CASE WHEN event_type = 'signup'
+                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS signup,
+                CAST(sum(CASE WHEN event_type = 'view'
+                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS view
+         FROM events GROUP BY 1"""),
 
     // Rank-based winsorized stats per event type: cutoffs are the values
     // AT ranks ceil(n/100) and ceil(99n/100) — no interpolation, so both
     // engines clamp to exact data values and the DECIMAL-cast winsorized
     // mean hashes identically. One windowed sort per group for ranks, a
     // 5-row broadcast back onto the stream for the clamp pass.
-    "q115_winsorized_stats" -> ((s, dir) => {
+    QuerySpec("q115_winsorized_stats", (s, dir) => {
       val e = t(s, dir, "events").select(col("event_type"), col("event_id"), col("value"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type")).orderBy(col("value"), col("event_id"))
@@ -2284,7 +4666,31 @@ object SparkEntry {
           max(col("p01")).as("p01"), max(col("p99")).as("p99"),
           (sum(col("_clamped").cast(dec)).cast("double") / max(col("n_events")))
             .as("wmean"))
-    }),
+    },
+      // cutoffs at exact ranks (no interpolation) so the clamp hits data
+      // values; wmean = decimal sum cast double, then double division
+      """WITH ranked AS (
+           SELECT event_type, value,
+                  row_number() OVER (PARTITION BY event_type
+                                     ORDER BY value, event_id) AS rn,
+                  count(*) OVER (PARTITION BY event_type) AS n
+           FROM events),
+         cuts AS (
+           SELECT event_type, max(n) AS n_events,
+                  max(CASE WHEN rn = CAST(ceil(n / 100.0) AS BIGINT)
+                      THEN value END) AS p01,
+                  max(CASE WHEN rn = CAST(ceil(n * 99 / 100.0) AS BIGINT)
+                      THEN value END) AS p99
+           FROM ranked GROUP BY event_type),
+         c AS (
+           SELECT e.event_type, n_events, p01, p99,
+                  least(greatest(e.value, p01), p99) AS clamped
+           FROM events e JOIN cuts USING (event_type))
+         SELECT event_type, max(n_events) AS n_events,
+                max(p01) AS p01, max(p99) AS p99,
+                CAST(sum(CAST(clamped AS DECIMAL(18,4))) AS DOUBLE)
+                  / max(n_events) AS wmean
+         FROM c GROUP BY event_type"""),
 
     // Graded contamination fraction: per corpus doc, the share of its
     // distinct word 5-grams that appear anywhere in the eval set — the
@@ -2292,39 +4698,110 @@ object SparkEntry {
     // q59's pairwise Jaccard. Clean docs stay in the report (hit_frac 0).
     // One fingerprint equi-join + partial-agg counts; eval side collapsed
     // to its distinct gram set.
-    "q116_contamination_frac" -> ((s, dir) => {
+    QuerySpec("q116_contamination_frac", (s, dir) => {
       val docs = t(s, dir, "documents")
       graft.functions.NearDup.contaminationFraction(
         docs.filter(col("doc_id") % 13 =!= 0),
         docs.filter(col("doc_id") % 13 === 0),
         "text", "doc_id", n = 5)
-    }),
+    },
+      // same distinct 5-grams per doc as q104; LEFT join keeps clean docs,
+      // count(ev.g) counts only matched grams (NULL-skipping, = Spark's
+      // count over the _hit marker); gram text vs xxhash64 fingerprints —
+      // equal absent a 64-bit collision
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id,
+                  unnest(list_distinct(list_transform(
+                    range(1, greatest(len(ts) - 3, 1)),
+                    i -> array_to_string(ts[i:i+4], ' ')))) AS g
+           FROM tok),
+         ev AS (SELECT DISTINCT g FROM sh WHERE doc_id % 13 = 0)
+         SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
+                CAST(count(ev.g) AS BIGINT) AS n_hits,
+                round(CAST(count(ev.g) AS DOUBLE) / count(*), 4) AS hit_frac
+         FROM sh s LEFT JOIN ev ON s.g = ev.g
+         WHERE s.doc_id % 13 <> 0
+         GROUP BY s.doc_id"""),
 
     // Containment near-dup: asymmetric overlap |A∩B|/min(|A|,|B|) — the
     // subset-duplication catch (a short doc quoted whole inside a long
     // one has Jaccard ≈ 0 but containment ≈ 1). Same inverted
     // fingerprint index and prune discipline as q22; only scoring differs.
-    "q117_containment" -> ((s, dir) =>
+    QuerySpec("q117_containment", (s, dir) =>
       graft.functions.NearDup.ngramContainmentPairs(t(s, dir, "documents"),
-        "text", "doc_id", n = 3, minContainment = 0.35, maxBucket = 1000)),
+        "text", "doc_id", n = 3, minContainment = 0.35, maxBucket = 1000),
+      // q22's oracle with the containment denominator: least(size_a, size_b)
+      """WITH tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         inv AS (SELECT * FROM inv0 WHERE shingle IN (
+                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
+         pairs AS (
+           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         scored AS (
+           SELECT id_a, id_b,
+                  len(list_intersect(sa.shs, sb.shs)) AS common,
+                  len(sa.shs) AS size_a, len(sb.shs) AS size_b
+           FROM pairs
+           JOIN sh sa ON sa.doc_id = id_a
+           JOIN sh sb ON sb.doc_id = id_b)
+         SELECT id_a, id_b, common, size_a, size_b,
+                round(common * 1.0 / least(size_a, size_b), 4) AS containment
+         FROM scored
+         WHERE round(common * 1.0 / least(size_a, size_b), 4) >= 0.35"""),
 
     // Winnowing fingerprint selection (MOSS): positional 3-gram md5s,
     // window-of-4 local minima — any ≥6-word copied span shares a
     // fingerprint, at ~2/(w+1) density. md5's lexicographic order makes
     // the selection engine-portable; fp_sha pins the selected SET.
-    "q110_winnow_fingerprints" -> ((s, dir) => {
+    QuerySpec("q110_winnow_fingerprints", (s, dir) => {
       val docs = t(s, dir, "documents")
       val m = graft.functions.TextAnalysis.winnowFingerprints(docs, col("text"))
       docs.select(col("doc_id"), m("n_grams").as("n_grams"),
         m("n_fp").as("n_fp"), m("fp_sha").as("fp_sha"))
-    }),
+    },
+      // same positional 3-grams → md5 → window-of-4 minima; short docs
+      // (under 4 grams) contribute their single overall minimum
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         g AS (
+           SELECT doc_id,
+                  list_transform(range(1, greatest(len(ts) - 1, 1)),
+                    i -> md5(array_to_string(ts[i:i+2], ' '))) AS hs
+           FROM tok),
+         m AS (
+           SELECT doc_id, len(hs) AS n_grams,
+                  CASE WHEN len(hs) - 3 >= 1 THEN
+                         list_transform(range(1, len(hs) - 2),
+                           i -> list_min(hs[i:i+3]))
+                       WHEN len(hs) > 0 THEN [list_min(hs)]
+                       ELSE [] END AS mins
+           FROM g)
+         SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
+                CAST(len(list_sort(list_distinct(mins))) AS BIGINT) AS n_fp,
+                sha256(array_to_string(list_sort(list_distinct(mins)), ''))
+                  AS fp_sha
+         FROM m"""),
 
     // Incremental offset-index maintenance: the appended batch (epoch 1)
     // is indexed alone and shifted by the existing index's total — the
     // existing index is never rescanned (q100/q55 ingest discipline; the
     // 1-row base read is watermark-class control plane). Oracle = the
     // full recompute: one global cumsum over (epoch, shard, position).
-    "q109_incremental_offsets" -> ((s, dir) => {
+    QuerySpec("q109_incremental_offsets", (s, dir) => {
       val docs = t(s, dir, "documents")
       val tc = graft.functions.TextAnalysis.tokenCount(coalesce(col("text"), lit("")))
       def sharded(df: DataFrame) =
@@ -2339,7 +4816,29 @@ object SparkEntry {
         .unionByName(batchIdx.withColumn("epoch", lit(1L)))
         .select(col("doc_id"), col("epoch"), col("shard"), col("n_tokens"),
           col("start_offset"))
-    }),
+    },
+      // the full recompute: one global cumsum over (epoch, shard, md5, id)
+      // must equal the engine's incremental append path
+      """WITH h AS (
+           SELECT doc_id,
+                  CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS epoch,
+                  md5(CAST(doc_id AS VARCHAR) || ':42') AS hh,
+                  len(list_filter(string_split(coalesce(text, ''), ' '),
+                    x -> x <> '')) AS tc
+           FROM documents),
+         x AS (
+           SELECT doc_id, epoch, hh, tc,
+                  ((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096 +
+                   (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256 +
+                   (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16 +
+                   (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % 8 AS sh
+           FROM h)
+         SELECT doc_id, CAST(epoch AS BIGINT) AS epoch, CAST(sh AS BIGINT) AS shard,
+                CAST(tc AS BIGINT) AS n_tokens,
+                CAST(coalesce(sum(tc) OVER (ORDER BY epoch, sh, hh, doc_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+                  AS start_offset
+         FROM x"""),
 
     // Unicode NFC canonicalization (native java.text.Normalizer pass;
     // Spark has no built-in): the corpus is ASCII, so the query first
@@ -2348,32 +4847,61 @@ object SparkEntry {
     // compose each pair back to 'é', shrinking the char count by exactly
     // the 'e' count and matching DuckDB's nfc_normalize byte-for-byte
     // (pinned via sha256 of the normalized text).
-    "q106_nfc_normalize" -> ((s, dir) => {
+    QuerySpec("q106_nfc_normalize", (s, dir) => {
       val docs = t(s, dir, "documents")
       val decomposed = regexp_replace(coalesce(col("text"), lit("")),
         "e", "e\u0301") // e + combining acute (decomposed)
       val nfc = graft.plans.GraftFunctions.unicodeNormalize(docs, decomposed, "NFC")
       docs.select(col("doc_id"), length(nfc).cast("long").as("n_nfc"),
         sha2(nfc, 256).as("nfc_sha"))
-    }),
+    },
+      // same deterministic decomposition (e → e+U+0301), then the engines'
+      // independent NFC implementations must agree byte-for-byte
+      """SELECT doc_id,
+                CAST(length(nfc_normalize(replace(coalesce(text, ''),
+                  'e', 'e' || chr(769)))) AS BIGINT) AS n_nfc,
+                sha256(nfc_normalize(replace(coalesce(text, ''),
+                  'e', 'e' || chr(769)))) AS nfc_sha
+         FROM documents"""),
 
     // Global token-offset index over the q68 shard layout — distributed
     // prefix sum: per-shard cumulative sums in parallel, then a window
     // over the 8-row shard-base table, broadcast back. The naive global
     // ordered window would funnel the whole corpus through one partition.
-    "q105_token_offsets" -> ((s, dir) => {
+    QuerySpec("q105_token_offsets", (s, dir) => {
       val sharded = graft.functions.Corpus.shuffleShards(
         t(s, dir, "documents"), "doc_id", salt = "42", nShards = 8)
       graft.functions.Corpus.tokenOffsets(sharded, "shard", "shard_pos",
           graft.functions.TextAnalysis.tokenCount(coalesce(col("text"), lit(""))))
         .select(col("doc_id"), col("shard"), col("n_tokens"), col("start_offset"))
-    }),
+    },
+      // the oracle's single global ordered window equals the engine's
+      // two-level (per-shard cumsum + shard-base prefix) decomposition;
+      // within-shard order (md5 asc, doc_id asc) matches shard_pos
+      """WITH h AS (
+           SELECT doc_id,
+                  md5(CAST(doc_id AS VARCHAR) || ':42') AS hh,
+                  len(list_filter(string_split(coalesce(text, ''), ' '),
+                    x -> x <> '')) AS tc
+           FROM documents),
+         x AS (
+           SELECT doc_id, hh, tc,
+                  ((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096 +
+                   (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256 +
+                   (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16 +
+                   (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % 8 AS sh
+           FROM h)
+         SELECT doc_id, CAST(sh AS BIGINT) AS shard, CAST(tc AS BIGINT) AS n_tokens,
+                CAST(coalesce(sum(tc) OVER (ORDER BY sh, hh, doc_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+                  AS start_offset
+         FROM x"""),
 
     // Quality-aware dedup: same clusters as q48, but each cluster keeps
     // its LONGEST member (ties → smallest id) — the production keep-best
     // rule, vs q49's min-id form. Oracle re-derives the clusters with the
     // recursive CTE and ranks by the same (token count desc, id asc).
-    "q101_quality_dedup" -> ((s, dir) => {
+    QuerySpec("q101_quality_dedup", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = graft.functions.NearDup.ngramJaccardPairs(
         docs, "text", "doc_id", n = 3, minJaccard = 0.2)
@@ -2382,32 +4910,114 @@ object SparkEntry {
           graft.functions.TextAnalysis.tokenCount(
             coalesce(col("text"), lit(""))).cast("long"))
         .select(col("doc_id"), col("lang"))
-    }),
+    },
+      // q48's recursive-CTE clustering + keep-longest ranking; rn > 1 =
+      // the dropped members, everything else (incl. singletons) survives
+      """WITH RECURSIVE tok AS (
+           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(
+             generate_series(1, greatest(len(ts) - 2, 0)),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
+           FROM tok),
+         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
+         inv AS (SELECT * FROM inv0 WHERE shingle IN (
+                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
+         cand AS (
+           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         jp AS (
+           SELECT id_a, id_b FROM (
+             SELECT id_a, id_b,
+                    len(list_intersect(sa.shs, sb.shs)) AS common,
+                    len(sa.shs) AS sza, len(sb.shs) AS szb
+             FROM cand
+             JOIN sh sa ON sa.doc_id = id_a
+             JOIN sh sb ON sb.doc_id = id_b)
+           WHERE round(common * 1.0 / (sza + szb - common), 4) >= 0.2),
+         edges AS (SELECT id_a AS a, id_b AS b FROM jp
+                   UNION SELECT id_b, id_a FROM jp),
+         reach(a, b) AS (
+           SELECT a, b FROM edges
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         clus AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
+                  FROM reach GROUP BY a),
+         tc AS (SELECT doc_id,
+                       CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
+                         x -> x <> '')) AS BIGINT) AS tc
+                FROM documents),
+         ranked AS (
+           SELECT c.doc_id,
+                  row_number() OVER (PARTITION BY c.cluster_id
+                                     ORDER BY t.tc DESC, c.doc_id ASC) AS rn
+           FROM clus c JOIN tc t USING (doc_id)),
+         dropped AS (SELECT doc_id FROM ranked WHERE rn > 1)
+         SELECT d.doc_id, d.lang FROM documents d
+         WHERE d.doc_id NOT IN (SELECT doc_id FROM dropped)"""),
 
     // Exact substring-level duplication: per-doc duplicated k-token-window
     // stats — catches boilerplate spans inside otherwise-distinct docs,
     // which document-level near-dup (q22/q24/q50) cannot. Oracle counts
     // the window text; Spark counts 8-byte xxhash64 fingerprints — equal
     // absent a ~n²/2⁶⁴ collision.
-    "q98_dup_substrings" -> ((s, dir) => {
+    QuerySpec("q98_dup_substrings", (s, dir) => {
       graft.functions.NearDup.dupSpanStats(t(s, dir, "documents"),
         "text", "doc_id", k = 8)
-    }),
+    },
+      // window text counted directly (Spark counts xxhash64 fingerprints of
+      // the same text — equal absent a 64-bit collision); range() is
+      // end-exclusive so greatest(len-6, 1) yields no windows for docs
+      // under 8 tokens; list slice ts[i:i+7] is the 1-based inclusive
+      // 8-token window, = Spark's slice(ts, i, 8)
+      """WITH t AS (
+           SELECT doc_id,
+                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
+           FROM documents),
+         w AS (
+           SELECT doc_id,
+                  unnest(list_transform(range(1, greatest(len(ts) - 6, 1)),
+                    i -> array_to_string(ts[i:i+7], ' '))) AS gram
+           FROM t),
+         pd AS (SELECT doc_id, gram, count(*) AS occ FROM w GROUP BY 1, 2),
+         g AS (SELECT gram, sum(occ) AS tot FROM pd GROUP BY 1),
+         s AS (SELECT pd.doc_id,
+                      sum(occ) AS n_windows,
+                      sum(CASE WHEN g.tot > 1 THEN occ ELSE 0 END) AS dup_windows
+               FROM pd JOIN g USING (gram) GROUP BY 1)
+         SELECT d.doc_id,
+                CAST(coalesce(s.n_windows, 0) AS BIGINT) AS n_windows,
+                CAST(coalesce(s.dup_windows, 0) AS BIGINT) AS dup_windows,
+                CASE WHEN coalesce(s.n_windows, 0) > 0
+                     THEN round(CAST(s.dup_windows AS DOUBLE) / s.n_windows, 6)
+                END AS dup_frac
+         FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id"""),
 
     // Canonical text + sha256 key: the case/punctuation-insensitive exact
     // dedup key (CCNet normalization). Pure map-side string ops.
-    "q99_canonical_text" -> ((s, dir) => {
+    QuerySpec("q99_canonical_text", (s, dir) => {
       val canon = graft.functions.TextAnalysis.canonicalize(col("text"))
       t(s, dir, "documents").select(col("doc_id"), canon.as("canon_text"),
         sha2(canon, 256).as("canon_sha"))
-    }),
+    },
+      // same three rewrites in the same order; 'g' flag = Spark's
+      // replace-all default
+      """SELECT doc_id,
+                trim(regexp_replace(
+                  regexp_replace(lower(coalesce(text, '')), '[^a-z0-9 ]', ' ', 'g'),
+                  ' +', ' ', 'g')) AS canon_text,
+                sha256(trim(regexp_replace(
+                  regexp_replace(lower(coalesce(text, '')), '[^a-z0-9 ]', ' ', 'g'),
+                  ' +', ' ', 'g'))) AS canon_sha
+         FROM documents"""),
 
     // Incremental profile maintenance: per-lang token statistics computed
     // as two disjoint batch states MERGED (the monoid append a 100 TB
     // pipeline maintains instead of rescanning history) — the oracle
     // computes directly over the union, so a green row proves the merge
     // identity. All-integer states; finished doubles derive exactly.
-    "q100_incremental_profile" -> ((s, dir) => {
+    QuerySpec("q100_incremental_profile", (s, dir) => {
       val docs = t(s, dir, "documents")
       val tc = graft.functions.TextAnalysis.tokenCount(
         coalesce(col("text"), lit("")))
@@ -2420,17 +5030,65 @@ object SparkEntry {
         graft.functions.Corpus.profileState(batch, Seq("lang"), tc)),
         Seq("lang"))
       graft.functions.Corpus.profileFinish(merged, Seq("lang"))
-    }),
+    },
+      // the oracle aggregates the WHOLE table directly — equality with the
+      // Spark side's merged batch states is the merge-identity proof; the
+      // moments are integral so the derived doubles match bit-for-bit
+      """WITH t AS (
+           SELECT lang,
+                  CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
+                    x -> x <> '')) AS BIGINT) AS tc
+           FROM documents)
+         SELECT lang,
+                CAST(count(*) AS BIGINT) AS n_docs,
+                CAST(sum(tc) AS BIGINT) AS n_tokens,
+                round(CAST(sum(tc) AS DOUBLE) / count(*), 6) AS mean_tokens,
+                round((CAST(sum(tc * tc) AS DOUBLE)
+                       - CAST(sum(tc) AS DOUBLE) * CAST(sum(tc) AS DOUBLE) / count(*))
+                      / count(*), 6) AS var_tokens,
+                CAST(min(tc) AS BIGINT) AS min_tokens,
+                CAST(max(tc) AS BIGINT) AS max_tokens
+         FROM t GROUP BY lang"""),
 
     // PMI collocations: top multi-word expressions by pointwise mutual
     // information over adjacent bigrams — phrase mining ahead of
     // tokenizer-vocab decisions. All exchanges carry aggregated vocabulary
     // rows; the PMI double expression and the rounded-rank order are
     // engine-exact.
-    "q76_pmi_collocations" -> ((s, dir) => {
+    QuerySpec("q76_pmi_collocations", (s, dir) => {
       graft.functions.Corpus.pmiCollocations(t(s, dir, "documents"),
         "text", k = 20, minCount = 5L)
-    }),
+    },
+      // pmi evaluated in the same double expression shape as the Spark
+      // side ((c_ab/P) / ((c_a/T)·(c_b/T))), rank on the rounded value
+      """WITH tok AS (
+           SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ts
+           FROM documents),
+         uni AS (
+           SELECT unnest(ts) AS w FROM tok),
+         uc AS (SELECT w, count(*) AS c_w FROM uni GROUP BY w),
+         big AS (
+           SELECT unnest(list_transform(
+             generate_series(1, greatest(len(ts) - 1, 0)),
+             i -> ts[i] || ' ' || ts[i+1])) AS gram
+           FROM tok),
+         bc AS (SELECT gram, count(*) AS c_ab FROM big GROUP BY gram),
+         tot AS (
+           SELECT (SELECT sum(c_w) FROM uc) AS t_tokens,
+                  (SELECT sum(c_ab) FROM bc) AS t_bigrams),
+         scored AS (
+           SELECT gram, c_ab, a.c_w AS c_a, b.c_w AS c_b,
+                  floor(ln((c_ab * 1.0 / t_bigrams) /
+                          ((a.c_w * 1.0 / t_tokens) * (b.c_w * 1.0 / t_tokens)))
+                        * 1000000.0 + 0.5) / 1000000.0 AS pmi
+           FROM bc CROSS JOIN tot
+           JOIN uc a ON a.w = string_split(gram, ' ')[1]
+           JOIN uc b ON b.w = string_split(gram, ' ')[2]
+           WHERE c_ab >= 5)
+         SELECT gram, c_ab, c_a, c_b, pmi, CAST(rnk AS BIGINT) AS rnk
+         FROM (SELECT *, row_number() OVER (ORDER BY pmi DESC, gram) AS rnk
+               FROM scored)
+         WHERE rnk <= 20"""),
 
     // Hourly event-rate anomalies: per (type, hour) counts z-scored
     // against the type's own hourly distribution — the volume-drift
@@ -2444,7 +5102,7 @@ object SparkEntry {
     // stddev anomalies: one extreme tail value shifts a mean/stddev gate
     // but leaves median/MAD untouched. Two windowed sorts share one
     // (event_type) exchange; the 5-row cut table broadcasts back.
-    "q119_mad_outliers" -> ((s, dir) => {
+    QuerySpec("q119_mad_outliers", (s, dir) => {
       val e = t(s, dir, "events").select(col("event_type"), col("event_id"), col("value"))
       val wv = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type")).orderBy(col("value"), col("event_id"))
@@ -2469,22 +5127,67 @@ object SparkEntry {
       scored.filter(col("rz") > 6)
         .select(col("event_type"), col("event_id"), col("value"),
           col("med"), col("mad"), col("rz"))
-    }),
+    },
+      // variance from integer sums (S1, S2, C) so both engines compute the
+      // identical doubles; z compared in DOUBLE space
+      // same exact-rank median/MAD (rank ceil(n/2) on (value, event_id)
+      // resp. (dev, event_id)) so both engines pick identical data values
+      """WITH ranked AS (
+           SELECT event_type, event_id, value,
+                  row_number() OVER (PARTITION BY event_type
+                                     ORDER BY value, event_id) AS rn,
+                  count(*) OVER (PARTITION BY event_type) AS n
+           FROM events),
+         med AS (
+           SELECT event_type,
+                  max(CASE WHEN rn = CAST(ceil(n / 2.0) AS BIGINT)
+                      THEN value END) AS med
+           FROM ranked GROUP BY event_type),
+         devr AS (
+           SELECT e.event_type, e.event_id, abs(e.value - m.med) AS d,
+                  row_number() OVER (PARTITION BY e.event_type
+                                     ORDER BY abs(e.value - m.med), e.event_id) AS rn,
+                  count(*) OVER (PARTITION BY e.event_type) AS n
+           FROM events e JOIN med m USING (event_type)),
+         mad AS (
+           SELECT event_type,
+                  max(CASE WHEN rn = CAST(ceil(n / 2.0) AS BIGINT)
+                      THEN d END) AS mad
+           FROM devr GROUP BY event_type)
+         SELECT e.event_type, e.event_id, e.value, m.med, x.mad,
+                round(abs(e.value - m.med) / x.mad, 4) AS rz
+         FROM events e
+         JOIN med m USING (event_type)
+         JOIN mad x USING (event_type)
+         WHERE x.mad > 0 AND round(abs(e.value - m.med) / x.mad, 4) > 6"""),
 
     // Hopping-window aggregates: 6-hour windows sliding hourly over the
     // event stream — the batch twin of the streaming sliding-window agg,
     // through Spark's built-in window() (each row contributes to its 6
     // covering windows; the expansion partial-aggregates map-side, so the
     // shuffle carries per-(window, type) partials, never 6× the rows).
-    "q118_hopping_window" -> ((s, dir) =>
+    QuerySpec("q118_hopping_window", (s, dir) =>
       t(s, dir, "events")
         .groupBy(window(col("ts"), "6 hours", "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast(dec)).cast("double").as("sum_value"))
         .select(col("w.start").as("w_start"), col("event_type"),
-          col("n_events"), col("sum_value"))),
+          col("n_events"), col("sum_value")),
+      // every event contributes to the 6 hour-aligned windows covering it:
+      // starts date_trunc(hour, ts)-5h .. date_trunc(hour, ts) — the same
+      // epoch-aligned starts Spark's window('6 hours','1 hour') computes
+      """WITH h AS (
+           SELECT event_type, value,
+                  unnest(generate_series(date_trunc('hour', ts) - INTERVAL 5 HOUR,
+                                         date_trunc('hour', ts),
+                                         INTERVAL 1 HOUR)) AS w_start
+           FROM events)
+         SELECT w_start, event_type,
+                count(*) AS n_events,
+                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+         FROM h GROUP BY 1, 2"""),
 
-    "q77_rate_anomaly" -> ((s, dir) => {
+    QuerySpec("q77_rate_anomaly", (s, dir) => {
       val hourly = t(s, dir, "events")
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour_ts"))
         .agg(count(lit(1)).as("n"))
@@ -2500,22 +5203,38 @@ object SparkEntry {
           sqrt(col("variance")), 4))
         .filter(abs(col("z")) > 2.0)
         .select(col("event_type"), col("hour_ts"), col("n"), col("z"))
-    }),
+    },
+      """WITH hourly AS (
+           SELECT event_type, date_trunc('hour', ts) AS hour_ts, count(*) AS n
+           FROM events GROUP BY 1, 2),
+         stats AS (
+           SELECT event_type, sum(n) AS s1, sum(n * n) AS s2, count(*) AS c
+           FROM hourly GROUP BY event_type),
+         z AS (
+           SELECT h.event_type, h.hour_ts, h.n,
+                  round((h.n * 1.0 - s1 * 1.0 / c) /
+                    sqrt(s2 * 1.0 / c - (s1 * 1.0 / c) * (s1 * 1.0 / c)), 4) AS z,
+                  s2 * 1.0 / c - (s1 * 1.0 / c) * (s1 * 1.0 / c) AS variance
+           FROM hourly h JOIN stats s ON h.event_type = s.event_type)
+         SELECT event_type, hour_ts, n, z FROM z
+         WHERE variance > 0 AND abs(z) > CAST(2.0 AS DOUBLE)"""),
 
     // Distinct aggregation + conditional counts per group.
-    "q31_distinct_agg" -> ((s, dir) => {
+    QuerySpec("q31_distinct_agg", (s, dir) => {
       t(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(
           countDistinct(col("user_id")).as("n_users"),
           count(lit(1)).as("n_events"),
           count(when(col("value") > 100.0, 1)).as("n_large"))
-    }),
+    },
+      """SELECT event_type,
+                count(DISTINCT user_id) AS n_users,
+                count(*) AS n_events,
+                count(CASE WHEN value > 100.0 THEN 1 END) AS n_large
+         FROM events GROUP BY event_type"""),
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
   /** q124's oracle, generated so the quantized DCG discount constants are
     * interpolated from [[graft.functions.Retrieval.dcgGains]] — the SAME
     * longs the Spark side ships; neither engine runs `ln` at query time.
@@ -2585,3045 +5304,4 @@ object SparkEntry {
         ${blocks.mkString(",\n        ")}
         ${selects.mkString("\n        UNION ALL\n        ")}"""
   }
-
-  def oracleSql: Map[String, String] = Map(
-    "q124_retrieval_metrics" -> retrievalMetricsOracle,
-    "q14_watermark_advance" ->
-      """SELECT greatest(max(ts), TIMESTAMP '2024-01-20 00:00:00') AS last_success_time
-         FROM events""",
-
-    "q05_incremental_scan" ->
-      """SELECT event_id, ts, user_id, event_type, value FROM events
-         WHERE ts > TIMESTAMP '2024-01-20 00:00:00'""",
-
-    "q06_page" ->
-      """SELECT event_id, user_id, event_type FROM events
-         WHERE ts > TIMESTAMP '2024-01-10 00:00:00'
-         ORDER BY ts, event_id LIMIT 200 OFFSET 100""",
-
-    "q07_page_envelope" ->
-      """SELECT 200 AS page_limit, 100 AS page_offset, count(*) AS total_count
-         FROM events WHERE ts > TIMESTAMP '2024-01-10 00:00:00'""",
-
-    "q08_dedup_keeplast" ->
-      """SELECT user_id, event_type, event_id, ts FROM events
-         QUALIFY row_number() OVER (PARTITION BY user_id, event_type
-                                    ORDER BY ts DESC, event_id DESC) = 1""",
-
-    "q04_latest_state" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-                value AS last_value, ts AS last_ts
-         FROM events
-         QUALIFY row_number() OVER (PARTITION BY user_id
-                                    ORDER BY ts DESC, event_id DESC) = 1""",
-
-    "q09_history_delta" ->
-      """SELECT event_id, user_id, ts, event_type FROM events
-         WHERE ts > TIMESTAMP '2024-01-25 00:00:00' AND event_id % 3 <> 0""",
-
-    // bloom is a pre-filter only — the exact anti-join semantics (and so
-    // the oracle) are identical to q09's
-    "q64_bloom_delta" ->
-      """SELECT event_id, user_id, ts, event_type FROM events
-         WHERE ts > TIMESTAMP '2024-01-25 00:00:00' AND event_id % 3 <> 0""",
-
-    "q10_latest_upsert" ->
-      """WITH existing AS (
-           SELECT event_id, ts, user_id, event_type, value, props
-           FROM events WHERE event_id % 2 = 0
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY ts DESC, event_id DESC) = 1),
-         incoming AS (
-           SELECT event_id, ts, user_id, event_type, value, props
-           FROM events WHERE event_id % 2 = 1),
-         u AS (
-           SELECT *, 1 AS is_existing FROM existing
-           UNION ALL
-           SELECT *, 0 AS is_existing FROM incoming)
-         SELECT event_id, ts, user_id, event_type, value, props FROM u
-         QUALIFY row_number() OVER (PARTITION BY user_id
-                                    ORDER BY ts DESC, is_existing DESC, event_id DESC) = 1""",
-
-    "q11_payload_hash" ->
-      """SELECT n_nationkey,
-                CAST(to_json(struct_pack(n_name := n_name, n_nationkey := n_nationkey,
-                                         n_regionkey := n_regionkey)) AS VARCHAR) AS payload,
-                sha256(CAST(to_json(struct_pack(n_name := n_name, n_nationkey := n_nationkey,
-                                                n_regionkey := n_regionkey)) AS VARCHAR))
-                  AS payload_hash
-         FROM nation""",
-
-    "q12_normalize_time" ->
-      """SELECT event_id,
-                CAST(strftime(ts, '%Y-%m-%dT%H:%M:%S') AS TIMESTAMP) AS updated_at,
-                CAST(strftime(ts, '%Y-%m-%d') AS DATE) AS event_date
-         FROM events""",
-
-    "q13_flatten_json" ->
-      """SELECT user_id,
-                CAST(to_json(list(struct_pack(event_id := event_id, event_type := event_type)
-                             ORDER BY event_id)) AS VARCHAR) AS lines_json
-         FROM events GROUP BY user_id""",
-
-    "q16_validation" ->
-      """SELECT count(*) AS rows_total,
-                count(CASE WHEN event_type IS NULL OR user_id IS NULL THEN 1 END) AS rows_invalid
-         FROM events""",
-
-    "q15_status_machine" ->
-      """SELECT o_orderstatus AS status,
-                CASE WHEN o_orderstatus = 'O' THEN 'P'
-                     WHEN o_orderstatus = 'P' THEN 'F'
-                     ELSE o_orderstatus END AS next_status,
-                count(*) AS n
-         FROM orders GROUP BY 1, 2""",
-
-    "q01_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS sum_disc_price,
-                count(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-
-    "q02_join_revenue" ->
-      """SELECT r_name,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
-                count(*) AS n_items
-         FROM lineitem
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name""",
-
-    "q03_topk_customers" ->
-      """SELECT o_custkey,
-                CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_spend,
-                count(*) AS n_orders
-         FROM orders GROUP BY o_custkey
-         ORDER BY sum(CAST(o_totalprice AS DECIMAL(18,4))) DESC, o_custkey LIMIT 10""",
-
-    "q17_token_count" ->
-      """SELECT doc_id, len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens
-         FROM documents""",
-
-    "q56_token_count_bpe" ->
-      """SELECT doc_id,
-                len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_words,
-                len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]+')) AS n_bpe
-         FROM documents""",
-
-    "q18_text_quality" ->
-      """WITH tok AS (
-           SELECT doc_id, text, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents)
-         SELECT doc_id,
-                length(text) AS n_chars,
-                len(ts) AS n_tokens,
-                length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g')) AS n_punct,
-                len(list_filter(ts, x -> x IN ('the','a','an','and','of','to','in','is',
-                                               'that','it','for','on'))) AS n_stopwords,
-                round(len(list_filter(ts, x -> x IN ('the','a','an','and','of','to','in','is',
-                                                     'that','it','for','on'))) * 1.0
-                      / len(ts), 4) AS stop_ratio
-         FROM tok""",
-
-    "q19_lang_id" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         scored AS (
-           SELECT doc_id,
-             len(list_filter(ts, x -> x IN ('the','a','and','of','to','in','is','that'))) AS n_en,
-             len(list_filter(ts, x -> x IN ('der','die','das','und','nicht','ein','zu','ist'))) AS n_de,
-             len(list_filter(ts, x -> x IN ('el','la','los','que','y','un','es','por'))) AS n_es,
-             len(list_filter(ts, x -> x IN ('le','les','et','dans','est','une','pour','sur'))) AS n_fr
-           FROM tok)
-         SELECT doc_id, n_en, n_de, n_es, n_fr,
-                CASE WHEN n_en + n_de + n_es + n_fr = 0 THEN 'other'
-                     WHEN n_en >= n_de AND n_en >= n_es AND n_en >= n_fr THEN 'en'
-                     WHEN n_de > n_en AND n_de >= n_es AND n_de >= n_fr THEN 'de'
-                     WHEN n_es > n_en AND n_es > n_de AND n_es >= n_fr THEN 'es'
-                     ELSE 'fr' END AS pred_lang
-         FROM scored""",
-
-    "q20_fingerprint" ->
-      """SELECT doc_id, md5(trim(lower(regexp_replace(text, '\s+', ' ', 'g')))) AS fingerprint
-         FROM documents""",
-
-    "q21_dedup_exact" ->
-      """SELECT sha256(text) AS text_hash, min(doc_id) AS doc_id, count(*) AS dup_count
-         FROM documents GROUP BY sha256(text)""",
-
-    // the pruned index only GENERATES candidates; common/jaccard come from
-    // the full shingle sets (prune truncates recall, never a pair's value)
-    "q22_ngram_jaccard" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         inv AS (SELECT * FROM inv0 WHERE shingle IN (
-                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
-         pairs AS (
-           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-         scored AS (
-           SELECT id_a, id_b,
-                  len(list_intersect(sa.shs, sb.shs)) AS common,
-                  len(sa.shs) AS size_a, len(sb.shs) AS size_b
-           FROM pairs
-           JOIN sh sa ON sa.doc_id = id_a
-           JOIN sh sb ON sb.doc_id = id_b)
-         SELECT id_a, id_b, common, size_a, size_b,
-                round(common * 1.0 / (size_a + size_b - common), 4) AS jaccard
-         FROM scored
-         WHERE round(common * 1.0 / (size_a + size_b - common), 4) >= 0.2""",
-
-    // exact all-pairs Jaccard at the q24 threshold — the minhash banding
-    // path must reproduce it exactly (100% recall pinned in TrainingOpsSpec;
-    // precision exact by construction). No hot-shingle prune here: a pair
-    // with jaccard > 0 shares a shingle by definition, so the unpruned
-    // inverted index IS the exact form.
-    "q24_minhash_neardup" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
-         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         pairs AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS common
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b,
-                round(common * 1.0 / (sa.sz + sb.sz - common), 4) AS jaccard
-         FROM pairs
-         JOIN sizes sa ON sa.doc_id = id_a
-         JOIN sizes sb ON sb.doc_id = id_b
-         WHERE round(common * 1.0 / (sa.sz + sb.sz - common), 4) >= 0.1""",
-
-    // the LSH ANN must reproduce the exact top-k (bucket candidates cover
-    // portable md5-prefix hashes re-derived by nibble parsing (the q52/q110
-    // discipline): 12 hex chars (48 bits) per token, Rabin-Karp fold mod
-    // 2^31-1 — byte-identical to rollingHashPortable's conv/md5 chain
-    "q28_rolling_hash" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         h AS (
-           SELECT doc_id, list_transform(ts, t ->
-             list_reduce(list_prepend(0::BIGINT, list_transform(generate_series(1, 12),
-               i -> (strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1)::BIGINT)),
-               (a, x) -> a * 16 + x) % 2147483647) AS hs
-           FROM tok)
-         SELECT doc_id,
-                list_reduce(list_prepend(0::BIGINT, hs),
-                  (a, x) -> (a * 1000003 + x) % 2147483647) AS rhash
-         FROM h""",
-
-    // every bit vote re-derived relationally: 15-hex-char (60-bit) md5
-    // prefix per token occurrence, per-bit ±1 vote sums, sign → signature
-    "q25_simhash" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  unnest(list_filter(string_split(coalesce(text, ''), ' '),
-                    x -> x <> '')) AS t
-           FROM documents),
-         h AS (
-           SELECT doc_id,
-                  list_reduce(list_prepend(0::BIGINT, list_transform(generate_series(1, 15),
-                    i -> (strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1)::BIGINT)),
-                    (a, x) -> a * 16 + x) AS h
-           FROM tok),
-         bits AS (
-           SELECT doc_id, b.j,
-                  sum(CASE WHEN (h // (1::BIGINT << b.j)) % 2 = 1 THEN 1 ELSE -1 END) AS v
-           FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS j) b
-           GROUP BY 1, 2),
-         sig AS (
-           SELECT doc_id, sum(CASE WHEN v > 0 THEN (1::BIGINT << j) ELSE 0 END) AS simhash
-           FROM bits GROUP BY 1)
-         SELECT d.doc_id, CAST(coalesce(s.simhash, 0) AS BIGINT) AS simhash
-         FROM documents d LEFT JOIN sig s ON d.doc_id = s.doc_id""",
-
-    // the true top-5 at the pinned params; same ranking expression) — the
-    // oracle is exactly q23's SQL
-    "q26_ann_lsh" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-                    FROM embeddings WHERE vec_id < 8),
-         c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-               FROM embeddings),
-         scored AS (
-           SELECT query_id, neighbor_id, list_cosine_similarity(qv, cv) AS sim
-           FROM q, c WHERE query_id <> neighbor_id),
-         ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY query_id
-                                        ORDER BY sim DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, neighbor_id, rank, round(sim, 6) AS sim
-         FROM ranked WHERE rank <= 5""",
-
-    "q51_metadata" ->
-      """SELECT n_nationkey, 'run-0001' AS _run_id,
-                TIMESTAMP '2024-01-15 00:00:00' AS _extracted_at,
-                TIMESTAMP '2024-01-10 00:00:00' AS _watermark_effective
-         FROM nation""",
-
-    "q23_knn_cosine" -> knnExactTop5Sql,
-
-    // q32/q42 (round-10 graduation from rows-only): the emitted rows are
-    // the EXACT top-k — the IVF / IVF-PQ subplan gates the output in-plan
-    // on recall against that exact set (annFenced; floors 0.55/0.45
-    // under the measured 0.55–0.75 band, broken-index recall ≈ 0.003)
-    // — so the oracle
-    // is exactly q23's SQL; an ANN regression empties the result and the
-    // driver's row-count check goes red
-    "q32_ann_ivf" -> knnExactTop5Sql,
-    "q42_ann_ivfpq" -> knnExactTop5Sql,
-
-    "q29_running_total" ->
-      """SELECT user_id, event_id,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) OVER (
-                  PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value,
-                row_number() OVER (
-                  PARTITION BY user_id ORDER BY ts, event_id) AS seq
-         FROM events WHERE user_id < 20""",
-
-    "q30_rollup_revenue" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-                count(*) AS n
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-
-    "q33_embed_stats" ->
-      """WITH flat AS (
-           SELECT label,
-                  generate_subscripts(embedding, 1) - 1 AS pos,
-                  unnest(embedding) AS v
-           FROM embeddings)
-         SELECT label, pos,
-                CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(18,4))) AS DOUBLE) AS sum_v,
-                count(*) AS n
-         FROM flat GROUP BY label, pos""",
-
-    // q35 emits the EXACT distinct counts (the builtin HLL sketch only
-    // gates them in-plan — see the queries entry), so the oracle is plain
-    // relational COUNT(DISTINCT)
-    "q35_approx_distinct" ->
-      """SELECT event_type, count(DISTINCT user_id) AS distinct_users,
-                count(*) AS n_events
-         FROM events GROUP BY event_type""",
-
-    // threshold compared as DOUBLE on both sides: a bare 0.4 literal is
-    // DECIMAL(1,1) in DuckDB, and decimal-space comparison drops pairs whose
-    // rounded sim is exactly 0.400000 (the nearest double to 0.4 is below it)
-    "q34_cosine_neardup" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings)
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                round(list_cosine_similarity(a.ev, b.ev), 6) AS sim
-         FROM v a JOIN v b ON a.vec_id < b.vec_id
-         WHERE round(list_cosine_similarity(a.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE)""",
-
-    // the LSH path must reproduce the exact form's result set (100% recall
-    // at the pinned parameters on gate data; precision is exact by
-    // construction — candidates are verified with the exact cosine)
-    "q50_cosine_neardup_lsh" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings)
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                round(list_cosine_similarity(a.ev, b.ev), 6) AS sim
-         FROM v a JOIN v b ON a.vec_id < b.vec_id
-         WHERE round(list_cosine_similarity(a.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE)""",
-
-    "q36_asof_join" ->
-      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
-                    WHERE event_type = 'purchase'),
-         c AS (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'click')
-         SELECT p.event_id, p.user_id, p.ts, p.value,
-                c.event_id AS prev_click_id, c.ts AS prev_click_ts
-         FROM p LEFT JOIN c ON p.user_id = c.user_id AND c.ts <= p.ts
-         QUALIFY row_number() OVER (PARTITION BY p.event_id
-                                    ORDER BY c.ts DESC, c.event_id DESC) = 1""",
-
-    "q37_range_join" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events
-                    WHERE event_type = 'purchase'),
-         e AS (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'error')
-         SELECT p.event_id, p.user_id, count(e.event_id) AS n_errors
-         FROM p LEFT JOIN e ON p.user_id = e.user_id
-           AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL 24 HOURS
-         GROUP BY p.event_id, p.user_id""",
-
-    "q38_sessionize" ->
-      """WITH e AS (SELECT user_id, ts, event_id, value FROM events WHERE user_id < 50),
-         flagged AS (
-           SELECT user_id, ts, event_id, value,
-                  CASE WHEN lag(ts) OVER w IS NULL
-                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 14400000000
-                       THEN 1 ELSE 0 END AS is_start
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         tagged AS (
-           SELECT *, sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-           FROM flagged)
-         SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, min(ts) AS session_start,
-                max(ts) AS session_end, count(*) AS n_events,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM tagged GROUP BY user_id, session_seq""",
-
-    "q39_percentile" ->
-      """WITH ranked AS (
-           SELECT event_type, value,
-                  row_number() OVER (PARTITION BY event_type
-                                     ORDER BY value, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type) AS n
-           FROM events)
-         SELECT event_type,
-                max(CASE WHEN rn = ceil(CAST(0.5 AS DOUBLE) * n) THEN value END) AS p50,
-                max(CASE WHEN rn = ceil(CAST(0.9 AS DOUBLE) * n) THEN value END) AS p90,
-                max(n) AS n_events
-         FROM ranked GROUP BY event_type""",
-
-    "q40_pivot" ->
-      """SELECT user_id,
-                count(CASE WHEN event_type = 'click' THEN 1 END) AS n_click,
-                count(CASE WHEN event_type = 'error' THEN 1 END) AS n_error,
-                count(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_purchase,
-                count(CASE WHEN event_type = 'signup' THEN 1 END) AS n_signup,
-                count(CASE WHEN event_type = 'view' THEN 1 END) AS n_view
-         FROM events WHERE user_id < 50 GROUP BY user_id""",
-
-    "q41_histogram" ->
-      """SELECT event_type,
-                CAST(least(floor(value / 50.0), 19.0) AS BIGINT) AS bucket,
-                count(*) AS n
-         FROM events GROUP BY 1, 2""",
-
-    "q46_trailing_window" ->
-      """SELECT user_id, event_id, ts,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS trailing_24h,
-                count(*) OVER w AS n_24h
-         FROM events WHERE user_id < 20
-         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-                      RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)""",
-
-    "q47_cube" ->
-      """SELECT event_type, user_id % 10 AS user_mod, count(*) AS n,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY CUBE (event_type, user_id % 10)""",
-
-    // transitive closure via recursive CTE — exact for the gate's small
-    // components; the Spark side must produce identical min-labeling
-    "q48_dedup_clusters" ->
-      """WITH RECURSIVE tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         inv AS (SELECT * FROM inv0 WHERE shingle IN (
-                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
-         cand AS (
-           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-         jp AS (
-           SELECT id_a, id_b FROM (
-             SELECT id_a, id_b,
-                    len(list_intersect(sa.shs, sb.shs)) AS common,
-                    len(sa.shs) AS sza, len(sb.shs) AS szb
-             FROM cand
-             JOIN sh sa ON sa.doc_id = id_a
-             JOIN sh sb ON sb.doc_id = id_b)
-           WHERE round(common * 1.0 / (sza + szb - common), 4) >= 0.2),
-         edges AS (SELECT id_a AS a, id_b AS b FROM jp
-                   UNION SELECT id_b, id_a FROM jp),
-         reach(a, b) AS (
-           SELECT a, b FROM edges
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
-         SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-         FROM reach GROUP BY a""",
-
-    // exact all-pairs cosine edges + recursive-CTE closure; survivors are
-    // vectors that are their own component minimum (or untouched by pairs)
-    "q65_semantic_dedup" ->
-      """WITH RECURSIVE v AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev, label FROM embeddings),
-         jp AS (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b
-           FROM v a JOIN v b ON a.vec_id < b.vec_id
-           WHERE round(list_cosine_similarity(a.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE)),
-         edges AS (SELECT id_a AS a, id_b AS b FROM jp
-                   UNION SELECT id_b, id_a FROM jp),
-         reach(a, b) AS (
-           SELECT a, b FROM edges
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         comp AS (
-           SELECT a AS vec_id, least(a, min(b)) AS component
-           FROM reach GROUP BY a),
-         dropped AS (SELECT vec_id FROM comp WHERE vec_id <> component)
-         SELECT vec_id, CAST(label AS BIGINT) AS label FROM v
-         WHERE vec_id NOT IN (SELECT vec_id FROM dropped)""",
-
-    // per-bucket ln-ratio quantized to integer 1e-10 units via the
-    // portable floor-form (bucket = first two md5 hex chars of the
-    // token), per-doc score = exact integer sum — order-free both engines
-    "q122_dsir_weights" ->
-      """WITH tok AS (
-           SELECT doc_id, lang = 'en' AS is_t,
-                  unnest(list_filter(string_split(coalesce(text, ''), ' '),
-                    x -> x <> '')) AS token
-           FROM documents),
-         b AS (
-           SELECT doc_id, is_t,
-                  ((strpos('0123456789abcdef', substr(md5(token), 1, 1)) - 1) * 16 +
-                   (strpos('0123456789abcdef', substr(md5(token), 2, 1)) - 1))
-                    AS bk
-           FROM tok),
-         per_doc AS (SELECT doc_id, bk, count(*) AS c_db FROM b GROUP BY 1, 2),
-         per_bucket AS (
-           SELECT bk, count(*) AS c_r,
-                  sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS c_t
-           FROM b GROUP BY 1),
-         tot AS (SELECT sum(c_r) AS t_r, sum(c_t) AS t_t FROM per_bucket),
-         lr AS (
-           SELECT bk, CAST(floor(ln(
-                    ((c_t + 1) * 1.0 / (t.t_t + 256)) /
-                    ((c_r + 1) * 1.0 / (t.t_r + 256)))
-                  * 10000000000.0 + 0.5) AS BIGINT) AS lrq
-           FROM per_bucket CROSS JOIN tot t)
-         SELECT d.doc_id, CAST(sum(d.c_db) AS BIGINT) AS n_tokens,
-                floor((CAST(sum(d.c_db * l.lrq) AS DOUBLE) / 10000000000.0)
-                      * 1000000.0 + 0.5) / 1000000.0 AS log_weight
-         FROM per_doc d JOIN lr l USING (bk)
-         GROUP BY 1""",
-
-    // same nano-unit quantization (portable floor-form) → exact long sums
-    // → one division → portable 6-digit round; floats are exact in double
-    "q121_chunk_meanpool" ->
-      """SELECT vec_id // 8 AS doc, CAST(p.i - 1 AS BIGINT) AS pos,
-                floor((CAST(sum(CAST(floor(CAST(embedding[p.i] AS DOUBLE)
-                                           * 1000000000.0 + 0.5) AS BIGINT))
-                            AS DOUBLE)
-                       / (count(*) * 1000000000.0))
-                      * 1000000.0 + 0.5) / 1000000.0 AS mean
-         FROM embeddings, (SELECT unnest(range(1, 65)) AS i) p
-         GROUP BY 1, 2""",
-
-    // greedy prefix under a 2/5-of-total token budget, priority
-    // (score DESC, doc_id ASC); the oracle's single global window mirrors
-    // the Spark side's two-level bucket prefix sum row-for-row
-    "q123_budget_select" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         b AS (
-           SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
-                  CAST(floor(len(list_filter(ts, x -> x IN
-                         ('the','a','an','and','of','to','in','is',
-                          'that','it','for','on'))) * 1000.0
-                       / len(ts)) AS BIGINT) AS score
-           FROM tok WHERE len(ts) > 0),
-         c AS (
-           SELECT doc_id, score, n_tokens,
-                  sum(n_tokens) OVER (ORDER BY score DESC, doc_id ASC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens,
-                  sum(n_tokens) OVER () AS total
-           FROM b)
-         SELECT doc_id, score, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
-         FROM c WHERE cum_tokens <= total * 2 // 5""",
-
-    // local-recoding k-anonymity ladder (k = 20) over
-    // (source, lang, 200-char band): level = fewest trailing '*'s whose
-    // published prefix crowd reaches k, counted over the whole corpus
-    "q125_kanon_release" ->
-      """WITH b AS (
-           SELECT doc_id, CAST(source AS VARCHAR) AS source,
-                  CAST(lang AS VARCHAR) AS lang,
-                  CAST(n_chars // 200 AS VARCHAR) AS len_band
-           FROM documents),
-         c0 AS (SELECT source, lang, len_band, count(*) AS n0 FROM b GROUP BY 1, 2, 3),
-         c1 AS (SELECT source, lang, count(*) AS n1 FROM b GROUP BY 1, 2),
-         c2 AS (SELECT source, count(*) AS n2 FROM b GROUP BY 1),
-         c3 AS (SELECT count(*) AS n3 FROM b),
-         lv AS (
-           SELECT doc_id, b.source, b.lang, b.len_band,
-                  CASE WHEN n0 >= 20 THEN 0 WHEN n1 >= 20 THEN 1
-                       WHEN n2 >= 20 THEN 2 ELSE 3 END AS lvl
-           FROM b
-           JOIN c0 USING (source, lang, len_band)
-           JOIN c1 USING (source, lang)
-           JOIN c2 USING (source)
-           CROSS JOIN c3)
-         SELECT doc_id,
-                CASE WHEN lvl <= 2 THEN source ELSE '*' END AS source,
-                CASE WHEN lvl <= 1 THEN lang ELSE '*' END AS lang,
-                CASE WHEN lvl <= 0 THEN len_band ELSE '*' END AS len_band,
-                CAST(lvl AS INT) AS anon_level
-         FROM lv""",
-
-    // q59's eval×corpus CTEs with the set label folded into the final
-    // per-(corpus doc, set) aggregate; round(…,4) on positive Jaccards
-    // matches the portable floor-form byte-for-byte
-    "q130_multiset_contamination" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
-         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         cand AS (
-           SELECT e.doc_id AS id_a, c.doc_id AS id_b, count(*) AS common
-           FROM inv e JOIN inv c ON e.shingle = c.shingle
-            AND e.doc_id % 13 = 0 AND c.doc_id % 13 <> 0
-           GROUP BY 1, 2),
-         pr AS (
-           SELECT id_a, id_b,
-                  round(common * 1.0 / (se.sz + sc.sz - common), 4) AS j
-           FROM cand
-           JOIN sizes se ON se.doc_id = id_a
-           JOIN sizes sc ON sc.doc_id = id_b
-           WHERE round(common * 1.0 / (se.sz + sc.sz - common), 4)
-                   >= CAST(0.03 AS DOUBLE))
-         SELECT id_b AS doc_id,
-                CASE WHEN id_a % 26 = 0 THEN 'benchA' ELSE 'benchB' END AS eval_set,
-                CAST(count(*) AS BIGINT) AS n_overlaps,
-                max(j) AS max_jaccard
-         FROM pr GROUP BY 1, 2""",
-
-    // exact long sums; the scalar ratio through the shared floor-round
-    "q131_char_fertility" ->
-      """SELECT lang, count(*) AS n_docs,
-                CAST(sum(length(text)) AS BIGINT) AS n_chars,
-                CAST(sum(len(list_filter(string_split(text, ' '),
-                                         x -> x <> ''))) AS BIGINT)
-                  AS n_words,
-                CASE WHEN sum(len(list_filter(string_split(text, ' '),
-                                              x -> x <> ''))) > 0 THEN
-                  floor((CAST(sum(length(text)) AS DOUBLE)
-                         / CAST(sum(len(list_filter(string_split(text, ' '),
-                                                    x -> x <> ''))) AS DOUBLE))
-                        * 1000000.0 + 0.5) / 1000000.0
-                END AS chars_per_word
-         FROM documents GROUP BY lang""",
-
-    // q48's clusters (shared CTE chain), histogrammed by size
-    "q132_cluster_size_hist" ->
-      """WITH RECURSIVE tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         inv AS (SELECT * FROM inv0 WHERE shingle IN (
-                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
-         cand AS (
-           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-         jp AS (
-           SELECT id_a, id_b FROM (
-             SELECT id_a, id_b,
-                    len(list_intersect(sa.shs, sb.shs)) AS common,
-                    len(sa.shs) AS sza, len(sb.shs) AS szb
-             FROM cand
-             JOIN sh sa ON sa.doc_id = id_a
-             JOIN sh sb ON sb.doc_id = id_b)
-           WHERE round(common * 1.0 / (sza + szb - common), 4) >= 0.2),
-         edges AS (SELECT id_a AS a, id_b AS b FROM jp
-                   UNION SELECT id_b, id_a FROM jp),
-         reach(a, b) AS (
-           SELECT a, b FROM edges
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         cl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-                FROM reach GROUP BY a)
-         SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
-                CAST(count(*) AS BIGINT) AS n_clusters
-         FROM (SELECT cluster_id, count(*) AS cluster_size
-               FROM cl GROUP BY cluster_id)
-         GROUP BY cluster_size""",
-
-    "q133_template_sources" ->
-      """WITH tok AS (
-           SELECT doc_id, source,
-                  list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         p AS (SELECT DISTINCT md5(array_to_string(ts[1:20], ' ')) AS pfx, source
-               FROM tok)
-         SELECT a.source AS source_a, b.source AS source_b,
-                CAST(count(*) AS BIGINT) AS n_shared_prefixes
-         FROM p a JOIN p b ON a.pfx = b.pfx AND a.source < b.source
-         GROUP BY 1, 2""",
-
-    "q134_prefix_dup" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents)
-         SELECT md5(array_to_string(ts[1:20], ' ')) AS prefix_hash,
-                CAST(count(*) AS BIGINT) AS n_docs,
-                min(doc_id) AS exemplar
-         FROM tok GROUP BY 1 HAVING count(*) > 1""",
-
-    // q38's window discipline at gap = the interval length; all-integer
-    // epoch-microsecond arithmetic, hash-exact by construction
-    "q136_interval_coverage" ->
-      """WITH e AS (SELECT user_id, ts, event_id FROM events WHERE user_id < 100),
-         flagged AS (
-           SELECT user_id, ts, event_id,
-                  CASE WHEN lag(ts) OVER w IS NULL
-                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 3600000000
-                       THEN 1 ELSE 0 END AS is_start
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         tagged AS (
-           SELECT *, sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
-           FROM flagged),
-         sess AS (SELECT user_id, seq, min(ts) AS st, max(ts) AS en
-                  FROM tagged GROUP BY 1, 2)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n_intervals,
-                CAST(sum(epoch_us(en) - epoch_us(st) + 3600000000) AS BIGINT)
-                  AS covered_micros
-         FROM sess GROUP BY user_id""",
-
-    // exact decile sums via the q57 ntile parity; one floor-rounded ratio
-    "q137_lorenz_deciles" ->
-      """WITH b AS (
-           SELECT doc_id, source,
-                  CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
-                       AS BIGINT) AS tok
-           FROM documents),
-         d AS (
-           SELECT source, tok,
-                  CAST(ntile(10) OVER (PARTITION BY source
-                                       ORDER BY tok ASC, doc_id ASC)
-                       AS BIGINT) AS decile
-           FROM b),
-         g AS (SELECT source, decile, sum(tok) AS dec_tokens
-               FROM d GROUP BY 1, 2),
-         c AS (
-           SELECT source, decile, dec_tokens,
-                  sum(dec_tokens) OVER (PARTITION BY source ORDER BY decile
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS cum_tokens,
-                  sum(dec_tokens) OVER (PARTITION BY source) AS total_tokens
-           FROM g)
-         SELECT source, decile, CAST(dec_tokens AS BIGINT) AS dec_tokens,
-                CAST(cum_tokens AS BIGINT) AS cum_tokens,
-                CASE WHEN total_tokens > 0 THEN
-                  floor((CAST(cum_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE))
-                        * 1000000.0 + 0.5) / 1000000.0
-                END AS cum_share
-         FROM c""",
-
-    "q138_type_token_ratio" ->
-      """WITH b AS (
-           SELECT doc_id,
-                  CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
-                       AS BIGINT) AS n_tokens,
-                  CAST(len(list_distinct(list_filter(string_split(text, ' '),
-                                                     x -> x <> '')))
-                       AS BIGINT) AS vocab
-           FROM documents)
-         SELECT doc_id, n_tokens, vocab,
-                CASE WHEN n_tokens > 0 THEN
-                  floor((CAST(vocab AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-                        * 1000000.0 + 0.5) / 1000000.0
-                END AS ttr
-         FROM b""",
-
-    // lower median as an order statistic over integer micros — `//` is
-    // DuckDB's floor division, matching Spark's `div`
-    "q140_interevent_median" ->
-      """WITH e AS (SELECT user_id, ts, event_id FROM events WHERE user_id < 100),
-         g AS (
-           SELECT user_id, event_id,
-                  epoch_us(ts) - epoch_us(lag(ts) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id)) AS gap
-           FROM e),
-         f AS (SELECT * FROM g WHERE gap IS NOT NULL),
-         rk AS (
-           SELECT user_id, gap,
-                  row_number() OVER (PARTITION BY user_id
-                                     ORDER BY gap ASC, event_id ASC) AS rk,
-                  count(*) OVER (PARTITION BY user_id) AS n
-           FROM f)
-         SELECT user_id, CAST(n AS BIGINT) AS n_gaps,
-                CAST(gap AS BIGINT) AS median_gap_micros
-         FROM rk WHERE rk = (n + 1) // 2""",
-
-    // exact integer daily counts; identical double op order
-    // ((n·Σx² − (Σx)²)/(n·Σx)), then the shared floor-round
-    "q139_event_dispersion" ->
-      """WITH d AS (
-           SELECT event_type, date_trunc('day', ts) AS day_ts,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2),
-         g AS (
-           SELECT event_type, count(*) AS n_days, sum(x) AS n_events,
-                  sum(x * x) AS sum_sq
-           FROM d GROUP BY event_type)
-         SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
-                CAST(n_events AS BIGINT) AS n_events,
-                CAST(sum_sq AS BIGINT) AS sum_sq,
-                CASE WHEN n_events > 0 THEN
-                  floor(((CAST(n_days AS DOUBLE) * CAST(sum_sq AS DOUBLE)
-                          - CAST(n_events AS DOUBLE) * CAST(n_events AS DOUBLE))
-                         / (CAST(n_days AS DOUBLE) * CAST(n_events AS DOUBLE)))
-                        * 1000000.0 + 0.5) / 1000000.0
-                END AS vmr
-         FROM g""",
-
-    // rank-weighted exact integer sums; identical double op order to the
-    // Spark side ((2·rw)/(n·s) − (n+1)/n), then the shared floor-round
-    "q135_token_gini" ->
-      """WITH b AS (
-           SELECT doc_id, source,
-                  CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
-                       AS BIGINT) AS tok
-           FROM documents),
-         r AS (
-           SELECT source, tok,
-                  CAST(row_number() OVER (PARTITION BY source
-                                          ORDER BY tok ASC, doc_id ASC)
-                       AS BIGINT) AS rk
-           FROM b),
-         g AS (
-           SELECT source, count(*) AS n_docs,
-                  CAST(sum(tok) AS BIGINT) AS n_tokens,
-                  CAST(sum(rk * tok) AS BIGINT) AS rank_weighted
-           FROM r GROUP BY source)
-         SELECT source, n_docs, n_tokens, rank_weighted,
-                CASE WHEN n_tokens > 0 THEN
-                  floor(((2.0 * CAST(rank_weighted AS DOUBLE))
-                         / (CAST(n_docs AS DOUBLE) * CAST(n_tokens AS DOUBLE))
-                         - (CAST(n_docs AS DOUBLE) + 1.0)
-                           / CAST(n_docs AS DOUBLE))
-                        * 1000000.0 + 0.5) / 1000000.0
-                END AS gini
-         FROM g""",
-
-    // exact integer ranks over (score, doc_id) per source; 1-row strata
-    // pin pct to 0.0
-    "q129_rank_normalize" ->
-      """WITH b AS (
-           SELECT doc_id, source,
-                  CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
-                    x -> x <> '')) AS BIGINT) AS score
-           FROM documents),
-         r AS (
-           SELECT doc_id, source, score,
-                  row_number() OVER (PARTITION BY source
-                                     ORDER BY score ASC, doc_id ASC) AS rk,
-                  count(*) OVER (PARTITION BY source) AS n
-           FROM b)
-         SELECT doc_id, source, score,
-                CASE WHEN n > 1
-                     THEN floor((CAST(rk - 1 AS DOUBLE) / (n - 1))
-                                * 1000000.0 + 0.5) / 1000000.0
-                     ELSE 0.0 END AS pct
-         FROM r""",
-
-    // per-bigram ln(c_b / c_w1·) quantized to integer 1e-10 units (CAST
-    // BIGINT is load-bearing: DuckDB floor returns DOUBLE, and a double
-    // sum of quantized terms is partition-order-sensitive again)
-    "q127_bigram_surprisal" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         bg0 AS (
-           SELECT doc_id, ts,
-                  unnest(generate_series(1, greatest(len(ts) - 1, 0))) AS i
-           FROM tok),
-         bg AS (
-           SELECT doc_id, ts[i] AS w1, ts[i] || ' ' || ts[i+1] AS bigram
-           FROM bg0),
-         cdb AS (SELECT doc_id, w1, bigram, count(*) AS c_db
-                 FROM bg GROUP BY 1, 2, 3),
-         cb AS (SELECT bigram, sum(c_db) AS c_b FROM cdb GROUP BY 1),
-         c1 AS (SELECT w1, sum(c_db) AS c_1 FROM cdb GROUP BY 1),
-         term AS (
-           SELECT d.doc_id, d.c_db,
-                  CAST(floor(ln(CAST(b.c_b AS DOUBLE) / CAST(u.c_1 AS DOUBLE))
-                             * 10000000000.0 + 0.5) AS BIGINT) AS lnq
-           FROM cdb d JOIN cb b USING (bigram) JOIN c1 u USING (w1))
-         SELECT doc_id, CAST(sum(c_db) AS BIGINT) AS n_bigrams,
-                floor((CAST(-sum(c_db * lnq) AS DOUBLE) / 10000000000.0
-                       / sum(c_db))
-                      * 1000000.0 + 0.5) / 1000000.0 AS mean_surprisal
-         FROM term GROUP BY 1""",
-
-    // exact all-pairs oracle (q50 recall argument); lang via id equi-join
-    "q128_crosslingual_pairs" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-         pairs AS (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                  round(list_cosine_similarity(a.ev, b.ev), 6) AS sim
-           FROM v a JOIN v b ON a.vec_id < b.vec_id
-           WHERE round(list_cosine_similarity(a.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE))
-         SELECT p.id_a, p.id_b, p.sim, da.lang AS lang_a, db.lang AS lang_b
-         FROM pairs p
-         JOIN documents da ON p.id_a = da.doc_id
-         JOIN documents db ON p.id_b = db.doc_id
-         WHERE da.lang <> db.lang""",
-
-    // q107's temperature CTE (α = 0.3) scheduled into a 100k-token budget
-    // with a 4-epoch cap; planned_tokens derives from the ALREADY-rounded
-    // epochs so the columns cannot disagree
-    "q126_epoch_plan" ->
-      """WITH s AS (
-           SELECT lang, count(*) AS n_docs,
-                  CAST(sum(len(list_filter(string_split(text, ' '),
-                                           x -> x <> ''))) AS BIGINT)
-                    AS n_tokens
-           FROM documents GROUP BY lang),
-         p AS (
-           SELECT lang, n_docs, n_tokens,
-                  CASE WHEN n_tokens > 0
-                       THEN pow(CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER (), 0.3)
-                       ELSE 0.0 END AS powed
-           FROM s),
-         e AS (
-           SELECT lang, n_docs, n_tokens,
-                  floor((powed / sum(powed) OVER ())
-                        * 1000000.0 + 0.5) / 1000000.0 AS target_share,
-                  CASE WHEN n_tokens > 0
-                       THEN floor(least(CAST(4.0 AS DOUBLE),
-                                        CAST(100000 AS DOUBLE)
-                                        * (powed / sum(powed) OVER ())
-                                        / CAST(n_tokens AS DOUBLE))
-                                  * 1000000.0 + 0.5) / 1000000.0
-                       END AS epochs
-           FROM p)
-         SELECT lang, n_docs, n_tokens, target_share, epochs,
-                CAST(floor(epochs * CAST(n_tokens AS DOUBLE)) AS BIGINT)
-                  AS planned_tokens
-         FROM e""",
-
-    // batch vector admitted iff no exact-cosine pair >= 0.4 against any
-    // existing vector or any smaller-id batch vector (q55's pair-local
-    // admission rule in embedding space)
-    "q120_semantic_admit" ->
-      """WITH v AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev, label
-           FROM embeddings),
-         dropped AS (
-           SELECT DISTINCT b.vec_id AS id_b
-           FROM v b JOIN v x
-             ON b.vec_id % 7 = 0
-            AND (x.vec_id % 7 <> 0 OR x.vec_id < b.vec_id)
-            AND x.vec_id <> b.vec_id
-           WHERE round(list_cosine_similarity(x.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE))
-         SELECT vec_id, CAST(label AS BIGINT) AS label FROM v
-         WHERE vec_id % 7 = 0 AND vec_id NOT IN (SELECT id_b FROM dropped)""",
-
-    "q49_dedup_corpus" ->
-      """WITH RECURSIVE tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         inv AS (SELECT * FROM inv0 WHERE shingle IN (
-                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
-         cand AS (
-           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-         jp AS (
-           SELECT id_a, id_b FROM (
-             SELECT id_a, id_b,
-                    len(list_intersect(sa.shs, sb.shs)) AS common,
-                    len(sa.shs) AS sza, len(sb.shs) AS szb
-             FROM cand
-             JOIN sh sa ON sa.doc_id = id_a
-             JOIN sh sb ON sb.doc_id = id_b)
-           WHERE round(common * 1.0 / (sza + szb - common), 4) >= 0.2),
-         edges AS (SELECT id_a AS a, id_b AS b FROM jp
-                   UNION SELECT id_b, id_a FROM jp),
-         reach(a, b) AS (
-           SELECT a, b FROM edges
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         clusters AS (
-           SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-           FROM reach GROUP BY a)
-         SELECT d.doc_id, d.lang FROM documents d
-         WHERE d.doc_id NOT IN (
-           SELECT doc_id FROM clusters WHERE doc_id <> cluster_id)""",
-
-    "q45_profile" ->
-      """SELECT count(*) AS n_rows,
-                count(CASE WHEN o_custkey IS NULL THEN 1 END) AS o_custkey_nulls,
-                count(DISTINCT o_custkey) AS o_custkey_distinct,
-                count(CASE WHEN o_orderstatus IS NULL THEN 1 END) AS o_orderstatus_nulls,
-                count(DISTINCT o_orderstatus) AS o_orderstatus_distinct,
-                count(CASE WHEN o_totalprice IS NULL THEN 1 END) AS o_totalprice_nulls,
-                count(DISTINCT o_totalprice) AS o_totalprice_distinct,
-                count(CASE WHEN o_orderpriority IS NULL THEN 1 END) AS o_orderpriority_nulls,
-                count(DISTINCT o_orderpriority) AS o_orderpriority_distinct
-         FROM orders""",
-
-    // sum of BIGINT is HUGEINT in DuckDB (the q38 lesson) — cast to BIGINT.
-    // TRY_CAST mirrors Spark's non-ANSI cast (null on non-integral input),
-    // and n_null counts null-AFTER-cast on both engines — a plain CAST
-    // would abort the oracle on a malformed k, and a pre-cast IS NULL
-    // would disagree with Spark's accounting.
-    "q58_json_extract" ->
-      """SELECT event_type,
-                CAST(sum(TRY_CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-                count(CASE WHEN TRY_CAST(props->>'k' AS BIGINT) > 50 THEN 1 END) AS n_large,
-                count(CASE WHEN TRY_CAST(props->>'k' AS BIGINT) IS NULL THEN 1 END) AS n_null,
-                count(*) AS n
-         FROM events GROUP BY event_type""",
-
-    "q57_equidepth_hist" ->
-      """SELECT event_type, decile, min(value) AS lo, max(value) AS hi, count(*) AS n
-         FROM (
-           SELECT event_type, value,
-                  ntile(10) OVER (PARTITION BY event_type
-                                  ORDER BY value, event_id) AS decile
-           FROM events)
-         GROUP BY event_type, decile""",
-
-    "q43_salted_join" ->
-      """SELECT event_id, e.user_id, event_type, d.user_total
-         FROM events e
-         JOIN (SELECT user_id, count(*) AS user_total
-               FROM events GROUP BY user_id) d
-           ON e.user_id = d.user_id""",
-
-    // exact side of the oracle-fenced GK sketch: the Spark plan emits these
-    // exact-rank quantiles only for groups whose in-plan GK estimates sit
-    // inside the (q±ε)n band, so a row-count match here certifies the
-    // sketch's error bound (DuckDB cannot run GK; it doesn't need to)
-    "q44_quantile_sketch" ->
-      """WITH ranked AS (
-           SELECT event_type, value,
-                  row_number() OVER (PARTITION BY event_type
-                                     ORDER BY value, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type) AS n
-           FROM events)
-         SELECT event_type,
-                max(CASE WHEN rn = CAST(ceil(0.25 * n) AS BIGINT)
-                    THEN value END) AS p25,
-                max(CASE WHEN rn = CAST(ceil(0.75 * n) AS BIGINT)
-                    THEN value END) AS p75,
-                max(CASE WHEN rn = CAST(ceil(0.95 * n) AS BIGINT)
-                    THEN value END) AS p95,
-                max(n) AS n_events
-         FROM ranked GROUP BY event_type""",
-
-    // batch doc admitted iff no jaccard>=0.2 pair with an existing doc or a
-    // smaller-id batch doc (the Spark side's corpus-side hot-key prune has
-    // no effect at gate scale: no shingle reaches 1000 corpus postings)
-    "q55_incremental_admit" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
-         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         cand AS (
-           SELECT x.doc_id AS id_x, b.doc_id AS id_b, count(*) AS common
-           FROM inv x JOIN inv b ON x.shingle = b.shingle
-            AND b.doc_id % 7 = 0
-            AND (x.doc_id % 7 <> 0 OR x.doc_id < b.doc_id)
-           GROUP BY 1, 2),
-         dropped AS (
-           SELECT DISTINCT id_b FROM cand
-           JOIN sizes sx ON sx.doc_id = id_x
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE round(common * 1.0 / (sx.sz + sb.sz - common), 4) >= 0.2)
-         SELECT doc_id, lang FROM documents
-         WHERE doc_id % 7 = 0 AND doc_id NOT IN (SELECT id_b FROM dropped)""",
-
-    // q141 = q55 routed through the persisted ShingleIndex; the oracle is
-    // the same direct all-pairs admission (the equivalence ShingleIndexSpec
-    // pins, here driver-hash-checked end-to-end)
-    "q141_indexed_admit" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
-         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         cand AS (
-           SELECT x.doc_id AS id_x, b.doc_id AS id_b, count(*) AS common
-           FROM inv x JOIN inv b ON x.shingle = b.shingle
-            AND b.doc_id % 7 = 0
-            AND (x.doc_id % 7 <> 0 OR x.doc_id < b.doc_id)
-           GROUP BY 1, 2),
-         dropped AS (
-           SELECT DISTINCT id_b FROM cand
-           JOIN sizes sx ON sx.doc_id = id_x
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE round(common * 1.0 / (sx.sz + sb.sz - common), 4) >= 0.2)
-         SELECT doc_id, lang FROM documents
-         WHERE doc_id % 7 = 0 AND doc_id NOT IN (SELECT id_b FROM dropped)""",
-
-    // q144 = the SQL DELETE/UPDATE/INSERT lifecycle replayed as relational
-    // algebra over the source parquet; integer sums CAST to BIGINT (the
-    // HUGEINT discipline)
-    "q144_sql_lifecycle" ->
-      """WITH base AS (
-           SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
-         after_delete AS (
-           SELECT * FROM base WHERE o_orderstatus <> 'F'),
-         after_update AS (
-           SELECT o_orderkey,
-                  CASE WHEN o_orderkey % 13 = 0 THEN o_custkey + 1000000
-                       ELSE o_custkey END AS o_custkey,
-                  o_orderstatus
-           FROM after_delete),
-         after_insert AS (
-           SELECT * FROM after_update
-           UNION ALL
-           SELECT o_orderkey + 900000000, o_custkey, 'X'
-           FROM base WHERE o_orderkey % 1000 = 0)
-         SELECT o_orderstatus,
-                CAST(count(*) AS BIGINT) AS n_orders,
-                CAST(sum(o_orderkey) AS BIGINT) AS sum_keys,
-                CAST(sum(o_custkey) AS BIGINT) AS sum_cust
-         FROM after_insert GROUP BY o_orderstatus""",
-
-    // q146 = schema evolution replayed as a UNION: original rows carry
-    // NULL for the added column, the late batch carries values
-    "q146_sql_evolution" ->
-      """WITH evolved AS (
-           SELECT n_nationkey, n_regionkey, CAST(NULL AS VARCHAR) AS note
-           FROM nation
-           UNION ALL
-           SELECT n_nationkey + 100, n_regionkey, 'x-' || n_name
-           FROM nation WHERE n_nationkey % 2 = 0)
-         SELECT n_regionkey,
-                CAST(count(*) AS BIGINT) AS n_rows,
-                CAST(count(note) AS BIGINT) AS n_noted,
-                CAST(sum(n_nationkey) AS BIGINT) AS sum_keys
-         FROM evolved GROUP BY n_regionkey""",
-
-    // q150 = the column-mapping lifecycle replayed relationally: every
-    // order contributes its price whatever schema era it landed in (the
-    // renamed column is ONE physical column across all files), but only
-    // the post-re-add era (o_orderkey % 3 = 2) may carry a priority —
-    // the dropped era's values must be dead
-    "q150_sql_column_mapping" ->
-      """SELECT o_custkey,
-                CAST(count(*) AS BIGINT) AS n_orders,
-                CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-                  AS sum_price,
-                CAST(count(CASE WHEN o_orderkey % 3 = 2
-                           THEN o_orderpriority END) AS BIGINT)
-                  AS n_with_priority
-         FROM orders GROUP BY o_custkey""",
-
-    // q151 = the widening lifecycle replayed relationally: the int era
-    // re-read as BIGINT, the float era as its exact double values
-    "q151_sql_type_widening" ->
-      """WITH w AS (
-           SELECT n_nationkey AS k, CAST(n_regionkey AS BIGINT) AS region,
-                  CAST(CAST(n_nationkey * 1.5 AS REAL) AS DOUBLE) AS wf
-           FROM nation
-           UNION ALL
-           SELECT n_nationkey + 100, n_regionkey + 1000000000000,
-                  CAST(n_nationkey * 2.5 AS DOUBLE)
-           FROM nation WHERE n_nationkey % 2 = 0)
-         SELECT region,
-                CAST(count(*) AS BIGINT) AS n_rows,
-                CAST(sum(k) AS BIGINT) AS sum_keys,
-                CAST(sum(CAST(wf AS DECIMAL(18,4))) AS DOUBLE) AS sum_wf
-         FROM w GROUP BY region""",
-
-    // q152 = the defaults lifecycle replayed relationally: the CTAS era
-    // reads the ADD-time EXISTS fill (1), the first insert era omits the
-    // column under DEFAULT 1, the second under DEFAULT 2
-    "q152_sql_defaults" ->
-      """WITH d AS (
-           SELECT c_custkey, c_nationkey, CAST(1 AS BIGINT) AS tier
-           FROM customer WHERE c_custkey % 2 = 0
-           UNION ALL
-           SELECT c_custkey, c_nationkey, CAST(1 AS BIGINT)
-           FROM customer WHERE c_custkey % 4 = 1
-           UNION ALL
-           SELECT c_custkey, c_nationkey, CAST(2 AS BIGINT)
-           FROM customer WHERE c_custkey % 4 = 3)
-         SELECT tier,
-                CAST(count(*) AS BIGINT) AS n_rows,
-                CAST(sum(c_custkey) AS BIGINT) AS sum_keys,
-                CAST(sum(c_nationkey) AS BIGINT) AS sum_nation
-         FROM d GROUP BY tier""",
-
-    // q145 = the SQL MERGE upsert replayed relationally: matched keys take
-    // the source image (left-join override), unmatched source rows insert
-    // (anti-join); compact_small is data-neutral so the oracle ignores it
-    "q145_sql_merge" ->
-      """WITH base AS (
-           SELECT o_orderkey, o_custkey FROM orders),
-         src AS (
-           SELECT o_orderkey, o_custkey + 7 AS o_custkey
-           FROM base WHERE o_orderkey % 3 = 0
-           UNION ALL
-           SELECT o_orderkey + 700000000, 42
-           FROM base WHERE o_orderkey % 500 = 0),
-         merged AS (
-           SELECT b.o_orderkey,
-                  CASE WHEN s.o_orderkey IS NOT NULL THEN s.o_custkey
-                       ELSE b.o_custkey END AS o_custkey
-           FROM base b LEFT JOIN src s ON b.o_orderkey = s.o_orderkey
-           UNION ALL
-           SELECT o_orderkey, o_custkey FROM src
-           WHERE o_orderkey NOT IN (SELECT o_orderkey FROM base))
-         SELECT o_orderkey % 97 AS bucket,
-                CAST(count(*) AS BIGINT) AS n_orders,
-                CAST(sum(o_custkey) AS BIGINT) AS sum_cust
-         FROM merged GROUP BY o_orderkey % 97""",
-
-    // q147 = the full-clause MERGE replayed as CASE logic over a left
-    // join (first-match-wins: DELETE beats UPDATE on 'F' rows) plus the
-    // anti-join inserts; inserted rows carry NULL status → 'NEW'
-    "q147_sql_merge_clauses" ->
-      """WITH base AS (
-           SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
-         src AS (
-           SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 2 = 0
-           UNION ALL
-           SELECT o_orderkey + 600000000, o_custkey FROM orders
-           WHERE o_orderkey % 400 = 0),
-         joined AS (
-           SELECT b.o_orderkey AS k, b.o_custkey AS c, b.o_orderstatus AS st,
-                  s.o_orderkey AS sk, s.o_custkey AS sc
-           FROM base b LEFT JOIN src s ON b.o_orderkey = s.o_orderkey),
-         kept AS (
-           SELECT k,
-                  CASE WHEN sk IS NOT NULL AND st <> 'F' AND sc % 5 = 0
-                       THEN c + 1000000 ELSE c END AS c,
-                  CASE WHEN sk IS NULL AND st = 'P' THEN 'PX' ELSE st END AS st
-           FROM joined
-           WHERE NOT (sk IS NOT NULL AND st = 'F')
-           UNION ALL
-           SELECT s.o_orderkey, s.o_custkey, CAST(NULL AS VARCHAR)
-           FROM src s
-           WHERE s.o_orderkey NOT IN (SELECT o_orderkey FROM base)
-             AND s.o_custkey % 3 = 0)
-         SELECT coalesce(st, 'NEW') AS o_orderstatus,
-                CAST(count(*) AS BIGINT) AS n_orders,
-                CAST(sum(c) AS BIGINT) AS sum_cust,
-                CAST(sum(k % 997) AS BIGINT) AS sum_tail
-         FROM kept GROUP BY coalesce(st, 'NEW')""",
-
-    // q148 = the partitioned lifecycle replayed relationally: the
-    // partition-predicate delete filters, the late batch unions in, and
-    // the partial partition overwrite replaces the whole Z population
-    "q148_sql_partitioned" ->
-      """WITH base AS (
-           SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
-         after_delete AS (
-           SELECT * FROM base
-           WHERE NOT (o_orderstatus = 'O' AND o_orderkey % 3 = 0)),
-         final AS (
-           SELECT * FROM after_delete
-           UNION ALL
-           SELECT o_orderkey + 950000000, o_custkey, 'Z'
-           FROM base WHERE o_orderkey % 1000 = 0)
-         SELECT o_orderstatus,
-                CAST(count(*) AS BIGINT) AS n_orders,
-                CAST(sum(o_custkey) AS BIGINT) AS sum_cust,
-                CAST(sum(o_orderkey % 997) AS BIGINT) AS sum_tail
-         FROM final GROUP BY o_orderstatus""",
-
-    // q153 = the surviving-day population replayed relationally: both
-    // INSERT halves cover every event, the DELETE removes days ≤ 01-04,
-    // the final predicate selects the day range + key set
-    "q153_hidden_partitioning" ->
-      """WITH live AS (
-           SELECT * FROM events
-           WHERE ts > TIMESTAMP '2024-01-04 23:59:59.999999')
-         SELECT user_id,
-                CAST(count(*) AS BIGINT) AS n_events,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
-                CAST(sum(event_id % 997) AS BIGINT) AS sum_tail
-         FROM live
-         WHERE ts BETWEEN TIMESTAMP '2024-01-10 00:00:00'
-                      AND TIMESTAMP '2024-01-19 23:59:59'
-           AND user_id IN (7, 21, 33, 64)
-         GROUP BY user_id""",
-
-    // q154 = the three precision eras replayed as a UNION at the final
-    // DECIMAL(25,2); sums/extremes rendered as exact same-scale strings
-    // on both engines
-    "q154_sql_decimal_widening" ->
-      """WITH base AS (
-           SELECT o_orderkey, o_custkey % 10 AS grp FROM orders),
-         eras AS (
-           SELECT grp, CAST(o_orderkey AS DECIMAL(25,2)) AS amt FROM base
-           UNION ALL
-           SELECT grp, CAST(o_orderkey + 100000000000 AS DECIMAL(25,2))
-           FROM base WHERE o_orderkey % 3 = 0
-           UNION ALL
-           SELECT grp, CAST(o_orderkey AS DECIMAL(25,2))
-                       + CAST('100000000000000000000.00' AS DECIMAL(25,2))
-           FROM base WHERE o_orderkey % 5 = 0)
-         SELECT grp,
-                CAST(count(*) AS BIGINT) AS n_rows,
-                CAST(sum(amt) AS VARCHAR) AS sum_amt,
-                CAST(min(amt) AS VARCHAR) AS min_amt,
-                CAST(max(amt) AS VARCHAR) AS max_amt
-         FROM eras GROUP BY grp""",
-
-    // q155 = the post-DELETE population with the prefix-range predicate
-    // replayed relationally (partitioning is physical layout only)
-    "q155_prefix_partitioned" ->
-      """SELECT p_brand,
-                CAST(count(*) AS BIGINT) AS n_parts,
-                CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
-                  AS sum_price,
-                min(p_name) AS first_name
-         FROM part
-         WHERE p_partkey % 10 <> 3
-           AND p_name >= 'a' AND p_name < 'd'
-         GROUP BY p_brand""",
-
-    // q156 = the post-retention population plus the replay slice,
-    // replayed relationally (the calendar layout is physical only): the
-    // two INSERT halves cover every order once, the DELETE removes
-    // 1995, the evolved-spec INSERT re-adds the %5=2 slice at all dates
-    "q156_calendar_partitioned" ->
-      """WITH tbl AS (
-           SELECT * FROM orders
-           WHERE o_orderdate > TIMESTAMP '1995-12-31 23:59:59.999999'
-           UNION ALL
-           SELECT * FROM orders WHERE o_orderkey % 5 = 2)
-         SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-                CAST(count(*) AS BIGINT) AS n_orders,
-                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                  AS sum_price,
-                CAST(sum(o_orderkey % 997) AS BIGINT) AS sum_tail
-         FROM tbl
-         WHERE o_orderdate >= TIMESTAMP '1997-03-01 00:00:00'
-           AND o_orderdate < TIMESTAMP '1998-07-01 00:00:00'
-         GROUP BY 1""",
-
-    // q157 = the subquery-conditioned MERGE replayed relationally:
-    // first-match-wins clause lattice over a left join, with the IN /
-    // NOT IN / EXISTS / scalar subqueries evaluated inline by DuckDB
-    "q157_merge_subquery" ->
-      """WITH base AS (
-           SELECT o_orderkey, o_custkey, o_orderstatus FROM orders),
-         src AS (
-           SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 2 = 0),
-         bld AS (
-           SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
-         auto AS (
-           SELECT c_custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE'),
-         joined AS (
-           SELECT b.o_orderkey AS k, b.o_custkey AS c, b.o_orderstatus AS st,
-                  s.o_orderkey AS sk, s.o_custkey AS sc
-           FROM base b LEFT JOIN src s ON b.o_orderkey = s.o_orderkey),
-         kept AS (
-           SELECT k,
-                  CASE WHEN sk IS NOT NULL AND sc IN (SELECT * FROM bld)
-                       THEN c + (SELECT min(c_custkey) FROM customer)
-                       ELSE c END AS c,
-                  CASE WHEN sk IS NULL AND EXISTS (
-                         SELECT 1 FROM customer
-                         WHERE c_mktsegment = 'MACHINERY')
-                       THEN 'MX' ELSE st END AS st
-           FROM joined
-           WHERE NOT (sk IS NOT NULL
-                      AND NOT (sc IN (SELECT * FROM bld))
-                      AND sc NOT IN (SELECT * FROM auto)))
-         SELECT st AS o_orderstatus,
-                CAST(count(*) AS BIGINT) AS n_orders,
-                CAST(sum(c) AS BIGINT) AS sum_cust,
-                CAST(sum(k % 997) AS BIGINT) AS sum_tail
-         FROM kept GROUP BY st""",
-
-    // q149 = SCD2 replayed as the three row populations: changed keys'
-    // closed T1 rows, untouched keys' current T1 rows, changed keys' new
-    // T2 rows
-    "q149_scd2_dimension" ->
-      """WITH cust AS (
-           SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nation
-           FROM customer),
-         changed AS (
-           SELECT c_custkey, CAST((nation + 5) % 25 AS BIGINT) AS nn
-           FROM cust WHERE c_custkey % 7 = 0),
-         hist AS (
-           SELECT c.c_custkey, c.nation, 'T1' AS valid_from,
-                  'T2' AS valid_to, CAST(0 AS BIGINT) AS is_current
-           FROM cust c JOIN changed g ON c.c_custkey = g.c_custkey
-           UNION ALL
-           SELECT c_custkey, nation, 'T1', CAST(NULL AS VARCHAR),
-                  CAST(1 AS BIGINT)
-           FROM cust WHERE c_custkey % 7 <> 0
-           UNION ALL
-           SELECT g.c_custkey, g.nn, 'T2', CAST(NULL AS VARCHAR),
-                  CAST(1 AS BIGINT)
-           FROM changed g)
-         SELECT valid_from,
-                coalesce(valid_to, 'CUR') AS valid_to,
-                is_current,
-                CAST(count(*) AS BIGINT) AS n_rows,
-                CAST(sum(c_custkey) AS BIGINT) AS sum_keys,
-                CAST(sum(nation) AS BIGINT) AS sum_nation
-         FROM hist GROUP BY valid_from, coalesce(valid_to, 'CUR'), is_current""",
-
-    // portable md5 register derivation: identical bucket/rho/fixed-point
-    // arithmetic on both engines; every sum lands in BIGINT via exact
-    // integer units (the HUGEINT cast discipline)
-    "q143_hll_relational" ->
-      """WITH h AS (
-           SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS hx
-           FROM events WHERE user_id IS NOT NULL),
-         rr AS (
-           SELECT event_type,
-                  CAST((strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-                       + (strpos('0123456789abcdef', substr(hx, 2, 1)) - 1)
-                       AS BIGINT) AS bucket,
-                  substr(hx, 3, 13) AS tail
-           FROM h),
-         rho0 AS (
-           SELECT event_type, bucket,
-                  length(regexp_extract(tail, '^0*')) AS z,
-                  substr(tail, length(regexp_extract(tail, '^0*')) + 1, 1) AS d
-           FROM rr),
-         rho AS (
-           SELECT event_type, bucket,
-                  least(z * 4 +
-                        CASE WHEN d = '1' THEN 3
-                             WHEN d IN ('2', '3') THEN 2
-                             WHEN d IN ('4', '5', '6', '7') THEN 1
-                             ELSE 0 END + 1, 40) AS rho
-           FROM rho0),
-         regs AS (
-           SELECT event_type, bucket, max(rho) AS rho, count(*) AS n
-           FROM rho GROUP BY 1, 2),
-         g AS (
-           SELECT event_type,
-                  CAST(sum(n) AS BIGINT) AS n_events,
-                  CAST(count(*) AS BIGINT) AS n_buckets,
-                  CAST(sum(1::BIGINT << CAST(40 - rho AS INT)) AS BIGINT) AS u
-           FROM regs GROUP BY 1)
-         SELECT event_type, n_events,
-                256 - n_buckets AS n_zero_registers,
-                u + (256 - n_buckets) * (1::BIGINT << 40) AS sketch_units,
-                CAST(floor((0.7213 / (1.0 + 1.079 / 256.0)
-                            * 65536.0 * 1099511627776.0)
-                           / CAST(sketch_units AS DOUBLE) * 1000000.0 + 0.5)
-                     AS BIGINT) AS est_raw_e6
-         FROM g""",
-
-    // q142 = q120 routed through the persisted VectorIndex; oracle = the
-    // exact all-pairs cosine admission (VectorIndexSpec's equivalence,
-    // driver-hash-checked)
-    "q142_indexed_semantic_admit" ->
-      """WITH v AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev, label
-           FROM embeddings),
-         dropped AS (
-           SELECT DISTINCT b.vec_id AS id_b
-           FROM v b JOIN v x
-             ON b.vec_id % 7 = 0
-            AND (x.vec_id % 7 <> 0 OR x.vec_id < b.vec_id)
-            AND x.vec_id <> b.vec_id
-           WHERE round(list_cosine_similarity(x.ev, b.ev), 6) >= CAST(0.4 AS DOUBLE))
-         SELECT vec_id, CAST(label AS BIGINT) AS label FROM v
-         WHERE vec_id % 7 = 0 AND vec_id NOT IN (SELECT id_b FROM dropped)""",
-
-    // corpus doc survives iff no jaccard>=0.2 overlap with any eval doc
-    // (doc_id % 13 == 0 plays the held-out benchmark); eval×corpus pairs
-    // only — corpus-internal similarity is dedup's business, not
-    // decontamination's. Corpus-side hot-key prune has no effect at gate
-    // scale (no shingle reaches 1000 corpus postings).
-    "q59_decontaminate" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
-         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         cand AS (
-           SELECT e.doc_id AS id_a, c.doc_id AS id_b, count(*) AS common
-           FROM inv e JOIN inv c ON e.shingle = c.shingle
-            AND e.doc_id % 13 = 0 AND c.doc_id % 13 <> 0
-           GROUP BY 1, 2),
-         contaminated AS (
-           SELECT DISTINCT id_b FROM cand
-           JOIN sizes se ON se.doc_id = id_a
-           JOIN sizes sc ON sc.doc_id = id_b
-           WHERE round(common * 1.0 / (se.sz + sc.sz - common), 4) >= 0.2)
-         SELECT doc_id, lang FROM documents
-         WHERE doc_id % 13 <> 0 AND doc_id NOT IN (SELECT id_b FROM contaminated)""",
-
-    // synthetic PII planted from doc_id identically on both sides; the
-    // redaction chain and its order (email → ipv4 → phone) are part of the
-    // operator contract — patterns are the RE2∩Java portable subset, so
-    // the same scrub is recomputable by either stack
-    "q66_pii_redact" ->
-      """WITH m AS (
-           SELECT doc_id,
-                  substr(coalesce(text, ''), 1, 80) || ' contact ' ||
-                  CASE doc_id % 4
-                    WHEN 0 THEN 'user' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
-                    WHEN 1 THEN '+1-202-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                    WHEN 2 THEN CAST(doc_id % 200 + 10 AS VARCHAR) || '.' ||
-                                CAST(doc_id % 256 AS VARCHAR) || '.' ||
-                                CAST((doc_id // 7) % 256 AS VARCHAR) || '.9'
-                    ELSE 'nothing to scrub'
-                  END || ' end' AS raw
-           FROM documents)
-         SELECT doc_id,
-                regexp_replace(regexp_replace(regexp_replace(raw,
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                  '\b\d{1,3}(\.\d{1,3}){3}\b', '<IPV4>', 'g'),
-                  '(\+?\d{1,3}[-. ()]{0,2})?\d{3}[-. ()]{0,2}\d{3}[-. ]?\d{4}', '<PHONE>', 'g')
-                  AS redacted,
-                len(regexp_extract_all(raw,
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
-                len(regexp_extract_all(raw,
-                  '\b\d{1,3}(\.\d{1,3}){3}\b')) AS n_ipv4,
-                len(regexp_extract_all(raw,
-                  '(\+?\d{1,3}[-. ()]{0,2})?\d{3}[-. ()]{0,2}\d{3}[-. ]?\d{4}')) AS n_phone
-         FROM m""",
-
-    // repetition metrics: 2-grams NOT deduplicated (repetition is the
-    // signal); top share = max over grams of count·chars / text chars —
-    // engine-neutral tie-break (max of the product, not chars of the
-    // max-count gram); dup share counts occurrences beyond each gram's
-    // first. Docs with < 2 tokens or no text → both 0.
-    "q60_repetition" ->
-      """WITH tok AS (
-           SELECT doc_id, coalesce(text, '') AS text,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts,
-                  list_filter(string_split(coalesce(text, ''), chr(10)),
-                              x -> trim(x) <> '') AS ls
-           FROM documents),
-         grams AS (
-           SELECT doc_id, unnest(list_transform(
-             generate_series(1, greatest(len(ts) - 1, 0)),
-             i -> ts[i] || ' ' || ts[i+1])) AS gram
-           FROM tok),
-         gc AS (SELECT doc_id, gram, count(*) AS c FROM grams GROUP BY 1, 2),
-         ga AS (
-           SELECT doc_id, max(c * length(gram)) AS topchars,
-                  coalesce(sum(CASE WHEN c > 1 THEN (c - 1) * length(gram) END), 0)
-                    AS dupchars
-           FROM gc GROUP BY doc_id)
-         SELECT t.doc_id,
-                len(ls) AS n_lines,
-                CASE WHEN len(ls) > 0
-                     THEN round((len(ls) - len(list_distinct(ls))) * 1.0 / len(ls), 4)
-                     ELSE 0.0 END AS dup_line_frac,
-                CASE WHEN length(t.text) > 0
-                     THEN round(coalesce(ga.topchars, 0) * 1.0 / length(t.text), 4)
-                     ELSE 0.0 END AS top_2gram_share,
-                CASE WHEN length(t.text) > 0
-                     THEN round(coalesce(ga.dupchars, 0) * 1.0 / length(t.text), 4)
-                     ELSE 0.0 END AS dup_2gram_frac
-         FROM tok t LEFT JOIN ga ON t.doc_id = ga.doc_id""",
-
-    // the aggregate skips NULL ord values by construction; the oracle
-    // filters them so the window never ranks a null row into the top-k
-    "q63_topk_agg" ->
-      """SELECT event_type, CAST(rnk AS BIGINT) AS rank, value, event_id
-         FROM (SELECT event_type, value, event_id,
-                      row_number() OVER (PARTITION BY event_type
-                                         ORDER BY value DESC, event_id DESC) AS rnk
-               FROM events WHERE value IS NOT NULL)
-         WHERE rnk <= 3""",
-
-    "q61_stratified_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-         QUALIFY row_number() OVER (
-           PARTITION BY lang, source
-           ORDER BY md5(CAST(doc_id AS VARCHAR) || ':42'), doc_id) <= 5""",
-
-    // char entropy via DuckDB's base-2 entropy() aggregate over exploded
-    // characters (empty/null docs re-attach as 0 through the left join);
-    // both sides round to 4 places — the sums walk distinct chars in
-    // different orders, identical to ~1e-15
-    "q69_char_entropy" ->
-      """WITH c AS (
-           SELECT doc_id, unnest(string_split(coalesce(text, ''), '')) AS ch
-           FROM documents),
-         a AS (
-           SELECT doc_id,
-                  floor(entropy(ch) * 10000.0 + 0.5) / 10000.0 AS char_entropy,
-                  count(*) AS n_chars, count(DISTINCT ch) AS n_distinct_chars
-           FROM c GROUP BY doc_id)
-         SELECT d.doc_id,
-                coalesce(a.char_entropy, 0.0) AS char_entropy,
-                CAST(coalesce(a.n_chars, 0) AS BIGINT) AS n_chars,
-                CAST(coalesce(a.n_distinct_chars, 0) AS BIGINT) AS n_distinct_chars
-         FROM documents d LEFT JOIN a ON d.doc_id = a.doc_id""",
-
-    // weights exactly as q62 (rounded 6), keep rule = first md5 byte <
-    // floor(min(weight,1)·256); identical doubles → identical thresholds
-    "q78_rebalance_sample" ->
-      """WITH s AS (
-           SELECT lang, sum(len(list_filter(string_split(text, ' '), x -> x <> '')))
-                    AS n_tokens
-           FROM documents GROUP BY lang),
-         w AS (
-           SELECT lang,
-                  floor(((1.0 / count(*) OVER ())
-                         / (n_tokens * 1.0 / sum(n_tokens) OVER ()))
-                        * 1000000.0 + 0.5) / 1000000.0 AS weight
-           FROM s)
-         SELECT d.doc_id, d.lang
-         FROM documents d JOIN w ON d.lang = w.lang
-         WHERE ((strpos('0123456789abcdef',
-                   substr(md5(CAST(d.doc_id AS VARCHAR) || ':42'), 1, 1)) - 1) * 4096 +
-                (strpos('0123456789abcdef',
-                   substr(md5(CAST(d.doc_id AS VARCHAR) || ':42'), 2, 1)) - 1) * 256 +
-                (strpos('0123456789abcdef',
-                   substr(md5(CAST(d.doc_id AS VARCHAR) || ':42'), 3, 1)) - 1) * 16 +
-                (strpos('0123456789abcdef',
-                   substr(md5(CAST(d.doc_id AS VARCHAR) || ':42'), 4, 1)) - 1))
-               < greatest(floor(coalesce(least(w.weight, 1.0), 1.0) * 65536), 1)""",
-
-    // distinct-per-doc bigrams (list_distinct before unnest), df >= 2,
-    // ties on gram text — mirrors boilerplateNgrams' total order
-    "q79_boilerplate" ->
-      """WITH t AS (
-           SELECT source,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         g AS (
-           SELECT source, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 1, 0)),
-             i -> ts[i] || ' ' || ts[i+1]))) AS gram
-           FROM t),
-         c AS (SELECT source, gram, count(*) AS n_docs FROM g
-               GROUP BY 1, 2 HAVING count(*) >= 2),
-         r AS (SELECT source, gram, n_docs,
-                      row_number() OVER (PARTITION BY source
-                                         ORDER BY n_docs DESC, gram ASC) AS rnk
-               FROM c)
-         SELECT source, gram, CAST(n_docs AS BIGINT) AS n_docs,
-                CAST(rnk AS BIGINT) AS rank
-         FROM r WHERE rnk <= 10""",
-
-    // KL terms evaluated in the identical double expression shape as the
-    // Spark side ((c_gt/n_g)·ln((c_gt·n_total)/(n_g·c_t))), rounded to 10
-    // and summed as DECIMAL so addition order cannot matter
-    "q80_token_drift" ->
-      """WITH tok AS (
-           SELECT source, unnest(list_filter(
-             string_split(coalesce(text, ''), ' '), x -> x <> '')) AS token
-           FROM documents),
-         cgt AS (SELECT source, token, count(*) AS c_gt FROM tok GROUP BY 1, 2),
-         gt AS (SELECT source, sum(c_gt) AS n_g FROM cgt GROUP BY 1),
-         tt AS (SELECT token, sum(c_gt) AS c_t FROM cgt GROUP BY 1),
-         tot AS (SELECT sum(n_g) AS n_total FROM gt)
-         SELECT c.source, CAST(max(g.n_g) AS BIGINT) AS n_tokens,
-                floor(CAST(sum(CAST(floor(
-                  (c.c_gt * 1.0 / g.n_g) *
-                  ln((c.c_gt * 1.0 * x.n_total) / (g.n_g * 1.0 * t.c_t))
-                  * 10000000000.0 + 0.5) / 10000000000.0 AS DECIMAL(28,12)))
-                  AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS kl_div
-         FROM cgt c
-         JOIN gt g USING (source)
-         JOIN tt t USING (token)
-         CROSS JOIN tot x
-         GROUP BY c.source""",
-
-    // verdict CTEs identical to q72; keep rate = avg over exact 0/1
-    // doubles rounded to 6, threshold compared on the rounded value
-    "q81_reputation_gate" ->
-      """WITH tok AS (
-           SELECT doc_id, coalesce(text, '') AS text,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         grams AS (
-           SELECT doc_id, unnest(list_transform(
-             generate_series(1, greatest(len(ts) - 1, 0)),
-             i -> ts[i] || ' ' || ts[i+1])) AS gram
-           FROM tok),
-         gc AS (SELECT doc_id, gram, count(*) AS c FROM grams GROUP BY 1, 2),
-         ga AS (
-           SELECT doc_id, max(c * length(gram)) AS topchars,
-                  coalesce(sum(CASE WHEN c > 1 THEN (c - 1) * length(gram) END), 0)
-                    AS dupchars
-           FROM gc GROUP BY doc_id),
-         ch AS (
-           SELECT doc_id, unnest(string_split(coalesce(text, ''), '')) AS c
-           FROM documents),
-         ce AS (SELECT doc_id, floor(entropy(c) * 10000.0 + 0.5) / 10000.0 AS ent
-                FROM ch GROUP BY doc_id),
-         m AS (
-           SELECT t.doc_id, len(t.ts) AS n_tokens,
-                  CASE WHEN length(t.text) > 0
-                       THEN round(coalesce(ga.topchars, 0) * 1.0 / length(t.text), 4)
-                       ELSE 0.0 END AS top_share,
-                  CASE WHEN length(t.text) > 0
-                       THEN round(coalesce(ga.dupchars, 0) * 1.0 / length(t.text), 4)
-                       ELSE 0.0 END AS dup_share,
-                  coalesce(ce.ent, 0.0) AS ent
-           FROM tok t
-           LEFT JOIN ga ON t.doc_id = ga.doc_id
-           LEFT JOIN ce ON t.doc_id = ce.doc_id),
-         v AS (
-           SELECT d.doc_id, d.source,
-                  CASE WHEN m.n_tokens < 12 THEN 'too_short'
-                       WHEN m.top_share > CAST(0.15 AS DOUBLE) THEN 'repetitive_2gram'
-                       WHEN m.dup_share > CAST(0.12 AS DOUBLE) THEN 'dup_2gram'
-                       WHEN m.ent < CAST(3.9 AS DOUBLE) THEN 'low_entropy'
-                       ELSE 'keep' END AS verdict
-           FROM documents d JOIN m ON d.doc_id = m.doc_id),
-         r AS (
-           SELECT source, floor(avg(CASE WHEN verdict = 'keep'
-                                         THEN CAST(1 AS DOUBLE)
-                                         ELSE CAST(0 AS DOUBLE) END)
-                                * 1000000.0 + 0.5) / 1000000.0 AS keep_rate
-           FROM v GROUP BY 1)
-         SELECT v.doc_id, v.source, v.verdict, r.keep_rate,
-                CASE WHEN r.keep_rate < CAST(0.75 AS DOUBLE) THEN 'blocked_source'
-                     ELSE v.verdict END AS final_verdict
-         FROM v JOIN r USING (source)""",
-
-    // one CTE per unrolled iteration; contributions round(·,14) summed as
-    // DECIMAL(38,18), new rank round(·,12) — the exact Graph.pageRank
-    // rule, so ranks are bit-identical; literals written as the same
-    // source decimals both sides
-    "q82_pagerank" ->
-      """WITH cs AS (
-           SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         e AS (SELECT src, dst FROM cs UNION SELECT dst, src FROM cs),
-         nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-         nn AS (SELECT count(*) AS n FROM nodes),
-         tp AS (SELECT (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))
-                       / CAST(n AS DOUBLE) AS t FROM nn),
-         r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / CAST(nn.n AS DOUBLE) AS rank
-                FROM nodes, nn),
-         s1 AS (SELECT e.dst AS node,
-                       CAST(sum(CAST(round(r.rank / CAST(d.outdeg AS DOUBLE), 14)
-                                     AS DECIMAL(38,18))) AS DOUBLE) AS s
-                FROM e JOIN deg d USING (src) JOIN r0 r ON r.node = e.src
-                GROUP BY 1),
-         r1 AS (SELECT n2.node,
-                       CASE WHEN s1.s IS NULL THEN round(tp.t, 12)
-                            ELSE round(tp.t + CAST(0.85 AS DOUBLE) * s1.s, 12)
-                       END AS rank
-                FROM nodes n2 LEFT JOIN s1 ON s1.node = n2.node CROSS JOIN tp),
-         s2 AS (SELECT e.dst AS node,
-                       CAST(sum(CAST(round(r.rank / CAST(d.outdeg AS DOUBLE), 14)
-                                     AS DECIMAL(38,18))) AS DOUBLE) AS s
-                FROM e JOIN deg d USING (src) JOIN r1 r ON r.node = e.src
-                GROUP BY 1),
-         r2 AS (SELECT n2.node,
-                       CASE WHEN s2.s IS NULL THEN round(tp.t, 12)
-                            ELSE round(tp.t + CAST(0.85 AS DOUBLE) * s2.s, 12)
-                       END AS rank
-                FROM nodes n2 LEFT JOIN s2 ON s2.node = n2.node CROSS JOIN tp),
-         s3 AS (SELECT e.dst AS node,
-                       CAST(sum(CAST(round(r.rank / CAST(d.outdeg AS DOUBLE), 14)
-                                     AS DECIMAL(38,18))) AS DOUBLE) AS s
-                FROM e JOIN deg d USING (src) JOIN r2 r ON r.node = e.src
-                GROUP BY 1),
-         r3 AS (SELECT n2.node,
-                       CASE WHEN s3.s IS NULL THEN round(tp.t, 12)
-                            ELSE round(tp.t + CAST(0.85 AS DOUBLE) * s3.s, 12)
-                       END AS rank
-                FROM nodes n2 LEFT JOIN s3 ON s3.node = n2.node CROSS JOIN tp)
-         SELECT CAST((node - 1) / 2 AS BIGINT) AS s_suppkey, rank
-         FROM r3 WHERE node % 2 = 1
-         ORDER BY rank DESC, s_suppkey ASC LIMIT 20""",
-
-    // candidate CTEs identical to q22; verification on candidate pairs
-    // only, threshold compared on the rounded similarity
-    "q83_editdist_verify" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         inv AS (SELECT * FROM inv0 WHERE shingle IN (
-                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
-         pairs AS (
-           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-         scored AS (
-           SELECT id_a, id_b,
-                  len(list_intersect(sa.shs, sb.shs)) AS common,
-                  len(sa.shs) AS size_a, len(sb.shs) AS size_b
-           FROM pairs
-           JOIN sh sa ON sa.doc_id = id_a
-           JOIN sh sb ON sb.doc_id = id_b),
-         cand AS (
-           SELECT id_a, id_b FROM scored
-           WHERE round(common * 1.0 / (size_a + size_b - common), 4) >= 0.2),
-         v AS (
-           SELECT c.id_a, c.id_b,
-                  CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist,
-                  round(CAST(1.0 AS DOUBLE) -
-                        CAST(levenshtein(a.text, b.text) AS DOUBLE) /
-                        CAST(greatest(length(a.text), length(b.text)) AS DOUBLE),
-                        6) AS edit_sim
-           FROM cand c
-           JOIN documents a ON a.doc_id = c.id_a
-           JOIN documents b ON b.doc_id = c.id_b)
-         SELECT id_a, id_b, edit_dist, edit_sim FROM v
-         WHERE edit_sim >= CAST(0.95 AS DOUBLE)""",
-
-    // A-ES keys from the same 24-bit md5 uniform ((nibbles·16^j + 0.5) /
-    // 16^6 — exact dyadic arithmetic), ln-key rounded to 10, rank
-    // (key desc, id asc) — the selected set is engine-identical
-    "q84_weighted_sample" ->
-      """WITH d AS (
-           SELECT doc_id,
-                  len(list_filter(string_split(text, ' '), x -> x <> '')) AS weight,
-                  md5(CAST(doc_id AS VARCHAR) || ':7') AS h
-           FROM documents),
-         k AS (
-           SELECT doc_id, weight,
-                  round(ln((
-                    (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * CAST(1048576 AS DOUBLE) +
-                    (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * CAST(65536 AS DOUBLE) +
-                    (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * CAST(4096 AS DOUBLE) +
-                    (strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * CAST(256 AS DOUBLE) +
-                    (strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * CAST(16 AS DOUBLE) +
-                    (strpos('0123456789abcdef', substr(h, 6, 1)) - 1) * CAST(1 AS DOUBLE) +
-                    CAST(0.5 AS DOUBLE)) / CAST(16777216 AS DOUBLE))
-                    / CAST(weight AS DOUBLE), 10) AS sample_key
-           FROM d WHERE weight > 0)
-         SELECT doc_id, CAST(weight AS DOUBLE) AS weight, sample_key
-         FROM k ORDER BY sample_key DESC, doc_id ASC LIMIT 50""",
-
-    // centroids: per-dim decimal-summed means (order-free, exact); member
-    // and centroid cosines via list_cosine_similarity (round-6 parity with
-    // the native fold — the q34/q50 contract); intra mean decimal-summed
-    "q85_cluster_cohesion" ->
-      """WITH flat AS (
-           SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
-                  unnest(embedding) AS v
-           FROM embeddings),
-         cent AS (
-           SELECT label, pos,
-                  CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE)
-                    / CAST(count(*) AS DOUBLE) AS c
-           FROM flat GROUP BY 1, 2),
-         carr AS (SELECT label, list(c ORDER BY pos) AS cvec FROM cent GROUP BY 1),
-         intra AS (
-           SELECT e.label, count(*) AS n,
-                  round(CAST(sum(CAST(round(list_cosine_similarity(
-                          CAST(e.embedding AS DOUBLE[]), c.cvec), 6)
-                        AS DECIMAL(18,10))) AS DOUBLE)
-                    / CAST(count(*) AS DOUBLE), 6) AS mean_intra_cos
-           FROM embeddings e JOIN carr c USING (label) GROUP BY 1),
-         inter AS (
-           SELECT a.label,
-                  max(round(list_cosine_similarity(a.cvec, b.cvec), 6)) AS max_inter_cos
-           FROM carr a JOIN carr b ON a.label <> b.label GROUP BY 1)
-         SELECT i.label, CAST(i.n AS BIGINT) AS n, i.mean_intra_cos, x.max_inter_cos
-         FROM intra i LEFT JOIN inter x USING (label)""",
-
-    // same snapshot derivation; status via null-safe digest compare
-    // (IS NOT DISTINCT FROM ≡ Spark's <=>)
-    "q86_snapshot_diff" ->
-      """WITH oldsnap AS (
-           SELECT doc_id,
-                  md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END) AS h
-           FROM documents WHERE doc_id % 13 <> 0),
-         newsnap AS (
-           SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % 10 <> 0)
-         SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-                CASE WHEN o.doc_id IS NULL THEN 'added'
-                     WHEN n.doc_id IS NULL THEN 'removed'
-                     WHEN o.h IS NOT DISTINCT FROM n.h THEN 'unchanged'
-                     ELSE 'changed' END AS status
-         FROM oldsnap o FULL OUTER JOIN newsnap n ON o.doc_id = n.doc_id""",
-
-    // pair CTEs identical to q24's exact form; rollup = distinct pair ids
-    // left-joined to documents, integer-exact rate at 6 places
-    "q87_neardup_pressure" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         sizes AS (SELECT doc_id, len(shs) AS sz FROM sh),
-         inv AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         pairs AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS common
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         kept AS (
-           SELECT id_a, id_b FROM pairs
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE round(common * 1.0 / (sa.sz + sb.sz - common), 4) >= 0.1),
-         ids AS (SELECT id_a AS did FROM kept UNION SELECT id_b FROM kept)
-         SELECT d.source, count(*) AS n_docs,
-                CAST(sum(CASE WHEN i.did IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_neardup,
-                round(CAST(sum(CASE WHEN i.did IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6) AS dup_rate
-         FROM documents d LEFT JOIN ids i ON d.doc_id = i.did
-         GROUP BY 1""",
-
-    // distinct-per-doc 3-grams; df over the aggregated gram stream;
-    // short docs emit n_grams 0 / null novelty via the left join
-    "q88_ngram_novelty" ->
-      """WITH t AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         g AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]))) AS gram
-           FROM t),
-         dfc AS (SELECT gram, count(*) AS df FROM g GROUP BY 1),
-         st AS (
-           SELECT g.doc_id, count(*) AS n_grams,
-                  sum(CASE WHEN dfc.df = 1 THEN 1 ELSE 0 END) AS n_unique
-           FROM g JOIN dfc USING (gram) GROUP BY 1)
-         SELECT d.doc_id, CAST(coalesce(st.n_grams, 0) AS BIGINT) AS n_grams,
-                round(CAST(st.n_unique AS DOUBLE) / CAST(st.n_grams AS DOUBLE), 6)
-                  AS novelty
-         FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id""",
-
-    // one UNION ALL branch per rule, violation = NOT coalesce(pred, FALSE)
-    // exactly as Audit.ruleAudit counts it
-    "q89_rule_audit" ->
-      """SELECT 'value_non_negative' AS rule, count(*) AS n_rows,
-                CAST(sum(CASE WHEN NOT coalesce(value >= 0, FALSE)
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_violations,
-                round(CAST(sum(CASE WHEN NOT coalesce(value >= 0, FALSE)
-                                    THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6) AS violation_rate
-         FROM events
-         UNION ALL
-         SELECT 'value_within_cap', count(*),
-                CAST(sum(CASE WHEN NOT coalesce(value <= 400.0, FALSE)
-                              THEN 1 ELSE 0 END) AS BIGINT),
-                round(CAST(sum(CASE WHEN NOT coalesce(value <= 400.0, FALSE)
-                                    THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6)
-         FROM events
-         UNION ALL
-         SELECT 'event_type_allowed', count(*),
-                CAST(sum(CASE WHEN NOT coalesce(
-                       event_type IN ('click','view','purchase','signup'), FALSE)
-                              THEN 1 ELSE 0 END) AS BIGINT),
-                round(CAST(sum(CASE WHEN NOT coalesce(
-                       event_type IN ('click','view','purchase','signup'), FALSE)
-                                    THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6)
-         FROM events
-         UNION ALL
-         SELECT 'ts_after_warmup', count(*),
-                CAST(sum(CASE WHEN NOT coalesce(
-                       ts >= TIMESTAMP '2024-01-05 00:00:00', FALSE)
-                              THEN 1 ELSE 0 END) AS BIGINT),
-                round(CAST(sum(CASE WHEN NOT coalesce(
-                       ts >= TIMESTAMP '2024-01-05 00:00:00', FALSE)
-                                    THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6)
-         FROM events
-         UNION ALL
-         SELECT 'props_object_shaped', count(*),
-                CAST(sum(CASE WHEN NOT coalesce(
-                       props IS NULL OR (props LIKE '{%' AND props LIKE '%}'), FALSE)
-                              THEN 1 ELSE 0 END) AS BIGINT),
-                round(CAST(sum(CASE WHEN NOT coalesce(
-                       props IS NULL OR (props LIKE '{%' AND props LIKE '%}'), FALSE)
-                                    THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6)
-         FROM events""",
-
-    // NOT EXISTS per edge ≡ the anti-join count (null child keys orphan
-    // under both)
-    "q90_ref_integrity" ->
-      """SELECT 'orders_customer' AS edge, count(*) AS n_rows,
-                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
-                       WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_orphans,
-                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
-                       WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6) AS orphan_rate
-         FROM orders o
-         UNION ALL
-         SELECT 'lineitem_orders', count(*),
-                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM orders oo
-                       WHERE oo.o_orderkey = l.l_orderkey) THEN 1 ELSE 0 END) AS BIGINT),
-                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM orders oo
-                       WHERE oo.o_orderkey = l.l_orderkey) THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6)
-         FROM lineitem l
-         UNION ALL
-         SELECT 'lineitem_part', count(*),
-                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM part p
-                       WHERE p.p_partkey = l.l_partkey) THEN 1 ELSE 0 END) AS BIGINT),
-                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM part p
-                       WHERE p.p_partkey = l.l_partkey) THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6)
-         FROM lineitem l
-         UNION ALL
-         SELECT 'lineitem_supplier', count(*),
-                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM supplier s
-                       WHERE s.s_suppkey = l.l_suppkey) THEN 1 ELSE 0 END) AS BIGINT),
-                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM supplier s
-                       WHERE s.s_suppkey = l.l_suppkey) THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6)
-         FROM lineitem l
-         UNION ALL
-         SELECT 'events_user', count(*),
-                CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
-                       WHERE c.c_custkey = e.user_id) THEN 1 ELSE 0 END) AS BIGINT),
-                round(CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
-                       WHERE c.c_custkey = e.user_id) THEN 1 ELSE 0 END) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 6)
-         FROM events e""",
-
-    // lag over the identical (ts, event_id) per-user total order;
-    // probabilities are exact integer divisions rounded at 6
-    "q91_event_transitions" ->
-      """WITH s AS (
-           SELECT user_id, event_type,
-                  lag(event_type) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS prev_type
-           FROM events),
-         c AS (SELECT prev_type, event_type, count(*) AS n
-               FROM s WHERE prev_type IS NOT NULL GROUP BY 1, 2)
-         SELECT prev_type, event_type, n,
-                round(CAST(n AS DOUBLE) /
-                      CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
-         FROM c""",
-
-    // length-histogram closed form, all-integer comparisons and ceil-div
-    // (// is BIGINT floor division), identical to tokenConcentration
-    "q92_token_concentration" ->
-      """WITH lens AS (
-           SELECT len(list_filter(string_split(text, ' '), x -> x <> '')) AS l
-           FROM documents),
-         g AS (SELECT CAST(l AS BIGINT) AS len, count(*) AS n_docs_len
-               FROM lens WHERE l > 0 GROUP BY 1),
-         c AS (SELECT len, n_docs_len, len * n_docs_len AS class_tokens,
-                      sum(len * n_docs_len) OVER (ORDER BY len DESC) AS cum_tokens,
-                      sum(n_docs_len) OVER (ORDER BY len DESC) AS cum_docs,
-                      sum(len * n_docs_len) OVER () AS total_tokens
-               FROM g),
-         pick AS (
-           SELECT p.pct, c.*,
-                  c.cum_tokens - c.class_tokens AS before_tokens,
-                  row_number() OVER (PARTITION BY p.pct
-                                     ORDER BY c.cum_tokens ASC) AS rn
-           FROM (VALUES (50), (90)) p(pct)
-           JOIN c ON c.cum_tokens * 100 >= c.total_tokens * p.pct)
-         SELECT CAST(pct AS BIGINT) AS threshold_pct,
-                CAST(cum_docs - n_docs_len +
-                     (total_tokens * pct - before_tokens * 100 + len * 100 - 1)
-                       // (len * 100) AS BIGINT) AS n_docs,
-                CAST(before_tokens +
-                     ((total_tokens * pct - before_tokens * 100 + len * 100 - 1)
-                       // (len * 100)) * len AS BIGINT) AS covered_tokens,
-                CAST(total_tokens AS BIGINT) AS total_tokens
-         FROM pick WHERE rn = 1""",
-
-    // identical double expression per (doc, token) term, round-10 →
-    // DECIMAL sum → count-weighted mean at 6
-    "q93_unigram_surprisal" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(list_filter(
-             string_split(coalesce(text, ''), ' '), x -> x <> '')) AS token
-           FROM documents),
-         cdt AS (SELECT doc_id, token, count(*) AS c_dt FROM tok GROUP BY 1, 2),
-         ct AS (SELECT token, sum(c_dt) AS c_t FROM cdt GROUP BY 1),
-         tt AS (SELECT sum(c_dt) AS t_total FROM cdt)
-         SELECT c.doc_id, CAST(sum(c.c_dt) AS BIGINT) AS n_tokens,
-                floor((CAST(sum(CAST(floor(CAST(c.c_dt AS DOUBLE) *
-                         (-ln(CAST(t.c_t AS DOUBLE) / CAST(x.t_total AS DOUBLE)))
-                         * 10000000000.0 + 0.5) / 10000000000.0
-                         AS DECIMAL(28,12))) AS DOUBLE)
-                       / CAST(sum(c.c_dt) AS DOUBLE))
-                      * 1000000.0 + 0.5) / 1000000.0 AS mean_surprisal
-         FROM cdt c JOIN ct t USING (token) CROSS JOIN tt x
-         GROUP BY 1""",
-
-    // token-frequency histogram closed form — q92's arithmetic over
-    // frequency classes instead of length classes
-    "q94_vocab_coverage" ->
-      """WITH tok AS (
-           SELECT unnest(list_filter(
-             string_split(coalesce(text, ''), ' '), x -> x <> '')) AS token
-           FROM documents),
-         tf AS (SELECT token, count(*) AS f FROM tok GROUP BY 1),
-         g AS (SELECT CAST(f AS BIGINT) AS len, count(*) AS n FROM tf GROUP BY 1),
-         c AS (SELECT len, n, len * n AS class_sz,
-                      sum(len * n) OVER (ORDER BY len DESC) AS cum_sz,
-                      sum(n) OVER (ORDER BY len DESC) AS cum_units,
-                      sum(len * n) OVER () AS total
-               FROM g),
-         pick AS (
-           SELECT p.pct, c.*, c.cum_sz - c.class_sz AS before_sz,
-                  row_number() OVER (PARTITION BY p.pct
-                                     ORDER BY c.cum_sz ASC) AS rn
-           FROM (VALUES (90), (99)) p(pct)
-           JOIN c ON c.cum_sz * 100 >= c.total * p.pct)
-         SELECT CAST(pct AS BIGINT) AS threshold_pct,
-                CAST(cum_units - n +
-                     (total * pct - before_sz * 100 + len * 100 - 1)
-                       // (len * 100) AS BIGINT) AS vocab_size,
-                CAST(before_sz +
-                     ((total * pct - before_sz * 100 + len * 100 - 1)
-                       // (len * 100)) * len AS BIGINT) AS covered_instances,
-                CAST(total AS BIGINT) AS total_instances
-         FROM pick WHERE rn = 1""",
-
-    // same 24-bit nibble integer mod 5 (all-integer, engine-exact)
-    "q95_kfold" ->
-      """SELECT doc_id,
-                ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 1048576
-               + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 65536
-               + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 4096
-               + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * 256
-               + (strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * 16
-               + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1)) % 5 AS fold
-         FROM (SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':cv') AS h
-               FROM documents)""",
-
-    // identical BM25 expression shape; k1 shipped as the same source
-    // decimal and combined in-engine (never pre-folded); decimal term-sum
-    "q96_bm25" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         d AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS dl FROM tok),
-         st AS (SELECT count(*) AS n_docs, avg(CAST(dl AS DOUBLE)) AS avgdl FROM d),
-         tf AS (SELECT doc_id, dl, term, count(*) AS tf
-                FROM (SELECT doc_id, dl, unnest(ts) AS term FROM d)
-                WHERE term IN ('spark', 'join', 'filter') GROUP BY 1, 2, 3),
-         dft AS (SELECT term, count(*) AS df_t FROM tf GROUP BY 1),
-         sc AS (
-           SELECT t.doc_id,
-                  floor(CAST(sum(CAST(floor((
-                    ln((CAST(s.n_docs AS DOUBLE) - CAST(f.df_t AS DOUBLE) + 0.5)
-                       / (CAST(f.df_t AS DOUBLE) + 0.5) + 1.0)
-                    * ((CAST(t.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1 AS DOUBLE)))
-                       / (CAST(t.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-                          * ((CAST(1 AS DOUBLE) - CAST(0.75 AS DOUBLE))
-                             + CAST(0.75 AS DOUBLE) * CAST(t.dl AS DOUBLE) / s.avgdl))))
-                  * 10000000000.0 + 0.5) / 10000000000.0 AS DECIMAL(28,12)))
-                  AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS bm25
-           FROM tf t JOIN dft f USING (term) CROSS JOIN st s GROUP BY 1)
-         SELECT doc_id, bm25, CAST(rn AS BIGINT) AS rank
-         FROM (SELECT doc_id, bm25,
-                      row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rn
-               FROM sc)
-         WHERE rn <= 20""",
-
-    // same BM25 CTEs for the lexical list; cosine list via
-    // list_cosine_similarity (round-6 parity); RRF in one fixed expression
-    "q97_hybrid_rrf" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         d AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS dl FROM tok),
-         st AS (SELECT count(*) AS n_docs, avg(CAST(dl AS DOUBLE)) AS avgdl FROM d),
-         tf AS (SELECT doc_id, dl, term, count(*) AS tf
-                FROM (SELECT doc_id, dl, unnest(ts) AS term FROM d)
-                WHERE term IN ('spark', 'join', 'filter') GROUP BY 1, 2, 3),
-         dft AS (SELECT term, count(*) AS df_t FROM tf GROUP BY 1),
-         sc AS (
-           SELECT t.doc_id,
-                  floor(CAST(sum(CAST(floor((
-                    ln((CAST(s.n_docs AS DOUBLE) - CAST(f.df_t AS DOUBLE) + 0.5)
-                       / (CAST(f.df_t AS DOUBLE) + 0.5) + 1.0)
-                    * ((CAST(t.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1 AS DOUBLE)))
-                       / (CAST(t.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-                          * ((CAST(1 AS DOUBLE) - CAST(0.75 AS DOUBLE))
-                             + CAST(0.75 AS DOUBLE) * CAST(t.dl AS DOUBLE) / s.avgdl))))
-                  * 10000000000.0 + 0.5) / 10000000000.0 AS DECIMAL(28,12)))
-                  AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS bm25
-           FROM tf t JOIN dft f USING (term) CROSS JOIN st s GROUP BY 1),
-         lex AS (SELECT doc_id AS id, rn AS ra
-                 FROM (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rn
-                       FROM sc)
-                 WHERE rn <= 50),
-         qv AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id = 0),
-         vc AS (SELECT e.vec_id,
-                       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.v), 6) AS cos
-                FROM embeddings e CROSS JOIN qv q),
-         vr AS (SELECT vec_id AS id, rn AS rb
-                FROM (SELECT vec_id, row_number() OVER (ORDER BY cos DESC, vec_id ASC) AS rn
-                      FROM vc)
-                WHERE rn <= 50),
-         fused AS (
-           SELECT coalesce(l.id, v.id) AS doc_id,
-                  floor((coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(l.ra AS DOUBLE)),
-                                  CAST(0 AS DOUBLE)) +
-                         coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(v.rb AS DOUBLE)),
-                                  CAST(0 AS DOUBLE)))
-                        * 1000000.0 + 0.5) / 1000000.0 AS rrf
-           FROM lex l FULL OUTER JOIN vr v ON l.id = v.id)
-         SELECT doc_id, rrf, CAST(rn AS BIGINT) AS rank
-         FROM (SELECT doc_id, rrf,
-                      row_number() OVER (ORDER BY rrf DESC, doc_id ASC) AS rn
-               FROM fused)
-         WHERE rn <= 10""",
-
-    // q48's recursive-CTE clustering + keep-longest ranking; rn > 1 =
-    // the dropped members, everything else (incl. singletons) survives
-    "q101_quality_dedup" ->
-      """WITH RECURSIVE tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         inv AS (SELECT * FROM inv0 WHERE shingle IN (
-                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
-         cand AS (
-           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-         jp AS (
-           SELECT id_a, id_b FROM (
-             SELECT id_a, id_b,
-                    len(list_intersect(sa.shs, sb.shs)) AS common,
-                    len(sa.shs) AS sza, len(sb.shs) AS szb
-             FROM cand
-             JOIN sh sa ON sa.doc_id = id_a
-             JOIN sh sb ON sb.doc_id = id_b)
-           WHERE round(common * 1.0 / (sza + szb - common), 4) >= 0.2),
-         edges AS (SELECT id_a AS a, id_b AS b FROM jp
-                   UNION SELECT id_b, id_a FROM jp),
-         reach(a, b) AS (
-           SELECT a, b FROM edges
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         clus AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-                  FROM reach GROUP BY a),
-         tc AS (SELECT doc_id,
-                       CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
-                         x -> x <> '')) AS BIGINT) AS tc
-                FROM documents),
-         ranked AS (
-           SELECT c.doc_id,
-                  row_number() OVER (PARTITION BY c.cluster_id
-                                     ORDER BY t.tc DESC, c.doc_id ASC) AS rn
-           FROM clus c JOIN tc t USING (doc_id)),
-         dropped AS (SELECT doc_id FROM ranked WHERE rn > 1)
-         SELECT d.doc_id, d.lang FROM documents d
-         WHERE d.doc_id NOT IN (SELECT doc_id FROM dropped)""",
-
-    // same word-frequency collapse then adjacent char-pair counts; the
-    // (count desc, pair asc) total order makes LIMIT engine-reproducible
-    "q103_bpe_pairs" ->
-      """WITH words AS (
-           SELECT unnest(list_filter(string_split(coalesce(text, ''), ' '),
-             x -> x <> '')) AS word
-           FROM documents),
-         wf AS (SELECT word, count(*) AS freq FROM words GROUP BY word),
-         idx AS (
-           SELECT word, freq,
-                  unnest(generate_series(1, length(word) - 1)) AS i
-           FROM wf),
-         p AS (SELECT substring(word, CAST(i AS INT), 2) AS pair, freq FROM idx)
-         SELECT pair, CAST(sum(freq) AS BIGINT) AS pair_count
-         FROM p GROUP BY pair
-         ORDER BY pair_count DESC, pair ASC LIMIT 30""",
-
-    // the same selected-fingerprint inverted index, self-joined; nothing
-    // exceeds the 1000-posting prune cap on this corpus (max bucket 7),
-    // so the engine's pruned index equals this unpruned oracle
-    "q111_winnow_pairs" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-                  list_transform(range(1, greatest(len(ts) - 1, 1)),
-                    i -> md5(array_to_string(ts[i:i+2], ' '))) AS hs
-           FROM tok),
-         m AS (
-           SELECT doc_id,
-                  CASE WHEN len(hs) - 3 >= 1 THEN
-                         list_transform(range(1, len(hs) - 2),
-                           i -> list_min(hs[i:i+3]))
-                       WHEN len(hs) > 0 THEN [list_min(hs)]
-                       ELSE [] END AS mins
-           FROM g),
-         inv AS (SELECT doc_id, unnest(list_distinct(mins)) AS fp FROM m)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-         FROM inv a JOIN inv b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         GROUP BY a.doc_id, b.doc_id
-         HAVING count(*) >= 2""",
-
-    // change rows via null-safe lag compare, intervals via lead; ties
-    // broken by event_id on both window passes
-    "q112_scd2_history" ->
-      """WITH o AS (
-           SELECT user_id, event_type, ts, event_id,
-                  lag(event_type) OVER w AS prev,
-                  row_number() OVER w AS rn
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         chg AS (
-           SELECT user_id, event_type, ts AS valid_from, event_id
-           FROM o WHERE rn = 1 OR prev IS DISTINCT FROM event_type),
-         v AS (
-           SELECT user_id, event_type, valid_from,
-                  lead(valid_from) OVER (
-                    PARTITION BY user_id ORDER BY valid_from, event_id) AS valid_to
-           FROM chg)
-         SELECT user_id, event_type, valid_from, valid_to,
-                (valid_to IS NULL) AS is_current
-         FROM v""",
-
-    // GROUPING() bit order matches Spark's grouping_id (leftmost column =
-    // most significant bit); double SUM via the DECIMAL(18,4) parity rule
-    "q113_cube_daily" ->
-      """SELECT event_type, date_trunc('day', ts) AS day_ts,
-                GROUPING(event_type, date_trunc('day', ts)) AS gid,
-                count(*) AS n_events,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM events
-         GROUP BY CUBE (event_type, date_trunc('day', ts))""",
-
-    // conditional aggregation = the portable spelling of PIVOT; no ELSE,
-    // so a type absent on a day is NULL exactly like Spark's pivot
-    "q114_pivot_daily" ->
-      """SELECT date_trunc('day', ts) AS day_ts,
-                CAST(sum(CASE WHEN event_type = 'click'
-                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS click,
-                CAST(sum(CASE WHEN event_type = 'error'
-                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS error,
-                CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS purchase,
-                CAST(sum(CASE WHEN event_type = 'signup'
-                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS signup,
-                CAST(sum(CASE WHEN event_type = 'view'
-                  THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE) AS view
-         FROM events GROUP BY 1""",
-
-    // cutoffs at exact ranks (no interpolation) so the clamp hits data
-    // values; wmean = decimal sum cast double, then double division
-    "q115_winsorized_stats" ->
-      """WITH ranked AS (
-           SELECT event_type, value,
-                  row_number() OVER (PARTITION BY event_type
-                                     ORDER BY value, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type) AS n
-           FROM events),
-         cuts AS (
-           SELECT event_type, max(n) AS n_events,
-                  max(CASE WHEN rn = CAST(ceil(n / 100.0) AS BIGINT)
-                      THEN value END) AS p01,
-                  max(CASE WHEN rn = CAST(ceil(n * 99 / 100.0) AS BIGINT)
-                      THEN value END) AS p99
-           FROM ranked GROUP BY event_type),
-         c AS (
-           SELECT e.event_type, n_events, p01, p99,
-                  least(greatest(e.value, p01), p99) AS clamped
-           FROM events e JOIN cuts USING (event_type))
-         SELECT event_type, max(n_events) AS n_events,
-                max(p01) AS p01, max(p99) AS p99,
-                CAST(sum(CAST(clamped AS DECIMAL(18,4))) AS DOUBLE)
-                  / max(n_events) AS wmean
-         FROM c GROUP BY event_type""",
-
-    // q22's oracle with the containment denominator: least(size_a, size_b)
-    "q117_containment" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, greatest(len(ts) - 2, 0)),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS shs
-           FROM tok),
-         inv0 AS (SELECT doc_id, unnest(shs) AS shingle FROM sh),
-         inv AS (SELECT * FROM inv0 WHERE shingle IN (
-                   SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 1000)),
-         pairs AS (
-           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-           FROM inv l JOIN inv r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-         scored AS (
-           SELECT id_a, id_b,
-                  len(list_intersect(sa.shs, sb.shs)) AS common,
-                  len(sa.shs) AS size_a, len(sb.shs) AS size_b
-           FROM pairs
-           JOIN sh sa ON sa.doc_id = id_a
-           JOIN sh sb ON sb.doc_id = id_b)
-         SELECT id_a, id_b, common, size_a, size_b,
-                round(common * 1.0 / least(size_a, size_b), 4) AS containment
-         FROM scored
-         WHERE round(common * 1.0 / least(size_a, size_b), 4) >= 0.35""",
-
-    // same distinct 5-grams per doc as q104; LEFT join keeps clean docs,
-    // count(ev.g) counts only matched grams (NULL-skipping, = Spark's
-    // count over the _hit marker); gram text vs xxhash64 fingerprints —
-    // equal absent a 64-bit collision
-    "q116_contamination_frac" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-                  unnest(list_distinct(list_transform(
-                    range(1, greatest(len(ts) - 3, 1)),
-                    i -> array_to_string(ts[i:i+4], ' ')))) AS g
-           FROM tok),
-         ev AS (SELECT DISTINCT g FROM sh WHERE doc_id % 13 = 0)
-         SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-                CAST(count(ev.g) AS BIGINT) AS n_hits,
-                round(CAST(count(ev.g) AS DOUBLE) / count(*), 4) AS hit_frac
-         FROM sh s LEFT JOIN ev ON s.g = ev.g
-         WHERE s.doc_id % 13 <> 0
-         GROUP BY s.doc_id""",
-
-    // same positional 3-grams → md5 → window-of-4 minima; short docs
-    // (under 4 grams) contribute their single overall minimum
-    "q110_winnow_fingerprints" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-                  list_transform(range(1, greatest(len(ts) - 1, 1)),
-                    i -> md5(array_to_string(ts[i:i+2], ' '))) AS hs
-           FROM tok),
-         m AS (
-           SELECT doc_id, len(hs) AS n_grams,
-                  CASE WHEN len(hs) - 3 >= 1 THEN
-                         list_transform(range(1, len(hs) - 2),
-                           i -> list_min(hs[i:i+3]))
-                       WHEN len(hs) > 0 THEN [list_min(hs)]
-                       ELSE [] END AS mins
-           FROM g)
-         SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
-                CAST(len(list_sort(list_distinct(mins))) AS BIGINT) AS n_fp,
-                sha256(array_to_string(list_sort(list_distinct(mins)), ''))
-                  AS fp_sha
-         FROM m""",
-
-    // the full recompute: one global cumsum over (epoch, shard, md5, id)
-    // must equal the engine's incremental append path
-    "q109_incremental_offsets" ->
-      """WITH h AS (
-           SELECT doc_id,
-                  CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS epoch,
-                  md5(CAST(doc_id AS VARCHAR) || ':42') AS hh,
-                  len(list_filter(string_split(coalesce(text, ''), ' '),
-                    x -> x <> '')) AS tc
-           FROM documents),
-         x AS (
-           SELECT doc_id, epoch, hh, tc,
-                  ((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096 +
-                   (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256 +
-                   (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16 +
-                   (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % 8 AS sh
-           FROM h)
-         SELECT doc_id, CAST(epoch AS BIGINT) AS epoch, CAST(sh AS BIGINT) AS shard,
-                CAST(tc AS BIGINT) AS n_tokens,
-                CAST(coalesce(sum(tc) OVER (ORDER BY epoch, sh, hh, doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                  AS start_offset
-         FROM x""",
-
-    // same α = 0.3 power-flatten over double shares; floor-form portable
-    // rounding (functions/Portable.scala) replaces round(6) as rounding
-    // hardening. The r4/r5 driver-hash red here was NOT rounding: the
-    // uncast sum() made DuckDB emit HUGEINT (int128), which the driver
-    // hashes differently from Spark's int64 — hence CAST(... AS BIGINT)
-    // on n_tokens below. A libm-vs-JVM pow last-ulp difference could in
-    // principle flip the 1e-6 floor grain
-    // only within ~1e-16 of a boundary
-    "q107_temperature_mix" ->
-      """WITH s AS (
-           SELECT lang, count(*) AS n_docs,
-                  CAST(sum(len(list_filter(string_split(text, ' '),
-                                           x -> x <> ''))) AS BIGINT)
-                    AS n_tokens
-           FROM documents GROUP BY lang),
-         p AS (
-           SELECT lang, n_docs, n_tokens,
-                  CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER () AS share,
-                  CASE WHEN n_tokens > 0
-                       THEN pow(CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER (), 0.3)
-                       ELSE 0.0 END AS powed
-           FROM s)
-         SELECT lang, n_docs, n_tokens,
-                floor(share * 1000000.0 + 0.5) / 1000000.0 AS token_share,
-                floor((powed / sum(powed) OVER ())
-                      * 1000000.0 + 0.5) / 1000000.0 AS target_share,
-                CASE WHEN n_tokens > 0
-                     THEN floor(((powed / sum(powed) OVER ()) / share)
-                                * 1000000.0 + 0.5) / 1000000.0
-                     END AS weight
-         FROM p""",
-
-    // same shard layout as q68; per-shard dense ranks batch the rows, a
-    // short final batch pads to its own max over its actual row count
-    "q108_padding_audit" ->
-      """WITH h AS (
-           SELECT doc_id,
-                  md5(CAST(doc_id AS VARCHAR) || ':42') AS hh,
-                  len(list_filter(string_split(coalesce(text, ''), ' '),
-                    x -> x <> '')) AS tc
-           FROM documents),
-         x AS (
-           SELECT doc_id, hh, tc,
-                  ((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096 +
-                   (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256 +
-                   (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16 +
-                   (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % 8 AS sh
-           FROM h),
-         bl AS (
-           SELECT sh, CAST(floor((row_number() OVER (PARTITION BY sh
-                    ORDER BY tc DESC, doc_id ASC) - 1) / 16) AS BIGINT) AS b, tc
-           FROM x),
-         ba AS (
-           SELECT sh, CAST(floor((row_number() OVER (PARTITION BY sh
-                    ORDER BY doc_id ASC) - 1) / 16) AS BIGINT) AS b, tc
-           FROM x),
-         gl AS (SELECT sh, b, count(*) AS cnt, max(tc) AS mx, sum(tc) AS sm
-                FROM bl GROUP BY sh, b),
-         ga AS (SELECT sh, b, count(*) AS cnt, max(tc) AS mx, sum(tc) AS sm
-                FROM ba GROUP BY sh, b),
-         al AS (SELECT 'by_length' AS policy, count(*) AS n_batches,
-                       CAST(sum(sm) AS BIGINT) AS payload_tokens,
-                       CAST(sum(cnt * mx - sm) AS BIGINT) AS padding_tokens
-                FROM gl),
-         aa AS (SELECT 'arrival' AS policy, count(*) AS n_batches,
-                       CAST(sum(sm) AS BIGINT) AS payload_tokens,
-                       CAST(sum(cnt * mx - sm) AS BIGINT) AS padding_tokens
-                FROM ga)
-         SELECT policy, n_batches, payload_tokens, padding_tokens,
-                round(CAST(padding_tokens AS DOUBLE) /
-                      greatest(padding_tokens + payload_tokens, 1), 6)
-                  AS padding_frac
-         FROM (SELECT * FROM al UNION ALL SELECT * FROM aa)""",
-
-    // same deterministic decomposition (e → e+U+0301), then the engines'
-    // independent NFC implementations must agree byte-for-byte
-    "q106_nfc_normalize" ->
-      """SELECT doc_id,
-                CAST(length(nfc_normalize(replace(coalesce(text, ''),
-                  'e', 'e' || chr(769)))) AS BIGINT) AS n_nfc,
-                sha256(nfc_normalize(replace(coalesce(text, ''),
-                  'e', 'e' || chr(769)))) AS nfc_sha
-         FROM documents""",
-
-    // the oracle's single global ordered window equals the engine's
-    // two-level (per-shard cumsum + shard-base prefix) decomposition;
-    // within-shard order (md5 asc, doc_id asc) matches shard_pos
-    "q105_token_offsets" ->
-      """WITH h AS (
-           SELECT doc_id,
-                  md5(CAST(doc_id AS VARCHAR) || ':42') AS hh,
-                  len(list_filter(string_split(coalesce(text, ''), ' '),
-                    x -> x <> '')) AS tc
-           FROM documents),
-         x AS (
-           SELECT doc_id, hh, tc,
-                  ((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096 +
-                   (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256 +
-                   (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16 +
-                   (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % 8 AS sh
-           FROM h)
-         SELECT doc_id, CAST(sh AS BIGINT) AS shard, CAST(tc AS BIGINT) AS n_tokens,
-                CAST(coalesce(sum(tc) OVER (ORDER BY sh, hh, doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                  AS start_offset
-         FROM x""",
-
-    // same distinct 5-grams per doc; the oracle joins gram text where the
-    // engine joins xxhash64 fingerprints — equal absent a 64-bit collision
-    "q104_exact_contamination" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-                  unnest(list_distinct(list_transform(
-                    range(1, greatest(len(ts) - 3, 1)),
-                    i -> array_to_string(ts[i:i+4], ' ')))) AS g
-           FROM tok),
-         ev AS (SELECT DISTINCT g FROM sh WHERE doc_id % 13 = 0)
-         SELECT s.doc_id, count(*) AS n_hits
-         FROM sh s JOIN ev USING (g)
-         WHERE s.doc_id % 13 <> 0
-         GROUP BY s.doc_id""",
-
-    // same (token count desc, doc_id asc) total order per source as the
-    // engine's partitioned window
-    "q102_domain_quota" ->
-      """WITH t AS (
-           SELECT doc_id, source,
-                  CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
-                    x -> x <> '')) AS BIGINT) AS tc
-           FROM documents),
-         r AS (
-           SELECT doc_id, source,
-                  row_number() OVER (PARTITION BY source
-                                     ORDER BY tc DESC, doc_id ASC) AS rn
-           FROM t)
-         SELECT doc_id, source FROM r WHERE rn <= 50""",
-
-    // window text counted directly (Spark counts xxhash64 fingerprints of
-    // the same text — equal absent a 64-bit collision); range() is
-    // end-exclusive so greatest(len-6, 1) yields no windows for docs
-    // under 8 tokens; list slice ts[i:i+7] is the 1-based inclusive
-    // 8-token window, = Spark's slice(ts, i, 8)
-    "q98_dup_substrings" ->
-      """WITH t AS (
-           SELECT doc_id,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         w AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, greatest(len(ts) - 6, 1)),
-                    i -> array_to_string(ts[i:i+7], ' '))) AS gram
-           FROM t),
-         pd AS (SELECT doc_id, gram, count(*) AS occ FROM w GROUP BY 1, 2),
-         g AS (SELECT gram, sum(occ) AS tot FROM pd GROUP BY 1),
-         s AS (SELECT pd.doc_id,
-                      sum(occ) AS n_windows,
-                      sum(CASE WHEN g.tot > 1 THEN occ ELSE 0 END) AS dup_windows
-               FROM pd JOIN g USING (gram) GROUP BY 1)
-         SELECT d.doc_id,
-                CAST(coalesce(s.n_windows, 0) AS BIGINT) AS n_windows,
-                CAST(coalesce(s.dup_windows, 0) AS BIGINT) AS dup_windows,
-                CASE WHEN coalesce(s.n_windows, 0) > 0
-                     THEN round(CAST(s.dup_windows AS DOUBLE) / s.n_windows, 6)
-                END AS dup_frac
-         FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id""",
-
-    // same three rewrites in the same order; 'g' flag = Spark's
-    // replace-all default
-    "q99_canonical_text" ->
-      """SELECT doc_id,
-                trim(regexp_replace(
-                  regexp_replace(lower(coalesce(text, '')), '[^a-z0-9 ]', ' ', 'g'),
-                  ' +', ' ', 'g')) AS canon_text,
-                sha256(trim(regexp_replace(
-                  regexp_replace(lower(coalesce(text, '')), '[^a-z0-9 ]', ' ', 'g'),
-                  ' +', ' ', 'g'))) AS canon_sha
-         FROM documents""",
-
-    // the oracle aggregates the WHOLE table directly — equality with the
-    // Spark side's merged batch states is the merge-identity proof; the
-    // moments are integral so the derived doubles match bit-for-bit
-    "q100_incremental_profile" ->
-      """WITH t AS (
-           SELECT lang,
-                  CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
-                    x -> x <> '')) AS BIGINT) AS tc
-           FROM documents)
-         SELECT lang,
-                CAST(count(*) AS BIGINT) AS n_docs,
-                CAST(sum(tc) AS BIGINT) AS n_tokens,
-                round(CAST(sum(tc) AS DOUBLE) / count(*), 6) AS mean_tokens,
-                round((CAST(sum(tc * tc) AS DOUBLE)
-                       - CAST(sum(tc) AS DOUBLE) * CAST(sum(tc) AS DOUBLE) / count(*))
-                      / count(*), 6) AS var_tokens,
-                CAST(min(tc) AS BIGINT) AS min_tokens,
-                CAST(max(tc) AS BIGINT) AS max_tokens
-         FROM t GROUP BY lang""",
-
-    // pmi evaluated in the same double expression shape as the Spark
-    // side ((c_ab/P) / ((c_a/T)·(c_b/T))), rank on the rounded value
-    "q76_pmi_collocations" ->
-      """WITH tok AS (
-           SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         uni AS (
-           SELECT unnest(ts) AS w FROM tok),
-         uc AS (SELECT w, count(*) AS c_w FROM uni GROUP BY w),
-         big AS (
-           SELECT unnest(list_transform(
-             generate_series(1, greatest(len(ts) - 1, 0)),
-             i -> ts[i] || ' ' || ts[i+1])) AS gram
-           FROM tok),
-         bc AS (SELECT gram, count(*) AS c_ab FROM big GROUP BY gram),
-         tot AS (
-           SELECT (SELECT sum(c_w) FROM uc) AS t_tokens,
-                  (SELECT sum(c_ab) FROM bc) AS t_bigrams),
-         scored AS (
-           SELECT gram, c_ab, a.c_w AS c_a, b.c_w AS c_b,
-                  floor(ln((c_ab * 1.0 / t_bigrams) /
-                          ((a.c_w * 1.0 / t_tokens) * (b.c_w * 1.0 / t_tokens)))
-                        * 1000000.0 + 0.5) / 1000000.0 AS pmi
-           FROM bc CROSS JOIN tot
-           JOIN uc a ON a.w = string_split(gram, ' ')[1]
-           JOIN uc b ON b.w = string_split(gram, ' ')[2]
-           WHERE c_ab >= 5)
-         SELECT gram, c_ab, c_a, c_b, pmi, CAST(rnk AS BIGINT) AS rnk
-         FROM (SELECT *, row_number() OVER (ORDER BY pmi DESC, gram) AS rnk
-               FROM scored)
-         WHERE rnk <= 20""",
-
-    // variance from integer sums (S1, S2, C) so both engines compute the
-    // identical doubles; z compared in DOUBLE space
-    // same exact-rank median/MAD (rank ceil(n/2) on (value, event_id)
-    // resp. (dev, event_id)) so both engines pick identical data values
-    "q119_mad_outliers" ->
-      """WITH ranked AS (
-           SELECT event_type, event_id, value,
-                  row_number() OVER (PARTITION BY event_type
-                                     ORDER BY value, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type) AS n
-           FROM events),
-         med AS (
-           SELECT event_type,
-                  max(CASE WHEN rn = CAST(ceil(n / 2.0) AS BIGINT)
-                      THEN value END) AS med
-           FROM ranked GROUP BY event_type),
-         devr AS (
-           SELECT e.event_type, e.event_id, abs(e.value - m.med) AS d,
-                  row_number() OVER (PARTITION BY e.event_type
-                                     ORDER BY abs(e.value - m.med), e.event_id) AS rn,
-                  count(*) OVER (PARTITION BY e.event_type) AS n
-           FROM events e JOIN med m USING (event_type)),
-         mad AS (
-           SELECT event_type,
-                  max(CASE WHEN rn = CAST(ceil(n / 2.0) AS BIGINT)
-                      THEN d END) AS mad
-           FROM devr GROUP BY event_type)
-         SELECT e.event_type, e.event_id, e.value, m.med, x.mad,
-                round(abs(e.value - m.med) / x.mad, 4) AS rz
-         FROM events e
-         JOIN med m USING (event_type)
-         JOIN mad x USING (event_type)
-         WHERE x.mad > 0 AND round(abs(e.value - m.med) / x.mad, 4) > 6""",
-
-    // every event contributes to the 6 hour-aligned windows covering it:
-    // starts date_trunc(hour, ts)-5h .. date_trunc(hour, ts) — the same
-    // epoch-aligned starts Spark's window('6 hours','1 hour') computes
-    "q118_hopping_window" ->
-      """WITH h AS (
-           SELECT event_type, value,
-                  unnest(generate_series(date_trunc('hour', ts) - INTERVAL 5 HOUR,
-                                         date_trunc('hour', ts),
-                                         INTERVAL 1 HOUR)) AS w_start
-           FROM events)
-         SELECT w_start, event_type,
-                count(*) AS n_events,
-                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM h GROUP BY 1, 2""",
-
-    "q77_rate_anomaly" ->
-      """WITH hourly AS (
-           SELECT event_type, date_trunc('hour', ts) AS hour_ts, count(*) AS n
-           FROM events GROUP BY 1, 2),
-         stats AS (
-           SELECT event_type, sum(n) AS s1, sum(n * n) AS s2, count(*) AS c
-           FROM hourly GROUP BY event_type),
-         z AS (
-           SELECT h.event_type, h.hour_ts, h.n,
-                  round((h.n * 1.0 - s1 * 1.0 / c) /
-                    sqrt(s2 * 1.0 / c - (s1 * 1.0 / c) * (s1 * 1.0 / c)), 4) AS z,
-                  s2 * 1.0 / c - (s1 * 1.0 / c) * (s1 * 1.0 / c) AS variance
-           FROM hourly h JOIN stats s ON h.event_type = s.event_type)
-         SELECT event_type, hour_ts, n, z FROM z
-         WHERE variance > 0 AND abs(z) > CAST(2.0 AS DOUBLE)""",
-
-    // funnel stages chain on strictly-later first times; counts of
-    // non-null stage times = users reaching each stage
-    "q73_funnel" ->
-      """WITH v AS (
-           SELECT user_id, min(ts) AS t_view FROM events
-           WHERE event_type = 'view' GROUP BY user_id),
-         c AS (
-           SELECT e.user_id, min(e.ts) AS t_click
-           FROM events e JOIN v ON e.user_id = v.user_id
-           WHERE e.event_type = 'click' AND e.ts > v.t_view
-           GROUP BY e.user_id),
-         p AS (
-           SELECT e.user_id, min(e.ts) AS t_purchase
-           FROM events e JOIN c ON e.user_id = c.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-           GROUP BY e.user_id)
-         SELECT count(v.t_view) AS n_view, count(c.t_click) AS n_click,
-                count(p.t_purchase) AS n_purchase
-         FROM v LEFT JOIN c ON v.user_id = c.user_id
-                LEFT JOIN p ON v.user_id = p.user_id""",
-
-    // cohort day rendered as VARCHAR on both sides (date columns surface
-    // differently through the two engines' pandas paths)
-    "q74_cohort_retention" ->
-      """WITH f AS (
-           SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-           FROM events GROUP BY user_id)
-         SELECT CAST(f.cohort_day AS VARCHAR) AS cohort_day,
-                date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
-                count(DISTINCT e.user_id) AS n_users
-         FROM events e JOIN f ON e.user_id = f.user_id
-         GROUP BY f.cohort_day, date_diff('day', f.cohort_day, CAST(e.ts AS DATE))""",
-
-    // exact counts stand in for the MG summary: capacity ≥ vocabulary on
-    // gate data means no decrement ever fires (same graduated-oracle
-    // discipline as q24/q26/q50); total order (cnt desc, token asc)
-    "q75_heavy_hitters" ->
-      """WITH tok AS (
-           SELECT lang, unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-                    AS token
-           FROM documents),
-         c AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2)
-         SELECT lang, CAST(rnk AS BIGINT) AS rnk, token, cnt
-         FROM (SELECT *, row_number() OVER (
-                 PARTITION BY lang ORDER BY cnt DESC, token) AS rnk FROM c)
-         WHERE rnk <= 10""",
-
-    // tf-idf: smoothed idf ln((N+1)/(df+1)) on identical integer-derived
-    // doubles; rank on the ROUNDED weight + token tiebreak so the top-k
-    // boundary can't flip on 1-ulp ln() differences between engines
-    "q71_tfidf_terms" ->
-      """WITH tok AS (
-           SELECT doc_id, lang,
-                  list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         oc AS (
-           SELECT lang, unnest(ts) AS token FROM tok),
-         occ AS (SELECT lang, token, count(*) AS cnt FROM oc GROUP BY 1, 2),
-         dt AS (SELECT doc_id, unnest(list_distinct(ts)) AS token FROM tok),
-         dfq AS (SELECT token, count(*) AS df FROM dt GROUP BY 1),
-         n AS (SELECT count(*) AS n_docs FROM documents),
-         w AS (
-           SELECT lang, occ.token, cnt, df,
-                  round(cnt * ln((n_docs + 1.0) / (df + 1.0)), 6) AS tfidf
-           FROM occ JOIN dfq ON occ.token = dfq.token CROSS JOIN n)
-         SELECT lang, token, cnt, df, tfidf, CAST(rnk AS BIGINT) AS rnk
-         FROM (SELECT *, row_number() OVER (
-                 PARTITION BY lang ORDER BY tfidf DESC, token) AS rnk FROM w)
-         WHERE rnk <= 10""",
-
-    // quality gate: first failing check names the verdict, in the
-    // operator's contract order; all compared metrics are the same rounded
-    // values the q60/q69 oracles pin, compared in DOUBLE space
-    "q72_quality_gate" ->
-      """WITH tok AS (
-           SELECT doc_id, coalesce(text, '') AS text,
-                  list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '') AS ts
-           FROM documents),
-         grams AS (
-           SELECT doc_id, unnest(list_transform(
-             generate_series(1, greatest(len(ts) - 1, 0)),
-             i -> ts[i] || ' ' || ts[i+1])) AS gram
-           FROM tok),
-         gc AS (SELECT doc_id, gram, count(*) AS c FROM grams GROUP BY 1, 2),
-         ga AS (
-           SELECT doc_id, max(c * length(gram)) AS topchars,
-                  coalesce(sum(CASE WHEN c > 1 THEN (c - 1) * length(gram) END), 0)
-                    AS dupchars
-           FROM gc GROUP BY doc_id),
-         ch AS (
-           SELECT doc_id, unnest(string_split(coalesce(text, ''), '')) AS c
-           FROM documents),
-         ce AS (SELECT doc_id, floor(entropy(c) * 10000.0 + 0.5) / 10000.0 AS ent
-                FROM ch GROUP BY doc_id),
-         m AS (
-           SELECT t.doc_id, len(t.ts) AS n_tokens,
-                  CASE WHEN length(t.text) > 0
-                       THEN round(coalesce(ga.topchars, 0) * 1.0 / length(t.text), 4)
-                       ELSE 0.0 END AS top_share,
-                  CASE WHEN length(t.text) > 0
-                       THEN round(coalesce(ga.dupchars, 0) * 1.0 / length(t.text), 4)
-                       ELSE 0.0 END AS dup_share,
-                  coalesce(ce.ent, 0.0) AS ent
-           FROM tok t
-           LEFT JOIN ga ON t.doc_id = ga.doc_id
-           LEFT JOIN ce ON t.doc_id = ce.doc_id)
-         SELECT d.doc_id, d.lang,
-                CASE WHEN m.n_tokens < 12 THEN 'too_short'
-                     WHEN m.top_share > CAST(0.15 AS DOUBLE) THEN 'repetitive_2gram'
-                     WHEN m.dup_share > CAST(0.12 AS DOUBLE) THEN 'dup_2gram'
-                     WHEN m.ent < CAST(3.9 AS DOUBLE) THEN 'low_entropy'
-                     ELSE 'keep' END AS verdict
-         FROM documents d JOIN m ON d.doc_id = m.doc_id""",
-
-    // int8 quantization: floor(x·127/scale + 0.5) codes, reconstruction
-    // error folded in list order — float→double widening is exact and
-    // every op is the same IEEE sequence as the native expression, so
-    // scale/code_sum/mse match bit-for-bit (mse surfaced ×1e6: raw MSEs
-    // sit at ~1e-7, below the comparator's 6-decimal float rounding)
-    "q70_int8_quant" ->
-      """WITH v AS (
-           SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         s AS (
-           SELECT vec_id, e,
-                  coalesce(list_max(list_transform(e, x -> abs(x))), 0.0) AS scale
-           FROM v),
-         q AS (
-           SELECT vec_id, scale,
-                  CASE WHEN scale > 0 THEN
-                    CAST(list_sum(list_transform(e,
-                      x -> CAST(floor(x * 127.0 / scale + 0.5) AS BIGINT))) AS BIGINT)
-                  ELSE 0 END AS code_sum,
-                  CASE WHEN scale > 0 AND len(e) > 0 THEN
-                    list_reduce(list_transform(e,
-                      x -> (x - floor(x * 127.0 / scale + 0.5) * scale / 127.0)
-                         * (x - floor(x * 127.0 / scale + 0.5) * scale / 127.0)),
-                      (a, b) -> a + b) / len(e)
-                  ELSE 0.0 END AS mse
-           FROM s)
-         SELECT vec_id, scale, code_sum, round(mse * 1e6, 4) AS mse_e6 FROM q""",
-
-    // chunk windows start every 40 tokens while start < n_tokens; slice is
-    // 1-based inclusive in both engines' list semantics; empty docs chunk
-    // to nothing (generate_series over an empty range unnests no rows)
-    "q67_chunk_docs" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-           FROM documents),
-         st AS (
-           SELECT doc_id, ts,
-                  unnest(CASE WHEN len(ts) > 0
-                              THEN generate_series(0, len(ts) - 1, 40)
-                              ELSE [] END) AS start
-           FROM tok)
-         SELECT doc_id,
-                CAST(start // 40 AS BIGINT) AS chunk_id,
-                CAST(len(ts[start + 1 : start + 50]) AS BIGINT) AS n_tokens,
-                array_to_string(ts[start + 1 : start + 50], ' ') AS chunk_text
-         FROM st""",
-
-    // shard = first md5 byte mod 8 (two hex nibbles, engine-portable
-    // integer arithmetic); position = rank of the full hash within the
-    // shard, id tiebreak
-    "q68_shuffle_shards" ->
-      """WITH h AS (
-           SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':42') AS hh
-           FROM documents),
-         x AS (
-           SELECT doc_id, hh,
-                  ((strpos('0123456789abcdef', substr(hh, 1, 1)) - 1) * 4096 +
-                   (strpos('0123456789abcdef', substr(hh, 2, 1)) - 1) * 256 +
-                   (strpos('0123456789abcdef', substr(hh, 3, 1)) - 1) * 16 +
-                   (strpos('0123456789abcdef', substr(hh, 4, 1)) - 1)) % 8 AS sh
-           FROM h)
-         SELECT doc_id, CAST(sh AS BIGINT) AS shard,
-                CAST(row_number() OVER (PARTITION BY sh ORDER BY hh, doc_id)
-                  AS BIGINT) AS shard_pos
-         FROM x""",
-
-    // floor-form portable rounding (see functions/Portable.scala): the
-    // same IEEE ops on both engines make the output bytes identical.
-    // The actual r4/r5 driver-hash red here was the uncast sum() —
-    // DuckDB's sum(BIGINT) returns HUGEINT (int128) which the driver
-    // hashes differently from Spark's int64 — fixed by the CAST below
-    "q62_mixture_weights" ->
-      """WITH s AS (
-           SELECT lang, count(*) AS n_docs,
-                  CAST(sum(len(list_filter(string_split(text, ' '),
-                                           x -> x <> ''))) AS BIGINT)
-                    AS n_tokens
-           FROM documents GROUP BY lang)
-         SELECT lang, n_docs, n_tokens,
-                floor((CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER ())
-                      * 1000000.0 + 0.5) / 1000000.0 AS token_share,
-                floor(((1.0 / count(*) OVER ())
-                       / (CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER ()))
-                      * 1000000.0 + 0.5) / 1000000.0 AS weight
-         FROM s""",
-
-    // split thresholds are cumulative 1/256 shares compared on the md5 hex
-    // prefix: train < 0xe6 (230/256), val < 0xf3 (+13/256), else test
-    "q52_train_split" ->
-      """SELECT doc_id,
-                CASE WHEN substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 2) < 'e6'
-                       THEN 'train'
-                     WHEN substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 2) < 'f3'
-                       THEN 'val'
-                     ELSE 'test' END AS split
-         FROM documents""",
-
-    "q53_seq_pack" ->
-      """WITH tok AS (
-           SELECT doc_id, lang,
-                  len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens
-           FROM documents)
-         SELECT doc_id, lang, n_tokens,
-                CAST(floor((sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                            - n_tokens) / 2048) AS BIGINT) AS seq_id
-         FROM tok""",
-
-    "q54_vocab_df" ->
-      """WITH tok AS (
-           SELECT lang, unnest(list_distinct(
-             list_filter(string_split(text, ' '), x -> x <> ''))) AS token
-           FROM documents),
-         counts AS (SELECT lang, token, count(*) AS df FROM tok GROUP BY 1, 2),
-         ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY lang
-                                        ORDER BY df DESC, token) AS rnk
-           FROM counts)
-         SELECT lang, token, df, rnk FROM ranked WHERE rnk <= 10""",
-
-    "q31_distinct_agg" ->
-      """SELECT event_type,
-                count(DISTINCT user_id) AS n_users,
-                count(*) AS n_events,
-                count(CASE WHEN value > 100.0 THEN 1 END) AS n_large
-         FROM events GROUP BY event_type""",
-
-    "q27_multimodal" ->
-      """SELECT doc_id,
-                octet_length(encode(text)) AS n_bytes,
-                sha256(text) AS content_hash,
-                upper(hex(encode(substring(text, 1, 8)))) AS header_hex
-         FROM documents""",
-  )
 }

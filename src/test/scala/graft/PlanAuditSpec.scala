@@ -533,6 +533,15 @@ class PlanAuditSpec extends SparkSpec {
   test("driver contract: every query has an oracle") {
     val unchecked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(unchecked.isEmpty, s"queries without oracles: $unchecked")
+    val blank = SparkEntry.specs.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: $blank")
+  }
+
+  test("driver contract: query names are unique") {
+    // queries and oracleSql are built with toMap, which keeps the last of
+    // two specs with one name and drops the other without a word
+    val dups = SparkEntry.specs.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
+    assert(dups.isEmpty, s"query names used more than once: $dups")
   }
 
   test("every query has a frozen bench budget (tools/bench_budgets.json)") {

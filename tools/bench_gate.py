@@ -4,8 +4,11 @@ tools/bench_budgets.json (see BASELINE.md "frozen bench budgets").
 
 Usage: bench_gate.py <bench.json|-> [budgets.json]
 
-The bench file may be either the raw one-line {"metric":...} JSON printed by
-graft.Bench or a driver BENCH_r*.json wrapper whose "tail" embeds it.
+The bench file may be the raw one-line {"metric":...} JSON printed by
+graft.Bench, Bench's stdout, or a driver BENCH_r*.json wrapper. A wrapper's
+"parsed" object is used when it carries the per-query "queries" map (its
+bounded "tail" usually has lost the head of Bench's long line); otherwise
+the tail is scanned for a complete line.
 
 Exit 0 = every query within budget; exit 1 = violations (listed), queries
 missing from the budget table (a new query must get a frozen budget in the
@@ -53,6 +56,9 @@ def load_bench(path):
     if isinstance(d, dict) and "queries" in d:
         return d
     if isinstance(d, dict) and "tail" in d:
+        parsed = d.get("parsed")
+        if isinstance(parsed, dict) and "queries" in parsed:
+            return parsed
         text = d["tail"]
     # the bench line is one-per-line JSON possibly embedded in log noise:
     # take the LAST line carrying the per-query map (graft.Bench's stdout
@@ -64,7 +70,9 @@ def load_bench(path):
         if '{"metric"' in cand and '"queries":' in cand:
             line = cand
     if line is None:
-        raise SystemExit(f"no bench JSON line found in {path}")
+        why = (" (the wrapper's \"parsed\" has no \"queries\" map and its "
+               "tail holds no complete bench line)") if isinstance(d, dict) and "tail" in d else ""
+        raise SystemExit(f"no bench JSON line found in {path}{why}")
     return json.loads(line[line.index('{"metric"'):line.rindex("}") + 1])
 
 
