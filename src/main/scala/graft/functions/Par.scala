@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.StreamingShim
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
+import scala.util.{Failure, Success, Try}
 
 /** Parallelism control for compute-bound operators.
   *
@@ -57,6 +58,26 @@ object Par {
     val plan = df.queryExecution.optimizedPlan
     val known = plan.collectLeaves().forall(_.stats.sizeInBytes < sentinel)
     if (known && plan.stats.sizeInBytes / splitBytes >= n) df else df.repartition(n)
+  }
+
+  /** Runs the thunks at once, one fresh thread each, and returns their
+    * values in order. Fresh threads rather than a pool: a thread inherits
+    * the caller's Spark thread-locals when it is created (the active
+    * session and the local properties: job group, job tags, scheduler
+    * pool), so every job a thunk starts is attributed as the caller's
+    * would be. Waits for every thunk; then rethrows the first failure in
+    * thunk order, so no thunk is still running when the caller sees it.
+    */
+  def concurrently[T](thunks: Seq[() => T]): Seq[T] = {
+    val out = new Array[Try[T]](thunks.size)
+    val threads = thunks.zipWithIndex.map { case (f, i) =>
+      val t = new Thread(() => out(i) = try Success(f()) catch { case e: Throwable => Failure(e) },
+        s"graft-concurrently-$i")
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    out.toSeq.map(_.get)
   }
 
   /** Materialize an expensive, multiply-referenced intermediate (shingle

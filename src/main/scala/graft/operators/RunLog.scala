@@ -14,17 +14,16 @@ import graft.sources.StateStore
   * updates counts and clears error; `failed` records the error truncated to
   * 4000 chars (`pipeline_run_logs_repo.py:70`).
   *
-  * The table is tiny, so, as in [[Watermark.upsert]], each call reads it
-  * once, merges on the driver and writes the rows back as one local
-  * relation.
+  * The table is tiny, so, as in [[Watermark.upsert]], each call merges on
+  * the driver over its rows ([[StateStore.Small]]: the rows this instance
+  * last wrote, unless another writer has changed the table since) and
+  * writes them back as one local relation.
   */
 class RunLog(spark: SparkSession, dir: String) {
 
-  def table: DataFrame = StateStore.read(spark, dir, Schemas.runLog)
+  private val store = new StateStore.Small(spark, dir, Schemas.runLog)
 
-  private def write(rows: Seq[Row]): Unit =
-    StateStore.overwrite(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      Schemas.runLog), dir)
+  def table: DataFrame = StateStore.read(spark, dir, Schemas.runLog)
 
   /** INSERT ... ON CONFLICT (run_id) DO NOTHING (`pipeline_run_logs_repo.py:7-24`).
     * A run_id that is already logged (the second entity of a run, or a
@@ -32,9 +31,9 @@ class RunLog(spark: SparkSession, dir: String) {
     */
   def start(runId: String, pipeline: String, entity: String,
             startedAt: Instant = Instant.now()): Unit = {
-    val rows = table.collect().toSeq
+    val rows = store.rows
     if (!rows.exists(_.getString(0) == runId))
-      write(rows :+ Row(runId, pipeline, entity, java.sql.Timestamp.from(startedAt),
+      store.overwrite(rows :+ Row(runId, pipeline, entity, java.sql.Timestamp.from(startedAt),
         null, "running", null, null, null, null))
   }
 
@@ -42,10 +41,10 @@ class RunLog(spark: SparkSession, dir: String) {
     * (ended_at, status, the three counts, error).
     */
   private def finish(runId: String, update: Seq[Any]): Unit = {
-    val rows = table.collect().toSeq
+    val rows = store.rows
     if (!rows.exists(_.getString(0) == runId))
       throw new IllegalStateException(s"no run_log row for $runId")
-    write(rows.map(r => if (r.getString(0) == runId) Row.fromSeq(r.toSeq.take(4) ++ update) else r))
+    store.overwrite(rows.map(r => if (r.getString(0) == runId) Row.fromSeq(r.toSeq.take(4) ++ update) else r))
   }
 
   /** UPDATE ... status='success', error=NULL (`pipeline_run_logs_repo.py:26-51`). */

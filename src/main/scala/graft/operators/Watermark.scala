@@ -2,7 +2,6 @@ package graft.operators
 
 import java.time.Instant
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.model.Schemas
 import graft.sources.StateStore
 
@@ -20,33 +19,38 @@ import graft.sources.StateStore
   */
 class Watermark(spark: SparkSession, dir: String) {
 
+  private val store = new StateStore.Small(spark, dir, Schemas.watermark)
+
   def table: DataFrame = StateStore.read(spark, dir, Schemas.watermark)
 
   /** O-3 — read the saved watermark, falling back to `defaultStart`. */
-  def get(pipeline: String, entity: String, defaultStart: Instant): Instant = {
-    val row = table
-      .filter(col("pipeline_name") === pipeline && col("entity") === entity)
-      .select(col("last_success_time"))
-      .collect()
-    row.headOption.flatMap(r => Option(r.getTimestamp(0)).map(_.toInstant))
+  def get(pipeline: String, entity: String, defaultStart: Instant): Instant =
+    store.rows.find(r => r.getString(0) == pipeline && r.getString(1) == entity)
+      .flatMap(r => Option(r.getTimestamp(2))).map(_.toInstant)
       .getOrElse(defaultStart)
-  }
 
-  /** O-4 — monotonic max-merge upsert of the watermark row. The control
-    * table is tiny, so the merge runs on the driver over its collected rows
-    * and the result is written back as one local relation.
-    */
+  /** O-4 — monotonic max-merge upsert of the watermark row. */
   def upsert(pipeline: String, entity: String, newWm: Instant, runId: String,
-             now: Instant = Instant.now()): Unit = {
-    val (mine, others) = table.collect().toSeq.partition(r =>
-      r.getString(0) == pipeline && r.getString(1) == entity)
-    // greatest(): the time never regresses (watermark_repo.py:53); compared
-    // as Timestamps, which keep the microseconds
-    val time = (mine.flatMap(r => Option(r.getTimestamp(2))) :+ java.sql.Timestamp.from(newWm))
-      .reduce((a, b) => if (a.compareTo(b) >= 0) a else b)
-    // ...but run_id/updated_at always take the newest write (Q-4).
-    val row = Row(pipeline, entity, time, runId, java.sql.Timestamp.from(now))
-    val rows = java.util.Arrays.asList(others :+ row: _*)
-    StateStore.overwrite(spark.createDataFrame(rows, Schemas.watermark), dir)
+             now: Instant = Instant.now()): Unit =
+    upsertAll(pipeline, Seq(entity -> newWm), runId, now)
+
+  /** [[upsert]] of several entities' watermarks in one write. The control
+    * table is tiny, so the merge runs on the driver over its rows and the
+    * result is written back as one local relation.
+    */
+  def upsertAll(pipeline: String, advances: Seq[(String, Instant)], runId: String,
+                now: Instant = Instant.now()): Unit = if (advances.nonEmpty) {
+    val rows = store.rows
+    val merged = advances.map { case (entity, newWm) =>
+      val old = rows.find(r => r.getString(0) == pipeline && r.getString(1) == entity)
+      // greatest(): the time never regresses (watermark_repo.py:53); compared
+      // as Timestamps, which keep the microseconds
+      val time = (old.flatMap(r => Option(r.getTimestamp(2))) ++ Some(java.sql.Timestamp.from(newWm)))
+        .reduce((a, b) => if (a.compareTo(b) >= 0) a else b)
+      // ...but run_id/updated_at always take the newest write (Q-4).
+      Row(pipeline, entity, time, runId, java.sql.Timestamp.from(now))
+    }
+    val written = merged.map(r => (r.getString(0), r.getString(1))).toSet
+    store.overwrite(rows.filterNot(r => written((r.getString(0), r.getString(1)))) ++ merged)
   }
 }

@@ -18,11 +18,12 @@ import graft.sources.{Landing, StateStore}
   * is flagged against history and the latest table
   * ([[graft.operators.Merge.withStageFlags]]) and materialized once; one
   * aggregate over it gives `rowsIn`, the new-history count and the winner
-  * count; the history append writes the `_new_hist` rows and the latest
-  * table is rewritten as existing-minus-winners plus winners
-  * ([[graft.operators.Merge.applyWinners]], map-only over the table). Each
-  * write runs only when its count is non-zero, so a rerun that changes
-  * nothing leaves both tables untouched.
+  * count; the history append writes the `_new_hist` rows and, at the same
+  * time, the latest table is rewritten as existing-minus-winners plus
+  * winners ([[graft.operators.Merge.applyWinners]], map-only over the
+  * table). Each write runs only when its count is non-zero, so a rerun that
+  * changes nothing leaves both tables untouched, and the run is logged, as
+  * success or failure, only after both writes have ended.
   *
   * Deviations, both recorded in SURVEY.md §8 as reference defects we fix:
   *  - Q-1: payload values are preserved (the reference nulls every
@@ -61,10 +62,15 @@ class Stager(spark: SparkSession, cfg: StagerConfig) {
       val (rowsIn, nHist, nLatest) = (counts.getLong(0), counts.getLong(1), counts.getLong(2))
       def rows(flag: String) = batch.filter(col(flag)).drop("_new_hist", "_wins")
 
-      // O-11: append only rows whose (id, updated_at, payload_hash) is new.
-      if (nHist > 0) StateStore.append(rows("_new_hist"), historyDir(entity))
-      // O-12: newer-wins upsert — only the winning rows touch the latest table.
-      if (nLatest > 0) StateStore.overwrite(Merge.applyWinners(cur, rows("_wins")), latestDir(entity))
+      // O-11: append only rows whose (id, updated_at, payload_hash) is new;
+      // O-12: newer-wins upsert — only the winning rows touch the latest
+      // table. Both read the materialized batch and neither reads what the
+      // other writes, so they run at once; both end before the run is logged.
+      Par.concurrently(Seq(
+        Option.when(nHist > 0)(() => StateStore.append(rows("_new_hist"), historyDir(entity))),
+        Option.when(nLatest > 0)(() =>
+          StateStore.overwrite(Merge.applyWinners(cur, rows("_wins")), latestDir(entity)))
+      ).flatten)
 
       runLog.finishSuccess(runId, rowsIn, nHist, nLatest, endedAt = now)
       StageResult(entity, runId, rowsIn, nHist, nLatest)

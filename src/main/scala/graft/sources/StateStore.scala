@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.types.StructType
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The pipeline's state tables: small keyed parquet datasets in the role
   * Postgres plays in the reference (watermark, run log, history, latest).
@@ -31,8 +32,60 @@ import org.apache.hadoop.fs.Path
   * in full as the existing rows minus the batch's winning keys plus the
   * winners, a map-only plan, but still O(table) bytes per run in the single
   * task of [[overwrite]].
+  *
+  * The control tables are read through [[Small]], which serves the rows it
+  * last wrote or read while the table's directory listing (file name,
+  * length, mtime) is the one it saw then. The listing check is enough to
+  * see any other writer: every Spark write names its part files with a
+  * fresh job UUID, so an overwrite or append by another instance, another
+  * process or a direct [[overwrite]] always changes the names, and an
+  * absent directory (mid-swap, or never written) always takes the real
+  * read. As with the offset log of Structured Streaming, the table is the
+  * record and the held rows only spare reading it back.
   */
 object StateStore {
+
+  /** (name, length, mtime) of each file directly under a table directory. */
+  private type Listing = Seq[(String, Long, Long)]
+
+  private def listing(fs: FileSystem, path: Path): Option[Listing] =
+    try Some(fs.listStatus(path).toSeq.map(s => (s.getPath.getName, s.getLen,
+      s.getModificationTime)).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** A tiny control table, merged on the driver: `rows` is its content,
+    * `overwrite(rows)` replaces it. A read lists the directory (one
+    * filesystem call, no Spark job) and returns the held rows if the
+    * listing is the held one; otherwise it reads the table through [[read]]
+    * (which keeps the in-flight-swap retry). The listing is taken before
+    * that read, so a write landing between the two leaves the held listing
+    * stale and forces the next read through. State is per instance.
+    */
+  final class Small(spark: SparkSession, dir: String, schema: StructType) {
+    private val path = new Path(dir)
+    private val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private var held: Option[(Listing, Seq[Row])] = None
+
+    def rows: Seq[Row] = synchronized {
+      val now = listing(fs, path)
+      held match {
+        case Some((seen, kept)) if now.contains(seen) => kept
+        case _ =>
+          val fresh = read(spark, dir, schema).collect().toSeq
+          held = now.map(_ -> fresh)
+          fresh
+      }
+    }
+
+    def overwrite(rows: Seq[Row]): Unit = synchronized {
+      val written = swapIn(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), dir)
+      // held as a read would return them: through the same conversion
+      // (timestamps to microseconds, rows carrying the schema)
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+      held = Some(written -> rows.map(r => toScala(toCatalyst(r)).asInstanceOf[Row]))
+    }
+  }
 
   def read(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val path = new Path(dir)
@@ -50,7 +103,7 @@ object StateStore {
     * mid-flight (or a crashed writer left its rollback source — in which
     * case the bounded retry lapses and the caller sees the table as it is).
     */
-  private def swapInFlight(fs: org.apache.hadoop.fs.FileSystem, path: Path): Boolean = {
+  private def swapInFlight(fs: FileSystem, path: Path): Boolean = {
     val parent = path.getParent
     parent != null && fs.exists(parent) && fs.listStatus(parent).exists { s =>
       val n = s.getPath.getName
@@ -59,7 +112,14 @@ object StateStore {
   }
 
   /** Atomically replace `dir` with the contents of `df`. */
-  def overwrite(df: DataFrame, dir: String): Unit = {
+  def overwrite(df: DataFrame, dir: String): Unit = swapIn(df, dir): Unit
+
+  /** [[overwrite]], returning the listing of the files it swapped in, taken
+    * before the swap: renaming a directory keeps its files' names, lengths
+    * and mtimes, and a later swap by another writer cannot be mistaken for
+    * this one.
+    */
+  private def swapIn(df: DataFrame, dir: String): Listing = {
     val spark = df.sparkSession
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -69,6 +129,7 @@ object StateStore {
     // cheap; for the latest-state table it also means the whole rewrite
     // runs in one task.
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val written = listing(fs, tmp).getOrElse(throw new java.io.IOException(s"no output: $tmp"))
     if (fs.exists(path)) {
       if (!fs.rename(path, old)) throw new java.io.IOException(s"swap-out failed: $dir")
     }
@@ -78,6 +139,7 @@ object StateStore {
       throw new java.io.IOException(s"swap-in failed: $dir")
     }
     fs.delete(old, true)
+    written
   }
 
   /** Append `df` to `dir` (history-style append-only datasets). */

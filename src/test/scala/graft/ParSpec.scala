@@ -1,9 +1,9 @@
 package graft
 
-import graft.functions.NearDup
+import graft.functions.{NearDup, Par}
 
 /** The hot-key cap of the near-dup index: posting lists longer than
-  * `maxBucket` generate no candidates.
+  * `maxBucket` generate no candidates; and `Par.concurrently`.
   */
 class ParSpec extends SparkSpec {
   import spark.implicits._
@@ -19,5 +19,23 @@ class ParSpec extends SparkSpec {
         .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(pairs(1000).size == 435)
     assert(pairs(10).isEmpty)
+  }
+
+  test("concurrently: every thunk sees the caller's job tags") {
+    val sc = spark.sparkContext
+    sc.addJobTag("par-spec-tag")
+    try {
+      val seen = Par.concurrently(Seq(() => sc.getJobTags(), () => sc.getJobTags()))
+      assert(seen.forall(_.contains("par-spec-tag")), seen)
+    } finally sc.removeJobTag("par-spec-tag")
+  }
+
+  test("concurrently: a failure is rethrown only after a slower sibling has finished") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](Par.concurrently(Seq(
+      () => throw new IllegalStateException("first"),
+      () => { Thread.sleep(300); finished.set(true) })))
+    assert(e.getMessage == "first")
+    assert(finished.get, "rethrown while a sibling thunk was still running")
   }
 }

@@ -153,6 +153,110 @@ class PipelineSpec extends SparkSpec {
     assert(row.getAs[String]("error") != null)
   }
 
+  /** Every plan in `qes` that writes a directory whose name contains `dir`. */
+  private def writesTo(qes: Seq[org.apache.spark.sql.execution.QueryExecution], dir: String) =
+    qes.filter(_.analyzed.collect {
+      case w: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
+        w.outputPath.toString
+    }.exists(_.contains(dir)))
+
+  test("run: feeds on the caller thread in map order, one watermark write for both entities") {
+    val (cfg, ex, _) = mkPipeline()
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, Thread)]()
+    def feed(e: String, df: DataFrame): Instant => DataFrame = cursor => {
+      calls.add(e -> Thread.currentThread())
+      feedFrom(df)(cursor)
+    }
+    val feeds = Map(
+      "ib_receipts" -> feed("ib_receipts", sourceDf(("a", "2024-02-01 10:00:00", "NEW"))),
+      "ob_orders" -> feed("ob_orders", sourceDf(("x", "2024-02-01 11:00:00", "NEW"),
+        ("y", "2024-02-01 12:00:00", "NEW"))))
+    val (results, qes) = executions(ex.run(feeds, "run1"))
+    import scala.jdk.CollectionConverters._
+    assert(calls.asScala.toSeq == feeds.keys.toSeq.map(_ -> Thread.currentThread()))
+    assert(writesTo(qes, "etl_watermark").size == 1)
+    assert(results.map(r => r.entity -> r.rowsIn) == Seq("ib_receipts" -> 1L, "ob_orders" -> 2L))
+    val wm = spark.read.parquet(s"${cfg.stateRoot}/etl_watermark")
+      .select($"entity", $"last_success_time").as[(String, java.sql.Timestamp)].collect().toMap
+    assert(wm == Map("ib_receipts" -> ts("2024-02-01 10:00:00"), "ob_orders" -> ts("2024-02-01 12:00:00")))
+  }
+
+  test("run over two entities gives what two runEntity calls give") {
+    val now = Instant.parse("2024-02-02T00:00:00Z")
+    val a = feedFrom(sourceDf(("a", "2024-02-01 10:00:00", "NEW"), ("b", "2024-02-01 11:00:00", "NEW")))
+    val b = feedFrom(sourceDf(("x", "2024-02-01 09:00:00", "NEW")))
+    val (cfg1, ex1, _) = mkPipeline()
+    val (cfg2, ex2, _) = mkPipeline()
+    val together = ex1.run(Map("ea" -> a, "eb" -> b), "run1", now)
+    val apart = Seq(ex2.runEntity("ea", "run1", a, now), ex2.runEntity("eb", "run1", b, now))
+    assert(together == apart)
+    def state(cfg: ExtractorConfig): Seq[Row] =
+      spark.read.parquet(s"${cfg.stateRoot}/etl_watermark").orderBy("entity").collect().toSeq
+    def landed(cfg: ExtractorConfig, e: String): Seq[Row] =
+      graft.sources.Landing.read(spark, cfg.landingRoot, e, "run1").orderBy("id").collect().toSeq
+    assert(state(cfg1) == state(cfg2))
+    Seq("ea", "eb").foreach(e => assert(landed(cfg1, e) == landed(cfg2, e)))
+  }
+
+  test("run: a failing entity's watermark holds while the other entity lands and advances") {
+    val (cfg, ex, _) = mkPipeline()
+    ex.run(Map("good" -> feedFrom(sourceDf(("a", "2024-02-01 10:00:00", "NEW"))),
+      "bad" -> feedFrom(sourceDf(("b", "2024-02-01 10:00:00", "NEW")))), "run1")
+    val e = intercept[IllegalArgumentException](ex.run(Map(
+      "good" -> feedFrom(sourceDf(("a", "2024-02-01 12:00:00", "PROCESSING"))),
+      "bad" -> feedFrom(sourceDf((null, "2024-02-01 12:00:00", "NEW")))), "run2"))
+    assert(e.getMessage.contains("null required fields"))
+    assert(graft.sources.Landing.read(spark, cfg.landingRoot, "good", "run2").count() == 1)
+    val wm = spark.read.parquet(s"${cfg.stateRoot}/etl_watermark")
+      .select($"entity", $"last_success_time", $"last_success_run_id")
+      .as[(String, java.sql.Timestamp, String)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(wm == Map("good" -> (ts("2024-02-01 12:00:00"), "run2"),
+      "bad" -> (ts("2024-02-01 10:00:00"), "run1")))
+  }
+
+  test("a failed latest rewrite is logged as failed only after the history append ended") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+    val (cfg, ex, st) = mkPipeline()
+    ex.runEntity("e", "run1", feedFrom(sourceDf(
+      ("a", "2024-02-01 10:00:00", "NEW"), ("b", "2024-02-01 11:00:00", "NEW"))))
+    st.run("e", "run1")
+    // `status` stored as a long: staging's flag pass reads only id and
+    // updated_at of the latest table, its rewrite reads every column and fails
+    graft.sources.StateStore.overwrite(
+      spark.read.parquet(st.latestDir("e")).withColumn("status", lit(1L)), st.latestDir("e"))
+    ex.runEntity("e", "run2", feedFrom(sourceDf(
+      ("a", "2024-02-01 12:00:00", "PROCESSING"), ("c", "2024-02-01 12:30:00", "NEW"))))
+
+    // (start ms, end ms) of each SQL execution, by the table it writes
+    val spans = new java.util.concurrent.ConcurrentHashMap[Long, (String, Long, Long)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          val plan = s.physicalPlanDescription
+          val table = Seq("stg_e_history", "pipeline_run_log").find(plan.contains).getOrElse("")
+          spans.put(s.executionId, (table, s.time, Long.MaxValue))
+        case s: SparkListenerSQLExecutionEnd =>
+          spans.computeIfPresent(s.executionId, (_, v) => v.copy(_3 = s.time))
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try executions(intercept[Exception](st.run("e", "run2")))
+    finally spark.sparkContext.removeSparkListener(listener)
+
+    val row = spark.read.parquet(s"${cfg.stateRoot}/pipeline_run_log")
+      .filter($"run_id" === "run2").head()
+    assert(row.getAs[String]("status") == "failed")
+    assert(spark.read.parquet(st.historyDir("e")).count() == 4)
+    import scala.jdk.CollectionConverters._
+    val byTable = spans.values().asScala.toSeq.groupBy(_._1)
+    val historyEnd = byTable("stg_e_history").map(_._3).max
+    // the last run-log write is finishFailed's (the first is the start row)
+    val failedAt = byTable("pipeline_run_log").map(_._2).max
+    assert(failedAt >= historyEnd, s"failed row written at $failedAt, history append ended at $historyEnd")
+  }
+
   // ---- PagedFeed client (test_extract.py contracts) ----
 
   private val feedSchema = StructType(Seq(

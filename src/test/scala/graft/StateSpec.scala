@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.time.Instant
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.operators.{RunLog, Watermark}
 
@@ -123,6 +124,49 @@ class StateSpec extends SparkSpec {
     intercept[IllegalStateException] {
       rl.finishSuccess("never", rowsIn = 1, rowsHist = 1, rowsLatest = 1, endedAt = t1)
     }
+  }
+
+  test("held rows are never stale: a second Watermark on the same directory sees every write") {
+    val dir = tmpDir("wm")
+    val (a, b) = (new Watermark(spark, dir), new Watermark(spark, dir))
+    a.upsert("p", "e1", t1, "r1", now = t1)
+    assert(b.get("p", "e1", t0) == t1)
+    b.upsert("p", "e1", t2, "r2", now = t2)
+    assert(a.get("p", "e1", t0) == t2) // a's held rows are the ones before b's write
+    a.upsert("p", "e2", t1, "r3", now = t2) // merges over b's row, does not drop it
+    assert(b.get("p", "e1", t0) == t2 && b.get("p", "e2", t0) == t1)
+    assert(a.table.count() == 2)
+  }
+
+  test("held rows are never stale: a RunLog sees a direct StateStore.overwrite of its table") {
+    val dir = tmpDir("rl")
+    val rl = new RunLog(spark, dir)
+    rl.start("r1", "pipe", "e", startedAt = t0)
+    val other = rl.table.collect().toSeq.map(r => Row.fromSeq("r2" +: r.toSeq.tail))
+    graft.sources.StateStore.overwrite(
+      spark.createDataFrame(java.util.Arrays.asList(other: _*), graft.model.Schemas.runLog), dir)
+    // the table now holds r2 only: r1 cannot be finished, and r2 can
+    intercept[IllegalStateException](rl.finishSuccess("r1", 1, 1, 1, endedAt = t1))
+    rl.finishSuccess("r2", rowsIn = 3, rowsHist = 2, rowsLatest = 1, endedAt = t1)
+    assert(rl.table.select($"run_id", $"status").as[(String, String)].collect().toSeq ==
+      Seq("r2" -> "success"))
+  }
+
+  test("a read after the instance's own write runs no Spark action") {
+    val wmDir = tmpDir("wm")
+    val wm = new Watermark(spark, wmDir)
+    wm.upsert("p", "e", t1.plusNanos(123456789), "run-1", now = t1)
+    val (got, wmReads) = executions(wm.get("p", "e", defaultStart = t0))
+    assert(wmReads.isEmpty, wmReads.map(_.analyzed.nodeName))
+    // the held rows are what the table reads back: microseconds, not nanos
+    assert(got == t1.plusNanos(123456000) && got == new Watermark(spark, wmDir).get("p", "e", t0))
+    val dir = tmpDir("rl")
+    val rl = new RunLog(spark, dir)
+    rl.start("r1", "pipe", "e", startedAt = t0)
+    val before = StateSpec.files(dir)
+    val (_, rlReads) = executions(rl.start("r1", "pipe", "e", startedAt = t2))
+    assert(rlReads.isEmpty, rlReads.map(_.analyzed.nodeName))
+    assert(StateSpec.files(dir) == before)
   }
 }
 

@@ -7,7 +7,9 @@
 # NOT a leading -Xmx flag: user args land after the script's -Xms/-Xmx
 # pair, so a smaller -Xmx would conflict with the fixed -Xms.
 set -euo pipefail
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# the classes of the checkout this script belongs to, wherever it is
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$REPO/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 HALF_MB=$(( $(getconf _PHYS_PAGES) * $(getconf PAGE_SIZE) / 2097152 ))
 HALF_MB=$(( HALF_MB < 2048 ? 2048 : HALF_MB > 16384 ? 16384 : HALF_MB ))
 MEM="${SPARK_DRIVER_MEM:-${HALF_MB}m}"
