@@ -17,7 +17,13 @@ import graft.sources.StateStore
   * The table is tiny, so, as in [[Watermark.upsert]], each call merges on
   * the driver over its rows ([[StateStore.Small]]: the rows this instance
   * last wrote, unless another writer has changed the table since) and
-  * writes them back as one local relation.
+  * writes them back from the driver as one parquet file, with no Spark job.
+  *
+  * One row per run_id, the reference's key (`pipeline_run_log(run_id PK)`),
+  * while the entities of one run share its run_id (SURVEY.md §8 Q-8): the
+  * row keeps the `entity` and `started_at` of the first entity staged
+  * under the run, and its `ended_at`, status, counts and error are the
+  * last-staged entity's, since each `finish*` replaces them.
   */
 class RunLog(spark: SparkSession, dir: String) {
 

@@ -36,7 +36,7 @@ class Watermark(spark: SparkSession, dir: String) {
 
   /** [[upsert]] of several entities' watermarks in one write. The control
     * table is tiny, so the merge runs on the driver over its rows and the
-    * result is written back as one local relation.
+    * result is written back from the driver, with no Spark job.
     */
   def upsertAll(pipeline: String, advances: Seq[(String, Instant)], runId: String,
                 now: Instant = Instant.now()): Unit = if (advances.nonEmpty) {

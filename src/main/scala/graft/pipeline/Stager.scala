@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.time.Instant
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Par
 import graft.operators.{Merge, Payload, RunLog}
@@ -16,9 +16,10 @@ import graft.sources.{Landing, StateStore}
   *
   * Planned as one pass per entity: the landed batch, with payload and hash,
   * is flagged against history and the latest table
-  * ([[graft.operators.Merge.withStageFlags]]) and materialized once; one
-  * aggregate over it gives `rowsIn`, the new-history count and the winner
-  * count; the history append writes the `_new_hist` rows and, at the same
+  * ([[graft.operators.Merge.withStageFlags]]) and materialized once;
+  * `rowsIn`, the new-history count and the winner count are observed on
+  * that checkpoint job itself (`Dataset.observe`), so counting costs no job
+  * of its own; the history append writes the `_new_hist` rows and, at the same
   * time, the latest table is rewritten as existing-minus-winners plus
   * winners ([[graft.operators.Merge.applyWinners]], map-only over the
   * table). Each write runs only when its count is non-zero, so a rerun that
@@ -55,11 +56,13 @@ class Stager(spark: SparkSession, cfg: StagerConfig) {
       val records = Payload.withPayloadAndHash(
         Landing.read(spark, cfg.landingRoot, entity, runId))
       val cur = latest(entity, records)
-      // O-11 + O-12 in one materialized pass; counts from one aggregate over it
-      val batch = Par.materialize(Merge.withStageFlags(history(entity, records), cur, records))
-      val counts = batch.agg(count(lit(1)), count_if(col("_new_hist")), count_if(col("_wins")))
-        .head()
-      val (rowsIn, nHist, nLatest) = (counts.getLong(0), counts.getLong(1), counts.getLong(2))
+      // O-11 + O-12 in one materialized pass, counted while it is checkpointed
+      val staged = Observation(s"staged_$entity")
+      val batch = Par.materialize(Merge.withStageFlags(history(entity, records), cur, records)
+        .observe(staged, count(lit(1)).as("n"), count_if(col("_new_hist")).as("hist"),
+          count_if(col("_wins")).as("wins")))
+      val counts = staged.get
+      val Seq(rowsIn, nHist, nLatest) = Seq("n", "hist", "wins").map(counts(_).asInstanceOf[Long])
       def rows(flag: String) = batch.filter(col(flag)).drop("_new_hist", "_wins")
 
       // O-11: append only rows whose (id, updated_at, payload_hash) is new;

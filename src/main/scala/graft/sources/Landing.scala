@@ -3,7 +3,12 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Hive-partitioned landing zone (reference O-13/O-14;
   * `services/extractor/app/writer_landing.py:16-55`,
@@ -123,19 +128,38 @@ object Landing {
     }
   }
 
+  /** The schema Spark infers for a parquet file: its row metadata, else the
+    * footer's parquet schema converted under the session's settings.
+    */
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
   /** O-14 — read one run back, validating required columns and re-coercing
     * the timestamp columns (`reader_landing.py:17-24`). Prefers parquet,
-    * falls back to CSV (`reader_landing.py:10-15`).
+    * falls back to CSV (`reader_landing.py:10-15`). A parquet run's schema
+    * is read on the driver from the footer of its first data file, the file
+    * Spark's own inference reads, so the run gets the schema
+    * `spark.read.parquet` would infer without its schema-inference job.
     */
   def read(spark: SparkSession, root: String, entity: String, runId: String,
            required: Seq[String] = graft.model.Schemas.stagingRequired): DataFrame = {
     val dir = new Path(runDir(root, entity, runId))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) throw new java.io.FileNotFoundException(dir.toString)
-    val hasParquet = fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))
-    val df =
-      if (hasParquet) spark.read.parquet(dir.toString)
-      else spark.read.option("header", "true").option("inferSchema", "true").csv(dir.toString)
+    // Spark's data files: not hidden, not summaries; its inference reads the first by path
+    val parquet = fs.listStatus(dir).filter { s =>
+      val n = s.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    val df = parquet.headOption match {
+      case Some(first) => spark.read.schema(footerSchema(spark, first)).parquet(dir.toString)
+      case None => spark.read.option("header", "true").option("inferSchema", "true").csv(dir.toString)
+    }
     val missing = required.filterNot(df.columns.contains)
     if (missing.nonEmpty)
       throw new IllegalArgumentException(s"landing missing columns: ${missing.mkString(", ")}")

@@ -1,9 +1,17 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.OutputFile
 
 /** The pipeline's state tables: small keyed parquet datasets in the role
   * Postgres plays in the reference (watermark, run log, history, latest).
@@ -33,15 +41,19 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * winners, a map-only plan, but still O(table) bytes per run in the single
   * task of [[overwrite]].
   *
-  * The control tables are read through [[Small]], which serves the rows it
-  * last wrote or read while the table's directory listing (file name,
-  * length, mtime) is the one it saw then. The listing check is enough to
-  * see any other writer: every Spark write names its part files with a
-  * fresh job UUID, so an overwrite or append by another instance, another
-  * process or a direct [[overwrite]] always changes the names, and an
-  * absent directory (mid-swap, or never written) always takes the real
-  * read. As with the offset log of Structured Streaming, the table is the
-  * record and the held rows only spare reading it back.
+  * The control tables are written and read through [[Small]]. Its writes
+  * run on the driver: one parquet file through Spark's own row writer into
+  * the tmp directory, then the same swap, and no Spark job. Like the offset
+  * and commit logs of Structured Streaming, each entry is a file the driver
+  * writes itself. [[Small]] serves the rows it last wrote or read while the
+  * table's directory listing (file name, length, mtime) is the one it saw
+  * then. The listing check is enough to see any other writer: a Spark write
+  * names its part files with a fresh job UUID and a driver write names its
+  * one file with a fresh UUID, so an overwrite or append by another
+  * instance, another process or a direct [[overwrite]] always changes the
+  * names, and an absent directory (mid-swap, or never written) always takes
+  * the real read. The table is the record; the held rows only spare reading
+  * it back.
   */
 object StateStore {
 
@@ -77,14 +89,51 @@ object StateStore {
       }
     }
 
+    /** Replaces the table with `rows`, written on the driver ([[writeRows]]):
+      * no Spark job.
+      */
     def overwrite(rows: Seq[Row]): Unit = synchronized {
-      val written = swapIn(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), dir)
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      val internal = rows.map(r => toCatalyst(r).asInstanceOf[InternalRow])
+      val written = swap(fs, dir)(tmp =>
+        writeRows(spark.sparkContext.hadoopConfiguration, tmp, schema, internal))
       // held as a read would return them: through the same conversion
       // (timestamps to microseconds, rows carrying the schema)
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
       val toScala = CatalystTypeConverters.createToScalaConverter(schema)
-      held = Some(written -> rows.map(r => toScala(toCatalyst(r)).asInstanceOf[Row]))
+      held = Some(written -> internal.map(r => toScala(r).asInstanceOf[Row]))
     }
+  }
+
+  /** Spark's own parquet row writer ([[ParquetWriteSupport]]) driven by
+    * parquet-hadoop on the driver.
+    */
+  private final class RowWriter(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    override def self(): RowWriter = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
+
+  /** Writes `rows` as one parquet file `part-00000-<fresh UUID>.snappy.parquet`
+    * under `dir`, on the calling thread. The footer carries Spark's row
+    * metadata, so a plain `spark.read.parquet` infers `schema`'s types;
+    * timestamps are stored as TIMESTAMP(MICROS, UTC-adjusted), which keeps
+    * every microsecond. The writer's settings go on the builder's own
+    * configuration, never on a session's.
+    */
+  private def writeRows(hadoopConf: Configuration, dir: Path, schema: StructType,
+                        rows: Seq[InternalRow]): Unit = {
+    val file = new Path(dir, s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
+    val writer = new RowWriter(HadoopOutputFile.fromPath(file, hadoopConf))
+      .withConf(new Configuration(false))
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .config(ParquetWriteSupport.SPARK_ROW_SCHEMA, schema.json)
+      .config(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
+      .config(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+      .config(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
+      .config(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
+      .build()
+    try rows.foreach(writer.write) finally writer.close()
   }
 
   def read(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
@@ -111,24 +160,26 @@ object StateStore {
     }
   }
 
-  /** Atomically replace `dir` with the contents of `df`. */
-  def overwrite(df: DataFrame, dir: String): Unit = swapIn(df, dir): Unit
+  /** Atomically replace `dir` with the contents of `df`. One file per table
+    * keeps the swap (two renames) and later listings cheap; for the
+    * latest-state table it also means the whole rewrite runs in one task.
+    */
+  def overwrite(df: DataFrame, dir: String): Unit = {
+    val fs = new Path(dir).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    swap(fs, dir)(tmp => df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)): Unit
+  }
 
-  /** [[overwrite]], returning the listing of the files it swapped in, taken
+  /** Replaces `dir` with what `write` puts in a fresh `<dir>.tmp-<nonce>`
+    * directory, and returns the listing of the files it swapped in, taken
     * before the swap: renaming a directory keeps its files' names, lengths
     * and mtimes, and a later swap by another writer cannot be mistaken for
     * this one.
     */
-  private def swapIn(df: DataFrame, dir: String): Listing = {
-    val spark = df.sparkSession
+  private def swap(fs: FileSystem, dir: String)(write: Path => Unit): Listing = {
     val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
     val old = new Path(dir + ".old-" + java.util.UUID.randomUUID().toString.take(8))
-    // One file per table keeps the swap (two renames) and later listings
-    // cheap; for the latest-state table it also means the whole rewrite
-    // runs in one task.
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    write(tmp)
     val written = listing(fs, tmp).getOrElse(throw new java.io.IOException(s"no output: $tmp"))
     if (fs.exists(path)) {
       if (!fs.rename(path, old)) throw new java.io.IOException(s"swap-out failed: $dir")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.{ShingleIndex, VectorIndex}
 
-/** Determinism pins for the corpora and indexes `graft.AdmissionProbe`
-  * measures (BASELINE.md §Round 12/13). The probe's decade comparisons
+/** Determinism pins for the corpora and indexes the retired admission
+  * probe main measured (BASELINE.md §Round 12/13). The probe's decade comparisons
   * (sf0.1 → sf1 → sf10 → sf100-scale) are only meaningful because:
   *  1. GenScale×K index cardinality is EXACTLY ×K (postings 260,388 →
   *     2,603,880 → 26,038,800 across the pinned decades — per-copy token

@@ -21,11 +21,15 @@ class PipelineSpec extends SparkSpec {
   private def sourceDf(rows: (String, String, String)*): DataFrame =
     rows.map { case (i, t, st) => (i, ts(t), st) }.toDF("id", "updated_at", "status")
 
-  private def mkPipeline(): (ExtractorConfig, Extractor, Stager) = {
+  /** A pipeline over fresh directories; with `counted`, the state tables
+    * sit on [[CountingFs]], which counts each table's writes.
+    */
+  private def mkPipeline(counted: Boolean = false): (ExtractorConfig, Extractor, Stager) = {
     val root = Files.createTempDirectory("pipe").toString
-    val cfg = ExtractorConfig(s"$root/landing", s"$root/state",
+    val state = if (counted) CountingFs.root(spark, s"$root/state") else s"$root/state"
+    val cfg = ExtractorConfig(s"$root/landing", state,
       defaultStart = Instant.parse("2024-01-01T00:00:00Z"))
-    (cfg, new Extractor(spark, cfg), new Stager(spark, StagerConfig(s"$root/landing", s"$root/state")))
+    (cfg, new Extractor(spark, cfg), new Stager(spark, StagerConfig(s"$root/landing", state)))
   }
 
   private def feedFrom(df: DataFrame): Instant => DataFrame =
@@ -161,7 +165,7 @@ class PipelineSpec extends SparkSpec {
     }.exists(_.contains(dir)))
 
   test("run: feeds on the caller thread in map order, one watermark write for both entities") {
-    val (cfg, ex, _) = mkPipeline()
+    val (cfg, ex, _) = mkPipeline(counted = true)
     val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, Thread)]()
     def feed(e: String, df: DataFrame): Instant => DataFrame = cursor => {
       calls.add(e -> Thread.currentThread())
@@ -174,7 +178,10 @@ class PipelineSpec extends SparkSpec {
     val (results, qes) = executions(ex.run(feeds, "run1"))
     import scala.jdk.CollectionConverters._
     assert(calls.asScala.toSeq == feeds.keys.toSeq.map(_ -> Thread.currentThread()))
-    assert(writesTo(qes, "etl_watermark").size == 1)
+    // the watermark is written on the driver: one swap onto its directory
+    // (CountingFs counts it), and no SQL execution
+    assert(CountingFs.renamesOnto(s"${cfg.stateRoot}/etl_watermark") == 1)
+    assert(writesTo(qes, "etl_watermark").isEmpty)
     assert(results.map(r => r.entity -> r.rowsIn) == Seq("ib_receipts" -> 1L, "ob_orders" -> 2L))
     val wm = spark.read.parquet(s"${cfg.stateRoot}/etl_watermark")
       .select($"entity", $"last_success_time").as[(String, java.sql.Timestamp)].collect().toMap
@@ -215,9 +222,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a failed latest rewrite is logged as failed only after the history append ended") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
-    val (cfg, ex, st) = mkPipeline()
+    val (cfg, ex, st) = mkPipeline(counted = true)
     ex.runEntity("e", "run1", feedFrom(sourceDf(
       ("a", "2024-02-01 10:00:00", "NEW"), ("b", "2024-02-01 11:00:00", "NEW"))))
     st.run("e", "run1")
@@ -228,33 +234,67 @@ class PipelineSpec extends SparkSpec {
     ex.runEntity("e", "run2", feedFrom(sourceDf(
       ("a", "2024-02-01 12:00:00", "PROCESSING"), ("c", "2024-02-01 12:30:00", "NEW"))))
 
-    // (start ms, end ms) of each SQL execution, by the table it writes
-    val spans = new java.util.concurrent.ConcurrentHashMap[Long, (String, Long, Long)]()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          val plan = s.physicalPlanDescription
-          val table = Seq("stg_e_history", "pipeline_run_log").find(plan.contains).getOrElse("")
-          spans.put(s.executionId, (table, s.time, Long.MaxValue))
-        case s: SparkListenerSQLExecutionEnd =>
-          spans.computeIfPresent(s.executionId, (_, v) => v.copy(_3 = s.time))
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try executions(intercept[Exception](st.run("e", "run2")))
-    finally spark.sparkContext.removeSparkListener(listener)
+    // the history append commits 500 ms late, so it ends well after the
+    // latest rewrite has failed
+    CountingFs.slowRenamesInto(st.historyDir("e"), 500)
+    val (_, evs) = events(intercept[Exception](st.run("e", "run2")))
 
     val row = spark.read.parquet(s"${cfg.stateRoot}/pipeline_run_log")
       .filter($"run_id" === "run2").head()
     assert(row.getAs[String]("status") == "failed")
     assert(spark.read.parquet(st.historyDir("e")).count() == 4)
-    import scala.jdk.CollectionConverters._
-    val byTable = spans.values().asScala.toSeq.groupBy(_._1)
-    val historyEnd = byTable("stg_e_history").map(_._3).max
-    // the last run-log write is finishFailed's (the first is the start row)
-    val failedAt = byTable("pipeline_run_log").map(_._2).max
+    // end ms of the SQL executions that append to history
+    val history = evs.collect {
+      case s: SparkListenerSQLExecutionStart if s.physicalPlanDescription.contains("stg_e_history") =>
+        s.executionId
+    }.toSet
+    assert(history.nonEmpty)
+    val historyEnd = evs.collect {
+      case s: SparkListenerSQLExecutionEnd if history(s.executionId) => s.time
+    }.max
+    // the run log is written on the driver, with no SQL execution; its one
+    // part file is finishFailed's write, and the swap's rename keeps its mtime
+    assert(!evs.exists {
+      case s: SparkListenerSQLExecutionStart => s.physicalPlanDescription.contains("pipeline_run_log")
+      case _ => false
+    })
+    val parts = new java.io.File(new org.apache.hadoop.fs.Path(s"${cfg.stateRoot}/pipeline_run_log")
+      .toUri.getPath).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts.length == 1)
+    val failedAt = parts.head.lastModified()
     assert(failedAt >= historyEnd, s"failed row written at $failedAt, history append ended at $historyEnd")
+  }
+
+  test("a steady-state two-entity tick with winners runs 10 root SQL executions") {
+    val (_, ex, st) = mkPipeline()
+    val entities = Seq("ib_receipts", "ob_orders")
+    def tick(runId: String, t: String): Unit = {
+      val feeds = entities.map(e => e -> feedFrom(sourceDf((s"$e-a", t, "NEW"), (s"$e-b", t, "NEW"))))
+      ex.run(feeds.toMap, runId)
+      entities.foreach { e =>
+        val r = st.run(e, runId)
+        assert(r.rowsInsertedHistory == 2 && r.rowsUpsertedLatest == 2)
+      }
+    }
+    tick("run1", "2024-02-01 10:00:00") // creates every table
+    val (_, evs) = events(tick("run2", "2024-02-01 12:00:00"))
+    // per entity: the required-fields check, the landing write, the flag
+    // pass's checkpoint, the history append and the latest rewrite; the
+    // watermark and run-log writes and the counts take no action
+    val roots = rootExecutionsIn(evs)
+    assert(roots.size == 10, roots.map(_.description).mkString("\n"))
+  }
+
+  test("Landing.read of a parquet run starts no job and takes the schema spark.read.parquet infers") {
+    val (cfg, ex, _) = mkPipeline()
+    ex.runEntity("e", "run1", feedFrom(sourceDf(
+      ("a", "2024-02-01 10:00:00", "NEW"), ("b", "2024-02-01 11:00:00", "NEW"))))
+    val (df, evs) = events(graft.sources.Landing.read(spark, cfg.landingRoot, "e", "run1"))
+    assert(jobsIn(evs).isEmpty, jobsIn(evs).map(_.jobId))
+    val inferred = spark.read.parquet(graft.sources.Landing.runDir(cfg.landingRoot, "e", "run1"))
+    assert(df.schema == inferred.schema)
+    assert(df.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)
   }
 
   // ---- PagedFeed client (test_extract.py contracts) ----

@@ -3,7 +3,9 @@ package graft
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
@@ -51,6 +53,39 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (out, seen.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** `block`'s value and every scheduler event posted while it ran, in
+    * order: the jobs it started and its SQL executions among them. A
+    * marker job run after `block` is delivered after all of them.
+    */
+  def events[T](block: => T): (T, Seq[SparkListenerEvent]) = {
+    val sc = spark.sparkContext
+    val marker = s"events-marker-${java.util.UUID.randomUUID()}"
+    val seen = new ConcurrentLinkedQueue[SparkListenerEvent]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else seen.add(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = seen.add(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = block
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener events never arrived")
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  def jobsIn(evs: Seq[SparkListenerEvent]): Seq[SparkListenerJobStart] =
+    evs.collect { case j: SparkListenerJobStart => j }
+
+  /** The root SQL executions among `evs`: the actions, as perfbench counts them. */
+  def rootExecutionsIn(evs: Seq[SparkListenerEvent]): Seq[SparkListenerSQLExecutionStart] =
+    evs.collect { case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) => s }
 }
 
 object SparkSpec {

@@ -1,10 +1,17 @@
 package graft
 
 import java.nio.file.Files
+import java.sql.Timestamp
 import java.time.Instant
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
+import graft.model.Schemas
 import graft.operators.{RunLog, Watermark}
+import graft.sources.StateStore
 
 /** Mirrors `tests/integration/extractor/test_watermark_repo.py` and the
   * run-log lifecycle of `pipeline_run_logs_repo.py`, with parquet state dirs
@@ -167,6 +174,64 @@ class StateSpec extends SparkSpec {
     val (_, rlReads) = executions(rl.start("r1", "pipe", "e", startedAt = t2))
     assert(rlReads.isEmpty, rlReads.map(_.analyzed.nodeName))
     assert(StateSpec.files(dir) == before)
+  }
+
+  test("a control-table write runs on the driver: no Spark job") {
+    val dir = tmpDir("small")
+    val small = new StateStore.Small(spark, dir, Schemas.watermark)
+    def row(run: String) = Row("p", "e", Timestamp.from(t1), run, Timestamp.from(t2))
+    small.overwrite(Seq(row("r1")))
+    val (_, evs) = events(small.overwrite(Seq(row("r2")))) // swaps out the first write
+    assert(jobsIn(evs).isEmpty, jobsIn(evs).map(_.jobId))
+    assert(spark.read.parquet(dir).collect().toSeq == Seq(row("r2")))
+  }
+
+  test("a plain parquet read of the driver-written control tables gives their types, microseconds kept") {
+    val t = Instant.parse("2024-01-02T03:04:05.123456Z")
+    val (wmDir, rlDir) = (tmpDir("wm"), tmpDir("rl"))
+    new Watermark(spark, wmDir).upsert("p", "e", t, "r1", now = t.plusSeconds(1))
+    val rl = new RunLog(spark, rlDir)
+    rl.start("r1", "pipe", "e", startedAt = t)
+    rl.finishSuccess("r1", rowsIn = 3, rowsHist = 2, rowsLatest = 1, endedAt = t.plusSeconds(2))
+    def types(schema: StructType) = schema.map(f => f.name -> f.dataType)
+    val micros = LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
+    Seq(wmDir -> Schemas.watermark, rlDir -> Schemas.runLog).foreach { case (dir, schema) =>
+      assert(types(spark.read.parquet(dir).schema) == types(schema))
+      // stored as TIMESTAMP(MICROS, UTC-adjusted), one file per table
+      val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(parts.length == 1)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(parts.head.toURI), spark.sparkContext.hadoopConfiguration))
+      val stored = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      schema.filter(_.dataType == TimestampType).foreach(f =>
+        assert(stored.getType(stored.getFieldIndex(f.name)).getLogicalTypeAnnotation == micros, f.name))
+    }
+    val wm = spark.read.parquet(wmDir).head()
+    assert(wm.getAs[Timestamp]("last_success_time").toInstant == t)
+    assert(wm.getAs[Timestamp]("updated_at").toInstant == t.plusSeconds(1))
+    val run = spark.read.parquet(rlDir).head()
+    assert(run.getAs[Timestamp]("started_at").toInstant == t)
+    assert(run.getAs[Timestamp]("ended_at").toInstant == t.plusSeconds(2))
+    assert(Seq("rows_in", "rows_inserted_history", "rows_upserted_latest").map(run.getAs[Long]) ==
+      Seq(3L, 2L, 1L))
+  }
+
+  test("Q-8: a run's one row keeps the first-staged entity and the last-staged entity's counts") {
+    // both entities of a run share its run_id, the run log's key
+    // (pipeline_run_log(run_id PK) in the reference)
+    val rl = new RunLog(spark, tmpDir("rl"))
+    rl.start("r1", "pipe", "ib_receipts", startedAt = t0)
+    rl.finishSuccess("r1", rowsIn = 10, rowsHist = 8, rowsLatest = 5, endedAt = t1)
+    rl.start("r1", "pipe", "ob_orders", startedAt = t1)
+    rl.finishSuccess("r1", rowsIn = 3, rowsHist = 2, rowsLatest = 1, endedAt = t2)
+    val rows = rl.table.collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.getAs[String]("entity") == "ib_receipts")
+    assert(r.getAs[Timestamp]("started_at").toInstant == t0)
+    assert(r.getAs[Timestamp]("ended_at").toInstant == t2)
+    assert(Seq("rows_in", "rows_inserted_history", "rows_upserted_latest").map(r.getAs[Long]) ==
+      Seq(3L, 2L, 1L))
   }
 }
 
