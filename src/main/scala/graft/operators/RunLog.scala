@@ -14,10 +14,10 @@ import graft.sources.StateStore
   * updates counts and clears error; `failed` records the error truncated to
   * 4000 chars (`pipeline_run_logs_repo.py:70`).
   *
-  * The table is tiny, so, as in [[Watermark.upsert]], each call merges on
-  * the driver over its rows ([[StateStore.Small]]: the rows this instance
-  * last wrote, unless another writer has changed the table since) and
-  * writes them back from the driver as one parquet file, with no Spark job.
+  * The table is tiny, so, as in [[Watermark.upsert]], each call reads its
+  * rows on the driver ([[StateStore.readRows]]), merges them there and
+  * writes them back as one parquet file ([[StateStore.overwriteRows]]),
+  * with no Spark job.
   *
   * One row per run_id, the reference's key (`pipeline_run_log(run_id PK)`),
   * while the entities of one run share its run_id (SURVEY.md §8 Q-8): the
@@ -27,8 +27,6 @@ import graft.sources.StateStore
   */
 class RunLog(spark: SparkSession, dir: String) {
 
-  private val store = new StateStore.Small(spark, dir, Schemas.runLog)
-
   def table: DataFrame = StateStore.read(spark, dir, Schemas.runLog)
 
   /** INSERT ... ON CONFLICT (run_id) DO NOTHING (`pipeline_run_logs_repo.py:7-24`).
@@ -37,21 +35,24 @@ class RunLog(spark: SparkSession, dir: String) {
     */
   def start(runId: String, pipeline: String, entity: String,
             startedAt: Instant = Instant.now()): Unit = {
-    val rows = store.rows
+    val rows = stored
     if (!rows.exists(_.getString(0) == runId))
-      store.overwrite(rows :+ Row(runId, pipeline, entity, java.sql.Timestamp.from(startedAt),
-        null, "running", null, null, null, null))
+      StateStore.overwriteRows(spark, dir, Schemas.runLog, rows :+ Row(runId, pipeline, entity,
+        java.sql.Timestamp.from(startedAt), null, "running", null, null, null, null))
   }
 
   /** Replaces the columns after `started_at` of `runId`'s row with `update`
     * (ended_at, status, the three counts, error).
     */
   private def finish(runId: String, update: Seq[Any]): Unit = {
-    val rows = store.rows
+    val rows = stored
     if (!rows.exists(_.getString(0) == runId))
       throw new IllegalStateException(s"no run_log row for $runId")
-    store.overwrite(rows.map(r => if (r.getString(0) == runId) Row.fromSeq(r.toSeq.take(4) ++ update) else r))
+    StateStore.overwriteRows(spark, dir, Schemas.runLog,
+      rows.map(r => if (r.getString(0) == runId) Row.fromSeq(r.toSeq.take(4) ++ update) else r))
   }
+
+  private def stored: Seq[Row] = StateStore.readRows(spark, dir, Schemas.runLog)
 
   /** UPDATE ... status='success', error=NULL (`pipeline_run_logs_repo.py:26-51`). */
   def finishSuccess(runId: String, rowsIn: Long, rowsHist: Long, rowsLatest: Long,

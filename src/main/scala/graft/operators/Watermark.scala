@@ -19,13 +19,11 @@ import graft.sources.StateStore
   */
 class Watermark(spark: SparkSession, dir: String) {
 
-  private val store = new StateStore.Small(spark, dir, Schemas.watermark)
-
   def table: DataFrame = StateStore.read(spark, dir, Schemas.watermark)
 
   /** O-3 — read the saved watermark, falling back to `defaultStart`. */
   def get(pipeline: String, entity: String, defaultStart: Instant): Instant =
-    store.rows.find(r => r.getString(0) == pipeline && r.getString(1) == entity)
+    stored.find(r => r.getString(0) == pipeline && r.getString(1) == entity)
       .flatMap(r => Option(r.getTimestamp(2))).map(_.toInstant)
       .getOrElse(defaultStart)
 
@@ -35,12 +33,12 @@ class Watermark(spark: SparkSession, dir: String) {
     upsertAll(pipeline, Seq(entity -> newWm), runId, now)
 
   /** [[upsert]] of several entities' watermarks in one write. The control
-    * table is tiny, so the merge runs on the driver over its rows and the
-    * result is written back from the driver, with no Spark job.
+    * table is tiny, so its rows are read, merged and written back on the
+    * driver, with no Spark job.
     */
   def upsertAll(pipeline: String, advances: Seq[(String, Instant)], runId: String,
                 now: Instant = Instant.now()): Unit = if (advances.nonEmpty) {
-    val rows = store.rows
+    val rows = stored
     val merged = advances.map { case (entity, newWm) =>
       val old = rows.find(r => r.getString(0) == pipeline && r.getString(1) == entity)
       // greatest(): the time never regresses (watermark_repo.py:53); compared
@@ -51,6 +49,9 @@ class Watermark(spark: SparkSession, dir: String) {
       Row(pipeline, entity, time, runId, java.sql.Timestamp.from(now))
     }
     val written = merged.map(r => (r.getString(0), r.getString(1))).toSet
-    store.overwrite(rows.filterNot(r => written((r.getString(0), r.getString(1)))) ++ merged)
+    StateStore.overwriteRows(spark, dir, Schemas.watermark,
+      rows.filterNot(r => written((r.getString(0), r.getString(1)))) ++ merged)
   }
+
+  private def stored: Seq[Row] = StateStore.readRows(spark, dir, Schemas.watermark)
 }

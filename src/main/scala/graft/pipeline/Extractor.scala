@@ -14,9 +14,9 @@ import graft.sources.Landing
   *   watermark read → effective cursor (lookback) → incremental fetch →
   *   normalize → landing write → watermark advance.
   *
-  * The watermark reads come from the rows the extractor last wrote
-  * ([[graft.sources.StateStore.Small]]), the entities land concurrently and
-  * one write advances all their watermarks (see [[Extractor.run]]).
+  * The watermarks are read and written on the driver
+  * ([[graft.sources.StateStore.readRows]]), the entities land concurrently
+  * and one write advances all their watermarks (see [[Extractor.run]]).
   *
   * Failure semantics preserved: the watermark advances only AFTER the
   * landing write is durable (run.py:63 before run.py:77), and the landing

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
   ParquetToSparkSchemaConverter}
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -112,16 +112,14 @@ object Landing {
       .write.mode("errorifexists").parquet(dir)
   }
 
-  /** O-13 — write one run's batch. `numFiles` controls output parallelism:
-    * the reference writes a single `part-000` file; at scale leave this at
-    * the natural partitioning (0 = don't coalesce).
+  /** O-13 — write one run's batch as one file, as the reference writes a
+    * single `part-000` file.
     */
   def write(df: DataFrame, root: String, entity: String, runId: String,
-            format: String = "parquet", numFiles: Int = 1): Unit = {
+            format: String = "parquet"): Unit = {
     require(Seq("parquet", "csv").contains(format),
       s"unsupported landing format: $format (writer_landing.py:26-27 allows parquet|csv)")
-    val out = if (numFiles > 0) df.coalesce(numFiles) else df
-    val writer = out.write.mode("errorifexists")
+    val writer = df.coalesce(1).write.mode("errorifexists")
     format match {
       case "parquet" => writer.parquet(runDir(root, entity, runId))
       case "csv" => writer.option("header", "true").csv(runDir(root, entity, runId))
@@ -139,6 +137,13 @@ object Landing {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
+  /** Spark's parquet data files directly under `dir`: not hidden, not summaries. */
+  private[sources] def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { s =>
+      val n = s.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+
   /** O-14 — read one run back, validating required columns and re-coercing
     * the timestamp columns (`reader_landing.py:17-24`). Prefers parquet,
     * falls back to CSV (`reader_landing.py:10-15`). A parquet run's schema
@@ -151,12 +156,8 @@ object Landing {
     val dir = new Path(runDir(root, entity, runId))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) throw new java.io.FileNotFoundException(dir.toString)
-    // Spark's data files: not hidden, not summaries; its inference reads the first by path
-    val parquet = fs.listStatus(dir).filter { s =>
-      val n = s.getPath.getName
-      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }.sortBy(_.getPath.getName)
-    val df = parquet.headOption match {
+    // Spark's inference reads the first data file by path
+    val df = dataFiles(fs, dir).headOption match {
       case Some(first) => spark.read.schema(footerSchema(spark, first)).parquet(dir.toString)
       case None => spark.read.option("header", "true").option("inferSchema", "true").csv(dir.toString)
     }

@@ -2,15 +2,16 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.OutputFile
 
 /** The pipeline's state tables: small keyed parquet datasets in the role
@@ -24,11 +25,11 @@ import org.apache.parquet.io.OutputFile
   * a PARTIAL dataset — but the swap is two renames (out, then in), so a
   * reader racing the writer can hit the gap where the directory is absent
   * and would otherwise read an EMPTY table (for a watermark that means a
-  * silent cursor reset and a full re-extract). [[read]] therefore detects
-  * an in-flight swap (an `.old-`/`.tmp-` sibling) and briefly retries
-  * before concluding the table is genuinely empty. That NARROWS the
-  * single-writer/concurrent-reader race to the instants between the final
-  * existence check and Spark's own file listing (where a racing swap
+  * silent cursor reset and a full re-extract). [[read]] and [[readRows]]
+  * therefore detect an in-flight swap (an `.old-`/`.tmp-` sibling) and
+  * briefly retry before concluding the table is genuinely empty. That
+  * NARROWS the single-writer/concurrent-reader race to the instants between
+  * the final existence check and the file listing (where a racing swap
   * surfaces as a loud missing-path error, not a silent empty read). The
   * store assumes one writer per table and a filesystem with atomic
   * directory rename; [[ManifestStore]]'s manifest commit has neither
@@ -41,72 +42,77 @@ import org.apache.parquet.io.OutputFile
   * winners, a map-only plan, but still O(table) bytes per run in the single
   * task of [[overwrite]].
   *
-  * The control tables are written and read through [[Small]]. Its writes
-  * run on the driver: one parquet file through Spark's own row writer into
-  * the tmp directory, then the same swap, and no Spark job. Like the offset
-  * and commit logs of Structured Streaming, each entry is a file the driver
-  * writes itself. [[Small]] serves the rows it last wrote or read while the
-  * table's directory listing (file name, length, mtime) is the one it saw
-  * then. The listing check is enough to see any other writer: a Spark write
-  * names its part files with a fresh job UUID and a driver write names its
-  * one file with a fresh UUID, so an overwrite or append by another
-  * instance, another process or a direct [[overwrite]] always changes the
-  * names, and an absent directory (mid-swap, or never written) always takes
-  * the real read. The table is the record; the held rows only spare reading
-  * it back.
+  * The control tables are read ([[readRows]]) and written
+  * ([[overwriteRows]]) on the driver, with no Spark job and no copy of the
+  * rows kept between calls: like the offset and commit logs of Structured
+  * Streaming, each entry is a file the driver writes itself and reads back
+  * from that file.
   */
 object StateStore {
 
-  /** (name, length, mtime) of each file directly under a table directory. */
-  private type Listing = Seq[(String, Long, Long)]
-
-  private def listing(fs: FileSystem, path: Path): Option[Listing] =
-    try Some(fs.listStatus(path).toSeq.map(s => (s.getPath.getName, s.getLen,
-      s.getModificationTime)).sorted)
-    catch { case _: java.io.FileNotFoundException => None }
-
-  /** A tiny control table, merged on the driver: `rows` is its content,
-    * `overwrite(rows)` replaces it. A read lists the directory (one
-    * filesystem call, no Spark job) and returns the held rows if the
-    * listing is the held one; otherwise it reads the table through [[read]]
-    * (which keeps the in-flight-swap retry). The listing is taken before
-    * that read, so a write landing between the two leaves the held listing
-    * stale and forces the next read through. State is per instance.
+  /** The rows of the control table `dir`, read on the driver with no Spark
+    * job through Spark's own parquet row reader ([[ParquetReadSupport]])
+    * with `schema` requested, so a table written by a Spark job (INT96
+    * timestamps) reads back as one written by [[overwriteRows]]
+    * (TIMESTAMP(MICROS)), microseconds kept. Dates and timestamps are read
+    * as written (no calendar rebase): the engine writes in Spark's default
+    * CORRECTED mode, which is also what a Spark scan applies. An absent
+    * table reads as `Nil`, after the wait for a swap in flight [[read]] has.
     */
-  final class Small(spark: SparkSession, dir: String, schema: StructType) {
-    private val path = new Path(dir)
-    private val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    private var held: Option[(Listing, Seq[Row])] = None
-
-    def rows: Seq[Row] = synchronized {
-      val now = listing(fs, path)
-      held match {
-        case Some((seen, kept)) if now.contains(seen) => kept
-        case _ =>
-          val fresh = read(spark, dir, schema).collect().toSeq
-          held = now.map(_ -> fresh)
-          fresh
-      }
-    }
-
-    /** Replaces the table with `rows`, written on the driver ([[writeRows]]):
-      * no Spark job.
-      */
-    def overwrite(rows: Seq[Row]): Unit = synchronized {
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-      val internal = rows.map(r => toCatalyst(r).asInstanceOf[InternalRow])
-      val written = swap(fs, dir)(tmp =>
-        writeRows(spark.sparkContext.hadoopConfiguration, tmp, schema, internal))
-      // held as a read would return them: through the same conversion
-      // (timestamps to microseconds, rows carrying the schema)
-      val toScala = CatalystTypeConverters.createToScalaConverter(schema)
-      held = Some(written -> internal.map(r => toScala(r).asInstanceOf[Row]))
+  def readRows(spark: SparkSession, dir: String, schema: StructType): Seq[Row] = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!awaitSwap(fs, path)) return Nil
+    // the reader sets its keys on its file's conf: a copy of the session's,
+    // whose properties are already loaded
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    val sql = spark.sessionState.conf
+    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    Landing.dataFiles(fs, path).flatMap { file =>
+      val builder = new ParquetReader.Builder[InternalRow](HadoopInputFile.fromStatus(file, conf)) {
+        override protected def getReadSupport(): ReadSupport[InternalRow] = new ParquetReadSupport(
+          None, false, RebaseSpec(LegacyBehaviorPolicy.CORRECTED), RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
+      }.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+      // the session settings Spark's parquet scan gives its schema converter
+      Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.CASE_SENSITIVE,
+        SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+        .foreach(e => builder.set(e.key, sql.getConf(e).toString))
+      val reader = builder.build()
+      // the reader reuses its row: convert each before the next read
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(r => toScala(r).asInstanceOf[Row]).toList
+      finally reader.close()
     }
   }
 
-  /** Spark's own parquet row writer ([[ParquetWriteSupport]]) driven by
-    * parquet-hadoop on the driver.
+  /** Replaces the control table `dir` with `rows`, written on the driver
+    * with no Spark job: one file `part-00000-<fresh UUID>.snappy.parquet`
+    * through Spark's own row writer ([[ParquetWriteSupport]]), then swapped
+    * in. The footer carries Spark's row metadata, so a plain
+    * `spark.read.parquet` infers `schema`'s types; timestamps are stored as
+    * TIMESTAMP(MICROS, UTC-adjusted), which keeps every microsecond. The
+    * writer's settings go on the builder's own configuration, never on a
+    * session's.
     */
+  def overwriteRows(spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    swap(new Path(dir).getFileSystem(conf), dir) { tmp =>
+      val file = new Path(tmp, s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
+      val writer = new RowWriter(HadoopOutputFile.fromPath(file, conf))
+        .withConf(new Configuration(false))
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .config(ParquetWriteSupport.SPARK_ROW_SCHEMA, schema.json)
+        .config(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
+        .config(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+        .config(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
+        .config(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
+        .build()
+      try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow])) finally writer.close()
+    }
+  }
+
+  /** Spark's own parquet row writer driven by parquet-hadoop on the driver. */
   private final class RowWriter(file: OutputFile)
       extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
     override def self(): RowWriter = this
@@ -114,38 +120,23 @@ object StateStore {
       new ParquetWriteSupport
   }
 
-  /** Writes `rows` as one parquet file `part-00000-<fresh UUID>.snappy.parquet`
-    * under `dir`, on the calling thread. The footer carries Spark's row
-    * metadata, so a plain `spark.read.parquet` infers `schema`'s types;
-    * timestamps are stored as TIMESTAMP(MICROS, UTC-adjusted), which keeps
-    * every microsecond. The writer's settings go on the builder's own
-    * configuration, never on a session's.
-    */
-  private def writeRows(hadoopConf: Configuration, dir: Path, schema: StructType,
-                        rows: Seq[InternalRow]): Unit = {
-    val file = new Path(dir, s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
-    val writer = new RowWriter(HadoopOutputFile.fromPath(file, hadoopConf))
-      .withConf(new Configuration(false))
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .config(ParquetWriteSupport.SPARK_ROW_SCHEMA, schema.json)
-      .config(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
-      .config(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
-      .config(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
-      .config(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
-      .build()
-    try rows.foreach(writer.write) finally writer.close()
-  }
-
   def read(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (awaitSwap(fs, path)) spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
+
+  /** Whether the table at `path` exists, after giving a swap in flight
+    * ([[swapInFlight]]) up to a second to finish.
+    */
+  private def awaitSwap(fs: FileSystem, path: Path): Boolean = {
     var attempt = 0
     while (!fs.exists(path) && swapInFlight(fs, path) && attempt < 20) {
       Thread.sleep(50)
       attempt += 1
     }
-    if (fs.exists(path)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    fs.exists(path)
   }
 
   /** A sibling `.old-`/`.tmp-` directory means an [[overwrite]] swap is
@@ -166,21 +157,19 @@ object StateStore {
     */
   def overwrite(df: DataFrame, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    swap(fs, dir)(tmp => df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)): Unit
+    swap(fs, dir)(tmp => df.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
   }
 
   /** Replaces `dir` with what `write` puts in a fresh `<dir>.tmp-<nonce>`
-    * directory, and returns the listing of the files it swapped in, taken
-    * before the swap: renaming a directory keeps its files' names, lengths
-    * and mtimes, and a later swap by another writer cannot be mistaken for
-    * this one.
+    * directory. A `write` that throws leaves no tmp directory behind.
     */
-  private def swap(fs: FileSystem, dir: String)(write: Path => Unit): Listing = {
+  private def swap(fs: FileSystem, dir: String)(write: Path => Unit): Unit = {
     val path = new Path(dir)
     val tmp = new Path(dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
     val old = new Path(dir + ".old-" + java.util.UUID.randomUUID().toString.take(8))
-    write(tmp)
-    val written = listing(fs, tmp).getOrElse(throw new java.io.IOException(s"no output: $tmp"))
+    try write(tmp)
+    catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    if (!fs.exists(tmp)) throw new java.io.IOException(s"no output: $tmp")
     if (fs.exists(path)) {
       if (!fs.rename(path, old)) throw new java.io.IOException(s"swap-out failed: $dir")
     }
@@ -190,7 +179,6 @@ object StateStore {
       throw new java.io.IOException(s"swap-in failed: $dir")
     }
     fs.delete(old, true)
-    written
   }
 
   /** Append `df` to `dir` (history-style append-only datasets). */

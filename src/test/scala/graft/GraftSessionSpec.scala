@@ -35,12 +35,46 @@ class GraftSessionSpec extends SparkSpec {
     // spark.graft.* option; the one conf write under src/main is to the
     // private session clone Par.materializeLayout checkpoints on, never to
     // the caller's session (PlanAuditSpec's pagerank pin watches it)
+    val main = sources.filter(_.startsWith(Paths.get("src/main")))
     val hits = for {
-      p <- sources.filter(_.startsWith(Paths.get("src/main")))
+      p <- main
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if (line.contains("conf.set") && !line.contains("staticPlanning.conf.set(")) ||
         line.contains("\"spark.graft.")
     } yield s"${p.getFileName}:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, hits.mkString("session conf writes or options:\n", "\n", ""))
+    // nor opens parquet through a call that builds a fresh Configuration,
+    // which re-parses Hadoop's XML defaults on every call
+    val opens = for {
+      p <- main
+      code = Files.readString(p)
+      at <- freshConfCalls(code)
+      n = code.take(at).count(_ == '\n')
+      line = code.split("\n", -1)(n).trim
+      if !line.startsWith("//") && !line.startsWith("*")
+    } yield s"${p.getFileName}:${n + 1}: $line"
+    assert((hits ++ opens).isEmpty,
+      (hits ++ opens).mkString("session conf writes, options or fresh-conf parquet opens:\n", "\n", ""))
+  }
+
+  /** Offsets in `code` of `ParquetReader.builder(` and of each
+    * `ParquetFileReader.open(` whose argument list closes before a comma at
+    * its own depth: the one-argument open.
+    */
+  private def freshConfCalls(code: String): Seq[Int] = {
+    def oneArg(args: Int): Boolean = {
+      val depths = code.iterator.drop(args).scanLeft(1) {
+        case (d, '(') => d + 1
+        case (d, ')') => d - 1
+        case (d, _) => d
+      }
+      depths.zip(code.iterator.drop(args)).collectFirst {
+        case (1, ',') => false
+        case (1, ')') => true
+      }.getOrElse(false)
+    }
+    def offsets(call: String) =
+      Iterator.iterate(code.indexOf(call))(i => code.indexOf(call, i + 1)).takeWhile(_ >= 0).toSeq
+    val open = "ParquetFileReader.open("
+    offsets("ParquetReader.builder(") ++ offsets(open).filter(at => oneArg(at + open.length))
   }
 }

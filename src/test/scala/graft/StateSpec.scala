@@ -178,12 +178,60 @@ class StateSpec extends SparkSpec {
 
   test("a control-table write runs on the driver: no Spark job") {
     val dir = tmpDir("small")
-    val small = new StateStore.Small(spark, dir, Schemas.watermark)
+    object small { def overwrite(rows: Seq[Row]): Unit = StateStore.overwriteRows(spark, dir, Schemas.watermark, rows) }
     def row(run: String) = Row("p", "e", Timestamp.from(t1), run, Timestamp.from(t2))
     small.overwrite(Seq(row("r1")))
     val (_, evs) = events(small.overwrite(Seq(row("r2")))) // swaps out the first write
     assert(jobsIn(evs).isEmpty, jobsIn(evs).map(_.jobId))
     assert(spark.read.parquet(dir).collect().toSeq == Seq(row("r2")))
+  }
+
+  test("a fresh Watermark or RunLog reads an existing table with no Spark job") {
+    val (wmDir, rlDir) = (tmpDir("wm"), tmpDir("rl"))
+    new Watermark(spark, wmDir).upsert("p", "e", t1, "r1", now = t1)
+    new RunLog(spark, rlDir).start("r1", "pipe", "e", startedAt = t0)
+    val (got, evs) = events {
+      val wm = new Watermark(spark, wmDir).get("p", "e", defaultStart = t0)
+      new RunLog(spark, rlDir).finishSuccess("r1", rowsIn = 1, rowsHist = 1, rowsLatest = 1, endedAt = t2)
+      wm
+    }
+    assert(jobsIn(evs).isEmpty, jobsIn(evs).map(_.jobId))
+    assert(got == t1)
+    assert(new RunLog(spark, rlDir).table.select($"status").as[String].collect().toSeq == Seq("success"))
+  }
+
+  test("readRows reads a Spark-written (INT96) and a driver-written table as StateStore.read does") {
+    val t = Timestamp.from(Instant.parse("2024-01-02T03:04:05.123456Z"))
+    val rows = Seq(
+      Row("r1", "pipe", "e1", t, null, "running", null, null, null, null),
+      Row("r2", null, "e2", t, Timestamp.from(t2.plusNanos(654321000)), "success", 3L, 2L, 1L, null),
+      Row("r3", "pipe", null, null, t, "failed", null, null, null, "boom"))
+    val (sparkDir, driverDir) = (tmpDir("rl"), tmpDir("rl"))
+    StateStore.overwrite(spark.createDataFrame(java.util.Arrays.asList(rows: _*), Schemas.runLog), sparkDir)
+    StateStore.overwriteRows(spark, driverDir, Schemas.runLog, rows)
+    val int96 = new java.io.File(sparkDir).listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI), spark.sparkContext.hadoopConfiguration))
+      val stored = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      stored.getType(stored.getFieldIndex("started_at")).asPrimitiveType.getPrimitiveTypeName
+    }
+    assert(int96.toSet == Set(org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96))
+    Seq(sparkDir, driverDir).foreach { dir =>
+      val got = StateStore.readRows(spark, dir, Schemas.runLog)
+      assert(got.sortBy(_.getString(0)) ==
+        StateStore.read(spark, dir, Schemas.runLog).collect().toSeq.sortBy(_.getString(0)), dir)
+      assert(got.sortBy(_.getString(0)) == rows, dir)
+    }
+    assert(StateStore.readRows(spark, tmpDir("absent"), Schemas.runLog) == Nil)
+  }
+
+  test("a failed overwrite leaves no tmp directory behind") {
+    val dir = tmpDir("fail")
+    val boom = spark.range(0, 4, 1, 1).select(
+      when($"id" === 2, raise_error(lit("boom"))).otherwise($"id").as("id"))
+    intercept[Exception](StateStore.overwrite(boom, dir))
+    val parent = new java.io.File(dir).getParentFile
+    assert(parent.list().filter(_.contains(".tmp-")).isEmpty, parent.list().toSeq)
   }
 
   test("a plain parquet read of the driver-written control tables gives their types, microseconds kept") {
