@@ -149,18 +149,6 @@ object Merge {
     existing.join(broadcast(winners.select(col(key))), Seq(key), "left_anti")
       .unionByName(winners.select(existing.columns.toSeq.map(col): _*))
 
-  /** Snapshot-over-snapshot diff — the crawl-delta audit: every id labeled
-    * `added` / `removed` / `changed` / `unchanged` between two corpus
-    * snapshots. Content equality is null-safe (`<=>`; two null payloads
-    * are `unchanged`).
-    *
-    * Scale: content is reduced to its md5 BEFORE the join, so the
-    * id-keyed full-outer shuffle carries 32-byte digests instead of
-    * document bodies — at 100 TB that is the difference between shuffling
-    * the corpus twice and shuffling its fingerprint. md5(null) is null,
-    * so the null-safe compare still distinguishes "absent" from "null
-    * content present".
-    */
   /** SCD type-2 history build — the interval form of the latest-upsert
     * dimension: per key, each CHANGE of the tracked attribute opens a new
     * version row `[valid_from, valid_to)`, the open version has a null
@@ -193,6 +181,18 @@ object Merge {
       .drop(tieCol)
   }
 
+  /** Snapshot-over-snapshot diff — the crawl-delta audit: every id labeled
+    * `added` / `removed` / `changed` / `unchanged` between two corpus
+    * snapshots. Content equality is null-safe (`<=>`; two null payloads
+    * are `unchanged`).
+    *
+    * Scale: content is reduced to its md5 BEFORE the join, so the
+    * id-keyed full-outer shuffle carries 32-byte digests instead of
+    * document bodies — at 100 TB that is the difference between shuffling
+    * the corpus twice and shuffling its fingerprint. md5(null) is null,
+    * so the null-safe compare still distinguishes "absent" from "null
+    * content present".
+    */
   def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame,
                    idCol: String, contentCol: String): DataFrame = {
     val o = oldSnap.select(col(idCol).as("_id"), md5(col(contentCol)).as("_old"),

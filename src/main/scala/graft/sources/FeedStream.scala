@@ -2,11 +2,9 @@ package graft.sources
 
 import java.time.Instant
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming offset = the change-feed cursor itself: µs since epoch of the
   * last `updated_at` this stream has fully consumed. A micro-batch is the
@@ -20,8 +18,9 @@ case class FeedOffset(micros: Long) extends Offset {
 
 /** Micro-batch source over the paginated change feed.
   *
-  * The streaming twin of [[FeedScan]]'s batch path, on the same pluggable
-  * [[FeedTransport]]:
+  * A micro-batch is a bounded interval of the feed [[FeedScan]] reads in
+  * batch: the same [[FeedTransport]], envelope probe, page-range planner
+  * and partition reader ([[FeedReaderFactory]]).
   *  - `latestOffset` probes the feed for the max `updated_at` past the
   *    current cursor (one envelope call + one last-page call) — the
   *    driver-side planning cost per trigger is two page fetches, constant
@@ -37,12 +36,12 @@ case class FeedOffset(micros: Long) extends Offset {
   *    (covering up to `pageSize` mid-batch mutations); rows double-read in
   *    the overlap are the at-least-once duplicates the idempotent sinks
   *    already absorb.
-  *  - Readers re-filter rows to `(start, end]` by `updated_at`: rows that
-  *    mutate (and so re-order) AFTER `latestOffset` probed are excluded
-  *    from this batch and picked up by the next one — at-least-once from
-  *    the source, exactly-once after the pipeline's idempotent sinks
-  *    (history anti-join / newer-wins upsert), the same contract as the
-  *    reference's lookback re-read.
+  *  - Each partition's row window is `(start, end]` by `updated_at`: rows
+  *    that mutate (and so re-order) AFTER `latestOffset` probed are
+  *    excluded from this batch and picked up by the next one —
+  *    at-least-once from the source, exactly-once after the pipeline's
+  *    idempotent sinks (history anti-join / newer-wins upsert), the same
+  *    contract as the reference's lookback re-read.
   *
   * Requires a `TimestampType` column named `updated_at` in the schema (the
   * feed's ordering contract, SURVEY.md O-1/O-2).
@@ -50,20 +49,11 @@ case class FeedOffset(micros: Long) extends Offset {
 class FeedMicroBatchStream(transport: FeedTransport, schema: StructType,
                            startCursor: Option[Instant], pageSize: Int,
                            pagesPerPartition: Int) extends MicroBatchStream {
-  require(schema.fields.exists(f => f.name == "updated_at" && f.dataType == TimestampType),
+  require(FeedScan.stampIndex(schema) >= 0,
     "graft-feed streaming needs a TIMESTAMP column 'updated_at'")
-  private val tsIdx = schema.fieldIndex("updated_at")
+  private val startMicros = startCursor.fold(Long.MinValue)(FeedMicroBatchStream.micros)
 
-  private def toInstant(o: Offset): Option[Instant] = {
-    val m = o.asInstanceOf[FeedOffset].micros
-    if (m == Long.MinValue) None
-    else Some(Instant.ofEpochSecond(m / 1000000L, (m % 1000000L) * 1000L))
-  }
-
-  private def micros(i: Instant): Long = FeedMicroBatchStream.micros(i)
-
-  override def initialOffset(): Offset =
-    FeedOffset(startCursor.map(micros).getOrElse(Long.MinValue))
+  override def initialOffset(): Offset = FeedOffset(startMicros)
 
   /** Committed cursor, tracked driver-side so each trigger's probe runs
     * against only-new rows: probing from the INITIAL cursor would make the
@@ -77,49 +67,24 @@ class FeedMicroBatchStream(transport: FeedTransport, schema: StructType,
     * when the feed has nothing new (offsets must never regress).
     */
   override def latestOffset(): Offset = {
-    val cur = math.max(committedMicros,
-      startCursor.map(micros).getOrElse(Long.MinValue))
-    val c = if (cur == Long.MinValue) None
-            else Some(Instant.ofEpochSecond(cur / 1000000L, (cur % 1000000L) * 1000L))
-    probeLatest(c).getOrElse(FeedOffset(cur))
-  }
-
-  private def probeLatest(cursor: Option[Instant]): Option[FeedOffset] = {
-    val total = PagedFeed.withRetry()(() => transport.fetch(cursor, 1, 0)).totalCount
-    if (total == 0) return None
-    // probe the whole LAST PAGE, not just the tail row: a feed whose
-    // backing store orders NULL updated_at last would otherwise pin a
-    // null row at the tail and the single-row probe would never advance
-    // the offset (silent permanent stall). Max non-null ts over the page
-    // advances past up to pageSize-1 trailing nulls; decodeRow maps
-    // missing JSON fields to SQL null for any column, including this one.
-    val n = math.min(pageSize.toLong, total).toInt
-    val lastPage = PagedFeed.withRetry()(() =>
-      transport.fetch(cursor, n, total - n)).rows
-    val stamps = lastPage.flatMap(r => Option(r.getTimestamp(tsIdx)))
-    if (stamps.isEmpty) None
-    else Some(FeedOffset(stamps.map(ts => micros(ts.toInstant)).max))
+    val cur = math.max(committedMicros, startMicros)
+    FeedOffset(FeedScan.probe(transport, schema, FeedMicroBatchStream.cursor(cur), pageSize)
+      ._2.getOrElse(cur))
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val startCur = toInstant(start)
-    val endMicros = end.asInstanceOf[FeedOffset].micros
-    if (endMicros <= start.asInstanceOf[FeedOffset].micros) return Array.empty
-    val total = PagedFeed.withRetry()(() => transport.fetch(startCur, 1, 0)).totalCount
-    if (total == 0) return Array.empty
-    val span = pageSize.toLong * pagesPerPartition
+    val after = start.asInstanceOf[FeedOffset].micros
+    val until = end.asInstanceOf[FeedOffset].micros
+    if (until <= after) return Array.empty
     // one-page lookback per partition (see class doc): rows shifted down by
     // mid-batch mutations re-appear in the overlap instead of being skipped;
-    // the (start, end] row filter plus idempotent sinks absorb the re-reads
-    (0L until total by span)
-      .map(s => FeedStreamPartition(math.max(0L, s - pageSize),
-        math.min(s + span, total),
-        start.asInstanceOf[FeedOffset].micros, endMicros))
-      .toArray
+    // the (start, end] row window plus idempotent sinks absorb the re-reads
+    FeedScan.plan(FeedScan.total(transport, FeedMicroBatchStream.cursor(after)),
+      pageSize, pagesPerPartition, overlap = pageSize, after, until)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FeedStreamReaderFactory(transport, schema, tsIdx, pageSize)
+    new FeedReaderFactory(transport, schema, pageSize)
 
   override def deserializeOffset(json: String): Offset = FeedOffset(json.toLong)
   override def commit(end: Offset): Unit =
@@ -127,70 +92,13 @@ class FeedMicroBatchStream(transport: FeedTransport, schema: StructType,
   override def stop(): Unit = ()
 }
 
-final case class FeedStreamPartition(firstOffset: Long, lastOffsetExclusive: Long,
-                                     startMicros: Long, endMicros: Long)
-    extends InputPartition
-
-class FeedStreamReaderFactory(transport: FeedTransport, schema: StructType,
-                              tsIdx: Int, pageSize: Int)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[FeedStreamPartition]
-    val startCur =
-      if (p.startMicros == Long.MinValue) None
-      else Some(Instant.ofEpochSecond(p.startMicros / 1000000L,
-        (p.startMicros % 1000000L) * 1000L))
-    new PartitionReader[InternalRow] {
-      private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-      private var offset = p.firstOffset
-      private var page: Iterator[Row] = Iterator.empty
-      private var exhausted = false
-      private var current: InternalRow = _
-
-      private def inRange(r: Row): Boolean = {
-        val ts = r.getTimestamp(tsIdx)
-        // a NULL updated_at row cannot be ordered into any cursor interval:
-        // it rides the cold-start batch (no prior cursor) if present then —
-        // AT MOST once overall. One that first appears after cold start is
-        // never delivered: cursored fetches exclude it server-side, matching
-        // the batch path's `updated_at > cursor` pushdown. Upstreams must
-        // stamp updated_at for a row to be streamable.
-        if (ts == null) p.startMicros == Long.MinValue
-        else {
-          val m = ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
-          m > p.startMicros && m <= p.endMicros
-        }
-      }
-
-      override def next(): Boolean = {
-        while (true) {
-          while (page.hasNext) {
-            val r = page.next()
-            if (inRange(r)) { // rows past `end` mutated after the probe —
-              current = toCatalyst(r).asInstanceOf[InternalRow] // next batch's
-              return true
-            }
-          }
-          if (exhausted || offset >= p.lastOffsetExclusive) return false
-          val limit = math.min(pageSize.toLong, p.lastOffsetExclusive - offset).toInt
-          val fetched = PagedFeed.withRetry()(() => transport.fetch(startCur, limit, offset))
-          offset += fetched.rows.size
-          if (fetched.rows.size < limit) exhausted = true
-          page = fetched.rows.iterator
-        }
-        false
-      }
-
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-}
-
+/** The µs ↔ cursor pair: feed cursors, stream offsets and partition row
+  * windows are epoch microseconds, `Long.MinValue` standing for no cursor.
+  */
 object FeedMicroBatchStream {
-  /** Epoch micros of an instant — the feed cursor unit, shared with the
-    * batch scan's end-bound filter.
-    */
-  def micros(i: java.time.Instant): Long =
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
+  def micros(i: Instant): Long = i.getEpochSecond * 1000000L + i.getNano / 1000L
+
+  def cursor(m: Long): Option[Instant] =
+    if (m == Long.MinValue) None
+    else Some(Instant.ofEpochSecond(m / 1000000L, (m % 1000000L) * 1000L))
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, GreaterThan}
 import org.apache.spark.sql.types.{StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,13 +29,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    input partition per page *range*, so a cold-start backfill pulls pages
   *    concurrently from many executors instead of the reference's serial
   *    driver loop. `pages_per_partition` bounds per-task work.
+  *  - **One reader for batch and streaming**: a micro-batch is a bounded
+  *    interval of the same feed. [[FeedScan]] and [[FeedMicroBatchStream]]
+  *    plan [[FeedInputPartition]]s with the same envelope probe and
+  *    planner, and one [[FeedReaderFactory]] reads them, keeping each
+  *    partition's `updated_at` window `(after, until]`.
   *
   * The transport is pluggable via [[FeedTransport]]: `option("feed", name)`
   * resolves through the in-JVM [[FeedRegistry]] (local mode / tests, where
   * driver and executors share the process); `option("url", ...)` +
   * `schema_ddl` uses [[HttpTransport]] — the cluster path, where every
-  * executor fetches its own page range with [[PagedFeed.withRetry]] around
-  * each page.
+  * executor fetches its own page range through [[PagedFeed.pages]], with
+  * [[PagedFeed.withRetry]] around each page.
   */
 object FeedRegistry {
   final case class RegisteredFeed(schema: StructType,
@@ -148,108 +154,129 @@ class FeedScanBuilder(transport: FeedTransport, schema: StructType, pageSize: In
     pagesPerPartition)
 }
 
-final case class FeedInputPartition(firstOffset: Long, lastOffsetExclusive: Long)
-    extends InputPartition
-
 class FeedScan(transport: FeedTransport, val schema: StructType, cursor: Option[Instant],
                pageSize: Int, pagesPerPartition: Int) extends Scan with Batch {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new FeedMicroBatchStream(transport, schema, cursor, pageSize, pagesPerPartition)
   override def description(): String =
     s"graft-feed:${transport.label} cursor=${cursor.getOrElse("none")}"
 
-  /** Plans one partition per page range from the M-4 envelope count, plus a
-    * planning-time END BOUND: the tail row's `updated_at` is probed once and
-    * every reader drops rows beyond it. A row that mutates DURING the scan
-    * moves to the tail of the (updated_at, id) order with a new timestamp
-    * past the bound — so a torn read can never deliver two versions of one
-    * row in one result, and the mutation is picked up by the next
-    * incremental run's cursor instead. What the bound cannot recover is a
-    * row that SHIFTS into an already-read offset range when an earlier row
-    * mutates out from under it — inherent to one-shot offset pagination
-    * over a mutable feed (the reference's batch extract has the same
-    * in-run property; its mitigation is the next run's lookback window).
-    * Pipelines needing at-least-once under live mutation use the streaming
-    * form, whose per-batch one-page overlap plus idempotent sinks absorb
-    * exactly that case.
+  // ONE envelope probe per scan: a second would double the feed
+  // round-trips (and 429 exposure) of every batch query over the connector
+  private lazy val partitions: Array[InputPartition] = {
+    val (total, end) = FeedScan.probe(transport, schema, cursor, pageSize)
+    FeedScan.plan(total, pageSize, pagesPerPartition, overlap = 0,
+      cursor.fold(Long.MinValue)(FeedMicroBatchStream.micros), end.getOrElse(Long.MaxValue))
+  }
+
+  /** One partition per page range of the probed total, with no overlap (a
+    * batch result has no idempotent sink to absorb re-read rows), all
+    * reading the window `(cursor, end stamp]`. The probe's END STAMP bounds
+    * the scan: a row that mutates DURING the scan moves to the tail of the
+    * (updated_at, id) order with a new timestamp past the stamp, so a torn
+    * read can never deliver two versions of one row in one result, and the
+    * mutation is picked up by the next incremental run's cursor instead.
+    * What the bound cannot recover is a row that SHIFTS into an already-read
+    * offset range when an earlier row mutates out from under it — inherent
+    * to one-shot offset pagination over a mutable feed (the reference's
+    * batch extract has the same in-run property; its mitigation is the next
+    * run's lookback window). Pipelines needing at-least-once under live
+    * mutation use the streaming form, whose one-page overlap plus
+    * idempotent sinks absorb exactly that case.
     */
-  // ONE envelope probe per scan, shared by partition planning and the end
-  // bound — a second probe would double the feed round-trips (and 429
-  // exposure) of every batch query over the connector
-  private lazy val probedTotal: Long =
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new FeedReaderFactory(transport, schema, pageSize)
+}
+
+/** The envelope probe and the page-range planner the batch scan and the
+  * micro-batch stream share.
+  */
+object FeedScan {
+  /** Index of the TIMESTAMP `updated_at` column that orders the feed, or
+    * -1: a schema without one reads through an unfiltered window.
+    */
+  def stampIndex(schema: StructType): Int =
+    schema.fields.indexWhere(f => f.name == "updated_at" && f.dataType == TimestampType)
+
+  /** The M-4 envelope total: rows past `cursor`. */
+  def total(transport: FeedTransport, cursor: Option[Instant]): Long =
     PagedFeed.withRetry()(() => transport.fetch(cursor, 1, 0)).totalCount
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val total = probedTotal
-    if (total == 0) return Array.empty
+  /** The total past `cursor` and the end stamp: the max non-null
+    * `updated_at` (µs) of the LAST PAGE, `None` when there is none. The
+    * whole last page, not just the tail row: a store that orders NULL
+    * `updated_at` last pins a null row at the tail, where a tail-row probe
+    * would find no stamp (and a stream's offset would never advance); the
+    * page's max steps past up to `pageSize - 1` trailing nulls.
+    */
+  def probe(transport: FeedTransport, schema: StructType, cursor: Option[Instant],
+            pageSize: Int): (Long, Option[Long]) = {
+    val n = total(transport, cursor)
+    val tsIdx = stampIndex(schema)
+    if (n == 0 || tsIdx < 0) return (n, None)
+    val last = math.min(pageSize.toLong, n).toInt
+    val stamps = PagedFeed.withRetry()(() => transport.fetch(cursor, last, n - last)).rows
+      .flatMap(r => Option(r.getTimestamp(tsIdx)))
+    (n, stamps.map(ts => FeedMicroBatchStream.micros(ts.toInstant)).maxOption)
+  }
+
+  /** One partition per `pageSize × pagesPerPartition` span of `total` rows,
+    * each starting `overlap` rows early, all keeping the row window
+    * `(after, until]`.
+    */
+  def plan(total: Long, pageSize: Int, pagesPerPartition: Int, overlap: Long,
+           after: Long, until: Long): Array[InputPartition] = {
     val span = pageSize.toLong * pagesPerPartition
     (0L until total by span)
-      .map(start => FeedInputPartition(start, math.min(start + span, total)))
+      .map(s => FeedInputPartition(math.max(0L, s - overlap), math.min(s + span, total), after, until))
       .toArray
-  }
-
-  private lazy val endBoundMicros: Option[Long] = {
-    if (probedTotal == 0) None
-    else {
-      val tsIdx = schema.fieldIndex("updated_at")
-      // a tail row with NULL updated_at yields no bound (falls back to the
-      // unbounded pre-bound behavior) rather than an NPE — decodeRow maps
-      // missing JSON fields to SQL null for any column, including this one
-      PagedFeed.withRetry()(() => transport.fetch(cursor, 1, probedTotal - 1))
-        .rows.lastOption
-        .flatMap(r => Option(r.getTimestamp(tsIdx))
-          .map(ts => FeedMicroBatchStream.micros(ts.toInstant)))
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val bound =
-      if (schema.fieldNames.contains("updated_at")) endBoundMicros else None
-    new FeedReaderFactory(transport, schema, cursor, pageSize, bound)
   }
 }
 
-class FeedReaderFactory(transport: FeedTransport, schema: StructType,
-                        cursor: Option[Instant], pageSize: Int,
-                        endBoundMicros: Option[Long] = None)
+/** Offsets `[firstOffset, lastOffsetExclusive)` of the feed past the cursor
+  * `afterMicros`, read through the row window `(afterMicros, untilMicros]`
+  * in epoch µs (`Long.MinValue`: no cursor; `Long.MaxValue`: no end).
+  */
+final case class FeedInputPartition(firstOffset: Long, lastOffsetExclusive: Long,
+                                    afterMicros: Long, untilMicros: Long)
+    extends InputPartition
+
+/** The partition reader of the batch scan and the micro-batch stream: it
+  * pulls its page range through [[PagedFeed.pages]] and keeps the rows whose
+  * `updated_at` lies in the partition's window. Rows past the window's end
+  * mutated after the planning probe; the next run or micro-batch takes them.
+  */
+class FeedReaderFactory(transport: FeedTransport, schema: StructType, pageSize: Int)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[FeedInputPartition]
+    val tsIdx = FeedScan.stampIndex(schema)
+    val cursor = FeedMicroBatchStream.cursor(p.afterMicros)
+    // a NULL updated_at row cannot be ordered into any cursor window: it
+    // rides a read with no cursor (the cold start) — AT MOST once overall.
+    // Cursored fetches exclude it server-side, as Spark's re-applied
+    // `updated_at > cursor` filter would; upstreams must stamp updated_at
+    // for a row to be streamable.
+    def inWindow(r: Row): Boolean = tsIdx < 0 || {
+      val ts = r.getTimestamp(tsIdx)
+      if (ts == null) p.afterMicros == Long.MinValue
+      else {
+        val m = FeedMicroBatchStream.micros(ts.toInstant)
+        m > p.afterMicros && m <= p.untilMicros
+      }
+    }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val rows = PagedFeed.pages((limit, offset) => transport.fetch(cursor, limit, offset),
+        pageSize, p.firstOffset, p.lastOffsetExclusive)
+      .flatMap(_.iterator.filter(inWindow))
+      .map(r => toCatalyst(r).asInstanceOf[InternalRow])
     new PartitionReader[InternalRow] {
-      private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-      private val tsIdx =
-        if (endBoundMicros.isDefined) schema.fieldIndex("updated_at") else -1
-      private var offset = p.firstOffset
-      private var page: Iterator[Row] = Iterator.empty
-      private var exhausted = false
       private var current: InternalRow = _
-
-      private def inBound(r: Row): Boolean = endBoundMicros match {
-        // a NULL updated_at row is untimestamped, not "mutated past the
-        // bound" — it was always delivered before the bound existed, so
-        // it must keep passing (dropping it would be silent data loss)
-        case Some(end) => r.isNullAt(tsIdx) ||
-          FeedMicroBatchStream.micros(r.getTimestamp(tsIdx).toInstant) <= end
-        case None => true
-      }
-
-      override def next(): Boolean = {
-        while (!page.hasNext && !exhausted && offset < p.lastOffsetExclusive) {
-          val limit = math.min(pageSize.toLong, p.lastOffsetExclusive - offset).toInt
-          val fetched = PagedFeed.withRetry()(() => transport.fetch(cursor, limit, offset))
-          offset += fetched.rows.size
-          if (fetched.rows.size < limit) exhausted = true
-          page = fetched.rows.iterator.filter(inBound)
-        }
-        if (page.hasNext) {
-          current = toCatalyst(page.next()).asInstanceOf[InternalRow]
-          true
-        } else false
-      }
-
+      override def next(): Boolean = rows.hasNext && { current = rows.next(); true }
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }

@@ -18,9 +18,10 @@ import org.apache.spark.sql.types._
   * `services/mock_wms_api/app/main.py:221-241`): GET with `updated_after`
   * (ISO-8601), `limit`, `offset` query params; connect timeout 5 s, request
   * timeout 20 s; response envelope `{"items": [...], "total": N}`. Retries
-  * live OUTSIDE this class — the DSv2 partition reader wraps every `fetch`
-  * in [[PagedFeed.withRetry]] (same backoff constants as the reference), so
-  * this transport only classifies which failures are retryable: HTTP
+  * live OUTSIDE this class — the feed's one page loop ([[PagedFeed.pages]])
+  * and its envelope probe wrap every `fetch` in [[PagedFeed.withRetry]]
+  * (same backoff constants as the reference), so this transport only
+  * classifies which failures are retryable: HTTP
   * 408/429/5xx and transport-level IO errors, per `http_client.py:32`.
   *
   * Scale posture: the object is a small serializable config (URL + schema);

@@ -98,19 +98,24 @@ object Landing {
     graft.plans.GraftFunctions.interleaveBits(df, buckets, bits)
   }
 
+  /** Morton layout: `df` range-partitioned into `n` buckets on the
+    * Z-order of `cols` and sorted on it within each bucket — the
+    * clustering that buys multi-dimensional min/max pruning, shared by
+    * [[writeZOrdered]] and `ManifestStore.compactSmall`'s ZORDER rewrite.
+    */
+  def zOrdered(df: DataFrame, cols: Seq[String], n: Int, bits: Int = 12): DataFrame =
+    df.withColumn("_z", zorderValue(df, cols, bits))
+      .repartitionByRange(n, col("_z"))
+      .sortWithinPartitions("_z")
+      .drop("_z")
+
   /** Cluster `df` on the Z-order of `cols` into `numFiles` range buckets
     * and write parquet — the layout step that buys multi-dimensional
     * min/max pruning on the landed data.
     */
   def writeZOrdered(df: DataFrame, dir: String, cols: Seq[String],
-                    numFiles: Int, bits: Int = 12): Unit = {
-    val z = zorderValue(df, cols, bits)
-    df.withColumn("_z", z)
-      .repartitionByRange(numFiles, org.apache.spark.sql.functions.col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("errorifexists").parquet(dir)
-  }
+                    numFiles: Int, bits: Int = 12): Unit =
+    zOrdered(df, cols, numFiles, bits).write.mode("errorifexists").parquet(dir)
 
   /** O-13 — write one run's batch as one file, as the reference writes a
     * single `part-000` file.

@@ -3345,13 +3345,7 @@ object ManifestStore {
       // inheriting whatever clustering the micro-batches arrived with
       val df =
         if (zorderCols.isEmpty) raw.coalesce(nOut)
-        else {
-          val z = Landing.zorderValue(raw, zorderCols)
-          raw.withColumn("_z", z)
-            .repartitionByRange(nOut, org.apache.spark.sql.functions.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        }
+        else Landing.zOrdered(raw, zorderCols, nOut)
       val nonce = java.util.UUID.randomUUID().toString.take(12)
       val dataRel = s"d-$nonce"
       ColumnMapping.toPhysical(df, ColumnMapping.resolve(schema, snap.schema))

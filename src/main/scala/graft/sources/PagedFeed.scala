@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * data; the bulk path into Spark is `toDf` once per incremental batch.
   * A feed too large for that belongs behind a DSv2 scan (see
   * `graft.sources.FeedTableProvider`) where each partition pulls its own
-  * page range.
+  * page range through the same page loop, [[pages]].
   */
 object PagedFeed {
 
@@ -71,6 +71,26 @@ object PagedFeed {
     }
   }
 
+  /** The one page loop: the rows at offsets `[from, until)`, `pageSize` per
+    * `fetch(limit, offset)` call (fewer at `until`), each call through
+    * [[withRetry]] and made only when the iterator reaches its page. It
+    * stops after a short page or at `until`. [[fetchAll]] and the DSv2
+    * partition reader ([[FeedReaderFactory]]) both pull through it.
+    */
+  def pages(fetch: (Int, Long) => Page, pageSize: Int, from: Long,
+            until: Long): Iterator[Seq[Row]] = new Iterator[Seq[Row]] {
+    private var offset = from
+    private var short = false
+    override def hasNext: Boolean = !short && offset < until
+    override def next(): Seq[Row] = {
+      val limit = math.min(pageSize.toLong, until - offset).toInt
+      val rows = withRetry()(() => fetch(limit, offset)).rows
+      offset += rows.size
+      short = rows.size < limit
+      rows
+    }
+  }
+
   /** O-1 — pull every row with `updated_at > updatedAfter`, page by page,
     * until a short or empty page; runaway guard at offset ≥ 2,000,000
     * (`extract.py:86-87`). Returns the concatenated rows.
@@ -82,15 +102,14 @@ object PagedFeed {
     require(limit >= 1 && limit <= 500, s"limit must be in [1,500], got $limit")
     val out = Seq.newBuilder[Row]
     var offset = 0L
-    var done = false
-    while (!done) {
-      if (offset >= maxOffset)
-        throw new IllegalStateException(s"feed '$entity' runaway: offset $offset >= $maxOffset")
-      val page = withRetry()(() => fetchPage(updatedAfter, limit, offset))
-      if (tsIdx >= 0 && idIdx >= 0) assertStableOrder(page.rows, tsIdx, idIdx, entity)
-      out ++= page.rows
-      if (page.rows.size < limit) done = true else offset += limit
+    pages((l, o) => fetchPage(updatedAfter, l, o), limit, 0L, maxOffset).foreach { rows =>
+      if (tsIdx >= 0 && idIdx >= 0) assertStableOrder(rows, tsIdx, idIdx, entity)
+      out ++= rows
+      offset += rows.size
     }
+    // full pages all the way to maxOffset: the loop never saw the feed end
+    if (offset >= maxOffset)
+      throw new IllegalStateException(s"feed '$entity' runaway: offset $offset >= $maxOffset")
     out.result()
   }
 

@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.io.OutputFile
 
 /** The pipeline's state tables: small keyed parquet datasets in the role
@@ -63,13 +64,14 @@ object StateStore {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!awaitSwap(fs, path)) return Nil
-    // the reader sets its keys on its file's conf: a copy of the session's,
-    // whose properties are already loaded
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     val sql = spark.sessionState.conf
     val toScala = CatalystTypeConverters.createToScalaConverter(schema)
     Landing.dataFiles(fs, path).flatMap { file =>
-      val builder = new ParquetReader.Builder[InternalRow](HadoopInputFile.fromStatus(file, conf)) {
+      // the file opens through the session's file system; the reader's keys
+      // go on an empty conf of its own, never on the session's
+      val builder = new ParquetReader.Builder[InternalRow](
+          HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+          new HadoopParquetConfiguration(new Configuration(false))) {
         override protected def getReadSupport(): ReadSupport[InternalRow] = new ParquetReadSupport(
           None, false, RebaseSpec(LegacyBehaviorPolicy.CORRECTED), RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
       }.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)

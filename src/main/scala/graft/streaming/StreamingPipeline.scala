@@ -87,6 +87,21 @@ object StreamingPipeline {
   final case class Transition(id: String, from: String, to: String,
                               at: java.sql.Timestamp)
 
+  /** The transition fold both stateful forms share: `rows` in event-time
+    * order, one [[Transition]] per status change from the carried status
+    * `last`; returns the transitions and the status to carry forward.
+    */
+  private def foldTransitions(id: String, rows: Iterator[StatusEvent],
+                              last: Option[String]): (Seq[Transition], Option[String]) = {
+    var prev = last
+    val out = rows.toSeq.sortBy(_.updatedAt.getTime).flatMap { e =>
+      val t = prev.filter(_ != e.status).map(p => Transition(id, p, e.status, e.updatedAt))
+      prev = Some(e.status)
+      t
+    }
+    (out, prev)
+  }
+
   /** The same transition log on the `transformWithState` API (Spark 4's
     * successor to `mapGroupsWithState`), with the property that matters at
     * scale: per-key state carries a TTL, so an unbounded key space (every
@@ -105,13 +120,8 @@ object StreamingPipeline {
 
     override def handleInputRows(id: String, rows: Iterator[StatusEvent],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Transition] = {
-      val sorted = rows.toSeq.sortBy(_.updatedAt.getTime)
-      var prev = if (last.exists()) Option(last.get()) else None
-      val out = sorted.flatMap { e =>
-        val t = prev.filter(_ != e.status).map(p => Transition(id, p, e.status, e.updatedAt))
-        prev = Some(e.status)
-        t
-      }
+      val (out, prev) =
+        foldTransitions(id, rows, if (last.exists()) Option(last.get()) else None)
       prev.foreach(last.update)
       out.iterator
     }
@@ -134,17 +144,7 @@ object StreamingPipeline {
       .flatMapGroupsWithState[String, Transition](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (id: String, rows: Iterator[StatusEvent], state: GroupState[String]) =>
-          // order within the micro-batch: event time
-          val sorted = rows.toSeq.sortBy(_.updatedAt.getTime)
-          var last = state.getOption
-          val out = sorted.flatMap { e =>
-            val t = last match {
-              case Some(prev) if prev != e.status => Some(Transition(id, prev, e.status, e.updatedAt))
-              case _ => None
-            }
-            last = Some(e.status)
-            t
-          }
+          val (out, last) = foldTransitions(id, rows, state.getOption)
           state.update(last.getOrElse(""))
           out.iterator
       }

@@ -81,6 +81,38 @@ class FeedSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("no registered feed"))
   }
 
+  test("batch scan end bound: a row mutated after planning is read at most once, never in its new version") {
+    // after the scan's two planning probes the feed moves one row to its
+    // tail with a later updated_at, so every reader fetch sees the moved
+    // feed; the probe's end stamp must drop the new version. The second
+    // input orders a NULL updated_at row last: the last-page probe still
+    // finds the page's max stamp, so the bound holds there too.
+    def scan(name: String, nullsLast: Boolean): Array[Row] = {
+      val stamped = (0 until 2400).map(i => Row(f"id$i%05d", ts(i), "NEW"))
+      var rows = if (nullsLast) stamped :+ Row("null-ts", null, "NEW") else stamped
+      val calls = new AtomicInteger()
+      val lock = new Object
+      FeedRegistry.register(name, schema, (_, limit, offset) => lock.synchronized {
+        if (calls.incrementAndGet() == 3) {
+          val (Seq(_), rest) = rows.partition(_.getString(0) == "id00010")
+          val (nonNull, nulls) = rest.partition(!_.isNullAt(1))
+          rows = (nonNull :+ Row("id00010", ts(2500), "MOVED")) ++ nulls
+        }
+        PagedFeed.Page(rows.slice(offset.toInt, offset.toInt + limit), rows.size)
+      })
+      val got = spark.read.format("graft-feed").option("feed", name)
+        .option("pagesize", "100").option("pages_per_partition", "2").load().collect()
+      assert(calls.get() > 3, s"$name: the feed never mutated under the scan")
+      got
+    }
+    Seq("end-bound" -> false, "end-bound-nulls-last" -> true).foreach { case (name, nullsLast) =>
+      val got = scan(name, nullsLast)
+      val twice = got.groupBy(_.getString(0)).filter(_._2.length > 1).keys
+      assert(twice.isEmpty, s"$name: ids read twice: $twice")
+      assert(!got.exists(_.getString(2) == "MOVED"), s"$name: the new version passed the end bound")
+    }
+  }
+
   test("streaming micro-batch feed: incremental cursor batches, mutation re-delivery") {
     import java.time.Instant
     import scala.collection.mutable.ArrayBuffer
@@ -133,7 +165,7 @@ class FeedSourceSpec extends SparkSpec {
       pageSize = 100, pagesPerPartition = 5)
     val end = stream.latestOffset()
     val parts = stream.planInputPartitions(stream.initialOffset(), end)
-      .map(_.asInstanceOf[graft.sources.FeedStreamPartition])
+      .map(_.asInstanceOf[graft.sources.FeedInputPartition])
     assert(parts.length === 5, parts.mkString("; ")) // 2400 rows / 500 span
     assert(parts.head.firstOffset === 0L)
     parts.sliding(2).foreach { case Array(a, b) =>
